@@ -14,7 +14,7 @@ Full per-run arrays, decompositions, and disclosure pairs go to the
 ``BENCH_local_detail.json`` next to this script).
 
 The whole run fits a WALL-CLOCK BUDGET (``SPARK_GRAFT_BENCH_BUDGET_S``,
-default 1080 s): the scaling phase sizes its pair input and pair count
+default 1,500 s): the scaling phase sizes its pair input and pair count
 from the time remaining after the query suite, instead of a fixed 16×
 multiplier that blew the round-4 driver window (rc 124, zero output).
 
@@ -343,7 +343,8 @@ def _scaling_level_main(cores: int, n_rows: int, reps: int) -> None:
     print(_scaling_run_local(path, n_rows, cores, reps))
 
 
-def scaling_run_rows(n_rows: int, cores: int, reps: int = 1) -> float:
+def scaling_run_rows(n_rows: int, cores: int, reps: int = 1,
+                     timeout: float = 1800) -> float:
     """Sustained normalize throughput (rows/sec) at a parallelism level.
 
     Runs in a fresh subprocess (own JVM) so levels cannot contaminate
@@ -370,7 +371,7 @@ def scaling_run_rows(n_rows: int, cores: int, reps: int = 1) -> float:
         cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
     with _Antagonist(cores):
         res = subprocess.run(cmd, capture_output=True, text=True,
-                             timeout=1800)
+                             timeout=timeout)
     return _parse_level_output(res, "scaling")
 
 
@@ -381,7 +382,8 @@ def _streaming_level_main(cores: int, n_rows: int) -> None:
     print(rate)
 
 
-def streaming_run(pdf, cores: int, pin: bool = False, n_rows: int | None = None):
+def streaming_run(pdf, cores: int, pin: bool = False, n_rows: int | None = None,
+                  timeout: float = 1800):
     """Returns (rows/sec, per-stage decomposition dict)."""
     import contextlib
     import subprocess
@@ -395,7 +397,7 @@ def streaming_run(pdf, cores: int, pin: bool = False, n_rows: int | None = None)
         cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
     with _Antagonist(cores) if pin else contextlib.nullcontext():
         res = subprocess.run(cmd, capture_output=True, text=True,
-                             timeout=1800)
+                             timeout=timeout)
     rate = _parse_level_output(res, "streaming")
     decomp = {}
     lines = res.stdout.strip().splitlines()
@@ -581,7 +583,7 @@ def _compact_result(qtimes: dict, sf: float, scaling: dict) -> str:
         "scaling": scaling,
     }
     s = json.dumps(out, separators=(",", ":"))
-    if len(s) > COMPACT_LIMIT:
+    if len(s.encode("utf-8")) > COMPACT_LIMIT:
         out["queries"] = {"n_queries": len(qtimes),
                           "see_detail": os.path.basename(DETAIL_PATH)}
         s = json.dumps(out, separators=(",", ":"))
@@ -633,6 +635,10 @@ def _run_scaling(scaling: dict, detail: dict, qtimes: dict, sf: float,
     def rem() -> float:
         return deadline - time.time()
 
+    def cap() -> float:
+        # a level subprocess may not outlive the budget
+        return max(min(1800.0, rem()), 1.0)
+
     s_lo = max(CPUS // 8, 1)
     s_hi = min(4 * s_lo, CPUS)
     ratio = s_hi / s_lo
@@ -643,7 +649,7 @@ def _run_scaling(scaling: dict, detail: dict, qtimes: dict, sf: float,
         scaling["note"] = "scaling skipped: budget exhausted by suite"
         return
     t0 = time.time()
-    stream_thr, cal_dec = streaming_run(pdf, CPUS)
+    stream_thr, cal_dec = streaming_run(pdf, CPUS, timeout=cap())
     cal_s = time.time() - t0
     scaling[f"streaming_e2e_turns_per_sec_local{CPUS}"] = round(stream_thr)
     detail["calibration"] = {"wall_s": round(cal_s, 1), "decomp": cal_dec,
@@ -699,12 +705,14 @@ def _run_scaling(scaling: dict, detail: dict, qtimes: dict, sf: float,
     s_lo_runs, s_hi_runs, s_lo_dec, s_hi_dec = [], [], [], []
     pair_est = big_rows * per_row_s + 2 * overhead
     for i in range(n_pairs):
-        if s_lo_runs and rem() < pair_est + reserve:
+        if rem() < pair_est + reserve:
+            if not s_lo_runs:
+                scaling["note"] = "streaming pairs skipped: no pair fits the budget"
             break
-        r, d = streaming_run(pdf, s_lo, pin=True, n_rows=big_rows)
+        r, d = streaming_run(pdf, s_lo, pin=True, n_rows=big_rows, timeout=cap())
         s_lo_runs.append(r)
         s_lo_dec.append(d)
-        r, d = streaming_run(pdf, s_hi, pin=True, n_rows=big_rows)
+        r, d = streaming_run(pdf, s_hi, pin=True, n_rows=big_rows, timeout=cap())
         s_hi_runs.append(r)
         s_hi_dec.append(d)
         # refine the estimate with measured rates
@@ -759,8 +767,8 @@ def _run_scaling(scaling: dict, detail: dict, qtimes: dict, sf: float,
     for i in range(n_pairs):
         if rem() < pair_est + reserve:
             break
-        n_lo_runs.append(scaling_run_rows(norm_rows, s_lo, reps=1))
-        n_hi_runs.append(scaling_run_rows(norm_rows, s_hi, reps=1))
+        n_lo_runs.append(scaling_run_rows(norm_rows, s_lo, reps=1, timeout=cap()))
+        n_hi_runs.append(scaling_run_rows(norm_rows, s_hi, reps=1, timeout=cap()))
         nlo_rate, nhi_rate = n_lo_runs[-1], n_hi_runs[-1]
         pair_est = norm_rows * (1.0 / nlo_rate + 1.0 / nhi_rate) + 2 * overhead
         n_pair_effs = [h / (ratio * lo) for lo, h in zip(n_lo_runs, n_hi_runs)]
@@ -795,8 +803,10 @@ def _run_scaling(scaling: dict, detail: dict, qtimes: dict, sf: float,
     # --- 5) full-width disclosure pair (generous budget only) -------
     n_fw_lo = max(CPUS // 4, 1)
     if (n_fw_lo, CPUS) != (s_lo, s_hi) and rem() > 2 * pair_est + reserve:
-        fw_lo, _ = streaming_run(pdf, n_fw_lo, pin=True, n_rows=big_rows)
-        fw_hi, _ = streaming_run(pdf, CPUS, pin=True, n_rows=big_rows)
+        fw_lo, _ = streaming_run(pdf, n_fw_lo, pin=True, n_rows=big_rows,
+                                 timeout=cap())
+        fw_hi, _ = streaming_run(pdf, CPUS, pin=True, n_rows=big_rows,
+                                 timeout=cap())
         detail["streaming_fullwidth"] = {
             f"local{n_fw_lo}": round(fw_lo),
             f"local{CPUS}": round(fw_hi),

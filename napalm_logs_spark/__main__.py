@@ -34,33 +34,67 @@ import argparse
 import sys
 
 
-def _session(master: str, shuffle_partitions: int):
+# Session settings of every command.  Shuffle partitions are added per
+# call: they are also the state partitions of a new streaming checkpoint.
+_SESSION_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    # the at-scale state-store provider: spills to disk instead of
+    # holding every key on the JVM heap
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+}
+
+
+def _session(master: str, shuffle_partitions: int | None):
+    """The CLI's session and the caller's settings it overrode.
+
+    ``shuffle_partitions=None`` sizes shuffles, and so the state
+    partitions of a new checkpoint, to the cores: one state store and
+    one sink file per task slot.  A resumed query keeps the count its
+    checkpoint was created with (Spark restores it from the offset log).
+
+    Returns ``(spark, previous)``: ``previous`` is None when this call
+    created the session, else the caller's value of every key set here
+    (None = unset), for :func:`_restore` once the command is done."""
     from pyspark.sql import SparkSession
 
     preexisting = SparkSession.getActiveSession() is not None
     spark = (
-        SparkSession.builder.master(master)
-        .appName("napalm-logs-spark")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        # the at-scale state-store provider: spills to disk, changelog
-        # checkpointing — the right default for long-running streams
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
+        SparkSession.builder.master(master).appName("napalm-logs-spark")
         .getOrCreate()
     )
-    return spark, not preexisting
+    conf = {
+        **_SESSION_CONF,
+        "spark.sql.shuffle.partitions": str(
+            shuffle_partitions or spark.sparkContext.defaultParallelism
+        ),
+    }
+    previous = (
+        {k: spark.conf.get(k, None) for k in conf} if preexisting else None
+    )
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    return spark, previous
+
+
+def _restore(spark, previous: dict) -> None:
+    for k, v in previous.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
 
 
 def main(argv=None) -> int:
     parser = argparse.ArgumentParser(prog="napalm_logs_spark")
     parser.add_argument("--master", default="local[*]")
     parser.add_argument("--profiles", default=None, help="profile corpus dir")
-    parser.add_argument("--shuffle-partitions", type=int, default=32)
+    parser.add_argument("--shuffle-partitions", type=int, default=None,
+                        help="shuffle and state partitions (default: the "
+                             "session's cores); a streaming checkpoint "
+                             "keeps the count it was created with")
     parser.add_argument("--config-file", default=None,
                         help="YAML config merged UNDER explicit flags "
                              "(reference scripts/cli.py:272-282 "
@@ -185,7 +219,7 @@ def main(argv=None) -> int:
                 + " (on the command line or in --config-file)"
             )
 
-    spark, owns_session = _session(args.master, args.shuffle_partitions)
+    spark, previous = _session(args.master, args.shuffle_partitions)
     try:
         if args.command == "compact":
             from .streaming.maintenance import compact_sink
@@ -358,8 +392,10 @@ def main(argv=None) -> int:
                 )
                 print(f"orphan alerts -> {args.orphan_sink}")
     finally:
-        if owns_session:  # don't tear down a caller-provided session
+        if previous is None:
             spark.stop()
+        else:  # hand a caller-provided session back as it was
+            _restore(spark, previous)
     return 0
 
 

@@ -8,7 +8,8 @@ equivalent:
   the streaming DataFrame (counted JVM-side, zero extra passes);
 * :class:`ProgressRecorder` is a ``StreamingQueryListener`` that captures
   each micro-batch's progress — batch id, input rows, processed rows/sec,
-  the observed metrics, and per-stage state-store metrics — into an
+  phase durations, the observed metrics, and per-stage state-store
+  metrics (rows, memory, commit time, partitions) — into an
   in-memory list and optionally a JSONL file (the "metrics table").
 
 Together with the sink's ``_batch_id``/``_task_partition`` columns this
@@ -58,6 +59,9 @@ class ProgressRecorder(StreamingQueryListener):
             "timestamp": p.timestamp,
             "num_input_rows": p.numInputRows,
             "processed_rows_per_sec": p.processedRowsPerSecond,
+            # where the batch's time went: Spark's phases (addBatch,
+            # commitOffsets, walCommit, queryPlanning, ...), in ms
+            "duration_ms": dict(p.durationMs or {}),
             "observed": dict(p.observedMetrics.get(OBSERVATION_NAME).asDict())
             if p.observedMetrics and OBSERVATION_NAME in p.observedMetrics
             else None,
@@ -72,6 +76,10 @@ class ProgressRecorder(StreamingQueryListener):
                     "num_rows_updated": s.numRowsUpdated,
                     "memory_used_bytes": s.memoryUsedBytes,
                     "num_rows_dropped_by_watermark": s.numRowsDroppedByWatermark,
+                    # state commit is paid once per state store instance
+                    "commit_time_ms": s.commitTimeMs,
+                    "num_shuffle_partitions": s.numShufflePartitions,
+                    "num_state_store_instances": s.numStateStoreInstances,
                 }
                 for s in (p.stateOperators or [])
             ],

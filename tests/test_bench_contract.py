@@ -82,6 +82,16 @@ def test_compact_degrades_rather_than_overflows():
     assert parsed["queries"].get("n_queries") == 200
 
 
+def test_compact_limit_counts_bytes_not_characters():
+    # a multibyte exception text in scaling_error must not push the
+    # line's UTF-8 size past the window while its character count fits
+    scaling = _full_scaling_dict()
+    scaling["scaling_error"] = ("RuntimeError: échec — 失败 " * 20)[:160]
+    s = bench._compact_result(_worst_case_qtimes(), 0.1, scaling)
+    assert len(s.encode("utf-8")) < bench.COMPACT_LIMIT
+    assert json.loads(s)["scaling"]["scaling_error"] == scaling["scaling_error"]
+
+
 def test_budget_default_inside_driver_timeout():
     # the r4 driver run was killed at its own timeout (rc 124); keep the
     # default bench budget comfortably under 30 minutes
@@ -104,12 +114,19 @@ class _FakePdf:
 def _patch_runners(monkeypatch, emitted):
     # fake runners: cores-proportional rates, instant return — the
     # tests exercise the BUDGET CONTROL FLOW, not Spark
-    monkeypatch.setattr(bench, "streaming_run",
-                        lambda pdf, cores, pin=False, n_rows=None:
-                        (50_000.0 * cores / 4,
-                         {"marginal_rows_per_sec": 60_000.0 * cores / 4}))
-    monkeypatch.setattr(bench, "scaling_run_rows",
-                        lambda rows, cores, reps=1: 80_000.0 * cores / 4)
+    timeouts = []
+
+    def streaming_run(pdf, cores, pin=False, n_rows=None, timeout=1800):
+        timeouts.append(timeout)
+        return (50_000.0 * cores / 4,
+                {"marginal_rows_per_sec": 60_000.0 * cores / 4})
+
+    def scaling_run_rows(rows, cores, reps=1, timeout=1800):
+        timeouts.append(timeout)
+        return 80_000.0 * cores / 4
+
+    monkeypatch.setattr(bench, "streaming_run", streaming_run)
+    monkeypatch.setattr(bench, "scaling_run_rows", scaling_run_rows)
     monkeypatch.setattr(bench, "_bench_input", lambda n: (_FakePdf(), "/tmp/x"))
     monkeypatch.setattr(bench, "_cpu_scaling_ceiling", lambda lo, hi, pdf: 0.9)
     monkeypatch.setattr(bench, "pandas_stage_scaling",
@@ -118,6 +135,7 @@ def _patch_runners(monkeypatch, emitted):
         bench, "_emit",
         lambda q, s, sc, d: emitted.append(
             bench._compact_result(q, s, dict(sc))))
+    return timeouts
 
 
 def test_run_scaling_skips_when_budget_exhausted(monkeypatch):
@@ -164,3 +182,20 @@ def test_run_scaling_never_divides_by_hardcoded_four(monkeypatch):
     # efficiency is exactly 1.0; a hard-coded /4 would read 0.5
     assert scaling["levels"] == "local[1]->local[2]"
     assert scaling["streaming_e2e_efficiency_median_pair"] == 1.0
+
+
+def test_run_scaling_guards_first_pair_and_caps_timeouts(monkeypatch):
+    """Calibration fits the budget but no streaming pair does: the first
+    pair is skipped with a note, and no level subprocess may run longer
+    than the budget left."""
+    import time as _t
+    emitted = []
+    timeouts = _patch_runners(monkeypatch, emitted)
+    monkeypatch.setattr(bench, "CPUS", 4)
+    scaling, detail = {}, {}
+    budget = 200
+    bench._run_scaling(scaling, detail, {"q": 1.0}, 0.1, _FakePdf(),
+                       1_280_000, deadline=_t.time() + budget)
+    assert "streaming_e2e_efficiency_median_pair" not in scaling
+    assert "pairs skipped" in scaling["note"]
+    assert timeouts and all(t <= budget for t in timeouts)

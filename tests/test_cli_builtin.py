@@ -79,6 +79,81 @@ def test_cli_normalize_and_run(spark, tmp_path):
     assert os.path.isdir(sink + "/_compacted_upto=0")
 
 
+_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+
+
+def test_cli_leaves_caller_session_unchanged(spark, tmp_path):
+    """main() on a caller's session hands it back with the caller's
+    settings: shuffle partitions and state-store provider included."""
+    from napalm_logs_spark.__main__ import main
+    from napalm_logs_spark.sources.transcripts import (
+        golden_transcripts_pandas,
+        transcripts_df,
+    )
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    transcripts_df(spark, golden_transcripts_pandas().iloc[:5]).write.parquet(src)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    spark.conf.unset(_PROVIDER)
+    try:
+        assert main(["normalize", "--source", src, "--output", out]) == 0
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+        assert spark.conf.get(_PROVIDER, None) is None
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_cli_session_sizes_partitions_to_cores(spark):
+    from napalm_logs_spark.__main__ import _restore, _session
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    s, previous = _session("local[*]", None)
+    try:
+        assert s is spark and previous is not None
+        assert s.conf.get("spark.sql.shuffle.partitions") == str(
+            spark.sparkContext.defaultParallelism)
+        assert s.conf.get(_PROVIDER).endswith("RocksDBStateStoreProvider")
+    finally:
+        _restore(s, previous)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_cli_resume_keeps_checkpoint_partitions(spark, tmp_path):
+    """A checkpoint created with explicit state partitions resumes with
+    them when the flag is gone (as checkpoints made at the old default
+    of 32 do): the state still catches the keys of the first batch."""
+    from napalm_logs_spark.__main__ import main
+    from napalm_logs_spark.operators.dedup import DEFAULT_KEY
+    from napalm_logs_spark.sources.transcripts import (
+        golden_transcripts_pandas,
+        transcripts_df,
+    )
+    from napalm_logs_spark.streaming.sink import read_sink
+
+    src, sink = str(tmp_path / "src"), str(tmp_path / "sink")
+    ckpt, metrics = str(tmp_path / "ckpt"), str(tmp_path / "m.jsonl")
+    # every ts inside one 20 s span: the resumed batch's copies stay
+    # above the 30 s watermark, so only the dedup state can drop them
+    pdf = golden_transcripts_pandas().iloc[:20]
+    transcripts_df(spark, pdf).coalesce(1).write.parquet(src)
+    cli = ["run", "--source", src, "--sink", sink, "--checkpoint", ckpt,
+           "--metrics", metrics]
+    assert main(["--shuffle-partitions", "3"] + cli) == 0
+    n1 = read_sink(spark, sink).count()
+    transcripts_df(spark, pdf).coalesce(1).write.mode("append").parquet(src)
+    assert main(cli) == 0
+
+    # one record per data batch; no-data (eviction) batches are skipped
+    ops = [r["state_operators"] for r in map(json.loads, open(metrics))
+           if r["num_input_rows"]]
+    assert [[op["num_shuffle_partitions"] for op in o] for o in ops] == [[3], [3]]
+    assert ops[1][0]["num_rows_updated"] == 0
+    kept = read_sink(spark, sink)
+    assert kept.count() == n1 > 0
+    assert kept.groupBy(*DEFAULT_KEY).count().filter("count > 1").count() == 0
+
+
 def test_cli_orphan_alerts(spark, tmp_path):
     import datetime
 

@@ -24,6 +24,21 @@ def test_metrics_jsonl_per_batch(spark, tmp_path):
     assert row["observed"]["n_rows"] >= 40  # explode can exceed input
     assert "n_raw" in row["observed"] and "n_unknown" in row["observed"]
     assert row["batch_id"] == 0
+    assert row["duration_ms"]["addBatch"] >= 0
+    assert row["state_operators"] == []
+
+    # dedup on: the state operator reports its commit time and its
+    # partitioning (one state store instance per shuffle partition)
+    dpath = str(tmp_path / "dedup.jsonl")
+    run_stream_once(spark, src, [str(tmp_path / "dout")], str(tmp_path / "dckpt"),
+                    dedup=True, metrics_jsonl=dpath)
+    row = json.loads(open(dpath).readline())
+    assert {"addBatch", "triggerExecution"} <= set(row["duration_ms"])
+    (op,) = row["state_operators"]
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert op["num_shuffle_partitions"] == parts
+    assert op["num_state_store_instances"] == parts
+    assert op["commit_time_ms"] >= 0
 
 
 def test_iceberg_degrades_to_parquet(spark, tmp_path):
