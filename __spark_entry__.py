@@ -1557,8 +1557,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # encoding repair ("ftfy pass"): the documents tables are pure
         # ASCII where the chain is a no-op, so the gate runs on the
         # deterministic planted-dirty corpus (mojibake / NFD / controls
-        # / NBSP), mirroring the mm_* in-memory-input pattern.  Golden
-        # is an independent python replication of the published spec.
+        # / NBSP), built in memory like the other synthetic-input
+        # gates.  Golden is an independent python replication of the
+        # published spec.
         from napalm_logs_spark.operators.text import (
             fix_text,
             synth_dirty_text_pandas,
@@ -2039,177 +2040,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             emb, k=4, threshold=1.0, n_clusters=32, nprobe=2
         )
     q["s_bitext_mine"] = s_bitext_mine  # oracled: stored numpy golden
-
-    # ---- multimodal plumbing ----
-    def mm_features(spark, sf):
-        from napalm_logs_spark.operators.multimodal import (
-            MEDIA_SCHEMA,
-            extract_features,
-            synth_media_pandas,
-        )
-
-        media = spark.createDataFrame(synth_media_pandas(n=64), schema=MEDIA_SCHEMA)
-        return extract_features(media).select(
-            "media_id", "kind", F.col("n_bytes").cast("long").alias("n_bytes"), "digest"
-        )
-    q["mm_features"] = mm_features  # oracled: stored hashlib-computed golden
-
-    def mm_real_features(spark, sf):
-        # the REAL decode path (uncompressed BMP/WAV/raw-frame codecs,
-        # no external libs): decode the bytes on executors, extract
-        # true pixel/sample statistics; the golden is computed from the
-        # PRE-encoding arrays, so the oracle checks encode→decode→
-        # feature fidelity end-to-end
-        from napalm_logs_spark.operators.multimodal import (
-            MEDIA_SCHEMA,
-            extract_features,
-            real_media_decoder,
-            synth_real_media_pandas,
-        )
-
-        # png_images=True: every second image row is PNG (stdlib zlib
-        # codec) instead of BMP — same pixels, so the pre-encoding
-        # golden still gates; the decode dispatch is now exercised for
-        # both built-in containers
-        media = spark.createDataFrame(
-            synth_real_media_pandas(n=24, png_images=True), schema=MEDIA_SCHEMA
-        )
-        out = extract_features(media, decoder=real_media_decoder)
-        return out.select(
-            "media_id",
-            "kind",
-            *[
-                F.round(F.col("features")[i].cast("double"), 4).alias(f"f{i}")
-                for i in range(4)
-            ],
-        )
-    q["mm_real_features"] = mm_real_features  # oracled: pre-encoding-array golden
-
-    def mm_jpeg_fidelity(spark, sf):
-        # the LOSSY-container gate: cycle BMP → PNG → baseline-JPEG
-        # (the self-contained T.81 codec, jpegcodec.py), decode the
-        # actual payload bytes on executors, and verify every decoded
-        # feature lands within the golden's per-row tolerance of the
-        # PRE-encoding truth (lossless rows: 1e-6; JPEG q=95: 1.5,
-        # measured worst deviation 0.44).  A broken codec flips `ok`
-        # and the driver hash catches it; the golden itself is computed
-        # with no codec involved (tools/make_goldens.py).
-        from napalm_logs_spark.operators.multimodal import (
-            MEDIA_SCHEMA,
-            extract_features,
-            real_media_decoder,
-            synth_real_media_pandas,
-        )
-
-        media = spark.createDataFrame(
-            synth_real_media_pandas(n=36, jpeg_images=True), schema=MEDIA_SCHEMA
-        )
-        feats = extract_features(media, decoder=real_media_decoder).select(
-            "media_id",
-            *[F.col("features")[i].cast("double").alias(f"f{i}") for i in range(4)],
-        ).join(F.broadcast(media.select("media_id", "mime")), "media_id")
-        gd = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "testdata_goldens"
-        )
-        golden = spark.read.parquet(f"{gd}/mm_jpeg_fidelity_golden.parquet")
-        ok = (
-            F.greatest(*[
-                F.abs(F.col(f"f{i}") - F.col(f"g{i}")) for i in range(4)
-            ]) <= F.col("tol")
-        ) & (F.col("mime") == F.col("golden_mime"))
-        return (
-            feats.join(
-                F.broadcast(
-                    golden.select(
-                        "media_id", "kind", "g0", "g1", "g2", "g3", "tol",
-                        F.col("mime").alias("golden_mime"),
-                    )
-                ),
-                "media_id",
-            )
-            .select("media_id", "kind", "mime", ok.alias("ok"))
-        )
-    q["mm_jpeg_fidelity"] = mm_jpeg_fidelity  # oracled: tolerance golden
-
-    def mm_mp4_demux(spark, sf):
-        # REAL container demux: every second video row is a
-        # spec-conformant ISO-BMFF file (mp4codec.py); the operator
-        # walks the box tree and slices sample bytes via the
-        # stsc/stco/stsz chunk walk — no pixel decode.  The golden is
-        # computed from the PRE-encoding frame arrays (no parser
-        # involved), so the oracle gates encode→box-walk→slice
-        # end-to-end.
-        from napalm_logs_spark.operators.multimodal import (
-            MEDIA_SCHEMA,
-            demux_mp4_samples,
-            synth_real_media_pandas,
-        )
-
-        media = spark.createDataFrame(
-            synth_real_media_pandas(n=24, mp4_videos=True), schema=MEDIA_SCHEMA
-        )
-        return demux_mp4_samples(media, every_ms=30)
-    q["mm_mp4_demux"] = mm_mp4_demux  # oracled: pre-encoding-array golden
-
-    def mm_phash_dedup(spark, sf):
-        # perceptual image dedup (operators/imagededup.py): decode →
-        # 64-bit dHash in one narrow Arrow pass, then the EXACT banded
-        # Hamming join (8×8-bit bands ⊇ every pair within Hamming 6 by
-        # pigeonhole, bit_count(xor) verify JVM-side).  The corpus
-        # plants container-swap (PNG/BMP same pixels), brightness-shift
-        # and ±noise near-duplicate families plus unrelated images; the
-        # golden brute-forces ALL pairs from the PRE-encoding arrays,
-        # so the gate proves encode→decode→hash→join exactness — the
-        # image analog of d_simhash / d_minhash_lsh.
-        from napalm_logs_spark.operators.imagededup import (
-            hamming_near_dup,
-            phash_images,
-            synth_phash_corpus_pandas,
-        )
-
-        corpus = spark.createDataFrame(
-            synth_phash_corpus_pandas(n_base=12, seed=11),
-            schema="media_id long, payload binary",
-        )
-        return hamming_near_dup(
-            phash_images(corpus), max_hamming=6, n_bands=8
-        )
-    q["mm_phash_dedup"] = mm_phash_dedup  # oracled: brute-force pair golden
-
-    def mm_audio_gates(spark, sf):
-        # audio curation gates (multimodal.audio_quality_gates): decode
-        # PCM WAV on executors, ALL-INTEGER signal stats (Σx², sign-bit
-        # zero crossings, isqrt fixed-point RMS) + silence/clipping
-        # verdicts — the ASR-corpus analog of t_gopher_rules.  Golden
-        # replays the synth RNG from the PRE-encoding int16 arrays with
-        # an independent pure-python replication, so the gate proves
-        # encode→decode→stat fidelity with zero float tolerance.
-        from napalm_logs_spark.operators.multimodal import (
-            audio_quality_gates,
-            synth_audio_corpus_pandas,
-        )
-
-        corpus = spark.createDataFrame(
-            synth_audio_corpus_pandas(n=24, seed=13),
-            schema="media_id long, payload binary",
-        )
-        return audio_quality_gates(corpus)
-    q["mm_audio_gates"] = mm_audio_gates  # oracled: pre-encoding-array golden
-
-    def mm_frame_plan(spark, sf):
-        # video frame-sampling explode (the JVM-side half of the decode
-        # pipeline): one row per sampled frame offset
-        from napalm_logs_spark.operators.multimodal import (
-            MEDIA_SCHEMA,
-            frame_sample_plan,
-            synth_media_pandas,
-        )
-
-        media = spark.createDataFrame(synth_media_pandas(n=64), schema=MEDIA_SCHEMA)
-        return frame_sample_plan(media, every_ms=200).withColumn(
-            "frame_off_ms", F.col("frame_off_ms").cast("long")
-        )
-    q["mm_frame_plan"] = mm_frame_plan
 
     # ---- the CEP engine itself over golden transcripts ----
     def golden_normalize(spark, sf):
@@ -3050,9 +2880,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def e_hist_quantiles(spark, sf):
         # mergeable fixed-bin histogram quantiles (operators/sketch.py
-        # histogram_bins/histogram_quantiles — the batch form of the
-        # streaming/sketch_stream.py hist slices): event values in
-        # exact centi-units, 5-unit bins, p50/p90/p99 as the first bin
+        # histogram_bins/histogram_quantiles): event values in exact
+        # centi-units, 5-unit bins, p50/p90/p99 as the first bin
         # reaching ceil(q·N/100) — all-integer, exact oracle.
         from napalm_logs_spark.operators.sketch import histogram_quantiles
 
@@ -3160,11 +2989,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return _priority_order(q)
 
 
-# The correctness driver gates the FIRST 50 registered queries. Round 2 left the
-# d_/t_/s_/mm_ LLM families and golden_normalize outside that window, so round 3
-# front-loads them (VERDICT r2, "Next round" item 1). Previously driver-green
-# entries (full CORRECTNESS_r02 rows) rotate behind; all 90+ remain gated by the
-# pytest oracle mirror (tests/test_entry_contract.py) regardless of position.
 # HTML scaffold for t_html_extract — shared between the Spark concat
 # and the oracle's || chain (no single quotes: the pieces embed
 # directly in SQL literals)
@@ -3181,40 +3005,36 @@ _HTML_POST = (
 )
 
 _PRIORITY_50 = [
-    # Rotation policy (VERDICT r3 item 2): the driver checks the FIRST
-    # ~50 queries() entries per round, so each round's list maximizes
-    # CUMULATIVE driver coverage.  This r5 list is derived mechanically
-    # from the union of green rows in CORRECTNESS_r01..r04 (151 of 170
-    # distinct queries driver-green; 19 never green) — NOT from memory:
-    # see tests/test_rotation_policy.py, which recomputes the union
-    # from exactly those four committed round files (pinned, so a
-    # later driver-produced CORRECTNESS_r05.json cannot flip the
-    # invariant — VERDICT r4 finding #2) and asserts every never-green
-    # query holds a slot.  With all 19 seated, cumulative driver
-    # coverage closes at 170/170; the remaining 31 slots deliberately
-    # RE-CONFIRM the heaviest / most novel operators (VERDICT r4 item
-    # 3): golden parity, the banded dedup/ANN joins, the iterative
-    # trainers, the CDC/as-of family, and the multimodal codecs.
+    # Rotation policy: the driver checks the FIRST 50 queries() entries
+    # per round, so the window holds the 50 queries whose last green
+    # driver row is OLDEST.  Derived mechanically from CORRECTNESS_r01..
+    # r05 (every registry query has at least one green row by r05):
+    # 6 queries last green in r01 and 44 last green in r02 fill it
+    # exactly; every query last confirmed in r03-r05 waits behind.
+    # tests/test_rotation_policy.py recomputes the last-green round of
+    # each query from exactly those five committed files (pinned, so a
+    # later driver-produced round file cannot flip the invariant) and
+    # asserts no query outside the window was confirmed before one in it.
     #
-    # --- the final 19 never-driver-green (closes the registry) ---
-    "d_editdist", "cv_refusals",
-    "q11_important_parts", "q12_late_shipping", "q13_order_distribution",
-    "q17_small_qty_revenue", "q20_excess_suppliers", "q21_waiting_suppliers",
-    "t_c4_rules", "t_char_entropy", "t_chunk_windows", "t_clean",
-    "t_fix_text", "t_gate_agreement", "t_length_buckets",
-    "t_pack_chunks", "t_readability", "t_repetition", "t_url_canon",
-    # --- 31 re-confirmation slots: heaviest / most-novel operators ---
-    "golden_normalize", "m4_timestamps", "k5_prom_expo",
-    "d_minhash_lsh", "d_ngram_jaccard", "d_exact_dup_groups",
-    "d_dup_spans", "d_pipeline_e2e",
-    "s_ann_join", "s_bitext_mine", "s_knn_cosine", "s_ann_pq",
-    "s_ann_ivfpq", "s_semdedup", "s_kmeans", "s_pca",
-    "c16_funnel", "q_cdc_apply", "c8_asof_join", "c7_sessions",
-    "c14_session_window",
-    "mm_phash_dedup", "mm_real_features", "mm_jpeg_fidelity",
-    "mm_mp4_demux", "mm_audio_gates",
-    "t_winnow_pairs", "t_tfidf", "t_bpe_tokens",
-    "q1_pricing_summary", "cv_sft_spans",
+    # --- last green in r01 ---
+    "s_embedding_norms", "t_fingerprint", "t_langid", "t_quality",
+    "t_tokens", "t_winnow",
+    # --- last green in r02 ---
+    "a1_dedup_gap", "c10_orphans", "c11_window_topk",
+    "c13_cohort_retention", "c1_transitions", "c2_state_gauge",
+    "c3_tumbling_counts", "c5_flaps", "c6_interval_join", "c9_sequence",
+    "k6_serialize", "p1_nonempty_filter", "p2_profile_extract",
+    "p4_pri_split", "p5_whitelist", "p6_sink_filters",
+    "q10_returned_items", "q14_promo_revenue", "q15_top_supplier",
+    "q16_supplier_cnt", "q18_large_orders", "q19_disjunctive",
+    "q22_idle_customers", "q2_min_cost_supplier", "q3_top_orders",
+    "q4_order_priority", "q5_local_supplier_volume",
+    "q6_forecast_revenue", "q7_volume_shipping", "q8_market_share",
+    "q9_product_profit", "q_cube_counts", "q_gapfill_ffill",
+    "q_percentiles", "q_pivot", "q_rollup_counts", "q_set_ops",
+    "q_sketch_distinct", "q_sketch_quantiles", "q_topk_per_group",
+    "q_unpivot_measures", "q_window_range_7d", "q_window_running",
+    "q_zorder_key",
 ]
 
 
@@ -5196,36 +5016,6 @@ def oracle_sql() -> dict[str, str]:
         WHERE scale_rows = (SELECT count(*) FROM events)
     """
 
-    o["mm_features"] = f"""
-        SELECT media_id, kind, n_bytes, digest
-        FROM read_parquet('{gd}/mm_features_golden.parquet')
-    """
-
-    o["mm_real_features"] = f"""
-        SELECT media_id, kind, f0, f1, f2, f3
-        FROM read_parquet('{gd}/mm_real_features_golden.parquet')
-    """
-
-    # fidelity verdict is TRUE for every row by construction; the Spark
-    # side computes it from the DECODED payload bytes, so any codec
-    # regression (wrong pixels, wrong container dispatch) flips a row
-    o["mm_jpeg_fidelity"] = f"""
-        SELECT media_id, kind, mime, TRUE AS ok
-        FROM read_parquet('{gd}/mm_jpeg_fidelity_golden.parquet')
-    """
-
-    o["mm_phash_dedup"] = f"""
-        SELECT id_a, id_b, CAST(hamming AS INTEGER) AS hamming
-        FROM read_parquet('{gd}/phash_pairs_golden.parquet')
-    """
-
-    o["mm_audio_gates"] = f"""
-        SELECT media_id, n_samples, CAST(rate AS INTEGER) AS rate,
-               CAST(peak AS INTEGER) AS peak, sum_sq, n_zero_cross,
-               rms_x1000, is_silence, is_clipped, keep
-        FROM read_parquet('{gd}/audio_gates_golden.parquet')
-    """
-
     o["s_ann_ivfpq"] = f"""
         SELECT query_id, neighbor_id, adc_dist, CAST(rank AS BIGINT) AS rank
         FROM read_parquet('{gd}/ann_ivfpq_golden.parquet')
@@ -5340,11 +5130,6 @@ def oracle_sql() -> dict[str, str]:
         FROM read_parquet('{gd}/url_canon_golden.parquet')
     """
 
-    o["mm_mp4_demux"] = f"""
-        SELECT media_id, frame_off_ms, frame_idx, n_bytes, digest
-        FROM read_parquet('{gd}/mm_mp4_demux_golden.parquet')
-    """
-
     # independent pure-python BPE replication; keyed by the corpus
     # content checksum (sf0.001/sf0.01 share a documents row count)
     o["t_bpe_train"] = f"""
@@ -5363,17 +5148,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT CAST(SUM(n_chars * (doc_id % 97 + 1)) AS BIGINT)
             FROM documents
         )
-    """
-
-    # derived from the synthetic-media SPEC (kinds cycle image/audio/
-    # video so videos are media_id ≡ 2 (mod 3); duration 1000 ms → frame
-    # offsets 0..800 step 200), independent of the Spark implementation
-    o["mm_frame_plan"] = """
-        SELECT CAST(i AS BIGINT) AS media_id,
-               CAST(off AS BIGINT) AS frame_off_ms,
-               'video/mp4' AS mime
-        FROM generate_series(2, 63, 3) AS g(i),
-             generate_series(0, 999, 200) AS f(off)
     """
 
     o["c2_alarm_gauge"] = f"""

@@ -105,9 +105,8 @@ HEADLINE = [
     # conv_id exchange end-to-end)
     "cv_sft_render",
     # session 10: the CCMatrix margin miner (shared-IVF join + margin
-    # chain) and the exact banded Hamming image-dedup join
+    # chain)
     "s_bitext_mine",
-    "mm_phash_dedup",
 ]
 
 

@@ -7,7 +7,7 @@ seconds (default 5), the new one is dropped.  Crucially the TTL anchors
 at the **kept** row — suppressed duplicates do not refresh it (memory
 buffer stores on first sight only; Redis variant is SET NX EX).
 
-Three implementations, increasing fidelity/specialization:
+Two batch and two streaming implementations:
 
 * :func:`dedup_gap_session` — pure-relational burst dedup: keeps the
   first row of every gap-session (consecutive same-key rows < ttl
@@ -18,10 +18,16 @@ Three implementations, increasing fidelity/specialization:
   ``applyInPandas`` per key (sequential scan inside each key group —
   groups are duplicate bursts, inherently small; the shuffle key is the
   dedup key so parallelism is preserved across keys).
-* :func:`dedup_streaming` — streaming path:
+* :func:`dedup_streaming` — the ``run`` path's streaming dedup:
   ``withWatermark(...).dropDuplicatesWithinWatermark`` over the same
   key, state evicted by watermark (the reference's janitor thread,
-  server.py:74-86, for free).
+  server.py:74-86, for free).  Its horizon is the watermark delay,
+  not the anchored TTL.
+* :func:`dedup_streaming_salted` — the same contract in two phases,
+  spreading a single hot key over ``salts`` state partitions.
+
+The exact anchored-TTL form for streams is
+:func:`napalm_logs_spark.streaming.stateful.exact_ttl_dedup_stream`.
 """
 
 from __future__ import annotations

@@ -239,17 +239,6 @@ def group_advantages(
         .withColumn("_sum_r", F.sum(r).over(w))
         .withColumn("_sum_r2", F.sum(r * r).over(w))
     )
-    return _advantage_select(stats, group_col, id_col)
-
-
-def _advantage_select(stats: DataFrame, group_col: str, id_col: str) -> DataFrame:
-    """Final advantage projection over per-rollout rows carrying their
-    group's exact integer statistics (``n``, ``_sum_r``, ``_sum_r2``).
-
-    Shared by the batch window path (:func:`group_advantages`) and the
-    streaming merge-on-read path (``streaming/advantage_stream``) so
-    the two are the same expression tree by construction."""
-    r = F.col("_r")
     adv_num = F.col("n") * r - F.col("_sum_r")
     var_num = F.col("n") * F.col("_sum_r2") - F.col("_sum_r") * F.col("_sum_r")
     return stats.select(

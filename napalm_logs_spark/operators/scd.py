@@ -70,31 +70,6 @@ def scd2_intervals(
     )
 
 
-def cdc_reduce(
-    changelog: DataFrame,
-    key_cols: tuple,
-    order_cols: tuple,
-    op_col: str = "op",
-) -> DataFrame:
-    """The associative half of :func:`cdc_apply`: per key, the LAST row
-    by ``order_cols`` — including delete rows, kept as TOMBSTONES — plus
-    ``n_versions``.  Because "latest by a global total order" is
-    associative (like MAX), reducing per micro-batch and re-reducing
-    the slices equals reducing the whole log: what lets
-    :mod:`streaming.cdc_stream` keep the CDC state as a lakehouse slice
-    table instead of a state store.  ``order_cols`` must totally order
-    rows within a key across the whole log (give (ts, seq))."""
-    order = [F.col(c) for c in order_cols]
-    w = Window.partitionBy(*key_cols).orderBy(*[c.desc() for c in order])
-    wc = Window.partitionBy(*key_cols)
-    return (
-        changelog.withColumn("_rn", F.row_number().over(w))
-        .withColumn("n_versions", F.count(F.lit(1)).over(wc).cast("long"))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def cdc_apply(
     changelog: DataFrame,
     key_cols: tuple,
@@ -121,8 +96,14 @@ def cdc_apply(
     itself the compacted prefix of the same log (see
     streaming/maintenance.py), so apply-over-log IS the read path.
     """
-    return cdc_reduce(changelog, key_cols, order_cols, op_col).filter(
-        F.col(op_col) != delete_op
+    order = [F.col(c) for c in order_cols]
+    w = Window.partitionBy(*key_cols).orderBy(*[c.desc() for c in order])
+    wc = Window.partitionBy(*key_cols)
+    return (
+        changelog.withColumn("_rn", F.row_number().over(w))
+        .withColumn("n_versions", F.count(F.lit(1)).over(wc).cast("long"))
+        .filter((F.col("_rn") == 1) & (F.col(op_col) != delete_op))
+        .drop("_rn")
     )
 
 

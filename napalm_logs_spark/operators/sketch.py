@@ -1,8 +1,7 @@
 """Fixed-size sketches: Count-Min frequencies and Bloom membership.
 
 The engine's sketch family — HLL++ for distinct counts
-(``q_sketch_distinct``), space-saving for streaming heavy hitters
-(:mod:`streaming.stateful`), Count-Min for point frequency queries,
+(``q_sketch_distinct``), Count-Min for point frequency queries,
 and a Bloom filter (as a set-bit position table) for membership /
 incremental dedup.  The reference keeps exact per-error counters per device
 (`/root/reference/napalm_logs/device.py:250-299`); at 10^12 turns an
@@ -285,9 +284,8 @@ def hll_registers(
     partial rows and the output is ≤ ``m = 2^p`` rows per group
     forever.  Registers merge by ``max`` (union two register tables,
     re-group — bit-identical to sketching the unioned input, tested),
-    which makes the sketch a lakehouse/streaming citizen exactly like
-    the Count-Min slices in :mod:`streaming.sketch_stream`.  Estimation
-    never re-reads the corpus.
+    so per-slice register tables can be kept and merged later.
+    Estimation never re-reads the corpus.
 
     Empty buckets are implicit (estimation reconstructs them from
     ``m − count``) — the table stays minimal under heavy grouping.

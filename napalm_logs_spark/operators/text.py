@@ -1981,17 +1981,7 @@ def chi2_drift(
     """
     cells = df.groupBy(
         F.col(bucket_col).alias("bucket"), F.col(split_col).alias("split")
-    ).agg(F.count(F.lit(1)).alias("o"))
-    return chi2_from_cells(cells)
-
-
-def chi2_from_cells(cells: DataFrame) -> DataFrame:
-    """Chi-square table from a pre-aggregated ``(bucket, split, o)``
-    cell table — the entry point the streaming drift monitor uses
-    (cell counts are SUM-mergeable, so per-micro-batch cell slices
-    merge-on-read into exactly this input; see
-    streaming/sketch_stream.py drift slices)."""
-    cells = cells.persist()
+    ).agg(F.count(F.lit(1)).alias("o")).persist()
     row_tot = cells.groupBy("bucket").agg(F.sum("o").alias("_rt"))
     col_tot = cells.groupBy("split").agg(F.sum("o").alias("_ct"))
     grand = cells.agg(F.sum("o").cast("double").alias("_n"))

@@ -144,30 +144,22 @@ def run_orphan_alerts_once(
     with no tool response within ``horizon_seconds`` (request-timeout
     alarms) appended to ``sink_dir``.
 
-    Runs the ``transformWithStateInPandas`` timer form when the protobuf
-    wheel is present (minimal state: open requests only), else the
-    stream-stream left-outer interval join form — identical output rows
-    either way.  Separate checkpoint: the alert query's watermark/state
-    lifecycle is independent of the envelope pipeline's.
+    Runs as a stream-stream left-outer interval join
+    (:func:`...cep.orphan_agent_turns` with ``streaming=True``).
+    Separate checkpoint: the alert query's watermark/state lifecycle is
+    independent of the envelope pipeline's.
     """
     from ..operators.cep import orphan_agent_turns
-    from .tws import orphan_alert_stream, tws_available
 
     reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    if tws_available():
-        alerts = orphan_alert_stream(
-            stream, horizon_seconds=horizon_seconds, watermark=watermark
-        )
-    else:
-        alerts = orphan_agent_turns(
-            stream,
-            horizon_seconds=horizon_seconds,
-            streaming=True,
-            watermark=watermark,
-        )
+    alerts = orphan_agent_turns(
+        reader.parquet(source_dir),
+        horizon_seconds=horizon_seconds,
+        streaming=True,
+        watermark=watermark,
+    )
     q = (
         alerts.writeStream.format("parquet")
         .option("path", sink_dir)

@@ -1,6 +1,6 @@
 """Custom stateful streaming operators via ``applyInPandasWithState``.
 
-Exact-semantics operators the built-in primitives can't express:
+Two exact-semantics operators the built-in primitives can't express:
 
 * :func:`exact_ttl_dedup_stream` — the reference's anchored-TTL dedup
   buffer (server.py:301-320, buffer/memory.py:26-41) with *exact* TTL
@@ -12,19 +12,12 @@ Exact-semantics operators the built-in primitives can't express:
   state machine emitting open/close transitions (alerta pairing,
   transport/alerta.py:46-69) and maintaining the last-state gauge
   (prometheus, transport/prometheus.py:70-93) across micro-batches.
-* :func:`heavy_hitters_stream` — space-saving top talkers: O(capacity)
-  counters per group whatever the item cardinality.
-* :func:`rate_anomaly_stream` — adaptive-threshold rate alerting:
-  O(baseline) trailing window counts per key, verdicts emitted as
-  windows close (by a later event or the watermark timeout).
-* :func:`funnel_stream` — cross-batch windowed funnel: per-key
-  deepest-step verdicts, state pruned to one anchor window, emitted
-  when the watermark closes the window (or an idle timeout for
-  never-anchored keys).
 
-All are keyed by their natural state key, so Spark hash-partitions the
-stream once and the state store shards with it; hot conversations are
-defused because the key includes the entity, not just the host.
+Neither is on the ``run`` path yet: the exact dedup is the candidate
+single streaming dedup (ROADMAP item 1), and the state machine waits
+to be wired in as the streaming up/down correlation.  Both are keyed
+by their natural state key, so Spark hash-partitions the stream once
+and the state store shards with it.
 """
 
 from __future__ import annotations
@@ -33,7 +26,6 @@ from typing import Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -167,405 +159,3 @@ def entity_state_stream(
         )
     )
 
-
-def heavy_hitters_stream(
-    df: DataFrame,
-    capacity: int = 8,
-    key: Sequence[str] = ("os",),
-    item_col: str = "error",
-    ts_col: str = "ts",
-    emit_k: int = 5,
-) -> DataFrame:
-    """Streaming heavy hitters (top talkers) with **bounded state**:
-    the space-saving summary (Metwally et al., ICDT'05) per group key.
-
-    The reference's counter transport keeps one counter per distinct
-    (host, error) forever; a streaming ``groupBy(item).count()``
-    likewise grows state with key cardinality — at 100 TB / billions of
-    distinct items that state is the bottleneck.  Space-saving keeps
-    exactly ``capacity`` counters per group whatever the cardinality,
-    with the classic guarantees: any item with true frequency
-    > n_total/capacity is present, and for a present item
-    ``true ∈ [est_count − err_bound, est_count]``.
-
-    Update rule per arriving item (rows processed in the deterministic
-    ``(ts, item)`` order within each micro-batch): present → count+1;
-    room → insert (1, 0); full → evict the (count, item)-lexicographic
-    minimum and insert at (min_count+1, err=min_count).
-
-    Emits after every micro-batch the group's current top ``emit_k``
-    by (count desc, item asc) tagged with the group's running
-    ``n_total`` — a monotone version stamp, so a consumer (or test)
-    reads the latest snapshot as the rows with the max ``n_total``.
-    State never times out: it is O(capacity) per group by construction.
-    """
-    key_cols = list(key)
-    out_schema = T.StructType(
-        [T.StructField(c, T.StringType()) for c in key_cols]
-        + [
-            T.StructField("item", T.StringType()),
-            T.StructField("est_count", T.LongType()),
-            T.StructField("err_bound", T.LongType()),
-            T.StructField("rank", T.IntegerType()),
-            T.StructField("n_total", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("items", T.ArrayType(T.StringType())),
-            T.StructField("counts", T.ArrayType(T.LongType())),
-            T.StructField("errs", T.ArrayType(T.LongType())),
-            T.StructField("n_total", T.LongType()),
-        ]
-    )
-
-    def hh(key_vals, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            items, counts, errs, n_total = state.get
-            summary = {i: [c, e] for i, c, e in zip(items, counts, errs)}
-            n_total = int(n_total)
-        else:
-            summary, n_total = {}, 0
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values([ts_col, item_col], kind="mergesort")
-            for it in pdf[item_col]:
-                it = "" if it is None else str(it)
-                n_total += 1
-                if it in summary:
-                    summary[it][0] += 1
-                elif len(summary) < capacity:
-                    summary[it] = [1, 0]
-                else:
-                    evict = min(summary, key=lambda x: (summary[x][0], x))
-                    mc = summary[evict][0]
-                    del summary[evict]
-                    summary[it] = [mc + 1, mc]
-        state.update(
-            (
-                list(summary.keys()),
-                [v[0] for v in summary.values()],
-                [v[1] for v in summary.values()],
-                n_total,
-            )
-        )
-        top = sorted(summary.items(), key=lambda kv: (-kv[1][0], kv[0]))[:emit_k]
-        yield pd.DataFrame(
-            [
-                tuple(key_vals) + (it, v[0], v[1], r, n_total)
-                for r, (it, v) in enumerate(top, start=1)
-            ],
-            columns=key_cols + ["item", "est_count", "err_bound", "rank", "n_total"],
-        )
-
-    return df.groupBy(*key_cols).applyInPandasWithState(
-        hh,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def rate_anomaly_stream(
-    df: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    window_seconds: int = 86400,
-    baseline: int = 7,
-    min_baseline: int = 3,
-    z_hi: float = 2.0,
-    key_type: str = "long",
-) -> DataFrame:
-    """Streaming form of :func:`operators.cep.rate_anomaly` with
-    **O(baseline) state per key**: per-key trailing-window z-score
-    alerting where a window's verdict is emitted exactly when the
-    window CLOSES — on the first event of a later window, or when the
-    event-time watermark passes the open window's end (so a key that
-    goes silent still gets its final verdict; add ``withWatermark``
-    upstream, EventTimeTimeout requires it).
-
-    State = the open window's ``(win_start, n)`` plus the trailing
-    ≤ ``baseline`` closed-window counts — a few longs per key however
-    long the stream runs.  Verdict math is the batch operator's exact
-    formula (sample variance from integer count sums, flat-baseline
-    first-deviation rule); ``mu``/``z`` are emitted UNROUNDED (the
-    batch op rounds for oracle portability).
-
-    Silent windows between two events count as ``n = 0`` in the
-    baseline (the batch op's dense spine).  Bounded-output choice: per
-    gap, at most the ``baseline`` trailing silent windows are emitted —
-    the skipped prefix is *simulated* (up to ``baseline`` un-emitted
-    zero pushes, beyond which the deque is already all zeros), so the
-    rows that ARE emitted carry exactly the batch operator's values
-    and a month-long-quiet key costs ``baseline`` rows, not a month of
-    zeros.  Rows older than the open window (post-watermark
-    stragglers) are dropped.
-    """
-    out_schema = T.StructType(
-        [
-            T.StructField(key, T._parse_datatype_string(key_type)),
-            T.StructField("win_start", T.LongType()),
-            T.StructField("n", T.LongType()),
-            T.StructField("n_baseline", T.LongType()),
-            T.StructField("mu", T.DoubleType()),
-            T.StructField("z", T.DoubleType()),
-            T.StructField("anomaly", T.IntegerType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("cur_win", T.LongType()),
-            T.StructField("cur_n", T.LongType()),
-            T.StructField("last_win", T.LongType()),
-            T.StructField("ns", T.ArrayType(T.LongType())),
-        ]
-    )
-    W = int(window_seconds)
-
-    def _verdict(n: int, ns: list):
-        """(n_baseline, mu, z, anomaly) — the batch op's expression
-        tree re-evaluated in float64 (same IEEE ops, same doubles)."""
-        nb = len(ns)
-        if nb < 1:
-            return 0, None, None, 0
-        nbf = float(nb)
-        s1 = float(sum(ns))
-        mu = s1 / nbf
-        if nb < min_baseline:
-            return nb, mu, None, 0
-        s2 = float(sum(v * v for v in ns))
-        var_num = nbf * s2 - s1 * s1
-        if var_num > 0:
-            sd = (var_num / (nbf * (nbf - 1.0))) ** 0.5
-            zv = (float(n) - mu) / sd
-            return nb, mu, zv, int(zv >= z_hi)
-        return nb, mu, None, int(n > mu)
-
-    def ra(key_vals, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur_win, cur_n, last_win, ns = state.get
-            ns = list(ns)
-        else:
-            cur_win, cur_n, last_win, ns = None, 0, None, []
-        rows = []
-        kv = key_vals[0]
-
-        def push(n):
-            ns.append(n)
-            if len(ns) > baseline:
-                ns.pop(0)
-
-        def close(w, n):
-            nonlocal last_win
-            nb, mu, zv, an = _verdict(n, ns)
-            rows.append((kv, w, n, nb, mu, zv, an))
-            push(n)
-            last_win = w
-
-        def advance_to(w):
-            # close the open window, then the silent gap: only the
-            # trailing `baseline` silent windows are EMITTED, but the
-            # skipped prefix is simulated with un-emitted zero pushes
-            # (capped at `baseline` — further zeros are idempotent on
-            # the deque), so emitted rows match the batch dense spine
-            # exactly and a huge gap costs O(baseline), not O(gap)
-            nonlocal cur_win, cur_n
-            if cur_win is not None:
-                close(cur_win, cur_n)
-                start = cur_win + W
-            elif last_win is not None:
-                start = last_win + W
-            else:
-                start = w
-            gap_count = (w - start) // W
-            emit_count = min(gap_count, baseline)
-            for _ in range(min(gap_count - emit_count, baseline)):
-                push(0)
-            for silent in range(w - emit_count * W, w, W):
-                close(silent, 0)
-            cur_win, cur_n = w, 0
-
-        if state.hasTimedOut:
-            if cur_win is not None:
-                close(cur_win, cur_n)
-                cur_win, cur_n = None, 0
-        else:
-            # ONE sort across the whole micro-batch: Arrow hands the
-            # group over in chunks, and sorting each chunk separately
-            # would mislabel out-of-order-across-chunk rows as
-            # post-watermark stragglers
-            chunks = list(pdf_iter)
-            if chunks:
-                pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                    ts_col, kind="mergesort"
-                )
-                for ts in pdf[ts_col]:
-                    w = int(ts.timestamp() // W) * W
-                    if cur_win is None or w > cur_win:
-                        advance_to(w)
-                    if w == cur_win:
-                        cur_n += 1
-                    # w < cur_win: post-watermark straggler — dropped
-            if cur_win is not None:
-                # close at the watermark: fire when event time passes
-                # the open window's end
-                state.setTimeoutTimestamp((cur_win + W) * 1000)
-        state.update((cur_win, cur_n, last_win, ns))
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=[key, "win_start", "n", "n_baseline", "mu", "z", "anomaly"],
-            )
-
-    return df.groupBy(key).applyInPandasWithState(
-        ra,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def funnel_stream(
-    df: DataFrame,
-    steps: Sequence,
-    window_seconds: int = 3600,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    key_type: str = "long",
-    idle_windows: int = 1,
-) -> DataFrame:
-    """Streaming form of :func:`operators.cep.windowed_funnel`: per-key
-    deepest-step conversion verdicts across micro-batches, emitted
-    exactly when the funnel is FINAL — when the event-time watermark
-    passes the anchor window's end (``t1 + window``), or, for keys that
-    never anchor, after ``idle_windows`` windows of event-time silence
-    (a level-0 verdict).  Add ``withWatermark`` upstream
-    (EventTimeTimeout requires it).
-
-    Exactness under reorder: ``t1`` can only DECREASE while the
-    watermark is below it (no event older than the watermark arrives),
-    and every later-step candidate that could become eligible under a
-    lower anchor is retained until the anchor is final — so the chained
-    min-fold resolved at emission equals the batch operator's fold over
-    the same on-time rows.  State per key = the anchor plus per-step
-    candidate timestamps pruned to the live window: bounded by the
-    key's own event count inside ONE window (the batch operator's
-    per-key bound), not by stream length.  Pre-anchor candidates below
-    the watermark are pruned too (no future anchor can reach them).
-
-    Divergence from batch (documented): a key active again AFTER its
-    verdict re-enters as a fresh funnel anchored at its next matching
-    event — on an infinite stream "the key's global first event" is
-    unknowable; batch answers it only because its corpus is closed.
-    """
-    if len(steps) < 2:
-        raise ValueError("a funnel needs at least 2 steps")
-    n = len(steps)
-    W_us = int(window_seconds) * 1_000_000
-    idle_us = int(idle_windows) * W_us
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    proj = df.select(
-        F.col(key),
-        F.col(ts_col),
-        us.alias("_us"),
-        *[p.cast("boolean").alias(f"_s{i}") for i, p in enumerate(steps)],
-    )
-    out_cols = [key] + [f"t{i}_us" for i in range(1, n + 1)] + ["level"]
-    out_schema = T.StructType(
-        [T.StructField(key, T._parse_datatype_string(key_type))]
-        + [T.StructField(f"t{i}_us", T.LongType()) for i in range(1, n + 1)]
-        + [T.StructField("level", T.IntegerType())]
-    )
-    state_schema = T.StructType(
-        [T.StructField("t1", T.LongType()), T.StructField("last_seen", T.LongType())]
-        + [
-            T.StructField(f"a{i}", T.ArrayType(T.LongType()))
-            for i in range(1, n)
-        ]
-    )
-
-    def fn(key_vals, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        kv = key_vals[0]
-        if state.exists:
-            vals = state.get
-            t1, last_seen = vals[0], vals[1]
-            cands = [list(vals[2 + i]) for i in range(n - 1)]
-        else:
-            t1, last_seen, cands = None, None, [[] for _ in range(n - 1)]
-        wm_us = state.getCurrentWatermarkMs() * 1000
-
-        def resolve():
-            # the batch operator's chained-min fold, on ≤ one window of
-            # per-key candidates — value-only semantics, order-free
-            t = [t1]
-            hi = None if t1 is None else t1 + W_us
-            for i in range(1, n):
-                prev = t[-1]
-                if prev is None:
-                    t.append(None)
-                    continue
-                elig = [c for c in cands[i - 1] if prev <= c <= hi]
-                t.append(min(elig) if elig else None)
-            level = sum(1 for x in t if x is not None)
-            return t, level
-
-        def verdict_row():
-            t, level = resolve()
-            state.remove()
-            return pd.DataFrame([(kv, *t, level)], columns=out_cols)
-
-        if state.hasTimedOut:
-            yield verdict_row()
-            return
-        for pdf in pdf_iter:
-            uss = pdf["_us"].dropna()
-            if not len(uss):
-                continue
-            mx = int(uss.max())
-            last_seen = mx if last_seen is None else max(last_seen, mx)
-            for i in range(n):
-                flag = pdf[f"_s{i}"].fillna(False).astype(bool)
-                hit = pdf["_us"][flag].dropna()
-                if not len(hit):
-                    continue
-                if i == 0:
-                    mn = int(hit.min())
-                    if t1 is None or mn < t1:
-                        t1 = mn
-                else:
-                    cands[i - 1].extend(int(v) for v in hit)
-        if t1 is not None:
-            hi = t1 + W_us
-            # anchor is final once the watermark passes it — candidates
-            # below it can never chain; above-window ones never could
-            lo = t1 if wm_us >= t1 else None
-            for i in range(n - 1):
-                cands[i] = [
-                    c for c in cands[i]
-                    if c <= hi and (lo is None or c >= lo)
-                ]
-            if wm_us >= hi:
-                yield verdict_row()
-                return
-            fire_ms = hi // 1000 + 1
-        else:
-            # no anchor yet: a future anchor is >= the watermark, so
-            # pre-watermark candidates are dead; idle keys get their
-            # level-0 verdict after idle_windows of event-time silence
-            for i in range(n - 1):
-                cands[i] = [c for c in cands[i] if c >= wm_us]
-            if last_seen is None:
-                state.remove()
-                return
-            fire_ms = (last_seen + idle_us) // 1000 + 1
-        state.update((t1, last_seen, *cands))
-        state.setTimeoutTimestamp(fire_ms)
-
-    return proj.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )

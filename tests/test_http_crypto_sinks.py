@@ -1,4 +1,4 @@
-"""K4 HTTP publisher sink (local stdlib server) and K7 encrypt+sign."""
+"""K4 HTTP publisher sink (local stdlib server)."""
 
 import json
 import threading
@@ -77,52 +77,3 @@ def test_http_sink_error_propagates(spark):
         # once semantics), not silently drop the batch
         http_envelope_publish(env, "http://127.0.0.1:9/events")
 
-
-def test_encrypt_decrypt_roundtrip(spark):
-    from napalm_logs_spark.operators.crypto import (
-        decrypt_envelopes,
-        encrypt_envelopes,
-    )
-
-    key = "0123456789abcdef"  # AES-128
-    env = _envelopes(spark, 5)
-    enc = encrypt_envelopes(env, key)
-    assert set(enc.columns) == {"conv_id", "turn_idx", "ciphertext"}
-    dec = decrypt_envelopes(enc, key)
-    payloads = [json.loads(r.payload_json) for r in dec.collect()]
-    assert {p["host"] for p in payloads} == {f"host{i}" for i in range(5)}
-    # GCM IV is random per row: same plaintext never repeats ciphertext
-    c2 = encrypt_envelopes(env, key).collect()
-    assert {r.ciphertext for r in c2} != {r.ciphertext for r in enc.collect()}
-
-
-def test_decrypt_rejects_tampered_ciphertext(spark):
-    from napalm_logs_spark.operators.crypto import (
-        decrypt_envelopes,
-        encrypt_envelopes,
-    )
-
-    key = "0123456789abcdef"
-    enc = encrypt_envelopes(_envelopes(spark, 1), key)
-    # flip one character mid-ciphertext (authenticated region)
-    tampered = enc.withColumn(
-        "ciphertext",
-        F.concat(
-            F.substring("ciphertext", 1, 10),
-            F.lit("AAAA"),
-            F.expr("substring(ciphertext, 15)"),
-        ),
-    )
-    with pytest.raises(Exception):
-        decrypt_envelopes(tampered, key).collect()
-
-
-def test_decrypt_rejects_wrong_key(spark):
-    from napalm_logs_spark.operators.crypto import (
-        decrypt_envelopes,
-        encrypt_envelopes,
-    )
-
-    enc = encrypt_envelopes(_envelopes(spark, 1), "0123456789abcdef")
-    with pytest.raises(Exception):
-        decrypt_envelopes(enc, "feedfacefeedface").collect()

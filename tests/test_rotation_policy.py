@@ -16,14 +16,15 @@ import __spark_entry__ as entrymod
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# The rounds the r5 window was derived from.  A CORRECTNESS_r05.json
+# The rounds the current window was derived from.  A later round file
 # produced by the driver AFTER this window shipped must not change the
 # derivation — pin, don't glob.
-ROUNDS_SEEN = ("r01", "r02", "r03", "r04")
+ROUNDS_SEEN = ("r01", "r02", "r03", "r04", "r05")
 
 
-def _driver_green_union():
-    greens = set()
+def _last_green_round():
+    """Query name -> the latest ROUNDS_SEEN round with a green row."""
+    last = {}
     for r in ROUNDS_SEEN:
         path = os.path.join(REPO, f"CORRECTNESS_{r}.json")
         rows = json.load(open(path))
@@ -32,8 +33,8 @@ def _driver_green_union():
                 continue
             if (v.get("rows_match") and v.get("schema_match")
                     and v.get("hash_match") is True):
-                greens.add(name)
-    return greens
+                last[name] = r
+    return last
 
 
 def test_priority_window_size():
@@ -54,7 +55,7 @@ def test_every_never_green_query_has_a_slot():
     """r5 policy (VERDICT r4 item 3): the window must seat EVERY query
     that has never had a green driver row, so cumulative coverage can
     close at the full registry this round."""
-    greens = _driver_green_union()
+    greens = set(_last_green_round())
     q = set(entrymod.queries())
     never_green = q - greens
     unseated = sorted(never_green - set(entrymod._PRIORITY_50))
@@ -64,7 +65,7 @@ def test_every_never_green_query_has_a_slot():
 def test_registry_fully_covered_after_this_window():
     """Window ∪ prior greens must span the whole registry — nothing is
     deferred past r5."""
-    greens = _driver_green_union()
+    greens = set(_last_green_round())
     q = set(entrymod.queries())
     uncovered = sorted(q - greens - set(entrymod._PRIORITY_50))
     assert not uncovered, uncovered
@@ -74,9 +75,23 @@ def test_reconfirm_slots_are_previously_green():
     """Every slot not spent on a never-green query is a deliberate
     re-confirmation of an already-proven query (not a typo'd name that
     silently burns a slot)."""
-    greens = _driver_green_union()
+    greens = set(_last_green_round())
     q = set(entrymod.queries())
     never_green = q - greens
     reconfirm = [n for n in entrymod._PRIORITY_50 if n not in never_green]
     stray = sorted(set(reconfirm) - greens)
     assert not stray, f"re-confirm slots that were never green: {stray}"
+
+
+def test_window_holds_the_least_recently_confirmed():
+    """Staleness policy: no query outside the window was last confirmed
+    green before a query inside it, so each round re-checks the queries
+    whose evidence is oldest."""
+    last = _last_green_round()
+    q = set(entrymod.queries())
+    window = set(entrymod._PRIORITY_50)
+    newest_in = max(last.get(n, "") for n in window)
+    older_outside = sorted(
+        n for n in q - window if last.get(n, "") < newest_in
+    )
+    assert not older_outside, (newest_in, older_outside)

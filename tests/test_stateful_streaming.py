@@ -4,9 +4,6 @@ checkpoint restarts."""
 
 import datetime
 
-import pytest
-from pyspark.sql import functions as F
-
 from napalm_logs_spark.streaming.stateful import (
     entity_state_stream,
     exact_ttl_dedup_stream,
@@ -335,453 +332,3 @@ def test_salted_dedup_storm(spark, tmp_path):
     assert len(by_key[("junos", "r1", "STORM")]) == 1
     assert len(by_key[("junos", "r2", "other")]) == 1
 
-
-def _space_saving_ref(stream_items, capacity):
-    """Independent space-saving replication (plain python)."""
-    summary, n = {}, 0
-    for it in stream_items:
-        n += 1
-        if it in summary:
-            summary[it][0] += 1
-        elif len(summary) < capacity:
-            summary[it] = [1, 0]
-        else:
-            ev = min(summary, key=lambda x: (summary[x][0], x))
-            mc = summary[ev][0]
-            del summary[ev]
-            summary[it] = [mc + 1, mc]
-    return summary, n
-
-
-def test_heavy_hitters_stream_matches_replication(spark, tmp_path):
-    from napalm_logs_spark.streaming.stateful import heavy_hitters_stream
-
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    # skewed item stream across TWO micro-batches: state must carry over
-    batch1 = [("junos", "r1", f"E{i % 3}", i, BASE + datetime.timedelta(seconds=i)) for i in range(30)]
-    batch2 = [("junos", "r1", f"E{i % 7}", i, BASE + datetime.timedelta(seconds=30 + i)) for i in range(40)]
-    spark.createDataFrame(batch1, SCHEMA).coalesce(1).write.parquet(src + "/b=1")
-    spark.createDataFrame(batch2, SCHEMA).coalesce(1).write.parquet(src + "/b=2")
-
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b=*")
-    )
-    out = heavy_hitters_stream(
-        stream, capacity=4, key=("os",), item_col="message", emit_k=4
-    )
-    q = (
-        out.writeStream.format("memory").queryName("hh_stream")
-        .option("checkpointLocation", ckpt)
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("select * from hh_stream").collect()
-    n_max = max(r.n_total for r in rows)
-    assert n_max == 70
-    latest = {r.item: r for r in rows if r.n_total == n_max}
-
-    # replication processes the same items in the same (ts, item) order
-    items = [r[2] for r in sorted(batch1, key=lambda t: (t[4], t[2]))]
-    items += [r[2] for r in sorted(batch2, key=lambda t: (t[4], t[2]))]
-    ref, n_ref = _space_saving_ref(items, capacity=4)
-    top_ref = sorted(ref.items(), key=lambda kv: (-kv[1][0], kv[0]))[:4]
-    assert n_ref == 70
-    assert {it: (v[0], v[1]) for it, v in top_ref} == {
-        it: (r.est_count, r.err_bound) for it, r in latest.items()
-    }
-
-    # space-saving guarantees vs exact counts
-    import collections
-    exact = collections.Counter(items)
-    for it, r in latest.items():
-        assert r.est_count - r.err_bound <= exact[it] <= r.est_count
-    for it, c in exact.items():
-        if c > n_ref / 4:
-            assert it in ref  # frequent items are never lost
-
-
-def test_heavy_hitters_state_is_bounded(spark, tmp_path):
-    # 200 distinct items through a capacity-6 summary: emitted summary
-    # never exceeds capacity and n_total tracks the full stream
-    from napalm_logs_spark.streaming.stateful import heavy_hitters_stream
-
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    rows = [
-        ("ios", "r9", f"ITEM_{i}", i, BASE + datetime.timedelta(seconds=i))
-        for i in range(200)
-    ]
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    out = heavy_hitters_stream(stream, capacity=6, key=("os",), item_col="message", emit_k=6)
-    q = (
-        out.writeStream.format("memory").queryName("hh_bounded")
-        .option("checkpointLocation", ckpt)
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = spark.sql("select * from hh_bounded").collect()
-    assert len(got) <= 6 and max(r.n_total for r in got) == 200
-    # uniform stream: every estimate's error bound is disclosed and sane
-    assert all(r.err_bound <= r.est_count for r in got)
-
-
-def test_rate_anomaly_stream_matches_batch(spark, tmp_path):
-    """Two micro-batches through rate_anomaly_stream must reproduce the
-    batch operator's verdicts for every CLOSED window (the open last
-    window closes via the watermark timeout on the second batch)."""
-    from napalm_logs_spark.operators.cep import rate_anomaly
-    from napalm_logs_spark.streaming.stateful import rate_anomaly_stream
-
-    schema = "user_id long, ts timestamp"
-    W = 3600
-    # user 1: steady [2,1,2,1] then a 9-spike; user 2: flat then a
-    # silent window then a burst (exercises gap densification)
-    rows1, rows2 = [], []
-    for w, k in enumerate([2, 1, 2, 1]):
-        for j in range(k):
-            rows1.append((1, BASE + datetime.timedelta(hours=w, minutes=j)))
-    for j in range(9):
-        rows2.append((1, BASE + datetime.timedelta(hours=4, minutes=j)))
-    for w, k in [(0, 1), (1, 1), (2, 1)]:
-        for j in range(k):
-            rows1.append((2, BASE + datetime.timedelta(hours=w, minutes=j)))
-    for j in range(2):
-        rows2.append((2, BASE + datetime.timedelta(hours=4, minutes=j)))
-    # sentinel far in the future: advances the watermark so every real
-    # window is closed by timeout before the stream drains
-    rows2.append((99, BASE + datetime.timedelta(days=30)))
-
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    spark.createDataFrame(rows1, schema).coalesce(1).write.parquet(src + "/b=1")
-    spark.createDataFrame(rows2, schema).coalesce(1).write.parquet(src + "/b=2")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b=*")
-    )
-    out = rate_anomaly_stream(
-        stream.withWatermark("ts", "0 seconds"),
-        key="user_id", window_seconds=W,
-        baseline=4, min_baseline=3, z_hi=2.0,
-    )
-    q = (
-        out.writeStream.format("memory").queryName("ra_stream")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.win_start): r
-        for r in spark.sql("select * from ra_stream").collect()
-        if r.user_id != 99
-    }
-
-    batch = spark.createDataFrame(rows1 + rows2[:-1], schema)
-    expected = {
-        (r.user_id, r.win_start): r
-        for r in rate_anomaly(
-            batch, key="user_id", window_seconds=W,
-            baseline=4, min_baseline=3, z_hi=2.0,
-        ).collect()
-    }
-    assert set(got) == set(expected)
-    for k, e in expected.items():
-        g = got[k]
-        assert (g.n, g.n_baseline, g.anomaly) == (e.n, e.n_baseline, e.anomaly), k
-        # stream emits unrounded mu/z; batch rounds to 6 decimals
-        for a, b in ((g.mu, e.mu), (g.z, e.z)):
-            assert (a is None) == (b is None), k
-            if a is not None:
-                assert abs(a - b) < 6e-7, (k, a, b)
-    # the spike verdict is present and flagged
-    assert got[(1, int(BASE.replace(tzinfo=datetime.timezone.utc).timestamp()) + 4 * W)].anomaly == 1
-
-
-def test_rate_anomaly_stream_state_bounded_over_long_gap(spark, tmp_path):
-    """A key silent for many windows emits at most `baseline` trailing
-    zero windows per gap — not one row per silent window."""
-    from napalm_logs_spark.streaming.stateful import rate_anomaly_stream
-
-    schema = "user_id long, ts timestamp"
-    rows = [(1, BASE)]
-    # 100-window gap, then one event
-    rows.append((1, BASE + datetime.timedelta(hours=100)))
-    rows.append((99, BASE + datetime.timedelta(days=30)))  # watermark push
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = rate_anomaly_stream(
-        stream.withWatermark("ts", "0 seconds"),
-        key="user_id", window_seconds=3600,
-        baseline=4, min_baseline=3, z_hi=2.0,
-    )
-    q = (
-        out.writeStream.format("memory").queryName("ra_gap")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    rows_out = [r for r in spark.sql("select * from ra_gap").collect() if r.user_id == 1]
-    # window 0, at most `baseline`=4 trailing silent windows, window 100
-    assert len(rows_out) <= 6
-    zeros = [r for r in rows_out if r.n == 0]
-    assert 1 <= len(zeros) <= 4
-    # the post-gap window sees an all-zero flat baseline -> n=1 > mu=0
-    last = max(rows_out, key=lambda r: r.win_start)
-    assert last.n == 1 and last.anomaly == 1
-
-
-def test_rate_anomaly_stream_long_gap_matches_batch_values(spark, tmp_path):
-    """The rows emitted after a longer-than-baseline silent gap must
-    carry the batch dense-spine values: an all-zero baseline (mu=0.0,
-    z NULL), not the stale pre-gap counts."""
-    from napalm_logs_spark.streaming.stateful import rate_anomaly_stream
-
-    schema = "user_id long, ts timestamp"
-    rows = [(1, BASE + datetime.timedelta(hours=h, minutes=m))
-            for h in range(4) for m in range(5)]          # 4 windows of 5
-    rows.append((1, BASE + datetime.timedelta(hours=30)))  # 26-window gap
-    rows.append((99, BASE + datetime.timedelta(days=30)))  # watermark push
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = rate_anomaly_stream(
-        stream.withWatermark("ts", "0 seconds"),
-        key="user_id", window_seconds=3600,
-        baseline=4, min_baseline=3, z_hi=2.0,
-    )
-    q = (
-        out.writeStream.format("memory").queryName("ra_gapval")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = {r.win_start: r for r in
-           spark.sql("select * from ra_gapval").collect() if r.user_id == 1}
-    t0 = int(BASE.replace(tzinfo=datetime.timezone.utc).timestamp())
-    # emitted silent windows are hours 26..29 (the trailing 4 of the
-    # gap); their baselines must be all-zero spines, not [5,5,5,5]
-    for h in (26, 27, 28, 29):
-        r = got[t0 + h * 3600]
-        assert r.n == 0 and r.z is None and r.anomaly == 0
-        # h=26 saw 4 simulated zero pushes -> mu 0.0; batch agrees
-        assert r.mu == 0.0, (h, r.mu)
-    # hour 30 (n=1) against the flat zero baseline: first deviation
-    r30 = got[t0 + 30 * 3600]
-    assert r30.n == 1 and r30.mu == 0.0 and r30.anomaly == 1
-
-
-def test_rate_anomaly_stream_out_of_order_across_arrow_chunks(spark, tmp_path):
-    """Rows that arrive ts-DESCENDING in one micro-batch, spanning
-    several Arrow chunks, must still be counted (one sort across the
-    whole batch — per-chunk sorting would drop cross-chunk
-    stragglers as post-watermark)."""
-    from napalm_logs_spark.operators.cep import rate_anomaly
-    from napalm_logs_spark.streaming.stateful import rate_anomaly_stream
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
-    try:
-        schema = "user_id long, ts timestamp"
-        # 60 rows over 3 hours, written in REVERSE time order
-        rows = [(1, BASE + datetime.timedelta(hours=h, minutes=m))
-                for h in range(3) for m in range(20)]
-        rows = rows[::-1]
-        rows.append((99, BASE + datetime.timedelta(days=30)))
-        src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-        out = rate_anomaly_stream(
-            stream.withWatermark("ts", "0 seconds"),
-            key="user_id", window_seconds=3600,
-            baseline=4, min_baseline=2, z_hi=2.0,
-        )
-        q = (
-            out.writeStream.format("memory").queryName("ra_chunks")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        got = {(r.user_id, r.win_start): r.n for r in
-               spark.sql("select * from ra_chunks").collect()
-               if r.user_id == 1}
-        batch = spark.createDataFrame(rows[:-1], schema)
-        expected = {(r.user_id, r.win_start): r.n for r in rate_anomaly(
-            batch, key="user_id", window_seconds=3600,
-            baseline=4, min_baseline=2, z_hi=2.0,
-        ).collect()}
-        assert got == expected          # every window fully counted (n=20 each)
-        assert set(got.values()) == {20}
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-
-def _funnel_steps():
-    return [
-        F.col("event_type") == "view",
-        F.col("event_type") == "click",
-        F.col("event_type") == "purchase",
-    ]
-
-
-def test_funnel_stream_matches_batch(spark, tmp_path):
-    """Cross-batch funnel verdicts must equal the batch operator's fold
-    over the same rows: anchors discovered in batch 1, later steps in
-    batch 2, verdicts closed by the sentinel-advanced watermark (and the
-    no-view key by the idle timeout)."""
-    from napalm_logs_spark.operators.cep import windowed_funnel
-    from napalm_logs_spark.streaming.stateful import funnel_stream
-
-    schema = "user_id long, event_type string, ts timestamp"
-    W = 60
-    sec = lambda s: BASE + datetime.timedelta(seconds=s)  # noqa: E731
-    # u1 converts across the two batches; u2's purchase lands outside
-    # the anchor window; u3 never views (level 0 via idle timeout);
-    # u4's batch-2 view is EARLIER than its batch-1 view — the anchor
-    # must move down and the pre-anchor click become eligible
-    b1 = [
-        (1, "view", 0), (1, "click", 10),
-        (2, "view", 0), (2, "click", 50),
-        (3, "click", 5), (3, "purchase", 6),
-        (4, "view", 30), (4, "click", 12),
-    ]
-    b2 = [
-        (1, "purchase", 20),
-        (2, "purchase", 80),
-        (4, "view", 8),
-        (99, "view", 100000),  # sentinel: closes every real window
-    ]
-    mk = lambda rows: [(u, e, sec(o)) for u, e, o in rows]  # noqa: E731
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    spark.createDataFrame(mk(b1), schema).coalesce(1).write.parquet(src + "/b=1")
-    spark.createDataFrame(mk(b2), schema).coalesce(1).write.parquet(src + "/b=2")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b=*")
-    )
-    out = funnel_stream(
-        stream.withWatermark("ts", "0 seconds"),
-        _funnel_steps(), window_seconds=W, key="user_id",
-    )
-    q = (
-        out.writeStream.format("memory").queryName("funnel_stream")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = {
-        r.user_id: r
-        for r in spark.sql("select * from funnel_stream").collect()
-        if r.user_id != 99
-    }
-
-    batch = spark.createDataFrame(mk(b1 + b2[:-1]), schema)
-    expected = {
-        r.user_id: r
-        for r in windowed_funnel(
-            batch, _funnel_steps(), window_seconds=W, key="user_id"
-        ).collect()
-    }
-    assert set(got) == set(expected)
-    for k, e in expected.items():
-        g = got[k]
-        assert (g.t1_us, g.t2_us, g.t3_us, g.level) == (
-            e.t1_us, e.t2_us, e.t3_us, e.level
-        ), k
-    # sanity on the scenario itself
-    assert got[1].level == 3
-    assert got[2].level == 2          # purchase@80 > view@0 + 60
-    assert got[3].level == 0          # never anchored
-    assert got[4].level == 2          # anchor moved to view@8, click@12
-
-
-def test_funnel_stream_prunes_state_to_one_window(spark, tmp_path):
-    """Candidate state is pruned to the live anchor window: a key with
-    many clicks far beyond t1+W must carry none of them, and its verdict
-    still matches batch."""
-    from napalm_logs_spark.operators.cep import windowed_funnel
-    from napalm_logs_spark.streaming.stateful import funnel_stream
-
-    schema = "user_id long, event_type string, ts timestamp"
-    W = 60
-    sec = lambda s: BASE + datetime.timedelta(seconds=s)  # noqa: E731
-    rows = [(7, "view", 0), (7, "click", 10)]
-    rows += [(7, "click", 1000 + i) for i in range(200)]  # all > t1+W
-    rows += [(99, "view", 100000)]
-    df = [(u, e, sec(o)) for u, e, o in rows]
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    spark.createDataFrame(df, schema).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = funnel_stream(
-        stream.withWatermark("ts", "0 seconds"),
-        _funnel_steps(), window_seconds=W, key="user_id",
-    )
-    q = (
-        out.writeStream.format("memory").queryName("funnel_prune")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = {
-        r.user_id: r
-        for r in spark.sql("select * from funnel_prune").collect()
-        if r.user_id != 99
-    }
-    exp = {
-        r.user_id: r
-        for r in windowed_funnel(
-            spark.createDataFrame(df[:-1], schema),
-            _funnel_steps(), window_seconds=W, key="user_id",
-        ).collect()
-    }
-    assert got[7].level == exp[7].level == 2
-    assert got[7].t2_us == exp[7].t2_us
-
-
-def test_funnel_stream_state_survives_checkpoint_restart(spark, tmp_path):
-    """Run 1 sees the anchor (view); run 2 — a NEW query from the same
-    checkpoint — delivers the click/purchase and the sentinel: the
-    verdict must chain from state remembered across the restart."""
-    from napalm_logs_spark.streaming.stateful import funnel_stream
-
-    schema = "user_id long, event_type string, ts timestamp"
-    src, ckpt, out = (
-        str(tmp_path / "src"), str(tmp_path / "ckpt"), str(tmp_path / "out")
-    )
-    sec = lambda s: BASE + datetime.timedelta(seconds=s)  # noqa: E731
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = (
-            funnel_stream(
-                stream.withWatermark("ts", "0 seconds"),
-                _funnel_steps(), window_seconds=60, key="user_id",
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    spark.createDataFrame(
-        [(1, "view", sec(0)), (1, "click", sec(5))], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run()
-    spark.createDataFrame(
-        [(1, "purchase", sec(9)), (99, "view", sec(100000))], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run()
-    got = {r.user_id: r for r in spark.read.parquet(out).collect()}
-    assert got[1].level == 3
-    assert (
-        got[1].t1_us, got[1].t2_us, got[1].t3_us,
-    ) == tuple(
-        int(sec(s).replace(tzinfo=datetime.timezone.utc).timestamp() * 1e6)
-        for s in (0, 5, 9)
-    )

@@ -13,8 +13,6 @@ cross-check, not a tautology:
 * ``a1_ttl_kept.parquet``       — anchored-TTL dedup kept-counts per
   event_type, computed by a sequential python scan over the events
   table (per scale factor, keyed by ``scale_rows``).
-* ``mm_features_golden.parquet``— n_bytes/sha256 digests of the
-  deterministic synthetic media payloads, computed with hashlib.
 * ``near_dup_golden.parquet``   — embedding near-dup pairs computed in
   numpy following the operator's published spec (seeded hyperplanes,
   multi-table buckets, bucket cap, exact cosine, HALF_UP rounding).
@@ -24,10 +22,8 @@ Run from the repo root:  python tools/make_goldens.py
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
-import sys
 
 import numpy as np
 import pandas as pd
@@ -126,28 +122,7 @@ def make_a1_ttl(ttl: float = 300.0) -> pd.DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 3. multimodal feature goldens (hashlib over the synthetic payloads)
-
-
-def make_mm_features() -> pd.DataFrame:
-    sys.path.insert(0, REPO)
-    # the INPUT synthesis is shared (it defines the table under test);
-    # the FEATURES are recomputed here independently with hashlib
-    from napalm_logs_spark.operators.multimodal import synth_media_pandas
-
-    media = synth_media_pandas(n=64)
-    return pd.DataFrame(
-        {
-            "media_id": media["media_id"].astype("int64"),
-            "kind": media["kind"],
-            "n_bytes": [len(bytes(p)) for p in media["payload"]],
-            "digest": [hashlib.sha256(bytes(p)).hexdigest() for p in media["payload"]],
-        }
-    ).astype({"n_bytes": "int64"})
-
-
-# ---------------------------------------------------------------------------
-# 4. embedding near-dup pairs (numpy re-implementation of the spec)
+# 3. embedding near-dup pairs (numpy re-implementation of the spec)
 
 
 def _round_half_up(x: np.ndarray, nd: int = 6) -> np.ndarray:
@@ -211,7 +186,7 @@ def make_near_dup(
 
 
 # ---------------------------------------------------------------------------
-# 5. alarm gauge golden (derived from the fixture yang.json contents)
+# 4. alarm gauge golden (derived from the fixture yang.json contents)
 
 ALARM_FAMILIES = {
     "SYSTEM_ALARM": ("system_alarm", 1),
@@ -266,95 +241,6 @@ def make_alarm_gauge() -> pd.DataFrame:
 
 
 
-
-
-def make_mm_real_features() -> pd.DataFrame:
-    """Golden for the REAL codec path, computed from the PRE-encoding
-    arrays (no codec involved) — independently replays the synth RNG
-    and applies the published feature formulas + rounding chain."""
-    # replay synth_real_media_pandas(seed=42, the query default)'s RNG
-    # stream in media_id order
-    rng = np.random.RandomState(42)
-    out = []
-    for i in range(24):
-        kind = ["image", "audio", "video"][i % 3]
-        v = np.zeros(8, dtype="float64")
-        if kind == "image":
-            w, h = 8 + (i % 5) * 4, 6 + (i % 3) * 4
-            px = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8).astype("float64")
-            v[:3] = px.reshape(-1, 3).mean(axis=0)
-            v[3] = px.std()
-            v[4], v[5] = w, h
-        elif kind == "audio":
-            rate, secs = 8000, 0.05 + (i % 4) * 0.05
-            t = np.arange(int(rate * secs))
-            x = (3000 * np.sin(2 * np.pi * (100 + i * 10) * t / rate)).astype("int16").astype("float64")
-            v[0] = np.sqrt((x**2).mean()) if len(x) else 0.0
-            v[1] = (np.diff(np.signbit(x)) != 0).mean() if len(x) > 1 else 0.0
-            v[2] = len(x) / rate
-            v[3] = rate / 1e3
-        else:
-            nf, h, w = 2 + i % 3, 6, 8
-            fr = rng.randint(0, 256, size=(nf, h, w, 3), dtype=np.uint8).astype("float64")
-            v[0] = nf
-            v[1], v[2] = h, w
-            v[3] = fr.mean()
-        g = np.round(v, 6).astype("float32").astype("float64")
-        # Spark ROUND(x, 4) is HALF_UP — all stats are non-negative
-        f = np.floor(g * 1e4 + 0.5) / 1e4
-        out.append((i, kind, f[0], f[1], f[2], f[3]))
-    return pd.DataFrame(out, columns=["media_id", "kind", "f0", "f1", "f2", "f3"]).astype(
-        {"media_id": "int64"}
-    )
-
-
-def make_mm_jpeg_fidelity() -> pd.DataFrame:
-    """Golden for the lossy-container fidelity gate: pre-encoding
-    feature truth (g0..g3) + per-row tolerance, computed with NO codec
-    involved — an independent replay of synth_real_media_pandas(n=36,
-    jpeg_images=True)'s RNG stream and container cycle.  The engine
-    side decodes the actual payload bytes and must land within ``tol``
-    of these values; lossless containers get a near-zero tolerance,
-    baseline JPEG q=95 gets 1.5 (measured worst deviation 0.44)."""
-    rng = np.random.RandomState(42)
-    out = []
-    for i in range(36):
-        kind = ["image", "audio", "video"][i % 3]
-        v = np.zeros(4, dtype="float64")
-        mime, tol = None, 1e-6
-        if kind == "image":
-            w, h = 8 + (i % 5) * 4, 6 + (i % 3) * 4
-            px = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8).astype("float64")
-            v[:3] = px.reshape(-1, 3).mean(axis=0)
-            v[3] = px.std()
-            cyc = (i // 3) % 3
-            mime = ("image/bmp", "image/png", "image/jpeg")[cyc]
-            if mime == "image/jpeg":
-                tol = 1.5
-        elif kind == "audio":
-            rate, secs = 8000, 0.05 + (i % 4) * 0.05
-            t = np.arange(int(rate * secs))
-            x = (3000 * np.sin(2 * np.pi * (100 + i * 10) * t / rate)).astype("int16").astype("float64")
-            v[0] = np.sqrt((x**2).mean()) if len(x) else 0.0
-            v[1] = (np.diff(np.signbit(x)) != 0).mean() if len(x) > 1 else 0.0
-            v[2] = len(x) / rate
-            v[3] = rate / 1e3
-            mime = "audio/wav"
-        else:
-            nf, h, w = 2 + i % 3, 6, 8
-            fr = rng.randint(0, 256, size=(nf, h, w, 3), dtype=np.uint8).astype("float64")
-            v[0] = nf
-            v[1], v[2] = h, w
-            v[3] = fr.mean()
-            mime = "video/x-nlv"
-        # replicate the decoder's round(6)→float32 output chain so the
-        # lossless rows compare exactly (float32 of a ~2000-scale value
-        # is ~1e-4 off its float64 source — far above the 1e-6 gate)
-        v = np.round(v, 6).astype("float32").astype("float64")
-        out.append((i, kind, mime, v[0], v[1], v[2], v[3], tol))
-    return pd.DataFrame(
-        out, columns=["media_id", "kind", "mime", "g0", "g1", "g2", "g3", "tol"]
-    ).astype({"media_id": "int64"})
 
 
 def make_bpe_train(n_merges: int = 40) -> pd.DataFrame:
@@ -554,7 +440,7 @@ def make_semdedup(k: int = 10, iters: int = 4, seed: int = 42,
 
 
 # ---------------------------------------------------------------------------
-# 7. IVF all-pairs kNN join golden (numpy re-implementation of the spec)
+# 5. IVF all-pairs kNN join golden (numpy re-implementation of the spec)
 
 
 def _numpy_ivf_centroids(M: np.ndarray, n_clusters: int, seed: int,
@@ -1024,41 +910,6 @@ def make_ann_ivfpq(
                        "rank": "int64", "scale_key": "int64"})
 
 
-def make_mm_mp4_demux(every_ms: int = 30) -> pd.DataFrame:
-    """Golden for the ISO-BMFF demux path, computed from the
-    PRE-encoding frame arrays (no container parsing involved) — replays
-    synth_real_media_pandas(n=24, mp4_videos=True)'s RNG stream; for
-    each MP4 video row the expected sample at offset ``off`` is frame
-    ``min(off // 40, n_frames - 1)`` (25 fps decode timeline), its byte
-    count h·w·3 and the sha256 of its raw RGB bytes."""
-    rng = np.random.RandomState(42)
-    out = []
-    for i in range(24):
-        kind = ["image", "audio", "video"][i % 3]
-        if kind == "image":
-            w, h = 8 + (i % 5) * 4, 6 + (i % 3) * 4
-            rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-        elif kind == "audio":
-            pass  # audio synth draws nothing from the RNG
-        else:
-            nf, h, w = 2 + i % 3, 6, 8
-            frames = rng.randint(0, 256, size=(nf, h, w, 3), dtype=np.uint8)
-            if (i // 3) % 2 != 1:
-                continue  # NLV row — the demux operator skips it
-            dur_ms = nf * 40
-            for off in range(0, max(dur_ms, 1), every_ms):
-                idx = min(off // 40, nf - 1)
-                blob = frames[idx].tobytes()
-                out.append((
-                    i, off, idx, len(blob),
-                    hashlib.sha256(blob).hexdigest(),
-                ))
-    return pd.DataFrame(
-        out, columns=["media_id", "frame_off_ms", "frame_idx", "n_bytes", "digest"]
-    ).astype({"media_id": "int64", "frame_off_ms": "int32",
-              "frame_idx": "int32", "n_bytes": "int64"})
-
-
 def make_ann_pq(
     m: int = 8, k_sub: int = 16, iters: int = 10, seed: int = 42,
     sample_cap: int = 1024, k: int = 5, n_queries: int = 5,
@@ -1253,108 +1104,6 @@ def make_spfhp(budget: int = 128) -> pd.DataFrame:
     return pd.concat(frames, ignore_index=True)
 
 
-def make_mm_phash(n_base: int = 12, seed: int = 11, max_hamming: int = 6) -> pd.DataFrame:
-    """Golden for the perceptual-hash image dedup: replays
-    ``synth_phash_corpus_pandas``'s RNG stream from the PRE-encoding
-    arrays and applies the published dHash contract with its own math
-    (vectorized unsigned packing vs the operator's shift loop), then
-    brute-force popcount over ALL pairs — the banded join must
-    reproduce this set exactly (it is exact for max_hamming < n_bands).
-    """
-    rng = np.random.RandomState(seed)
-    arrays: list = []
-    mid = 0
-    for i in range(n_base):
-        h, w = 12 + (i % 3) * 4, 16 + (i % 4) * 4
-        px = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-        noise = rng.randint(-12, 13, size=px.shape)
-        bright = np.clip(px.astype(np.int16) + 8, 0, 255).astype(np.uint8)
-        noisy = np.clip(px.astype(np.int16) + noise, 0, 255).astype(np.uint8)
-        arrays += [(mid, px), (mid + 1, px), (mid + 2, bright), (mid + 3, noisy)]
-        mid += 4
-    for _ in range(n_base):
-        arrays.append(
-            (mid, rng.randint(0, 256, size=(12, 16, 3), dtype=np.uint8))
-        )
-        mid += 1
-
-    def hsh(px: np.ndarray) -> int:
-        g = (
-            px[:, :, 0].astype(np.int64) * 299
-            + px[:, :, 1].astype(np.int64) * 587
-            + px[:, :, 2].astype(np.int64) * 114
-        ) // 1000
-        hh, ww = g.shape
-        rows = [(r * hh) // 8 for r in range(8)]
-        cols = [(c * ww) // 9 for c in range(9)]
-        s = g[rows][:, cols]
-        bits = (s[:, 1:] > s[:, :-1]).astype(np.uint64).reshape(64)
-        weights = np.uint64(1) << np.arange(63, -1, -1, dtype=np.uint64)
-        return int((bits * weights).sum(dtype=np.uint64))
-
-    hv = [(i, hsh(px)) for i, px in arrays]
-    out = []
-    for x in range(len(hv)):
-        for y in range(x + 1, len(hv)):
-            d = bin(hv[x][1] ^ hv[y][1]).count("1")
-            if d <= max_hamming:
-                out.append((hv[x][0], hv[y][0], d))
-    return pd.DataFrame(out, columns=["id_a", "id_b", "hamming"]).astype(
-        {"id_a": "int64", "id_b": "int64", "hamming": "int32"}
-    )
-
-
-def make_mm_audio_gates(n: int = 24, seed: int = 13) -> pd.DataFrame:
-    """Golden for the audio quality gates: replays
-    ``synth_audio_corpus_pandas``'s RNG stream from the PRE-encoding
-    int16 arrays and applies the published all-integer contract with
-    its own code (pure-python loops vs the operator's numpy path)."""
-    import math
-
-    rng = np.random.RandomState(seed)
-    out = []
-    for i in range(n):
-        rate = 8000
-        t = np.arange(int(rate * (0.05 + (i % 3) * 0.025)))
-        fam = i % 4
-        if fam == 0:
-            x = (4000 + 500 * (i % 5)) * np.sin(2 * np.pi * (120 + 7 * i) * t / rate)
-        elif fam == 1:
-            x = rng.randint(-40, 41, size=t.size)
-        elif fam == 2:
-            x = np.clip(
-                60000 * np.sin(2 * np.pi * (90 + 11 * i) * t / rate), -32768, 32767
-            )
-        else:
-            x = rng.randint(-9000, 9001, size=t.size)
-        s = [int(v) for v in x.astype(np.int16)]
-        n_s = len(s)
-        peak = max((abs(v) for v in s), default=0)
-        sum_sq = sum(v * v for v in s)
-        zc = sum(1 for a, b in zip(s, s[1:]) if (a < 0) != (b < 0))
-        rms = math.isqrt((sum_sq * 1_000_000) // n_s) if n_s else 0
-        n_clip = sum(1 for v in s if abs(v) >= 32600)
-        silence = rms < 100 * 1000
-        clipped = n_clip > 0 and n_clip * 1000 >= n_s * 1
-        out.append(
-            (i, n_s, rate, peak, sum_sq, zc, rms, silence, clipped,
-             n_s > 0 and not silence and not clipped)
-        )
-    return pd.DataFrame(
-        out,
-        columns=[
-            "media_id", "n_samples", "rate", "peak", "sum_sq",
-            "n_zero_cross", "rms_x1000", "is_silence", "is_clipped", "keep",
-        ],
-    ).astype(
-        {
-            "media_id": "int64", "n_samples": "int64", "rate": "int32",
-            "peak": "int32", "sum_sq": "int64", "n_zero_cross": "int64",
-            "rms_x1000": "int64",
-        }
-    )
-
-
 def numpy_softmax_train(M, y, k, iters, lr, l2=0.0):
     """The SINGLE numpy reference for operators/classifier.py's
     published spec: full-batch softmax regression from zero weights,
@@ -1417,15 +1166,9 @@ def main() -> None:
     a1 = make_a1_ttl()
     a1.to_parquet(os.path.join(OUT, "a1_ttl_kept.parquet"), index=False)
     print(f"a1_ttl_kept: {len(a1)} rows across {a1['scale_rows'].nunique()} sfs")
-    mm = make_mm_features()
-    mm.to_parquet(os.path.join(OUT, "mm_features_golden.parquet"), index=False)
-    print(f"mm_features: {len(mm)} rows")
     nd = make_near_dup()
     nd.to_parquet(os.path.join(OUT, "near_dup_golden.parquet"), index=False)
     print(f"near_dup: {len(nd)} rows across {nd['scale_rows'].nunique()} sfs")
-    mr = make_mm_real_features()
-    mr.to_parquet(os.path.join(OUT, "mm_real_features_golden.parquet"), index=False)
-    print(f"mm_real_features: {len(mr)} rows")
     km = make_kmeans()
     km.to_parquet(os.path.join(OUT, "kmeans_golden.parquet"), index=False)
     print(f"kmeans: {len(km)} rows across {km['scale_key'].nunique()} sfs")
@@ -1444,9 +1187,6 @@ def main() -> None:
     ap = make_ann_pq()
     ap.to_parquet(os.path.join(OUT, "ann_pq_golden.parquet"), index=False)
     print(f"ann_pq: {len(ap)} rows across {ap['scale_key'].nunique()} sfs")
-    md = make_mm_mp4_demux()
-    md.to_parquet(os.path.join(OUT, "mm_mp4_demux_golden.parquet"), index=False)
-    print(f"mm_mp4_demux: {len(md)} rows")
     iq = make_ann_ivfpq()
     iq.to_parquet(os.path.join(OUT, "ann_ivfpq_golden.parquet"), index=False)
     print(f"ann_ivfpq: {len(iq)} rows across {iq['scale_key'].nunique()} sfs")
@@ -1459,9 +1199,6 @@ def main() -> None:
     ag = make_alarm_gauge()
     ag.to_parquet(os.path.join(OUT, "alarm_gauge_golden.parquet"), index=False)
     print(f"alarm_gauge: {len(ag)} rows")
-    mj = make_mm_jpeg_fidelity()
-    mj.to_parquet(os.path.join(OUT, "mm_jpeg_fidelity_golden.parquet"), index=False)
-    print(f"mm_jpeg_fidelity: {len(mj)} rows")
     bp = make_bpe_train()
     bp.to_parquet(os.path.join(OUT, "bpe_train_golden.parquet"), index=False)
     print(f"bpe_train: {len(bp)} rows across {bp['scale_key'].nunique()} sfs")
@@ -1480,12 +1217,6 @@ def main() -> None:
     sp = make_spfhp()
     sp.to_parquet(os.path.join(OUT, "spfhp_golden.parquet"), index=False)
     print(f"spfhp: {len(sp)} rows across {sp['scale_key'].nunique()} sfs")
-    ph = make_mm_phash()
-    ph.to_parquet(os.path.join(OUT, "phash_pairs_golden.parquet"), index=False)
-    print(f"mm_phash: {len(ph)} pair rows")
-    au = make_mm_audio_gates()
-    au.to_parquet(os.path.join(OUT, "audio_gates_golden.parquet"), index=False)
-    print(f"mm_audio_gates: {len(au)} rows")
     bx = make_bitext()
     bx.to_parquet(os.path.join(OUT, "bitext_golden.parquet"), index=False)
     print(f"bitext: {len(bx)} rows across {bx['scale_key'].nunique()} sfs")

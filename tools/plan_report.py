@@ -72,7 +72,7 @@ def main() -> None:
         f"Generated by `tools/plan_report.py` over `{SF_DIR}` (AQE off",
         "for label introspection, local[4]).  Exchange count excludes ReusedExchange;",
         "`py` = Arrow/pandas stages (the engine's deliberate vectorized",
-        "stages — normalize, k-means assign, media decode); `bnlj` =",
+        "stages — normalize, k-means assign); `bnlj` =",
         "broadcast-nested-loop joins, the INTENDED shape for scalar-",
         "subquery joins (corpus counts, mix totals) and bounded-query-",
         "set brute-force kNN; `cart` flags true CartesianProduct joins",
