@@ -1,54 +1,55 @@
-"""Streaming CMS: merged per-batch slices equal the whole-stream
-sketch (mergeability end-to-end), estimates stay one-sided, replay is
-idempotent."""
+"""Sketches kept per slice of a stream (one table per micro-batch)
+merge into the whole-stream sketch: Count-Min and histogram counters by
+SUM, HLL registers by MAX (:func:`hll_merge`).  Merged tables stay
+sketch-sized however many keys the slices hold, and estimates read off
+a merged table keep their batch guarantees."""
 
-import pytest
+import math
+
 from pyspark.sql import functions as F
 
 from napalm_logs_spark.operators.sketch import (
     cms_estimate,
     count_min_sketch,
-)
-from napalm_logs_spark.streaming.sketch_stream import (
-    cms_batch_sink,
-    read_merged_sketch,
-    run_cms_stream_once,
+    histogram_bins,
+    histogram_quantiles,
+    hll_estimate,
+    hll_merge,
+    hll_registers,
 )
 
 SCHEMA = "key string"
+VSCHEMA = "value long"
 
 
-@pytest.fixture()
-def dirs(tmp_path):
-    return {k: str(tmp_path / k) for k in ("src", "sk", "ckpt")}
+def _keys(spark, keys):
+    return spark.createDataFrame([(k,) for k in keys], SCHEMA)
 
 
-def _write(spark, src, keys):
-    spark.createDataFrame([(k,) for k in keys], SCHEMA).coalesce(
-        1
-    ).write.mode("append").parquet(src)
+def _vals(spark, vals):
+    return spark.createDataFrame([(int(v),) for v in vals], VSCHEMA)
 
 
-def test_merged_slices_equal_whole_stream_sketch(spark, dirs):
+def _sum_merge(slices, keys, col="cnt"):
+    out = slices[0]
+    for s in slices[1:]:
+        out = out.unionAll(s)
+    return out.groupBy(*keys).agg(F.sum(col).alias(col))
+
+
+def test_merged_slices_equal_whole_stream_sketch(spark):
     b1 = [f"k{i % 11}" for i in range(120)]
     b2 = [f"k{i % 7}" for i in range(80)] + ["hot"] * 40
-    _write(spark, dirs["src"], b1)
-    run_cms_stream_once(
-        spark, dirs["src"], dirs["sk"], dirs["ckpt"], SCHEMA, width=64
+    merged = _sum_merge(
+        [count_min_sketch(_keys(spark, b), width=64) for b in (b1, b2)],
+        ["d", "bucket"],
     )
-    _write(spark, dirs["src"], b2)
-    run_cms_stream_once(
-        spark, dirs["src"], dirs["sk"], dirs["ckpt"], SCHEMA, width=64
-    )
-    merged = read_merged_sketch(spark, dirs["sk"])
-    whole = count_min_sketch(
-        spark.createDataFrame([(k,) for k in b1 + b2], SCHEMA), width=64
-    )
+    whole = count_min_sketch(_keys(spark, b1 + b2), width=64)
     assert sorted(
         (r["d"], r["bucket"], r["cnt"]) for r in merged.collect()
     ) == sorted((r["d"], r["bucket"], r["cnt"]) for r in whole.collect())
     # point queries off the merged sketch: one-sided vs exact stream counts
-    probes = spark.createDataFrame([("hot",), ("k1",), ("absent",)], SCHEMA)
+    probes = _keys(spark, ["hot", "k1", "absent"])
     est = {
         r["key"]: r["cms_est"]
         for r in cms_estimate(merged, probes, width=64).collect()
@@ -58,133 +59,63 @@ def test_merged_slices_equal_whole_stream_sketch(spark, dirs):
     assert est["absent"] >= 0
 
 
-def test_replayed_batch_overwrites_its_slice(spark, dirs):
-    keys = ["a", "b", "a"]
-    _write(spark, dirs["src"], keys)
-    run_cms_stream_once(
-        spark, dirs["src"], dirs["sk"], dirs["ckpt"], SCHEMA, width=32
-    )
-    before = sorted(map(tuple, read_merged_sketch(spark, dirs["sk"]).collect()))
-    # replay batch 0 by hand: same function, same batch id
-    bdf = spark.createDataFrame([(k,) for k in keys], SCHEMA)
-    cms_batch_sink(dirs["sk"], width=32)(bdf, 0)
-    after = sorted(map(tuple, read_merged_sketch(spark, dirs["sk"]).collect()))
-    assert before == after
-
-
-def test_merged_sketch_bounded_rows(spark, dirs):
-    _write(spark, dirs["src"], [f"u{i}" for i in range(3000)])
-    run_cms_stream_once(
-        spark, dirs["src"], dirs["sk"], dirs["ckpt"], SCHEMA,
-        depth=4, width=64,
-    )
+def test_merged_sketch_bounded_rows(spark):
+    slices = [
+        count_min_sketch(
+            _keys(spark, [f"u{i}" for i in range(lo, lo + 1000)]),
+            depth=4,
+            width=64,
+        )
+        for lo in (0, 1000, 2000)
+    ]
     # 3000 distinct keys, but the sketch stays <= depth*width rows
-    assert read_merged_sketch(spark, dirs["sk"]).count() <= 4 * 64
+    assert _sum_merge(slices, ["d", "bucket"]).count() <= 4 * 64
 
-def test_hll_merged_slices_equal_whole_stream_registers(spark, dirs):
-    from napalm_logs_spark.operators.sketch import hll_estimate, hll_registers
-    from napalm_logs_spark.streaming.sketch_stream import (
-        read_merged_hll,
-        run_hll_stream_once,
-    )
 
+def test_hll_merged_slices_equal_whole_stream_registers(spark):
     b1 = [f"u{i}" for i in range(400)]
     b2 = [f"u{i}" for i in range(200, 700)]  # overlaps b1
-    _write(spark, dirs["src"], b1)
-    run_hll_stream_once(
-        spark, dirs["src"], dirs["sk"], dirs["ckpt"], SCHEMA, p=8
+    merged = hll_merge(
+        hll_registers(_keys(spark, b1), p=8),
+        hll_registers(_keys(spark, b2), p=8),
     )
-    _write(spark, dirs["src"], b2)
-    run_hll_stream_once(
-        spark, dirs["src"], dirs["sk"], dirs["ckpt"], SCHEMA, p=8
-    )
-    merged = read_merged_hll(spark, dirs["sk"])
-    whole = hll_registers(
-        spark.createDataFrame([(k,) for k in b1 + b2], SCHEMA), p=8
-    )
+    whole = hll_registers(_keys(spark, b1 + b2), p=8)
     assert sorted(
         (r["bucket"], r["max_rank"]) for r in merged.collect()
     ) == sorted((r["bucket"], r["max_rank"]) for r in whole.collect())
-    # the merged-stream estimate IS the batch estimate (same registers)
+    # the merged-slice estimate IS the batch estimate (same registers)
     est = hll_estimate(merged, p=8).collect()[0]["est_distinct"]
     n = len(set(b1 + b2))
     assert abs(est - n) / n < 0.25  # ~1.04/sqrt(256) expected error
 
 
-def test_hll_replayed_batch_overwrites_its_slice(spark, dirs):
-    from napalm_logs_spark.streaming.sketch_stream import (
-        hll_batch_sink,
-        read_merged_hll,
-        run_hll_stream_once,
+def test_hll_merged_registers_bounded_rows(spark):
+    merged = hll_merge(
+        hll_registers(_keys(spark, [f"v{i}" for i in range(2500)]), p=8),
+        hll_registers(_keys(spark, [f"v{i}" for i in range(2500, 5000)]), p=8),
     )
-
-    keys = ["a", "b", "a", "c"]
-    _write(spark, dirs["src"], keys)
-    run_hll_stream_once(
-        spark, dirs["src"], dirs["sk"], dirs["ckpt"], SCHEMA, p=8
-    )
-    before = sorted(map(tuple, read_merged_hll(spark, dirs["sk"]).collect()))
-    bdf = spark.createDataFrame([(k,) for k in keys], SCHEMA)
-    hll_batch_sink(dirs["sk"], p=8)(bdf, 0)
-    after = sorted(map(tuple, read_merged_hll(spark, dirs["sk"]).collect()))
-    assert before == after
+    assert merged.count() <= 256
 
 
-def test_hll_merged_registers_bounded_rows(spark, dirs):
-    from napalm_logs_spark.streaming.sketch_stream import (
-        read_merged_hll,
-        run_hll_stream_once,
-    )
-
-    _write(spark, dirs["src"], [f"v{i}" for i in range(5000)])
-    run_hll_stream_once(
-        spark, dirs["src"], dirs["sk"], dirs["ckpt"], SCHEMA, p=8
-    )
-    assert read_merged_hll(spark, dirs["sk"]).count() <= 256
-
-
-# ---- fixed-bin histogram slices --------------------------------------
-
-VSCHEMA = "value long"
-
-
-def _write_vals(spark, src, vals):
-    spark.createDataFrame([(int(v),) for v in vals], VSCHEMA).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-
-
-def test_hist_merged_slices_equal_batch_histogram(spark, dirs):
-    from napalm_logs_spark.operators.sketch import (
-        histogram_bins,
-        histogram_quantiles,
-    )
-    from napalm_logs_spark.streaming.sketch_stream import (
-        read_merged_hist,
-        run_hist_stream_once,
-    )
-
+def test_hist_merged_slices_equal_batch_histogram(spark):
     b1 = [i * 37 % 5000 for i in range(400)]
     b2 = [i * 113 % 9000 for i in range(300)]
-    _write_vals(spark, dirs["src"], b1)
-    run_hist_stream_once(
-        spark, dirs["src"], dirs["sk"], dirs["ckpt"], VSCHEMA, bin_width=500
-    )
-    _write_vals(spark, dirs["src"], b2)
-    run_hist_stream_once(
-        spark, dirs["src"], dirs["sk"], dirs["ckpt"], VSCHEMA, bin_width=500
-    )
     merged = sorted(
-        map(tuple, read_merged_hist(spark, dirs["sk"]).collect())
+        map(
+            tuple,
+            _sum_merge(
+                [histogram_bins(_vals(spark, b), "value", bin_width=500)
+                 for b in (b1, b2)],
+                ["bin"],
+            ).select("bin", "cnt").collect(),
+        )
     )
-    whole = spark.createDataFrame([(int(v),) for v in b1 + b2], VSCHEMA)
+    whole = _vals(spark, b1 + b2)
     batch = sorted(
         map(tuple, histogram_bins(whole, "value", bin_width=500).collect())
     )
     assert merged == batch
     # quantile bins agree with a sorted-python reference
-    import math
-
     vals = sorted(b1 + b2)
     got = {
         r.q_pct: r.bin
@@ -193,77 +124,3 @@ def test_hist_merged_slices_equal_batch_histogram(spark, dirs):
     for q in (50, 90, 99):
         rank = math.ceil(q * len(vals) / 100)
         assert got[q] == vals[rank - 1] // 500
-
-
-def test_hist_replay_idempotent(spark, dirs):
-    from napalm_logs_spark.streaming.sketch_stream import (
-        hist_batch_sink,
-        read_merged_hist,
-        run_hist_stream_once,
-    )
-
-    vals = [100, 2500, 2500, 9999]
-    _write_vals(spark, dirs["src"], vals)
-    run_hist_stream_once(
-        spark, dirs["src"], dirs["sk"], dirs["ckpt"], VSCHEMA, bin_width=1000
-    )
-    before = sorted(map(tuple, read_merged_hist(spark, dirs["sk"]).collect()))
-    bdf = spark.createDataFrame([(int(v),) for v in vals], VSCHEMA)
-    hist_batch_sink(dirs["sk"], bin_width=1000)(bdf, 0)
-    after = sorted(map(tuple, read_merged_hist(spark, dirs["sk"]).collect()))
-    assert before == after
-
-
-# ---- drift cells slices ----------------------------------------------
-
-DSCHEMA = "lang string, snap string"
-
-
-def test_drift_merged_slices_equal_batch_chi2(spark, dirs):
-    from napalm_logs_spark.operators.text import chi2_drift
-    from napalm_logs_spark.streaming.sketch_stream import (
-        read_merged_drift,
-        run_drift_stream_once,
-    )
-
-    b1 = [("en", "a")] * 12 + [("fr", "a")] * 7 + [("en", "b")] * 3
-    b2 = [("fr", "b")] * 9 + [("en", "b")] * 5 + [("de", "a")] * 2
-    spark.createDataFrame(b1, DSCHEMA).coalesce(1).write.mode("append").parquet(
-        dirs["src"]
-    )
-    run_drift_stream_once(
-        spark, dirs["src"], dirs["sk"], dirs["ckpt"], DSCHEMA, "lang", "snap"
-    )
-    spark.createDataFrame(b2, DSCHEMA).coalesce(1).write.mode("append").parquet(
-        dirs["src"]
-    )
-    run_drift_stream_once(
-        spark, dirs["src"], dirs["sk"], dirs["ckpt"], DSCHEMA, "lang", "snap"
-    )
-    merged = sorted(
-        map(tuple, read_merged_drift(spark, dirs["sk"]).collect())
-    )
-    whole = spark.createDataFrame(b1 + b2, DSCHEMA)
-    batch = sorted(map(tuple, chi2_drift(whole, "lang", "snap").collect()))
-    assert merged == batch
-
-
-def test_drift_replay_idempotent(spark, dirs):
-    from napalm_logs_spark.streaming.sketch_stream import (
-        drift_cells_batch_sink,
-        read_merged_drift,
-        run_drift_stream_once,
-    )
-
-    rows = [("en", "a")] * 4 + [("fr", "b")] * 6
-    spark.createDataFrame(rows, DSCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(dirs["src"])
-    run_drift_stream_once(
-        spark, dirs["src"], dirs["sk"], dirs["ckpt"], DSCHEMA, "lang", "snap"
-    )
-    before = sorted(map(tuple, read_merged_drift(spark, dirs["sk"]).collect()))
-    bdf = spark.createDataFrame(rows, DSCHEMA)
-    drift_cells_batch_sink(dirs["sk"], "lang", "snap")(bdf, 0)
-    after = sorted(map(tuple, read_merged_drift(spark, dirs["sk"]).collect()))
-    assert before == after

@@ -1,195 +1,141 @@
-"""transformWithStateInPandas orphan detector.
+"""Orphan-alert semantics of the transcript alert query.
 
-The state-v2 protocol needs the protobuf wheel, absent in this
-container — so the processor SEMANTICS are tested directly against
-fake state/handle objects (the full per-batch contract: list state
-read-modify-write, timer registration, watermark pruning, expiry
-emission), the Spark integration tests run wherever protobuf exists,
-and the degradation path is asserted here.
+These cases were first written against a transformWithState processor
+(one timer per pending agent turn).  The alert query now runs as the
+stream-stream left-outer interval join of
+:func:`napalm_logs_spark.operators.cep.orphan_agent_turns`, so each case
+replays its scenario through :func:`run_orphan_alerts_once` batch by
+batch, then appends a far-future answered pair that moves both
+watermarks past every horizon, and reads the alerts the sink holds.
 """
 
 import datetime
 
-import pandas as pd
-import pytest
-
 from napalm_logs_spark.operators.cep import orphan_agent_turns
-from napalm_logs_spark.streaming.tws import (
-    _OrphanProcessor,
-    orphan_alert_stream,
-    tws_available,
-)
+from napalm_logs_spark.streaming.pipeline import run_orphan_alerts_once
 
 BASE = datetime.datetime(2017, 7, 20, 21, 0, 0)
-
-
-class FakeListState:
-    def __init__(self):
-        self.rows = []
-
-    def exists(self):
-        return bool(self.rows)
-
-    def get(self):
-        return iter(self.rows)
-
-    def put(self, rows):
-        self.rows = list(rows)
-
-    def append(self, row):
-        self.rows.append(row)
-
-    def clear(self):
-        self.rows = []
-
-
-class FakeHandle:
-    def __init__(self):
-        self.states = {}
-        self.timers = []
-
-    def getListState(self, name, schema, ttlDurationMs=None):
-        return self.states.setdefault(name, FakeListState())
-
-    def registerTimer(self, ms):
-        self.timers.append(ms)
-
-
-class FakeTimerValues:
-    def __init__(self, wm_ms=0):
-        self._wm = wm_ms
-
-    def getCurrentWatermarkInMs(self):
-        return self._wm
-
-
-class FakeExpiry:
-    def __init__(self, ms):
-        self._ms = ms
-
-    def getExpiryTimeInMs(self):
-        return self._ms
-
-
-def _pdf(rows):
-    return pd.DataFrame(
-        rows, columns=["conv_id", "turn_idx", "role", "text", "ts"]
-    ).astype({"ts": "datetime64[ns]"})
+SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, "
+    "tool string, ts timestamp"
+)
+HORIZON = 10
+WATERMARK = "30 seconds"
 
 
 def _ts(off):
     return BASE + datetime.timedelta(seconds=off)
 
 
-def _wm(off):
-    """Absolute epoch-ms watermark at BASE+off seconds (timers are absolute)."""
-    return int(_ts(off).timestamp() * 1000)
+#: an agent turn answered inside the horizon, far past every other row:
+#: it advances both sides' watermarks and is itself never an orphan
+SENTINEL = [
+    ("c9", 0, "agent", "s", None, _ts(2000)),
+    ("c9", 1, "tool", "t", "search", _ts(2001)),
+]
 
 
-def _mk():
-    p = _OrphanProcessor(horizon_seconds=10)
-    h = FakeHandle()
-    p.init(h)
-    return p, h
+class _AlertQuery:
+    def __init__(self, spark, tmp_path):
+        self.spark = spark
+        self.src = str(tmp_path / "src")
+        self.sink = str(tmp_path / "sink")
+        self.ckpt = str(tmp_path / "ckpt")
 
-
-def _emit_all(p, wm_ms):
-    """Fire every registered timer due at watermark wm_ms."""
-    out = []
-    for t in sorted(set(p.handle.timers)):
-        if t <= wm_ms:
-            for pdf in p.handleExpiredTimer(
-                ("c1",), FakeTimerValues(wm_ms), FakeExpiry(t)
-            ):
-                out.extend(pdf.itertuples(index=False))
-    return out
-
-
-def test_processor_orphan_fires_on_timer():
-    p, h = _mk()
-    batch = _pdf([("c1", 0, "agent", "ask", _ts(0))])
-    assert list(p.handleInputRows(("c1",), iter([batch]), FakeTimerValues(0))) == []
-    assert len(h.states["pending"].rows) == 1
-    assert h.timers  # deadline registered
-    out = _emit_all(p, wm_ms=_wm(60))
-    assert [(r.conv_id, r.agent_turn, r.agent_text) for r in out] == [("c1", 0, "ask")]
-    assert h.states["pending"].rows == []  # emitted exactly once
-
-
-def test_processor_tool_in_window_clears():
-    p, h = _mk()
-    b1 = _pdf([("c1", 0, "agent", "ask", _ts(0))])
-    b2 = _pdf([("c1", 1, "tool", "resp", _ts(5))])
-    list(p.handleInputRows(("c1",), iter([b1]), FakeTimerValues(0)))
-    list(p.handleInputRows(("c1",), iter([b2]), FakeTimerValues(0)))
-    assert h.states["pending"].rows == []
-    assert _emit_all(p, wm_ms=_wm(60)) == []
-
-
-def test_processor_tool_after_horizon_does_not_clear():
-    p, h = _mk()
-    list(
-        p.handleInputRows(
-            ("c1",),
-            iter(
-                [
-                    _pdf(
-                        [
-                            ("c1", 0, "agent", "ask", _ts(0)),
-                            ("c1", 1, "tool", "late", _ts(15)),
-                        ]
-                    )
-                ]
-            ),
-            FakeTimerValues(0),
+    def feed(self, rows):
+        """Append ``rows`` as one source file and run the query once;
+        returns every alert the sink holds so far."""
+        self.spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(self.src)
+        run_orphan_alerts_once(
+            self.spark,
+            self.src,
+            self.sink,
+            self.ckpt,
+            horizon_seconds=HORIZON,
+            watermark=WATERMARK,
         )
-    )
-    assert len(h.states["pending"].rows) == 1
-    out = _emit_all(p, wm_ms=_wm(60))
-    assert [(r.conv_id, r.agent_turn) for r in out] == [("c1", 0)]
+        try:
+            got = self.spark.read.parquet(self.sink).collect()
+        except Exception:  # nothing committed to the sink yet
+            return []
+        return sorted((r.conv_id, r.agent_turn, r.agent_text) for r in got)
 
 
-def test_processor_out_of_order_tool_clears_late_agent():
-    p, h = _mk()
-    # the TOOL arrives first; its timestamp must be remembered
-    list(
-        p.handleInputRows(
-            ("c1",), iter([_pdf([("c1", 1, "tool", "resp", _ts(8))])]),
-            FakeTimerValues(0),
+def test_processor_orphan_fires_on_timer(spark, tmp_path):
+    q = _AlertQuery(spark, tmp_path)
+    assert q.feed([("c1", 0, "agent", "ask", None, _ts(0))]) == []
+    assert q.feed(SENTINEL) == [("c1", 0, "ask")]
+    # a later batch does not fire it again: emitted exactly once
+    later = [(c, i, ro, tx, to, ts + datetime.timedelta(seconds=1000))
+             for (c, i, ro, tx, to, ts) in SENTINEL]
+    assert q.feed(later) == [("c1", 0, "ask")]
+
+
+def test_processor_tool_in_window_clears(spark, tmp_path):
+    q = _AlertQuery(spark, tmp_path)
+    q.feed([("c1", 0, "agent", "ask", None, _ts(0))])
+    q.feed([("c1", 1, "tool", "resp", "search", _ts(5))])
+    assert q.feed(SENTINEL) == []
+
+
+def test_processor_tool_after_horizon_does_not_clear(spark, tmp_path):
+    q = _AlertQuery(spark, tmp_path)
+    q.feed([
+        ("c1", 0, "agent", "ask", None, _ts(0)),
+        ("c1", 1, "tool", "late", "search", _ts(15)),
+    ])
+    assert [(c, t) for (c, t, _x) in q.feed(SENTINEL)] == [("c1", 0)]
+
+
+def test_processor_out_of_order_tool_clears_late_agent(spark, tmp_path):
+    q = _AlertQuery(spark, tmp_path)
+    # the TOOL arrives first; it must be remembered
+    q.feed([("c1", 1, "tool", "resp", "search", _ts(8))])
+    # then its out-of-order agent (still inside the watermark delay)
+    q.feed([("c1", 0, "agent", "ask", None, _ts(2))])
+    assert q.feed(SENTINEL) == []
+
+
+def test_processor_prunes_tools_below_watermark(spark, tmp_path):
+    """A tool turn no late agent can still pair with leaves the join
+    state once the watermark passes it: state stays bounded by the
+    horizon plus the watermark delay."""
+    src, sink, ckpt = (str(tmp_path / d) for d in ("src", "sink", "ckpt"))
+
+    def run(rows):
+        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        query = (
+            orphan_agent_turns(
+                spark.readStream.schema(SCHEMA).parquet(src),
+                horizon_seconds=HORIZON,
+                streaming=True,
+                watermark=WATERMARK,
+            )
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
         )
-    )
-    # then its out-of-order agent (still >= watermark)
-    list(
-        p.handleInputRows(
-            ("c1",), iter([_pdf([("c1", 0, "agent", "ask", _ts(2))])]),
-            FakeTimerValues(0),
+        query.awaitTermination()
+        return sum(
+            op["numRowsTotal"] for op in query.lastProgress["stateOperators"]
         )
-    )
-    assert h.states["pending"].rows == []
-    assert _emit_all(p, wm_ms=_wm(60)) == []
+
+    tools = [("c1", i, "tool", "resp", "search", _ts(8 + i)) for i in range(5)]
+    assert run(tools) >= len(tools)
+    # the watermark passes every tool ts: only the sentinel's rows remain
+    assert run(SENTINEL) <= len(SENTINEL)
 
 
-def test_processor_prunes_tools_below_watermark():
-    p, h = _mk()
-    list(
-        p.handleInputRows(
-            ("c1",), iter([_pdf([("c1", 1, "tool", "resp", _ts(8))])]),
-            FakeTimerValues(0),
-        )
-    )
-    assert len(h.states["tools"].rows) == 1
-    # watermark passes the tool ts -> pruned (no late agent can use it)
-    list(
-        p.handleInputRows(
-            ("c1",), iter([]), FakeTimerValues(int(_ts(100).timestamp() * 1000))
-        )
-    )
-    assert h.states["tools"].rows == []
-
-
-def test_processor_matches_batch_operator(spark):
-    """The fake-harness processor and the batch interval join agree on a
-    mixed scenario."""
+def test_processor_matches_batch_operator(spark, tmp_path):
+    """The alert query and the batch interval join agree on a mixed
+    scenario."""
     rows = [
         ("c1", 0, "agent", "ask a", None, _ts(0)),
         ("c1", 1, "tool", "t", "search", _ts(5)),
@@ -197,75 +143,12 @@ def test_processor_matches_batch_operator(spark):
         ("c2", 0, "agent", "ask c", None, _ts(0)),
         ("c2", 1, "tool", "t", "search", _ts(15)),
     ]
-    schema = (
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp"
-    )
     batch = sorted(
         (r.conv_id, r.agent_turn, r.agent_text)
         for r in orphan_agent_turns(
-            spark.createDataFrame(rows, schema), horizon_seconds=10
+            spark.createDataFrame(rows, SCHEMA), horizon_seconds=HORIZON
         ).collect()
     )
-
-    got = []
-    for conv in ("c1", "c2"):
-        p, h = _mk()
-        pdf = _pdf(
-            [(c, i, ro, tx, ts) for (c, i, ro, tx, _to, ts) in rows if c == conv]
-        )
-        list(p.handleInputRows((conv,), iter([pdf]), FakeTimerValues(0)))
-        for t in sorted(set(h.timers)):
-            for out in p.handleExpiredTimer(
-                (conv,), FakeTimerValues(10**12), FakeExpiry(t)
-            ):
-                got.extend(
-                    (r.conv_id, r.agent_turn, r.agent_text)
-                    for r in out.itertuples(index=False)
-                )
-    assert sorted(got) == batch == [("c1", 2, "ask b"), ("c2", 0, "ask c")]
-
-
-@pytest.mark.skipif(tws_available(), reason="protobuf present: real path works")
-def test_degrades_without_protobuf(spark, tmp_path):
-    stream = spark.readStream.format("rate").load()
-    with pytest.raises(RuntimeError, match="protobuf"):
-        orphan_alert_stream(stream.selectExpr(
-            "cast(value as string) conv_id", "1 turn_idx",
-            "'agent' role", "'x' text", "timestamp ts"
-        ))
-
-
-@pytest.mark.skipif(not tws_available(), reason="needs protobuf")
-def test_orphan_tws_streaming_matches_batch(spark, tmp_path):
-    schema = (
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp"
-    )
-    rows = [
-        ("c1", 0, "agent", "ask a", None, _ts(0)),
-        ("c1", 1, "tool", "t", "search", _ts(5)),
-        ("c1", 2, "agent", "ask b", None, _ts(20)),
-        ("c2", 0, "agent", "ask c", None, _ts(0)),
-        ("c2", 1, "tool", "t", "search", _ts(15)),
-        ("c9", 0, "user", "sentinel", None, _ts(1000)),
-    ]
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    df = spark.createDataFrame(rows, schema)
-    df.coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = (
-        orphan_alert_stream(stream, horizon_seconds=10, watermark="0 seconds")
-        .writeStream.format("memory")
-        .queryName("tws_orphans")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = sorted(
-        (r.conv_id, r.agent_turn, r.agent_text)
-        for r in spark.sql("select * from tws_orphans").collect()
-    )
-    assert got == [("c1", 2, "ask b"), ("c2", 0, "ask c")]
+    q = _AlertQuery(spark, tmp_path)
+    q.feed(rows)
+    assert q.feed(SENTINEL) == batch == [("c1", 2, "ask b"), ("c2", 0, "ask c")]
