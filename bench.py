@@ -1,66 +1,38 @@
 #!/usr/bin/env python
-"""Benchmark driver.
+"""Registry query-suite timings, printed as one compact JSON line.
 
-Prints a COMPACT single-line JSON (< 1,900 bytes — the round driver
-parses the result out of a ~2,000-char stdout tail, and rounds 2-4
-lost their records to JSON that outgrew that window or to a timeout
-that left nothing printed at all) as the LAST stdout line, and again
-after every completed phase so a mid-run timeout still preserves the
-headline:
+Times each ``HEADLINE`` query of the driver registry
+(``__spark_entry__.queries``) on the sf dir (one untimed warm run, then
+one timed run into the ``noop`` sink) and prints a single-line JSON of
+under ``COMPACT_LIMIT`` bytes as the LAST stdout line — the round
+driver parses its result out of a ~2,000-char stdout tail, and rounds
+2-4 lost their records to JSON that outgrew that window:
   {"metric": ..., "value": <total query-suite seconds>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <float>, "scaling": {...}}
-Full per-run arrays, decompositions, and disclosure pairs go to the
-``detail`` file named inside the compact line (default
-``BENCH_local_detail.json`` next to this script).
+   "queries": {name: sec, ...}, "sf": <float>}
+The full record goes to the detail file (``SPARK_GRAFT_BENCH_DETAIL``,
+default ``BENCH_local_detail.json`` next to this script).
 
-The whole run fits a WALL-CLOCK BUDGET (``SPARK_GRAFT_BENCH_BUDGET_S``,
-default 1,500 s): the scaling phase sizes its pair input and pair count
-from the time remaining after the query suite, instead of a fixed 16×
-multiplier that blew the round-4 driver window (rc 124, zero output).
+Settings: ``SPARK_GRAFT_SF_DIR`` (the generated data dir, default sf0.1)
+and ``SPARK_GRAFT_CPUS`` (default: the box's CPU count).
 
-The ``scaling`` extras carry the north-rule evidence: the same
-normalize/streaming job run at two parallelism levels (local[N] and
-local[4N]) on the same input — sustained turns/sec at each level,
-scaling efficiency T(4N)/((hi/lo)·T(N)), and the box's measured
-pure-CPU scaling ceiling for context (this sandbox simulates both
-"cluster sizes" inside one 32-physical-core machine whose hypervisor
-drops per-core clock as more cores go busy, so the hardware itself
-tops out below 4×; both primary pairs run quarter-box, 4→16, so the
-hi side never saturates the whole machine; the full-width disclosure
-pair runs only when budget remains).
-
-Methodology per level: a fresh pinned subprocess (own JVM), one
-untimed bounded warmup (spawns every python worker, compiles the regex
-registry per worker), then one LONG timed run (input sized from the
-budget, up to 16× the suite's base rows) so each level integrates over
-the sandbox's multi-minute hypervisor throttle waves; levels
-interleave (lo,hi,lo,hi) and the median pair is the headline.
+The streaming ``run`` path (source → normalize → dedup → sink commit)
+is measured by ``perfbench/`` instead: end-to-end throughput and
+latency plus a per-layer ladder, e.g.
+``python3 perfbench/run.py --workload drain-syslog --seed 1 --seconds 12 --trace 0``.
 """
 
 from __future__ import annotations
 
 import json
-import multiprocessing as mp
 import os
-import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-SEED = 42
-#: wall budget for the WHOLE bench (suite + scaling); the round driver
-#: kills the process on its own timeout — round 4's fixed-size 16× pair
-#: phase alone exceeded it (rc 124) and left nothing parseable
-#: 25 min: the r3 driver bench completed at an estimated ~30-40 min
-#: (rc 0) and the r4 one died past that, so 25 min keeps rc=0 with
-#: margin while buying pair runs long enough to integrate over the
-#: box's multi-minute throttle waves (the r5 validation run at 18 min
-#: sized pairs at only 2.7M rows and read a wave-dominated 0.72)
-BUDGET_S = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "1500"))
-#: full-fidelity results (all runs, decompositions, disclosures)
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+#: full record of the run (the compact line may degrade; this file doesn't)
 DETAIL_PATH = os.environ.get(
     "SPARK_GRAFT_BENCH_DETAIL",
     os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -110,7 +82,7 @@ HEADLINE = [
 ]
 
 
-def _session(cores: int, shuffle_partitions: int | None = None):
+def _session(cores: int):
     from pyspark.sql import SparkSession
 
     return (
@@ -123,77 +95,11 @@ def _session(cores: int, shuffle_partitions: int | None = None):
         # stage-progress \r spam was most of rounds 2-4's tails
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", "16g")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores * 2))
+        .config("spark.sql.shuffle.partitions", str(cores * 2))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        # state store: the default in-memory (HDFS-backed) provider.
-        # Head-to-head on this box (1.28M rows, local[32], same input):
-        # in-memory 20.8 s (61k turns/s) vs RocksDB 69.4 s (18k turns/s)
-        # — RocksDB pays JNI + disk per state op, which only pays off
-        # when state exceeds executor memory.  The CLI (`__main__.py`)
-        # keeps RocksDB as the production default for 10^12-turn state;
-        # the bench measures the provider appropriate to its state size.
         .getOrCreate()
     )
-
-
-def _parse_level_output(res, label: str) -> float:
-    """Last stdout line of a level subprocess as a float; a dead or
-    silent worker fails the bench with its stderr tail instead of an
-    opaque IndexError/ValueError."""
-    lines = res.stdout.strip().splitlines()
-    try:
-        return float(lines[-1])
-    except (IndexError, ValueError):
-        raise RuntimeError(
-            f"{label}-level subprocess failed (exit {res.returncode}); "
-            f"stderr tail: {res.stderr.strip()[-800:]}"
-        )
-
-
-def _spin(core: int) -> None:
-    try:
-        os.sched_setaffinity(0, {core})
-    except (AttributeError, OSError):
-        pass
-    while True:
-        pass
-
-
-class _Antagonist:
-    """Busy-load on the cores a pinned level does NOT use, so the box
-    is fully busy at BOTH pair levels.
-
-    Without it the lo level runs on a mostly-idle box and the hi level
-    on a busy one — the pair then measures the hypervisor's
-    turbo/allocation curve (idle boxes clock higher per core), not the
-    engine: an unfair, systematic inflation of the lo side that no real
-    cluster exhibits, because a 4N-executor cluster's nodes are exactly
-    as busy as an N-executor cluster's nodes.  Equalizing total box
-    activity makes the pair ratio the engine's own scaling.  Measured
-    head-to-head at 20.48M rows (same code, same minute): streaming
-    pair 0.944 with antagonist load vs raw pairs 0.717-0.921 across the
-    same day's idle-lo snapshots.  Disclosed in the bench JSON note."""
-
-    def __init__(self, cores_used: int):
-        import multiprocessing as _mp
-
-        self.procs = [
-            _mp.Process(target=_spin, args=(c,), daemon=True)
-            for c in range(cores_used, CPUS)
-        ]
-
-    def __enter__(self):
-        for p in self.procs:
-            p.start()
-        return self
-
-    def __exit__(self, *exc):
-        for p in self.procs:
-            p.terminate()
-        for p in self.procs:
-            p.join()
-        return False
 
 
 def _sf_of(path: str) -> float:
@@ -202,97 +108,6 @@ def _sf_of(path: str) -> float:
         return float(base.replace("sf", ""))
     except ValueError:
         return -1.0
-
-
-def _pinned_normalize_worker(core: int, pdf, reps: int, q) -> None:
-    """One process pinned to one core running the engine's own hot
-    function — reports its private rows/sec."""
-    try:
-        os.sched_setaffinity(0, {core})
-    except (AttributeError, OSError):
-        pass
-    from napalm_logs_spark.operators.normalize import normalize_pandas
-    from napalm_logs_spark.profiles import load_registry
-
-    reg = load_registry()
-    normalize_pandas(pdf, reg)  # warm: compile the regex registry
-    t0 = time.time()
-    for _ in range(reps):
-        normalize_pandas(pdf, reg)
-    q.put(len(pdf) * reps / (time.time() - t0))
-
-
-def _percore_thr(n_active: int, pdf, reps: int = 2) -> float:
-    """Median per-core normalize_pandas throughput with exactly
-    ``n_active`` cores busy (each process pinned to its own core)."""
-    q = mp.Queue()
-    procs = [
-        mp.Process(target=_pinned_normalize_worker, args=(c, pdf, reps, q))
-        for c in range(n_active)
-    ]
-    for p in procs:
-        p.start()
-    try:
-        # bounded get: a worker that dies before q.put (import error,
-        # OOM kill at full width) must fail the bench, not hang it
-        vals = sorted(q.get(timeout=300) for _ in procs)
-    except Exception:
-        for p in procs:
-            p.terminate()
-        raise RuntimeError(
-            f"pinned worker died before reporting (exitcodes="
-            f"{[p.exitcode for p in procs]})"
-        )
-    for p in procs:
-        p.join()
-        if p.exitcode not in (0, None):
-            raise RuntimeError(f"pinned worker exit code {p.exitcode}")
-    return vals[len(vals) // 2]
-
-
-def _cpu_scaling_ceiling(n_lo: int, n_hi: int, pdf) -> float:
-    """The box's own per-core throughput ratio between the two activity
-    widths, measured with the engine's hot function in coordination-free
-    pinned processes.  This sandbox VM drops per-core clock ~35% when
-    the whole box is busy (turbo at n_lo active cores, base clock at
-    n_hi) — measured 0.65 with a pinned probe vs 31 busy-loop cores —
-    so raw N→4N efficiency is hardware-bounded well below 1.0 no matter
-    the software; this ceiling is what an ideal zero-coordination
-    engine would achieve, and efficiency_vs_hardware_ceiling isolates
-    the engine's own scaling loss."""
-    probe = pdf.iloc[: min(len(pdf), 20_000)]
-    return _percore_thr(n_hi, probe) / _percore_thr(n_lo, probe)
-
-
-_POOL_REG = None
-
-
-def _pool_init():
-    global _POOL_REG
-    from napalm_logs_spark.profiles import load_registry
-
-    _POOL_REG = load_registry()
-
-
-def _pool_normalize(pdf):
-    from napalm_logs_spark.operators.normalize import normalize_pandas
-
-    return len(normalize_pandas(pdf, _POOL_REG))
-
-
-def pandas_stage_scaling(pdf, n_lo: int, n_hi: int, batch: int = 5000):
-    """Scaling of the engine's own hot path (normalize_pandas) in a bare
-    process pool — no JVM, no Arrow.  Separates engine scalability from
-    single-JVM sandbox artifacts."""
-    batches = [pdf.iloc[i : i + batch] for i in range(0, len(pdf), batch)]
-    out = {}
-    for n in (n_lo, n_hi):
-        with mp.Pool(n, initializer=_pool_init) as pool:
-            pool.map(_pool_normalize, batches[: n])  # warm: compile regexes
-            t0 = time.time()
-            pool.map(_pool_normalize, batches, chunksize=1)
-            out[n] = len(pdf) / (time.time() - t0)
-    return out
 
 
 def run_queries(spark) -> dict:
@@ -309,263 +124,7 @@ def run_queries(spark) -> dict:
     return times
 
 
-
-
-def _bench_input(n_rows: int):
-    """Deterministic transcripts, cached as parquet on first use."""
-    import pandas as pd
-
-    # a DIRECTORY of parquet (the streaming file source requires one)
-    path = f"/tmp/nls_bench_transcripts_s{SEED}_n{n_rows}"
-    if not os.path.isdir(path):
-        from napalm_logs_spark.sources.transcripts import synth_transcripts_pandas
-
-        pdf = synth_transcripts_pandas(
-            n_convs=max(n_rows // 100, 8), turns_per_conv=100, seed=SEED
-        )
-        pdf = pdf.astype({"ts": "datetime64[us]"})  # Spark can't read ns parquet
-        os.makedirs(path + ".tmp", exist_ok=True)
-        # many files: streaming-source parallelism = input splits
-        n_files = 32
-        chunk = (len(pdf) + n_files - 1) // n_files
-        for i in range(n_files):
-            part = pdf.iloc[i * chunk : (i + 1) * chunk]
-            if len(part):
-                part.to_parquet(path + f".tmp/part-{i:05d}.parquet")
-        os.rename(path + ".tmp", path)
-        return pdf, path
-    return pd.read_parquet(path), path
-
-
-def _scaling_level_main(cores: int, n_rows: int, reps: int) -> None:
-    _, path = _bench_input(n_rows)
-    print(_scaling_run_local(path, n_rows, cores, reps))
-
-
-def scaling_run_rows(n_rows: int, cores: int, reps: int = 1,
-                     timeout: float = 1800) -> float:
-    """Sustained normalize throughput (rows/sec) at a parallelism level.
-
-    Runs in a fresh subprocess (own JVM) so levels cannot contaminate
-    each other (scheduler threads, python daemon workers, GC state);
-    the caller interleaves levels (lo,hi,lo,hi) so both see the same
-    few-minute window of VM weather.  The pair input is addressed by
-    row count and generated/cached by :func:`_bench_input`, so the
-    parent never materializes the level input in memory.
-
-    The subprocess is PINNED to ``cores`` CPUs via taskset: local[N]
-    alone only caps concurrent *task slots* — the JVM's scan/Arrow/GC
-    threads and the python workers would still spread over every core
-    of the box, inflating the small-"cluster" number and corrupting the
-    efficiency ratio.  Affinity makes local[N] a true N-CPU machine,
-    and the antagonist load on the remaining cores (see
-    :class:`_Antagonist`) makes the whole box exactly as busy at both
-    levels — without it the lo level's idle-box turbo clock inflates
-    the denominator of the pair ratio."""
-    import subprocess
-
-    cmd = [sys.executable, os.path.abspath(__file__), "--scaling-level",
-           str(cores), str(n_rows), str(reps)]
-    if os.path.exists("/usr/bin/taskset"):
-        cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
-    with _Antagonist(cores):
-        res = subprocess.run(cmd, capture_output=True, text=True,
-                             timeout=timeout)
-    return _parse_level_output(res, "scaling")
-
-
-def _streaming_level_main(cores: int, n_rows: int) -> None:
-    _, path = _bench_input(n_rows)
-    rate, decomp = _streaming_run_local(path, n_rows, cores)
-    print(json.dumps(decomp))
-    print(rate)
-
-
-def streaming_run(pdf, cores: int, pin: bool = False, n_rows: int | None = None,
-                  timeout: float = 1800):
-    """Returns (rows/sec, per-stage decomposition dict)."""
-    import contextlib
-    import subprocess
-
-    cmd = [sys.executable, os.path.abspath(__file__), "--streaming-level",
-           str(cores), str(n_rows or len(pdf))]
-    if pin and os.path.exists("/usr/bin/taskset"):
-        # pinned: local[N] caps task SLOTS only — affinity makes it a
-        # true N-CPU machine; the antagonist equalizes total box
-        # activity across levels (see _Antagonist)
-        cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
-    with _Antagonist(cores) if pin else contextlib.nullcontext():
-        res = subprocess.run(cmd, capture_output=True, text=True,
-                             timeout=timeout)
-    rate = _parse_level_output(res, "streaming")
-    decomp = {}
-    lines = res.stdout.strip().splitlines()
-    if len(lines) >= 2:
-        try:
-            decomp = json.loads(lines[-2])
-        except ValueError:
-            pass
-    return rate, decomp
-
-
-def _streaming_run_local(path: str, n_rows: int, cores: int):
-    """End-to-end STREAMING throughput: readStream -> normalize ->
-    dropDuplicatesWithinWatermark -> exactly-once multi-batch sink
-    (includes sink parquet writes).  maxFilesPerTrigger is left unset:
-    availableNow plans its own batches.
-
-    Returns (rows/sec, decomposition) where the decomposition splits
-    the wall time into data addBatch, the zero-row watermark-flush
-    batch, and startup/commit serial residue — the per-stage evidence
-    for WHERE the N→4N pair loses efficiency on one box.
-
-    Shuffle/state partitions = cores (not the suite's 2×cores): each
-    state partition pays a per-batch commit + an eviction scan in the
-    flush batch, and the A/B (1.28M rows, local[32]) measured 64
-    partitions at 11.8 s vs 32 at 10.0 s, with the flush batch alone
-    1.3 s → 2.0 s → 3.3 s at 32/64/128 partitions.
-
-    Sink + checkpoint land on tmpfs (/dev/shm) when present: on a real
-    cluster every executor brings its own disks, so the single shared
-    NVMe of this one-box sandbox is a measurement artifact — with the
-    sink on the box's one disk the pinned N-vs-4N pair measures disk
-    contention, not the engine (observed: 8 cores outran 32)."""
-    import shutil
-    import tempfile
-
-    from napalm_logs_spark.operators.dedup import dedup_streaming
-    from napalm_logs_spark.operators.normalize import normalize
-    from napalm_logs_spark.profiles import load_registry
-    from napalm_logs_spark.streaming.sink import SinkSpec, exactly_once_parquet_sink
-
-    spark = _session(cores, shuffle_partitions=cores)
-    # the decomposition sums durations over q.recentProgress, which
-    # Spark caps (default 100 entries) — a drain that plans more
-    # micro-batches would silently undercount addBatch and overstate
-    # the marginal rate; raise the cap far above any plan here
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
-    spark.sparkContext.setLogLevel("ERROR")
-    workdir_root = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    work = tempfile.mkdtemp(prefix="nls_bench_stream_", dir=workdir_root)
-    try:
-        registry = load_registry()
-        schema = spark.read.parquet(path).schema
-        # warm the python workers with a batch job over a SLICE of the
-        # input: the warm-up's job is spawning every worker + compiling
-        # the regex registry + JIT, which a bounded slice does at any
-        # input size — warming over the full path scaled the untimed
-        # cost linearly with the pair input (minutes at the lo width
-        # once the pair grew past 10M rows)
-        warm = (
-            spark.read.parquet(path)
-            .limit(min(n_rows, 1_280_000))
-            .repartition(cores * 2)
-        )
-        normalize(warm, registry).write.format("noop").mode("overwrite").save()
-
-        # warm the STREAMING path too: the batch pass above leaves the
-        # state store, foreachBatch pickling, and sink-commit code cold,
-        # and the r3 driver snapshot shows the first measured drain in a
-        # fresh JVM reading ~20-30% low (131k vs 187k rows/s at the same
-        # width) — a JIT/class-load artifact a long-running production
-        # stream never pays per-batch.  A small drain (~1/16 input) over
-        # a tmpfs copy retires that cost outside the measured window.
-        warm_src = f"{work}/warm_src"
-        spark.read.parquet(path).limit(
-            min(max(n_rows // 16, 50_000), 640_000)
-        ).coalesce(max(cores // 2, 1)).write.parquet(warm_src)
-        wq = (
-            dedup_streaming(
-                normalize(spark.readStream.schema(schema).parquet(warm_src),
-                          registry),
-                ttl_seconds=5.0, watermark="30 seconds",
-            )
-            .writeStream.foreachBatch(
-                exactly_once_parquet_sink(
-                    [SinkSpec(path=f"{work}/warm_out", send_raw=True,
-                              send_unknown=True)]
-                )
-            )
-            .option("checkpointLocation", f"{work}/warm_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        wq.awaitTermination()
-
-        stream = spark.readStream.schema(schema).parquet(path)
-        env = dedup_streaming(normalize(stream, registry), ttl_seconds=5.0,
-                              watermark="30 seconds")
-        sink = exactly_once_parquet_sink(
-            [SinkSpec(path=f"{work}/out", send_raw=True, send_unknown=True)]
-        )
-        t0 = time.time()
-        q = (
-            env.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        wall = time.time() - t0
-        prog = [json.loads(p.json) for p in q.recentProgress]
-        add_ms = sum(p.get("durationMs", {}).get("addBatch", 0)
-                     for p in prog if p.get("numInputRows"))
-        flush_ms = sum(p.get("durationMs", {}).get("triggerExecution", 0)
-                       for p in prog if not p.get("numInputRows"))
-        decomp = {
-            "wall_s": round(wall, 2),
-            "data_addbatch_s": round(add_ms / 1000, 2),
-            "watermark_flush_batch_s": round(flush_ms / 1000, 2),
-            "startup_commit_residue_s": round(wall - add_ms / 1000
-                                              - flush_ms / 1000, 2),
-            "n_batches": len(prog),
-            "marginal_rows_per_sec": round(n_rows / (add_ms / 1000))
-            if add_ms else None,
-        }
-        return n_rows / wall, decomp
-    finally:
-        spark.stop()
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def _scaling_run_local(path: str, n_rows: int, cores: int, reps: int = 3) -> float:
-    from napalm_logs_spark.operators.normalize import normalize
-    from napalm_logs_spark.profiles import load_registry
-
-    spark = _session(cores)
-    spark.sparkContext.setLogLevel("ERROR")
-    try:
-        registry = load_registry()
-        # ~10-20k rows per Arrow batch (maxRecordsPerBatch splits bigger
-        # partitions): measured 1.5-2x over 5k batches — per-batch pandas
-        # fixed cost dominates below ~10k rows
-        parts = max(cores * 2, n_rows // 10_000)
-        df = spark.read.parquet(path).repartition(parts).cache()
-        df.count()
-        env = normalize(df, registry)
-        # bounded warmup (same rationale as the streaming warm): spawn
-        # every worker + compile the registry + JIT over a slice, so the
-        # untimed cost stops scaling with the pair input
-        warm = normalize(
-            spark.read.parquet(path)
-            .limit(min(n_rows, 1_280_000))
-            .repartition(cores * 2),
-            registry,
-        )
-        warm.write.format("noop").mode("overwrite").save()
-        durations = []
-        for _ in range(reps):
-            t0 = time.time()
-            env.write.format("noop").mode("overwrite").save()
-            durations.append(time.time() - t0)
-        print(f"[scaling local[{cores}]] durations={[round(d,2) for d in durations]}",
-              file=sys.stderr)
-        return n_rows / statistics.median(durations)
-    finally:
-        spark.stop()
-
-
-def _compact_result(qtimes: dict, sf: float, scaling: dict) -> str:
+def _compact_result(qtimes: dict, sf: float) -> str:
     """The single-line JSON the round driver parses.  MUST stay under
     COMPACT_LIMIT bytes: the driver reads a ~2,000-char stdout tail
     (round 1's 1,269-char JSON parsed; rounds 2-3 outgrew the window
@@ -573,13 +132,12 @@ def _compact_result(qtimes: dict, sf: float, scaling: dict) -> str:
     the per-query map degrades to a count and the detail file keeps
     the full breakdown — the headline scalars always fit."""
     out = {
-        "metric": "headline query suite wall time; north-rule N->4N "
-                  "scaling in 'scaling' (full runs in the detail file)",
+        "metric": "headline query suite wall time (full record in the "
+                  "detail file)",
         "value": round(sum(qtimes.values()), 3),
         "unit": "sec",
         "queries": {k: round(v, 2) for k, v in qtimes.items()},
         "sf": sf,
-        "scaling": scaling,
     }
     s = json.dumps(out, separators=(",", ":"))
     if len(s.encode("utf-8")) > COMPACT_LIMIT:
@@ -589,273 +147,29 @@ def _compact_result(qtimes: dict, sf: float, scaling: dict) -> str:
     return s
 
 
-def _emit(qtimes: dict, sf: float, scaling: dict, detail: dict) -> None:
-    """Write the full-fidelity detail file, then print the compact line.
-
-    Called after EVERY completed phase, so whatever moment the round
-    driver's timeout lands on, the last stdout line is a parseable
-    result with everything measured so far."""
+def _emit(qtimes: dict, sf: float, detail: dict) -> None:
+    """Write the detail file, then print the compact line."""
     try:
         with open(DETAIL_PATH, "w") as fh:
-            json.dump({"queries": qtimes, "sf": sf, "scaling": scaling,
-                       "detail": detail}, fh, indent=1)
+            json.dump({"queries": qtimes, "sf": sf, "detail": detail}, fh,
+                      indent=1)
     except OSError:
         pass
-    print(_compact_result(qtimes, sf, scaling), flush=True)
-
-
-def _run_scaling(scaling: dict, detail: dict, qtimes: dict, sf: float,
-                 pdf, n_rows: int, deadline: float) -> None:
-    """North-rule scaling evidence, budget-fitted.
-
-    Phases (each followed by an _emit, each skippable when the clock
-    runs out — earlier phases carry the headline):
-      1. unpinned full-width streaming drain (calibration + the
-         local[CPUS] end-to-end rate), then the cheap hardware
-         CPU-scaling ceiling probe (~1 min) so every record carries
-         the engine-vs-clock context
-      2. pinned streaming N→4N pairs, input sized from the remaining
-         budget (up to 16× base, never below 1×)
-      3. pinned normalize (batch) N→4N pairs at half the pair rows
-      4. bare-process-pool normalize scaling (cheap, contextual)
-      5. full-width disclosure pair (only with generous budget left)
-
-    Levels are quarter-box (CPUS//8 → CPUS//2, 4→16 here): a full-width
-    hi side shares every core with the driver/JVM-service/python-daemon
-    threads — contention a real 4N-executor cluster never concentrates
-    on the hi side (measured r4: 4→16 raw pairs [0.794, 0.929] vs 8→32
-    [0.585, 0.695] on identical code).  Each (lo,hi) pair runs
-    back-to-back under the same VM weather; the median pair is the
-    unbiased headline, the best pair the cleanest observation.
-    Efficiency uses the ACTUAL level ratio hi/lo — on a small box
-    b_hi = min(4*b_lo, CPUS) can be < 4*b_lo, and dividing by 4 there
-    would mislabel a 2× step as an N→4N efficiency (r4 advice)."""
-
-    def rem() -> float:
-        return deadline - time.time()
-
-    def cap() -> float:
-        # a level subprocess may not outlive the budget
-        return max(min(1800.0, rem()), 1.0)
-
-    s_lo = max(CPUS // 8, 1)
-    s_hi = min(4 * s_lo, CPUS)
-    ratio = s_hi / s_lo
-    scaling["levels"] = f"local[{s_lo}]->local[{s_hi}]"
-
-    # --- 1) calibration: unpinned full-width streaming drain --------
-    if rem() < 150:
-        scaling["note"] = "scaling skipped: budget exhausted by suite"
-        return
-    t0 = time.time()
-    stream_thr, cal_dec = streaming_run(pdf, CPUS, timeout=cap())
-    cal_s = time.time() - t0
-    scaling[f"streaming_e2e_turns_per_sec_local{CPUS}"] = round(stream_thr)
-    detail["calibration"] = {"wall_s": round(cal_s, 1), "decomp": cal_dec,
-                             "rows": n_rows}
-    _emit(qtimes, sf, scaling, detail)
-
-    # hardware ceiling FIRST (cheap, ~1 min): the r5c run spent the
-    # whole budget on the streaming pairs and lost this context scalar
-    # to the deadline guard — probing it up front guarantees every
-    # driver record carries the engine-vs-clock comparison
-    if rem() > 150:
-        ceiling = _cpu_scaling_ceiling(s_lo, s_hi, pdf)
-        scaling["hardware_cpu_scaling_ceiling"] = round(ceiling, 3)
-        _emit(qtimes, sf, scaling, detail)
-
-    # --- 2) pinned streaming pairs, input sized from the budget -----
-    # per-level overhead: JVM startup + the two bounded warm passes;
-    # the calibration run just paid the same startup cost, so use it
-    overhead = max(45.0, min(cal_s, 180.0))
-    # per-core throughput RISES at narrower pinned widths (fewer cores
-    # busy → higher clock, less bandwidth contention): the r5
-    # validation run measured 14.9k rows/s/core at width 4 and 11k at
-    # 16 vs 7.8k at the unpinned 32 — a linear extrapolation from the
-    # calibration rate under-sizes the pair input ~2×.  Apply the
-    # measured correction factors; the deadline guard absorbs the
-    # residual error in either direction.
-    lo_rate = max(stream_thr * s_lo / CPUS * 1.7, 1.0)
-    hi_rate = max(stream_thr * s_hi / CPUS * 1.3, 1.0)
-    per_row_s = 1.0 / lo_rate + 1.0 / hi_rate
-    n_pairs = 3
-    reserve = 120.0  # ceilings + final emits
-    # streaming gets the lion's share: it is the north-rule headline
-    # (sustained turns/sec on the full stream) and the most
-    # wave-sensitive measurement; the batch-normalize pair reuses the
-    # same cached input and runs ~2x faster per row
-    s_budget = max((rem() - reserve) * 0.75, 0.0)
-    while n_pairs > 1 and (s_budget / n_pairs - 2 * overhead) < n_rows * per_row_s:
-        n_pairs -= 1
-    big_rows = int((s_budget / n_pairs - 2 * overhead) / per_row_s)
-    # LONG runs integrate over the hypervisor's multi-minute throttle
-    # waves (r4 at 8×: pairs [0.815, 0.659, 0.924, 0.664] — one wave
-    # swallowed whole 60 s runs); 16× is the proven-stable size, the
-    # budget floor is 1× so a pair always fits the driver window.
-    # QUANTIZED to whole multiples of the base rows: the synthesized
-    # pair input is cached in /tmp by exact row count, so quantizing
-    # means at most 16 possible cache keys and repeat runs (including
-    # the round driver's) skip the multi-minute synthesis instead of
-    # missing the cache on every new calibration rate
-    big_rows = max(min(round(big_rows / n_rows), 16), 1) * n_rows
-    big_rows = (big_rows // 100) * 100  # conv granularity
-    _bench_input(big_rows)  # pre-generate UNPINNED (not on 4 cores)
-    scaling["pair_rows"] = big_rows
-    s_lo_runs, s_hi_runs, s_lo_dec, s_hi_dec = [], [], [], []
-    pair_est = big_rows * per_row_s + 2 * overhead
-    for i in range(n_pairs):
-        if rem() < pair_est + reserve:
-            if not s_lo_runs:
-                scaling["note"] = "streaming pairs skipped: no pair fits the budget"
-            break
-        r, d = streaming_run(pdf, s_lo, pin=True, n_rows=big_rows, timeout=cap())
-        s_lo_runs.append(r)
-        s_lo_dec.append(d)
-        r, d = streaming_run(pdf, s_hi, pin=True, n_rows=big_rows, timeout=cap())
-        s_hi_runs.append(r)
-        s_hi_dec.append(d)
-        # refine the estimate with measured rates
-        lo_rate, hi_rate = s_lo_runs[-1], s_hi_runs[-1]
-        pair_est = big_rows * (1.0 / lo_rate + 1.0 / hi_rate) + 2 * overhead
-        s_pair_effs = [h / (ratio * lo)
-                       for lo, h in zip(s_lo_runs, s_hi_runs)]
-        s_best = max(range(len(s_pair_effs)), key=lambda j: s_pair_effs[j])
-        scaling["streaming_e2e_efficiency_median_pair"] = round(
-            statistics.median(s_pair_effs), 3)
-        scaling["streaming_e2e_efficiency_best_pair"] = round(
-            min(s_pair_effs[s_best], 1.0), 3)
-        if "hardware_cpu_scaling_ceiling" in scaling:
-            scaling["stream_eff_vs_hw_ceiling"] = round(min(
-                scaling["streaming_e2e_efficiency_median_pair"]
-                / scaling["hardware_cpu_scaling_ceiling"], 1.0), 3)
-        scaling[f"streaming_e2e_pinned_local{s_lo}"] = round(s_lo_runs[s_best])
-        scaling[f"streaming_e2e_pinned_local{s_hi}"] = round(s_hi_runs[s_best])
-        scaling["n_stream_pairs"] = len(s_lo_runs)
-        dlo, dhi = s_lo_dec[s_best], s_hi_dec[s_best]
-        if dlo.get("marginal_rows_per_sec") and dhi.get("marginal_rows_per_sec"):
-            scaling["streaming_marginal_eff"] = round(
-                dhi["marginal_rows_per_sec"]
-                / (ratio * dlo["marginal_rows_per_sec"]), 3)
-        detail["streaming_pairs"] = {
-            f"local{s_lo}": [round(x) for x in s_lo_runs],
-            f"local{s_hi}": [round(x) for x in s_hi_runs],
-            "pair_effs_raw": [round(e, 3) for e in s_pair_effs],
-            "decomp_best": {f"local{s_lo}": dlo, f"local{s_hi}": dhi},
-            "note": "pinned via taskset + antagonist busy-load on unused "
-                    "cores (box equally busy at both widths, as a real "
-                    "cluster's nodes are); sink+checkpoint on tmpfs — "
-                    "one shared NVMe at both widths measures disk "
-                    "contention, not the engine",
-        }
-        _emit(qtimes, sf, scaling, detail)
-
-    # --- 3) pinned normalize (batch) pairs --------------------------
-    # batch normalize runs much faster per row than the full streaming
-    # path (no state store / sink); estimate from the streaming rate
-    # then refine from the first measured run.  HALF the streaming
-    # rows: the r5b run sized streaming pairs up to 8.7M and the
-    # deadline guard then skipped normalize entirely — half-length
-    # runs still integrate over the throttle waves while fitting the
-    # budget's remainder in most weather windows
-    n_lo_runs, n_hi_runs = [], []
-    norm_rows = max((big_rows // 200) * 100, n_rows)
-    _bench_input(norm_rows)
-    nlo_rate = lo_rate * 2.0
-    nhi_rate = hi_rate * 2.0
-    pair_est = norm_rows * (1.0 / nlo_rate + 1.0 / nhi_rate) + 2 * overhead
-    for i in range(n_pairs):
-        if rem() < pair_est + reserve:
-            break
-        n_lo_runs.append(scaling_run_rows(norm_rows, s_lo, reps=1, timeout=cap()))
-        n_hi_runs.append(scaling_run_rows(norm_rows, s_hi, reps=1, timeout=cap()))
-        nlo_rate, nhi_rate = n_lo_runs[-1], n_hi_runs[-1]
-        pair_est = norm_rows * (1.0 / nlo_rate + 1.0 / nhi_rate) + 2 * overhead
-        n_pair_effs = [h / (ratio * lo) for lo, h in zip(n_lo_runs, n_hi_runs)]
-        n_best = max(range(len(n_pair_effs)), key=lambda j: n_pair_effs[j])
-        scaling["normalize_efficiency_median_pair"] = round(
-            statistics.median(n_pair_effs), 3)
-        scaling["normalize_efficiency_best_pair"] = round(
-            min(n_pair_effs[n_best], 1.0), 3)
-        scaling[f"normalize_turns_per_sec_local{s_lo}"] = round(n_lo_runs[n_best])
-        scaling[f"normalize_turns_per_sec_local{s_hi}"] = round(n_hi_runs[n_best])
-        detail["normalize_pairs"] = {
-            f"local{s_lo}": [round(x) for x in n_lo_runs],
-            f"local{s_hi}": [round(x) for x in n_hi_runs],
-            "pair_effs_raw": [round(e, 3) for e in n_pair_effs],
-            "rows": norm_rows,
-        }
-        _emit(qtimes, sf, scaling, detail)
-
-    # --- 4) bare-pool context (cheap; ceiling already probed above) -
-    if rem() > 90:
-        n_qtr = max(CPUS // 4, 1)
-        pool_thr = pandas_stage_scaling(
-            pdf.iloc[: min(len(pdf), 640_000)], n_qtr, CPUS)
-        detail["pandas_pool"] = {
-            f"{n_qtr}w": round(pool_thr[n_qtr]),
-            f"{CPUS}w": round(pool_thr[CPUS]),
-            "efficiency": round(
-                pool_thr[CPUS] / (CPUS / n_qtr * pool_thr[n_qtr]), 3),
-        }
-        _emit(qtimes, sf, scaling, detail)
-
-    # --- 5) full-width disclosure pair (generous budget only) -------
-    n_fw_lo = max(CPUS // 4, 1)
-    if (n_fw_lo, CPUS) != (s_lo, s_hi) and rem() > 2 * pair_est + reserve:
-        fw_lo, _ = streaming_run(pdf, n_fw_lo, pin=True, n_rows=big_rows,
-                                 timeout=cap())
-        fw_hi, _ = streaming_run(pdf, CPUS, pin=True, n_rows=big_rows,
-                                 timeout=cap())
-        detail["streaming_fullwidth"] = {
-            f"local{n_fw_lo}": round(fw_lo),
-            f"local{CPUS}": round(fw_hi),
-            "efficiency_raw": round(fw_hi / (CPUS / n_fw_lo * fw_lo), 3),
-            "note": "box-saturated hi side: shares every physical core "
-                    "with driver/JVM-service/python-daemon threads — "
-                    "disclosed, not the cluster proxy",
-        }
-        _emit(qtimes, sf, scaling, detail)
+    print(_compact_result(qtimes, sf), flush=True)
 
 
 def main() -> None:
     t_start = time.time()
-    deadline = t_start + BUDGET_S
-    sf = _sf_of(SF_DIR)
-    n_rows = max(int(12_800_000 * sf), 1_280_000) if sf > 0 else 1_280_000
-    pdf, _path = _bench_input(n_rows)
-
-    # 1) headline query suite at SPARK_GRAFT_CPUS
     spark = _session(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     try:
         qtimes = run_queries(spark)
     finally:
         spark.stop()
-
-    scaling = {
-        "detail": os.path.basename(DETAIL_PATH),
-        "note": "single-box two-cluster-size simulation: interleaved "
-                "quarter-box pinned pairs w/ antagonist busy-load, "
-                "budget-fitted input",
-    }
-    detail = {"budget_s": BUDGET_S, "suite_wall_s": round(time.time() - t_start, 1)}
-    # the suite headline survives any later timeout or crash
-    _emit(qtimes, sf, scaling, detail)
-
-    # 2) north-rule scaling evidence, budget-fitted; a failure inside
-    # must never erase the suite result already printed
-    try:
-        _run_scaling(scaling, detail, qtimes, sf, pdf, n_rows, deadline)
-    except Exception as exc:  # noqa: BLE001 - disclose, still emit
-        scaling["scaling_error"] = f"{type(exc).__name__}: {exc}"[:160]
-    detail["total_wall_s"] = round(time.time() - t_start, 1)
-    _emit(qtimes, sf, scaling, detail)
+    _emit(qtimes, _sf_of(SF_DIR),
+          {"cpus": CPUS, "sf_dir": SF_DIR,
+           "suite_wall_s": round(time.time() - t_start, 1)})
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--scaling-level":
-        _scaling_level_main(int(sys.argv[2]), int(sys.argv[3]), int(sys.argv[4]))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--streaming-level":
-        _streaming_level_main(int(sys.argv[2]), int(sys.argv[3]))
-    else:
-        main()
+    main()

@@ -3,10 +3,10 @@
 state that outgrows the executor heap.
 
 The engine's CLI ships RocksDB as the production state-store default
-(napalm_logs_spark/__main__.py) for 10^12-turn streams, while bench.py's
-streaming pair uses the in-memory provider (measured ~3× faster at small
-state).  VERDICT r3 item 4: that choice was justified by argument, not
-measurement.  This probe measures the crossover directly.
+(napalm_logs_spark/__main__.py) for 10^12-turn streams; the in-memory
+provider was measured ~3× faster at small state.  VERDICT r3 item 4:
+that choice was justified by argument, not measurement.  This probe
+measures the crossover directly.
 
 Method: an exact-TTL dedup stream (dropDuplicatesWithinWatermark via
 operators.dedup.dedup_streaming — the engine's A1 operator) over ALL-
@@ -20,7 +20,7 @@ is real at sandbox scale:
 
 * small keyset: state fits the heap comfortably — both providers
   complete; in-memory is expected to win on raw rate (no JNI, no
-  changelog), which is why bench.py uses it for the CPU-scaling pair.
+  changelog).
 * large keyset: state exceeds the heap — the in-memory provider must
   degrade (per-batch commit clones the version map, O(state) per batch,
   then GC thrash/OOM) while RocksDB keeps a flat per-batch drain
