@@ -128,18 +128,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- dedup (A1) ----
     def a1_dedup_gap(spark, sf):
-        ev = _t(spark, sf, "events")
-        w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-        pts = F.lag(F.col("ts")).over(w)
-        return (
-            ev.withColumn("pts", pts)
-            .filter(
-                F.col("pts").isNull()
-                | (_epoch(F.col("ts")) - _epoch(F.col("pts")) >= 300)
-            )
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_kept"))
+        from napalm_logs_spark.operators.dedup import dedup_gap_session
+
+        kept = dedup_gap_session(
+            _t(spark, sf, "events"), 300.0, key=("user_id", "event_type"),
+            order_cols=("event_id",),
         )
+        return kept.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_kept"))
     q["a1_dedup_gap"] = a1_dedup_gap
 
     def a1_dedup_ttl_exact(spark, sf):

@@ -125,12 +125,11 @@ def main(argv=None) -> int:
     p_run.add_argument("--checkpoint", required=False, default=None)
     p_run.add_argument("--metrics", default=None, help="metrics JSONL path")
     p_run.add_argument("--no-dedup", action="store_true")
-    p_run.add_argument("--dedup-ttl", type=float, default=5.0)
-    p_run.add_argument("--dedup-salts", type=int, default=0,
-                       help="two-phase salted dedup: spread one hot "
-                            "key's event storm over N state partitions "
-                            "(0 = single-phase)")
-    p_run.add_argument("--watermark", default="30 seconds")
+    p_run.add_argument("--watermark", default="30 seconds",
+                       help="event-time lateness bound, and also the "
+                            "dedup horizon: a same-key envelope is "
+                            "dropped until the watermark passes the "
+                            "kept one's event time plus this delay")
     p_run.add_argument("--repartition", type=int, default=None)
     p_run.add_argument("--max-files-per-trigger", type=int, default=None,
                        help="micro-batch admission bound (the ZMQ-HWM "
@@ -365,8 +364,6 @@ def main(argv=None) -> int:
                 registry=registry,
                 metrics_jsonl=args.metrics,
                 dedup=not args.no_dedup,
-                dedup_ttl=args.dedup_ttl,
-                dedup_salts=args.dedup_salts,
                 watermark=args.watermark,
                 repartition=args.repartition,
                 max_files_per_trigger=args.max_files_per_trigger,

@@ -7,7 +7,7 @@ seconds (default 5), the new one is dropped.  Crucially the TTL anchors
 at the **kept** row — suppressed duplicates do not refresh it (memory
 buffer stores on first sight only; Redis variant is SET NX EX).
 
-Two batch and two streaming implementations:
+Two batch forms and one streaming form:
 
 * :func:`dedup_gap_session` — pure-relational burst dedup: keeps the
   first row of every gap-session (consecutive same-key rows < ttl
@@ -21,13 +21,14 @@ Two batch and two streaming implementations:
 * :func:`dedup_streaming` — the ``run`` path's streaming dedup:
   ``withWatermark(...).dropDuplicatesWithinWatermark`` over the same
   key, state evicted by watermark (the reference's janitor thread,
-  server.py:74-86, for free).  Its horizon is the watermark delay,
-  not the anchored TTL.
-* :func:`dedup_streaming_salted` — the same contract in two phases,
-  spreading a single hot key over ``salts`` state partitions.
+  server.py:74-86, for free).
 
-The exact anchored-TTL form for streams is
-:func:`napalm_logs_spark.streaming.stateful.exact_ttl_dedup_stream`.
+The streaming horizon is the watermark delay, not the reference's
+anchored TTL: a same-key row is dropped for as long as the kept row
+stays in state, i.e. until the watermark passes the kept row's event
+time plus that delay.  An exact anchored-TTL streaming form needs
+JVM-side state: the Python-state form (``applyInPandasWithState``) was
+measured far too slow for the ``run`` path (ROADMAP item 1).
 """
 
 from __future__ import annotations
@@ -51,11 +52,10 @@ def dedup_gap_session(
 ) -> DataFrame:
     """Keep the first row of each same-key burst (gap < ttl collapses)."""
     w = Window.partitionBy(*key).orderBy(ts_col, *order_cols)
-    prev_ts = F.lag(F.col(ts_col)).over(w)
-    gap_ok = (
-        prev_ts.isNull()
-        | (F.col(ts_col).cast("double") - prev_ts.cast("double") >= ttl_seconds)
-    )
+    # via TIMESTAMP so TIMESTAMP_NTZ columns take epoch seconds too
+    epoch = F.col(ts_col).cast("timestamp").cast("double")
+    prev = F.lag(epoch).over(w)
+    gap_ok = prev.isNull() | (epoch - prev >= ttl_seconds)
     return (
         df.withColumn("_keep", gap_ok)
         .filter(F.col("_keep"))
@@ -97,50 +97,29 @@ def dedup_ttl_exact(
 
 def dedup_streaming(
     df: DataFrame,
-    ttl_seconds: float = DEFAULT_TTL_SECONDS,
+    watermark: str,
     key: Sequence[str] = DEFAULT_KEY,
     ts_col: str = "ts",
-    watermark: str | None = None,
 ) -> DataFrame:
-    """Streaming dedup within the watermark horizon.
+    """Streaming dedup within the ``watermark`` horizon.
 
     ``dropDuplicatesWithinWatermark`` keeps the first arrival per key and
-    drops later ones while the key is in state; the watermark bounds
-    state exactly like the reference's TTL janitor.  Horizon defaults to
-    the TTL (state ≈ one burst per live key).
+    drops later ones while the key is in state; the watermark delay is
+    both the horizon and the state bound (the reference's TTL janitor).
+
+    When ``key`` holds ``os``, UNKNOWN envelopes (``os = 'unknown'``)
+    never dedup: the reference buffers after ``_identify_os``
+    (server.py:301-320 vs :347-363), so they carry the turn's identity
+    (``conv_id``, ``turn_idx``) in the key; every other row has NULL
+    there and dedups on ``key`` alone.
     """
-    watermark = watermark or f"{max(int(ttl_seconds), 1)} seconds"
-    return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(list(key))
-
-
-def dedup_streaming_salted(
-    df: DataFrame,
-    ttl_seconds: float = DEFAULT_TTL_SECONDS,
-    key: Sequence[str] = DEFAULT_KEY,
-    ts_col: str = "ts",
-    watermark: str | None = None,
-    salts: int = 8,
-) -> DataFrame:
-    """Skew-defused streaming dedup: the event-storm case.
-
-    The storm :func:`dedup_streaming` exists for — one device flooding
-    the SAME message — hashes that message's key to ONE state partition,
-    so the very scenario dedup protects against throttles a single
-    executor at 10^12-turn scale.  Two-phase form: phase 1 dedups on
-    ``(key, salt)`` where salt spreads the storm over ``salts``
-    partitions (derived from turn_idx — stable under task retry, unlike
-    partition id or random); phase 2 dedups the ≤``salts`` survivors per
-    key on the key alone.  Same output contract (one row per key within
-    the watermark horizon); which arrival is kept follows
-    ``dropDuplicatesWithinWatermark``'s first-arrival semantics in both
-    forms.  Cost: one extra (tiny — survivors only) state operator.
-    """
-    watermark = watermark or f"{max(int(ttl_seconds), 1)} seconds"
-    salt = F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(salts)).alias("_salt")
-    phase1 = (
-        df.withColumn("_salt", salt)
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark([*key, "_salt"])
-        .drop("_salt")
+    key = list(key)
+    if "os" in key:
+        unknown_turn = F.when(F.col("os") == "unknown", F.struct("conv_id", "turn_idx"))
+        df = df.withColumn("_unknown_turn", unknown_turn)
+        key.append("_unknown_turn")
+    return (
+        df.withWatermark(ts_col, watermark)
+        .dropDuplicatesWithinWatermark(key)
+        .drop("_unknown_turn")
     )
-    return phase1.dropDuplicatesWithinWatermark(list(key))

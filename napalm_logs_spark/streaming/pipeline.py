@@ -1,7 +1,7 @@
 """End-to-end streaming wiring.
 
 readStream (parquet/Iceberg transcript table) → vectorized normalize →
-watermark → TTL dedup → exactly-once multi-sink foreachBatch.
+watermark dedup → exactly-once multi-sink foreachBatch.
 
 The reference's process graph (listener → server → device → publisher)
 collapses into this single streaming query; its ZMQ HWM backpressure
@@ -29,8 +29,6 @@ def build_stream(
     max_files_per_trigger: int | None = None,
     watermark: str = "30 seconds",
     dedup: bool = True,
-    dedup_ttl: float = 5.0,
-    dedup_salts: int = 0,
     repartition: int | None = None,
     source_format: str = "parquet",
 ):
@@ -66,16 +64,8 @@ def build_stream(
         # normalize stage (only needed when the source layout is coarse)
         stream = stream.repartition(repartition)
     env = normalize(stream, registry)
-    if dedup and dedup_salts:
-        from ..operators.dedup import dedup_streaming_salted
-
-        # two-phase skew-defused form: an event storm on one key
-        # spreads over `dedup_salts` state partitions (see operators.dedup)
-        env = dedup_streaming_salted(
-            env, ttl_seconds=dedup_ttl, watermark=watermark, salts=dedup_salts
-        )
-    elif dedup:
-        env = dedup_streaming(env, ttl_seconds=dedup_ttl, watermark=watermark)
+    if dedup:
+        env = dedup_streaming(env, watermark=watermark)
     return env
 
 

@@ -1,87 +1,24 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``.
+"""Custom stateful streaming operator via ``applyInPandasWithState``.
 
-Two exact-semantics operators the built-in primitives can't express:
+:func:`entity_state_stream` — per-(host, family, entity) up/down
+state machine emitting open/close transitions (alerta pairing,
+transport/alerta.py:46-69) and maintaining the last-state gauge
+(prometheus, transport/prometheus.py:70-93) across micro-batches.
 
-* :func:`exact_ttl_dedup_stream` — the reference's anchored-TTL dedup
-  buffer (server.py:301-320, buffer/memory.py:26-41) with *exact* TTL
-  semantics in streaming: per-key state holds the last-kept event time;
-  a kept row suppresses the key for ``ttl`` seconds; suppressed rows do
-  not refresh the anchor.  State is evicted by event-time timeout (the
-  janitor thread, server.py:74-86, for free).
-* :func:`entity_state_stream` — per-(host, family, entity) up/down
-  state machine emitting open/close transitions (alerta pairing,
-  transport/alerta.py:46-69) and maintaining the last-state gauge
-  (prometheus, transport/prometheus.py:70-93) across micro-batches.
-
-Neither is on the ``run`` path yet: the exact dedup is the candidate
-single streaming dedup (ROADMAP item 1), and the state machine waits
-to be wired in as the streaming up/down correlation.  Both are keyed
-by their natural state key, so Spark hash-partitions the stream once
-and the state store shards with it.
+It is not on the ``run`` path yet: it waits to be wired in as the
+streaming up/down correlation.  It is keyed by its natural state key,
+so Spark hash-partitions the stream once and the state store shards
+with it.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-
-def exact_ttl_dedup_stream(
-    df: DataFrame,
-    ttl_seconds: float = 5.0,
-    key: Sequence[str] = ("os", "host", "message"),
-    ts_col: str = "ts",
-    watermark: str = "30 seconds",
-) -> DataFrame:
-    """Streaming exact anchored-TTL dedup (see module docstring).
-
-    Input must be a streaming DataFrame; a watermark on ``ts_col`` is
-    applied here (needed for event-time state timeout).
-    """
-    out_schema = df.schema
-    state_schema = T.StructType([T.StructField("anchor", T.DoubleType())])
-    key_cols = list(key)
-
-    def dedup_fn(
-        key_vals, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        anchor = state.get[0] if state.exists else None
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values([ts_col], kind="mergesort")
-            keep = []
-            for t in pdf[ts_col]:
-                tv = t.timestamp()
-                if anchor is None or tv - anchor >= ttl_seconds:
-                    keep.append(True)
-                    anchor = tv
-                else:
-                    keep.append(False)
-            out = pdf[keep]
-            if len(out):
-                yield out
-        if anchor is not None:
-            state.update((float(anchor),))
-            # evict once the suppression window is definitely over
-            state.setTimeoutTimestamp(int((anchor + ttl_seconds) * 1000))
-
-    return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(*key_cols)
-        .applyInPandasWithState(
-            dedup_fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
 
 
 ENTITY_STATE_SCHEMA = T.StructType(

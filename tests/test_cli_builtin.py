@@ -154,6 +154,38 @@ def test_cli_resume_keeps_checkpoint_partitions(spark, tmp_path):
     assert kept.groupBy(*DEFAULT_KEY).count().filter("count > 1").count() == 0
 
 
+def test_cli_run_keeps_every_unknown_envelope(spark, tmp_path):
+    """UNKNOWN envelopes never enter the dedup buffer (the reference
+    dedups after identifying the OS), so distinct free-text turns all
+    publish; a same-key syslog duplicate 2 s apart still collapses."""
+    from napalm_logs_spark.__main__ import main
+    from napalm_logs_spark.streaming.sink import read_sink
+
+    base = datetime.datetime(2017, 7, 20, 21, 45, 0)
+    line = "<28>Jul 20 21:45:59 vmx01 mib2d[2424]: SNMP_TRAP_LINK_DOWN: ifIndex 502"
+    rows = [
+        ("c1", 0, "user", "is the core link healthy?", None, base),
+        ("c1", 1, "user", "please check again", None, base + datetime.timedelta(seconds=10)),
+        ("c1", 2, "user", "any news on that?", None, base + datetime.timedelta(seconds=20)),
+        ("c2", 0, "agent", line, None, base),
+        ("c2", 1, "agent", line, None, base + datetime.timedelta(seconds=2)),
+    ]
+    src, sink = str(tmp_path / "src"), str(tmp_path / "sink")
+    spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    ).coalesce(1).write.parquet(src)
+    assert main([
+        "run", "--source", src, "--sink", sink, "--checkpoint", str(tmp_path / "ckpt"),
+    ]) == 0
+
+    got = read_sink(spark, sink).collect()
+    unknown = sorted((r.conv_id, r.turn_idx) for r in got if r.os == "unknown")
+    assert unknown == [("c1", 0), ("c1", 1), ("c1", 2)]
+    syslog = [r for r in got if r.os != "unknown"]
+    assert len(syslog) == 1 and syslog[0].conv_id == "c2"
+
+
 def test_cli_orphan_alerts(spark, tmp_path):
     import datetime
 

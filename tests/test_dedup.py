@@ -58,10 +58,11 @@ def test_streaming_dedup_drops_within_watermark(spark, tmp_path):
     _df(spark, [0, 1, 2]).write.parquet(src)
     stream = (
         spark.readStream.schema(
-            "os string, turn_idx int, role string, message string, host string, ts timestamp"
+            "conv_id string, os string, turn_idx int, role string, message string, "
+            "host string, ts timestamp"
         ).parquet(src)
     )
-    deduped = dedup_streaming(stream, ttl_seconds=5.0, watermark="10 seconds")
+    deduped = dedup_streaming(stream, watermark="10 seconds")
     q = (
         deduped.writeStream.format("memory")
         .queryName("dedup_stream_test")
@@ -73,6 +74,6 @@ def test_streaming_dedup_drops_within_watermark(spark, tmp_path):
     got = spark.sql("select * from dedup_stream_test").collect()
     # dropDuplicatesWithinWatermark keeps the first ARRIVAL per key;
     # arrival order across tasks is not event-time order, so only the
-    # count is deterministic here (exact event-time semantics live in
-    # streaming/stateful.exact_ttl_dedup_stream)
+    # count is deterministic here (exact anchored-TTL semantics live in
+    # the batch dedup_ttl_exact; there is no exact streaming form)
     assert len(got) == 1

@@ -166,7 +166,7 @@ def test_soak_state_bounded_across_resumed_runs(spark, tmp_path):
         run_stream_once(
             spark, src, [out], ckpt,
             sinks=[SinkSpec(path=out, send_raw=True, send_unknown=True)],
-            dedup=True, dedup_ttl=5.0, watermark="30 seconds",
+            dedup=True, watermark="30 seconds",
             metrics_jsonl=metrics,
         )
 

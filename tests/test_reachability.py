@@ -18,9 +18,8 @@ ROOTS = (f"{PKG}.__main__", "__spark_entry__")
 # Modules allowed to be unreached, each with the reason it stays.
 ALLOWED_UNREACHED = {
     f"{PKG}.streaming.stateful": (
-        "exact_ttl_dedup_stream is the candidate single streaming dedup "
-        "(ROADMAP item 1) and entity_state_stream is the streaming up/down "
-        "correlation; both wait to be wired into the run path"
+        "entity_state_stream is the streaming up/down correlation; it "
+        "waits to be wired into the run path"
     ),
 }
 

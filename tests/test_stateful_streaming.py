@@ -1,74 +1,12 @@
-"""applyInPandasWithState operators: exact TTL dedup and the entity
-state machine — including state carried across micro-batches and across
-checkpoint restarts."""
+"""Stateful streaming operators: windowed flaps and sessions, and the
+applyInPandasWithState entity state machine — including state carried
+across micro-batches and across checkpoint restarts."""
 
 import datetime
 
-from napalm_logs_spark.streaming.stateful import (
-    entity_state_stream,
-    exact_ttl_dedup_stream,
-)
+from napalm_logs_spark.streaming.stateful import entity_state_stream
 
 BASE = datetime.datetime(2017, 7, 20, 21, 0, 0)
-SCHEMA = "os string, host string, message string, turn_idx int, ts timestamp"
-
-
-def _rows(offsets, msg="m1"):
-    return [
-        ("junos", "r1", msg, i, BASE + datetime.timedelta(seconds=o))
-        for i, o in enumerate(offsets)
-    ]
-
-
-def _run_dedup(spark, src, ckpt, name):
-    stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
-    deduped = exact_ttl_dedup_stream(stream, ttl_seconds=5.0)
-    q = (
-        deduped.writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"select * from {name}")
-
-
-def test_exact_ttl_anchored_streaming(spark, tmp_path):
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    spark.createDataFrame(_rows([0, 3, 6]), SCHEMA).coalesce(1).write.parquet(src)
-    got = _run_dedup(spark, src, ckpt, "ttl_stream_1")
-    # anchored: 0 kept, 3 dropped (within 5s of anchor 0), 6 kept
-    assert sorted(r.turn_idx for r in got.collect()) == [0, 2]
-
-
-def test_state_survives_checkpoint_restart(spark, tmp_path):
-    # memory sink can't recover from checkpoints → use a file sink
-    src, ckpt, out = str(tmp_path / "src"), str(tmp_path / "ckpt"), str(tmp_path / "out")
-
-    def run():
-        stream = spark.readStream.schema(SCHEMA).parquet(src)
-        q = (
-            exact_ttl_dedup_stream(stream, ttl_seconds=5.0)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    spark.createDataFrame(_rows([0]), SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    run()
-    assert spark.read.parquet(out).count() == 1
-
-    # second run, same checkpoint: a duplicate at +3s must be suppressed
-    # by state REMEMBERED from the previous run
-    spark.createDataFrame(
-        [("junos", "r1", "m1", 9, BASE + datetime.timedelta(seconds=3))], SCHEMA
-    ).coalesce(1).write.mode("append").parquet(src)
-    run()
-    got = spark.read.parquet(out)
-    assert got.count() == 1, [r.asDict() for r in got.collect()]
 
 
 def _run_windowed(spark, build_query, src, ckpt, out):
@@ -302,33 +240,4 @@ def test_entity_fsm_state_survives_checkpoint_restart(spark, tmp_path):
         (r.state01, r.prev_state, r.status) for r in spark.read.parquet(out).collect()
     )
     assert got2 == [(0, 1, "closed"), (1, None, "open")]
-
-
-def test_salted_dedup_storm(spark, tmp_path):
-    """Hot-key event storm through the two-phase salted dedup: same
-    output contract (one row per key within horizon), two state
-    operators in the plan (the skew spread + the final merge)."""
-    from napalm_logs_spark.operators.dedup import dedup_streaming_salted
-
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    # storm: 300 identical messages in 2s from one host + one other key
-    rows = _rows([i * 0.005 for i in range(300)], msg="STORM") + [
-        ("junos", "r2", "other", 999, BASE)
-    ]
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    dd = dedup_streaming_salted(stream, ttl_seconds=5.0, salts=8)
-    q = (
-        dd.writeStream.format("memory").queryName("salted_storm")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = spark.sql("select * from salted_storm").collect()
-    by_key = {}
-    for r in got:
-        by_key.setdefault((r.os, r.host, r.message), []).append(r)
-    # one survivor per key within the horizon
-    assert len(by_key[("junos", "r1", "STORM")]) == 1
-    assert len(by_key[("junos", "r2", "other")]) == 1
 

@@ -124,12 +124,9 @@ def _child(provider_key: str, src: str, n_rows: int) -> None:
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/f*")
         )
-        # huge TTL/watermark: nothing evicts during the drain, so state
+        # huge watermark: nothing evicts during the drain, so state
         # ends at exactly n_keys entries — the monotone-growth worst case
-        dedup = dedup_streaming(
-            stream, ttl_seconds=86_400, key=["k"], ts_col="ts",
-            watermark="1 day",
-        )
+        dedup = dedup_streaming(stream, watermark="1 day", key=["k"], ts_col="ts")
         t0 = time.time()
         q = (
             dedup.writeStream.format("noop")
