@@ -386,6 +386,7 @@ def main(argv=None) -> int:
                     horizon_seconds=args.orphan_horizon,
                     watermark=args.watermark,
                     max_files_per_trigger=args.max_files_per_trigger,
+                    source_format=args.source_format,
                 )
                 print(f"orphan alerts -> {args.orphan_sink}")
     finally:

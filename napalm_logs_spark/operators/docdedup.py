@@ -951,7 +951,7 @@ def editdist_near_pairs(
     the dial.  Measured on 100k templated docs whose only distinct
     content is hex/digit tails (alphabet ~16, so only ~4k distinct
     3-grams): q=3 → 91M candidates, 150 s; q=4 → 15 s; q=5 → 5 s
-    (`tools/probe_editdist_scale.py`).  Pick ``q`` so the corpus has
+    (SCALE.md, Ed-Join row).  Pick ``q`` so the corpus has
     ≫ N distinct q-grams; the price is the short-doc bound
     ``(k+1)*q`` rising with it.
 

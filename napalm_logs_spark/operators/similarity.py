@@ -53,14 +53,6 @@ def _norm(a):
     )
 
 
-def with_unit_norm(df: DataFrame, col: str = "embedding") -> DataFrame:
-    n = _norm(F.col(col))
-    return df.withColumn(
-        "_unit",
-        F.when(n > 0, F.transform(F.col(col), lambda x: x / n)).otherwise(F.col(col)),
-    )
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -551,14 +543,6 @@ def near_dup_dropped_buckets(
 # distributed k-means (topic clustering for corpus curation)
 
 KMEANS_QUANT = float(1 << 20)
-
-
-def _quant_half_away(x: np.ndarray) -> np.ndarray:
-    """Spark's ROUND (HALF_UP, away from zero) on x*KMEANS_QUANT —
-    numpy's np.round is half-to-even, so the golden implementation and
-    the operator must share this exact rule."""
-    s = x * KMEANS_QUANT
-    return np.where(s >= 0, np.floor(s + 0.5), np.ceil(s - 0.5))
 
 
 def kmeans_init_centroids(

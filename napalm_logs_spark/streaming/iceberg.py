@@ -1,12 +1,14 @@
-"""Iceberg table adapter with graceful degradation.
+"""Iceberg transcript source with graceful degradation.
 
 The engine's canonical lakehouse format is Apache Iceberg (the north
-rule's table layer).  This sandbox ships no ``iceberg-spark-runtime``
-jar and has no network, so the adapter probes for Iceberg support at
-runtime and degrades to the partitioned-parquet layout that
-``sink.exactly_once_parquet_sink`` implements — identical exactly-once
-semantics (idempotent per-batch-id replace ≙ Iceberg MERGE/overwrite on
-the batch-id partition), identical lineage columns.
+rule's table layer).  ``run --source iceberg:<table>`` tails the
+transcripts table through :func:`iceberg_transcript_stream`.  This
+sandbox ships no ``iceberg-spark-runtime`` jar and has no network, so
+the source probes for Iceberg support at runtime and raises with the
+launch recipe when it is absent; a parquet directory source is the
+drop-in stand-in.  The sink side stays the partitioned-parquet layout
+of ``sink.exactly_once_parquet_sink`` (idempotent per-batch-id replace
+≙ Iceberg overwrite on the batch-id partition).
 
 On a real cluster, enable with:
 
@@ -20,7 +22,6 @@ On a real cluster, enable with:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -30,41 +31,6 @@ def iceberg_available(spark: SparkSession) -> bool:
     from ..jvm import jvm_class_available
 
     return jvm_class_available(spark, "org.apache.iceberg.spark.SparkCatalog")
-
-
-def write_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    table_or_path: str,
-    order_cols=("conv_id", "turn_idx"),
-) -> str:
-    """Idempotently land one micro-batch.
-
-    Iceberg present  → ``overwritePartitions`` on the ``_batch_id``
-    identity partition of ``table_or_path`` (a catalog table name).
-    Iceberg absent   → overwrite the ``_batch_id=<n>`` parquet directory
-    (same replace-don't-append semantics).
-
-    Returns which mode was used ('iceberg' | 'parquet').
-    """
-    spark = batch_df.sparkSession
-    enriched = (
-        batch_df.withColumn("_batch_id", F.lit(int(batch_id)))
-        .withColumn("_task_partition", F.spark_partition_id())
-        .sortWithinPartitions(*order_cols)
-    )
-    if iceberg_available(spark) and "/" not in table_or_path:
-        (
-            enriched.writeTo(table_or_path)
-            .option("check-ordering", "false")
-            .overwritePartitions()
-        )
-        return "iceberg"
-    import os
-
-    target = os.path.join(table_or_path, f"_batch_id={int(batch_id)}")
-    enriched.write.mode("overwrite").parquet(target)
-    return "parquet"
 
 
 def iceberg_transcript_stream(

@@ -1,29 +1,26 @@
-"""Kafka publisher sink (SURVEY §2.6 K2) with graceful degradation.
+"""Kafka publisher record shape (SURVEY §2.6 K2).
 
-The reference's Kafka transport (`/root/reference/napalm_logs/transport/
-kafka.py:26-58`) opens a ``KafkaProducer`` and sends each serialized
-envelope to a topic (default ``napalm-logs``).  The Spark re-expression
-is declarative: serialize the envelope to canonical JSON (the K6
-serializer), key by ``conv_id`` so per-conversation ordering rides the
-Kafka partition (the same per-device in-order contract as the
-reference's per-OS socket, `device.py:265-276`), and hand the stream to
-``writeStream.format("kafka")`` — delivery tracking, batching and
-retries collapse into the Kafka sink's own exactly-once-per-epoch
-semantics with checkpointed offsets.
+The reference's Kafka transport (``transport/kafka.py:26-58``) opens a
+``KafkaProducer`` and sends each serialized envelope to a topic
+(default ``napalm-logs``).  The Spark re-expression is declarative:
+serialize the envelope with the K6 serializer, key by ``conv_id`` so
+per-conversation ordering rides the Kafka partition (the same
+per-device in-order contract as the reference's per-OS socket,
+`device.py:265-276`), and write each micro-batch with
+``write.format("kafka")``.
 
-No broker or connector jar ships in this sandbox, so the builders probe
-the classpath exactly like the source (:mod:`..sources.kafka`) and fail
-with an actionable message; the serialization path itself
-(:func:`envelope_to_kafka_records`) is pure DataFrame code and fully
-tested offline (round-trips through the source's JSON parser).
+The ``run`` path publishes through ``SinkSpec.kafka_bootstrap`` inside
+the exactly-once fan-out (:mod:`.sink`), which probes the classpath for
+the connector and fails with an actionable message when it is absent.
+The serialization path itself (:func:`envelope_to_kafka_records`) is
+pure DataFrame code and fully tested offline (round-trips through the
+source's JSON parser).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..sources.kafka import kafka_available
 
 DEFAULT_TOPIC = "napalm-logs"  # reference transport/kafka.py:43
 
@@ -64,37 +61,3 @@ def envelope_to_kafka_records(
         "value",
         F.lit(topic).alias("topic"),
     )
-
-
-def kafka_envelope_sink(
-    env: DataFrame,
-    bootstrap_servers: str,
-    checkpoint: str,
-    *,
-    topic: str = DEFAULT_TOPIC,
-    trigger_available_now: bool = False,
-    query_name: str = "nls-kafka-sink",
-):
-    """Start the streaming Kafka publisher; returns the StreamingQuery.
-
-    Raises a clear error when the connector jar is absent (launch with
-    ``--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<ver>``).
-    """
-    spark = env.sparkSession
-    if not kafka_available(spark):
-        raise RuntimeError(
-            "Kafka data source not on the classpath; launch with "
-            "--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version> "
-            "(no broker/package in this sandbox — use the parquet/Iceberg "
-            "sink instead)"
-        )
-    writer = (
-        envelope_to_kafka_records(env, topic)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -21,19 +21,15 @@ from ..sources.transcripts import TRANSCRIPT_SCHEMA
 from .sink import SinkSpec, exactly_once_parquet_sink
 
 
-def build_stream(
+def transcript_stream(
     spark: SparkSession,
     source_dir: str,
     *,
-    registry=None,
     max_files_per_trigger: int | None = None,
-    watermark: str = "30 seconds",
-    dedup: bool = True,
-    repartition: int | None = None,
     source_format: str = "parquet",
 ):
-    """Transcript source → normalized (and optionally deduped)
-    streaming DataFrame.
+    """The transcript source as a streaming DataFrame; every query of
+    ``run`` reads it through here.
 
     ``source_dir`` is a parquet (or, with ``source_format="json"``,
     JSON-lines) directory, or ``iceberg:<table>`` to tail the
@@ -45,19 +41,38 @@ def build_stream(
     if source_dir.startswith("iceberg:"):
         from .iceberg import iceberg_transcript_stream
 
-        stream = iceberg_transcript_stream(
+        return iceberg_transcript_stream(
             spark,
             source_dir[len("iceberg:"):],
             max_files_per_micro_batch=max_files_per_trigger,
         )
-    else:
-        reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        if source_format == "json":
-            stream = reader.option("mode", "PERMISSIVE").json(source_dir)
-        else:
-            stream = reader.parquet(source_dir)
+    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    if source_format == "json":
+        return reader.option("mode", "PERMISSIVE").json(source_dir)
+    return reader.parquet(source_dir)
+
+
+def build_stream(
+    spark: SparkSession,
+    source_dir: str,
+    *,
+    registry=None,
+    max_files_per_trigger: int | None = None,
+    watermark: str = "30 seconds",
+    dedup: bool = True,
+    repartition: int | None = None,
+    source_format: str = "parquet",
+):
+    """Transcript source (:func:`transcript_stream`) → normalized (and
+    optionally deduped) streaming DataFrame."""
+    stream = transcript_stream(
+        spark,
+        source_dir,
+        max_files_per_trigger=max_files_per_trigger,
+        source_format=source_format,
+    )
     if repartition:
         # parallelism of a file-stream micro-batch = its input splits; a
         # micro-batch from few/large files would otherwise starve the
@@ -105,13 +120,16 @@ def run_stream_once(
             .start()
         )
         query.awaitTermination()
-        if recorder is not None:
+        if recorder is not None and (last := query.lastProgress) is not None:
             # listener events are delivered asynchronously on the bus —
-            # give them a moment to drain after termination
+            # give them a moment to drain after termination, until the
+            # query's last batch (often a no-data watermark-eviction
+            # batch) has its row
             import time
 
+            want = (str(last["id"]), last["batchId"])
             for _ in range(100):
-                if recorder.rows:
+                if any((r["query_id"], r["batch_id"]) == want for r in recorder.rows):
                     break
                 time.sleep(0.1)
     finally:
@@ -129,6 +147,7 @@ def run_orphan_alerts_once(
     horizon_seconds: int = 60,
     watermark: str = "2 minutes",
     max_files_per_trigger: int | None = None,
+    source_format: str = "parquet",
 ) -> None:
     """Companion alert query off the same transcript source: agent turns
     with no tool response within ``horizon_seconds`` (request-timeout
@@ -141,11 +160,13 @@ def run_orphan_alerts_once(
     """
     from ..operators.cep import orphan_agent_turns
 
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     alerts = orphan_agent_turns(
-        reader.parquet(source_dir),
+        transcript_stream(
+            spark,
+            source_dir,
+            max_files_per_trigger=max_files_per_trigger,
+            source_format=source_format,
+        ),
         horizon_seconds=horizon_seconds,
         streaming=True,
         watermark=watermark,

@@ -186,7 +186,9 @@ def test_cli_run_keeps_every_unknown_envelope(spark, tmp_path):
     assert len(syslog) == 1 and syslog[0].conv_id == "c2"
 
 
-def test_cli_orphan_alerts(spark, tmp_path):
+@pytest.mark.parametrize("source_format", ["parquet", "json"])
+def test_cli_orphan_alerts(spark, tmp_path, source_format):
+    # the alert query reads the same source, in the same format, as run
     import datetime
 
     from napalm_logs_spark.__main__ import main
@@ -205,10 +207,16 @@ def test_cli_orphan_alerts(spark, tmp_path):
     sink = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
     orph = str(tmp_path / "orphans")
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+
+    def append(batch):
+        writer = spark.createDataFrame(batch, schema).coalesce(1).write.mode("append")
+        writer.format(source_format).save(src)
+
+    append(rows)
 
     cli = [
-        "run", "--source", src, "--sink", sink, "--checkpoint", ckpt,
+        "run", "--source", src, "--source-format", source_format,
+        "--sink", sink, "--checkpoint", ckpt,
         "--no-dedup", "--orphan-sink", orph, "--orphan-horizon", "10",
         "--watermark", "0 seconds",
     ]
@@ -221,7 +229,7 @@ def test_cli_orphan_alerts(spark, tmp_path):
         ("c9", 0, "agent", "s", None, BASE + datetime.timedelta(seconds=2000)),
         ("c9", 1, "tool", "t", "search", BASE + datetime.timedelta(seconds=2001)),
     ]
-    spark.createDataFrame(sentinel, schema).coalesce(1).write.mode("append").parquet(src)
+    append(sentinel)
     assert main(cli) == 0
     got = spark.read.parquet(orph).collect()
     assert [(r.conv_id, r.agent_turn) for r in got] == [("c2", 0)]

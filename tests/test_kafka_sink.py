@@ -15,7 +15,6 @@ from napalm_logs_spark.sources.kafka import kafka_available
 from napalm_logs_spark.streaming.kafka_sink import (
     DEFAULT_TOPIC,
     envelope_to_kafka_records,
-    kafka_envelope_sink,
 )
 from napalm_logs_spark.streaming.sink import SinkSpec, exactly_once_parquet_sink
 
@@ -65,14 +64,6 @@ def test_null_fields_explicit_in_json(spark):
     assert raw_row.topic == "t2"
     assert '"facility":null' in raw_row.value
     assert '"error":"RAW"' in raw_row.value
-
-
-def test_sink_degrades_without_connector(spark, tmp_path):
-    if kafka_available(spark):  # pragma: no cover - not in this sandbox
-        pytest.skip("connector present; degradation path not reachable")
-    env = _env_df(spark)
-    with pytest.raises(RuntimeError, match="--packages"):
-        kafka_envelope_sink(env, "localhost:9092", str(tmp_path / "ckpt"))
 
 
 def test_console_sink_prints_batches(spark):

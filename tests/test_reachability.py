@@ -3,6 +3,10 @@ product (``python -m napalm_logs_spark``) or the driver registry
 (``__spark_entry__``).  Code that only its own tests import is either
 wired in or deleted.
 
+Every script under ``tools/`` must be imported by a test, perfbench or
+the package, or be named in README.md, so one-off scripts do not pile
+up.
+
 The import graph is read statically with ``ast``: every ``import`` and
 ``from ... import`` statement counts, including the ones inside
 function bodies (the registry imports its operators lazily).
@@ -20,6 +24,13 @@ ALLOWED_UNREACHED = {
     f"{PKG}.streaming.stateful": (
         "entity_state_stream is the streaming up/down correlation; it "
         "waits to be wired into the run path"
+    ),
+}
+
+# Scripts under tools/ allowed to be unreached, each with the reason.
+ALLOWED_UNREACHED_TOOLS = {
+    "probe_rocksdb_state": (
+        "goes with the run path's state store (ROADMAP item 1)"
     ),
 }
 
@@ -96,5 +107,49 @@ def test_allowed_exceptions_are_still_needed():
     mods = _package_modules()
     stale = sorted(
         m for m in ALLOWED_UNREACHED if m in reached or m not in mods
+    )
+    assert not stale, stale
+
+
+def _tools() -> set:
+    return {
+        f[: -len(".py")]
+        for f in os.listdir(os.path.join(REPO, "tools"))
+        if f.endswith(".py")
+    }
+
+
+def _reached_tools() -> set:
+    """Tools a test, perfbench or the package imports, or README names."""
+    paths = [os.path.join(REPO, "__spark_entry__.py")]
+    for top in ("tests", "perfbench", PKG):
+        for dirpath, _dirs, files in os.walk(os.path.join(REPO, top)):
+            paths += [os.path.join(dirpath, f) for f in files if f.endswith(".py")]
+    imported = set()
+    for path in paths:
+        # relative imports resolve inside a package, never into tools/
+        imported |= _imported_names("", path)
+    with open(os.path.join(REPO, "README.md")) as fh:
+        readme = fh.read()
+    return {
+        t for t in _tools()
+        if f"tools.{t}" in imported or f"tools/{t}.py" in readme
+    }
+
+
+def test_every_tool_is_reached():
+    reached = _reached_tools()
+    unreached = sorted(
+        t for t in _tools()
+        if t not in reached and t not in ALLOWED_UNREACHED_TOOLS
+    )
+    assert not unreached, f"tools nothing imports or documents: {unreached}"
+
+
+def test_allowed_tool_exceptions_are_still_needed():
+    reached = _reached_tools()
+    tools = _tools()
+    stale = sorted(
+        t for t in ALLOWED_UNREACHED_TOOLS if t in reached or t not in tools
     )
     assert not stale, stale
