@@ -494,8 +494,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_zorder_key(spark, sf):
         # Z-order (Morton) layout key: scan locality for BOTH user_id
-        # and value range predicates at once (bucketed.write_zordered
-        # sorts files by it — parquet min/max stats then prune either
+        # and value range predicates at once (files range-partitioned
+        # and sorted by it let parquet min/max stats prune either
         # dimension).  Pure JVM bit interleave, oracled bit-for-bit.
         from napalm_logs_spark.sources.bucketed import (
             minmax_scaled_int,

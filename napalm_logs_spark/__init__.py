@@ -8,11 +8,12 @@ Streaming pipeline over tables of multi-turn transcripts
 The reference is a multi-process, row-at-a-time syslog normalization
 daemon wired together with ZeroMQ.  This engine keeps *what* it
 computes — vendor-profile matching, field extraction, typed casting,
-hierarchical (YANG/OpenConfig) output mapping, TTL dedup, stateful
-up/down correlation and filtered multi-sink publishing — but expresses
-it Spark-first: declarative DataFrame plans, Arrow-vectorized pandas
-stages for the regex trie, watermarked stateful operators for the CEP
-surface, and an idempotent exactly-once foreachBatch sink.
+hierarchical (YANG/OpenConfig) output mapping, TTL dedup, up/down
+correlation and filtered multi-sink publishing — but expresses it
+Spark-first: declarative DataFrame plans, Arrow-vectorized pandas
+stages for the regex trie, a watermarked streaming dedup, batch
+window/join operators for the CEP surface, and an idempotent
+exactly-once foreachBatch sink.
 
 Layout
 ------
@@ -22,7 +23,7 @@ operators/   normalize (the vectorized hot path), dedup, CEP,
              text-analysis / dedup / similarity ops for training-data
              pipelines
 sources/     deterministic synthetic transcript generation + golden
-             fixture corpus loading
+             fixture corpus loading, Z-order layout keys
 streaming/   readStream wiring, watermarks, exactly-once sink
 """
 

@@ -130,7 +130,6 @@ def main(argv=None) -> int:
                             "dedup horizon: a same-key envelope is "
                             "dropped until the watermark passes the "
                             "kept one's event time plus this delay")
-    p_run.add_argument("--repartition", type=int, default=None)
     p_run.add_argument("--max-files-per-trigger", type=int, default=None,
                        help="micro-batch admission bound (the ZMQ-HWM "
                             "backpressure analog)")
@@ -365,7 +364,6 @@ def main(argv=None) -> int:
                 metrics_jsonl=args.metrics,
                 dedup=not args.no_dedup,
                 watermark=args.watermark,
-                repartition=args.repartition,
                 max_files_per_trigger=args.max_files_per_trigger,
                 source_format=args.source_format,
             )

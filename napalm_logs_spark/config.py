@@ -99,16 +99,23 @@ def build_sinks(entries: list):
     return specs
 
 
-def _flag_given(argv: list, dest: str) -> bool:
+def _flag_given(argv: list, dest: str, dests) -> bool:
     """True when the user passed a flag for ``dest`` — including
     argparse's prefix abbreviations (``--check`` for ``--checkpoint``),
     which must count as explicit or the config file would silently
-    override a flag the user typed (inverting flag > file)."""
+    override a flag the user typed (inverting flag > file).
+
+    A typed name counts for ``dest`` when it equals ``dest``, or when
+    ``dest`` is the only one of the parsed ``dests`` it is a prefix of
+    (argparse's abbreviation rule): ``--source`` is not
+    ``--source-format``."""
     for a in argv:
         if not a.startswith("--") or len(a) <= 2:
             continue
         name = a[2:].split("=", 1)[0].replace("-", "_")
-        if name and dest.startswith(name):
+        if name == dest or (
+            name and [d for d in dests if d.startswith(name)] == [dest]
+        ):
             return True
     return False
 
@@ -128,5 +135,5 @@ def merge_config(args, cfg: dict, argv: list) -> None:
             # the file must become a one-element list, not be iterated
             # character-by-character downstream
             value = [value]
-        if hasattr(args, dest) and not _flag_given(argv, dest):
+        if hasattr(args, dest) and not _flag_given(argv, dest, vars(args)):
             setattr(args, dest, value)

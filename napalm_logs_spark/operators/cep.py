@@ -5,10 +5,12 @@ those behaviors to first-class windowed/stateful DataFrame operators:
 
 * up/down pair resolution  (alerta sink, transport/alerta.py:46-69)
 * per-entity state gauges  (prometheus sink, transport/prometheus.py:70-93)
-* event counters           (transport/prometheus.py:29-596)
-* flap detection           (derived: K transitions within a sliding window)
-* session windows per conversation
 * agent↔tool turn pairing  (graft-specific stream-stream interval join)
+* ordered-sequence matches, hysteresis alerts, rate anomalies and
+  windowed funnels
+
+Event counters, flap counts and session windows are the registry's own
+inline plans (``c3_tumbling_counts``, ``c5_flaps``, ``c7_sessions``).
 
 Everything here is declarative DataFrame ops — Catalyst plans the
 shuffles; every operator shuffles at most once on its natural key.
@@ -48,7 +50,7 @@ UP_DOWN_PAIRS: dict = {
 
 #: families whose PROBLEM state is 1 (alarm set), inverting the
 #: interface/neighbor convention where 0 (down) is the problem —
-#: drives the alert 'status' polarity in transitions()/the FSM while
+#: drives the alert 'status' polarity in transitions() while
 #: the state01 gauge stays prometheus-exact (1=SET, 0=CLEARED)
 PROBLEM_WHEN_ONE = frozenset({"system_alarm", "minor_alarm", "major_alarm"})
 
@@ -118,79 +120,6 @@ def transitions(events: DataFrame) -> DataFrame:
         events.withColumn("prev_state", prev)
         .filter(F.col("prev_state").isNull() | (F.col("prev_state") != F.col("state01")))
         .withColumn("status", _status_col(F.col("state01"), F.col("family")))
-    )
-
-
-def flaps(
-    transition_df: DataFrame,
-    window: str = "60 seconds",
-    slide: str = "10 seconds",
-    min_transitions: int = 3,
-) -> DataFrame:
-    """Flap detection: ≥ ``min_transitions`` state changes of one
-    (host, family, entity) within a sliding window."""
-    return (
-        transition_df.groupBy(
-            F.window("ts", window, slide).alias("win"),
-            "host",
-            "family",
-            "entity",
-        )
-        .agg(F.count(F.lit(1)).alias("n_transitions"))
-        .filter(F.col("n_transitions") >= min_transitions)
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "host",
-            "family",
-            "entity",
-            "n_transitions",
-        )
-    )
-
-
-def event_counts(
-    env: DataFrame,
-    window: str = "300 seconds",
-    keys: Sequence[str] = ("error", "host"),
-) -> DataFrame:
-    """Tumbling-window event counters (prometheus counter semantics).
-    Works identically on batch and streaming input (add a watermark
-    upstream for streaming)."""
-    return (
-        env.groupBy(F.window("ts", window).alias("win"), *keys)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            *keys,
-            "n",
-        )
-    )
-
-
-def session_stats(
-    df: DataFrame,
-    gap: str = "300 seconds",
-    key: str = "conv_id",
-) -> DataFrame:
-    """Session windows per conversation: turns separated by ≥ gap start
-    a new session.  ``F.session_window`` — Spark manages merge state."""
-    return (
-        df.groupBy(F.session_window("ts", gap).alias("sess"), key)
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.min("turn_idx").alias("first_turn"),
-            F.max("turn_idx").alias("last_turn"),
-        )
-        .select(
-            F.col("sess.start").alias("sess_start"),
-            F.col("sess.end").alias("sess_end"),
-            key,
-            "n_turns",
-            "first_turn",
-            "last_turn",
-        )
     )
 
 
@@ -342,21 +271,6 @@ def pattern_sequence(
     if streaming:
         out = out.filter(F.col("span_seconds") <= within_seconds)
     return out
-
-
-def salted_repartition(
-    df: DataFrame, key: str = "conv_id", salts: int = 8, num_partitions: int | None = None
-) -> DataFrame:
-    """Explicit skew defusal for hot conversations: repartition by
-    (key, hash(turn_idx) % salts) so one hot key spreads over up to
-    ``salts`` partitions.  Use before *stateless* per-row stages only —
-    keyed state must see all rows of a key (use entity-level sub-keys
-    there).
-    """
-    salt = F.pmod(F.hash("turn_idx"), F.lit(salts)).alias("_salt")
-    if num_partitions:
-        return df.repartition(num_partitions, F.col(key), salt)
-    return df.repartition(F.col(key), salt)
 
 
 def hysteresis_alerts(

@@ -4,7 +4,7 @@ The engine's native payload is a table of multi-turn transcripts
 (``conv_id, turn_idx, role, text, tool, ts`` — BASELINE input_hint).
 This module adds the corpus-analytics layer a transcript lakehouse
 needs *above* the per-turn normalize/CEP path: per-conversation
-rollups, conversation-level exact dedup, tool-call chain analysis and
+rollups, conversation content fingerprints, tool-call chain analysis and
 role-transition statistics.  The reference has no conversation notion
 (its unit is a single syslog message); these are the transcript-payload
 analogs of its per-device aggregation loops
@@ -135,24 +135,6 @@ def conversation_fingerprints(
     return tdf.groupBy("conv_id").agg(
         F.md5(F.concat_ws(US, texts)).alias("conv_hash"),
         F.count(F.lit(1)).alias("n_turns"),
-    )
-
-
-def conversation_dup_groups(tdf: DataFrame, **fp_kwargs) -> DataFrame:
-    """Groups of byte-identical conversations (content-ordered).
-
-    Two shuffles total: fingerprint (by conv_id) then group (by
-    conv_hash).  ``canonical`` is the lexicographically-first member,
-    mirroring docdedup's lowest-id-wins keep rule.
-    """
-    fp = conversation_fingerprints(tdf, **fp_kwargs)
-    return (
-        fp.groupBy("conv_hash")
-        .agg(
-            F.count(F.lit(1)).alias("n_convs"),
-            F.min("conv_id").alias("canonical"),
-        )
-        .filter(F.col("n_convs") > 1)
     )
 
 

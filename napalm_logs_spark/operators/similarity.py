@@ -478,8 +478,7 @@ def embedding_near_dup(
     Skew guard: a bucket larger than ``max_bucket`` is EXCLUDED from
     candidate generation in that table (its pairs are still found by any
     other table where they don't land in an oversized bucket) — one
-    boilerplate-dense bucket can no longer go quadratic.  Use
-    :func:`near_dup_dropped_buckets` to observe what the cap excluded.
+    boilerplate-dense bucket can no longer go quadratic.
     Multi-table also recovers recall the single-table form lost (a true
     pair only needs to share a bucket in ≥1 table).
     """
@@ -513,29 +512,6 @@ def embedding_near_dup(
         pairs.withColumn("cosine", F.round(cos, 6))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
-    )
-
-
-def near_dup_dropped_buckets(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 10,
-    n_tables: int = 4,
-    seed: int = 42,
-    max_bucket: int = 2000,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> DataFrame:
-    """Observability companion to :func:`embedding_near_dup`: the
-    (table, bucket, size) rows the cap excluded — never silent
-    truncation; pipelines log/inspect this table.  Shares
-    :func:`_bucket_table` with the dedup operator so the reported
-    buckets always correspond to the dedup run's scheme."""
-    out = _bucket_table(df, dim, n_planes, n_tables, seed, id_col, emb_col)
-    return (
-        out.groupBy("table", "bucket")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket)
     )
 
 

@@ -1,54 +1,13 @@
-"""Bucketed-table layout for shuffle-free co-located joins.
+"""Z-order layout key: multi-column scan locality.
 
-At 100 TB the dominant recurring cost of the dedup/similarity/CEP
-operators is re-shuffling the same corpus on the same key for every
-join.  Writing the hot tables BUCKETED on that key (hash-clustered
-files + matching bucket counts) lets Catalyst drop the Exchange on both
-sides of an equi-join entirely — the join runs on co-located buckets.
-
-This module is the thin, explicit wrapper the pipelines use so the
-bucket spec (count + columns) is declared once per table and joins
-can assert "no shuffle" in plan tests.
+Interleaving the bits of several scaled columns gives one sort key
+under which rows close in ALL dimensions land close together, so a
+layout range-partitioned and sorted by it (the OPTIMIZE ZORDER BY
+equivalent on plain parquet) lets min/max stats prune range predicates
+on every dimension.  The registry's ``q_zorder_key`` builds the key.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols,
-    n_buckets: int = 32,
-    sort_cols=None,
-    mode: str = "overwrite",
-    path: str | None = None,
-) -> None:
-    """Persist ``df`` as a bucketed (and optionally sorted) table.
-
-    ``sort_cols`` additionally sorts within each bucket file — joins AND
-    window/orderBy stages over the bucket key skip their sort at read
-    time.  ``path`` pins the table location (external table).
-    """
-    bucket_cols = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        sort_cols = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
-        writer = writer.sortBy(*sort_cols)
-    if path:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table back (bucket metadata rides the catalog —
-    a plain ``spark.read.parquet`` of the files would lose it)."""
-    return spark.table(table)
-
-
-# ---------------------------------------------------------------------------
-# Z-order layout: multi-column scan locality
 
 from pyspark.sql import functions as F
 
@@ -83,22 +42,3 @@ def zorder_key(cols, bits: int = 16):
             bit = F.shiftright(c.cast("long"), b).bitwiseAND(F.lit(1))
             key = key.bitwiseOR(F.shiftleft(bit, b * k + i))
     return key
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zkey_col: str = "_zkey",
-    n_files: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` range-partitioned + sorted by its Z-order key: each
-    output file covers a disjoint key range, so parquet min/max stats
-    prune multi-dimensional range scans (the OPTIMIZE ZORDER BY
-    equivalent on plain parquet)."""
-    (
-        df.repartitionByRange(n_files, F.col(zkey_col))
-        .sortWithinPartitions(zkey_col)
-        .write.mode(mode)
-        .parquet(path)
-    )

@@ -13,13 +13,13 @@ The ``run`` path publishes through ``SinkSpec.kafka_bootstrap`` inside
 the exactly-once fan-out (:mod:`.sink`), which probes the classpath for
 the connector and fails with an actionable message when it is absent.
 The serialization path itself (:func:`envelope_to_kafka_records`) is
-pure DataFrame code and fully tested offline (round-trips through the
-source's JSON parser).
+pure DataFrame code and fully tested offline (round-trips through
+``from_json``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_TOPIC = "napalm-logs"  # reference transport/kafka.py:43
@@ -32,6 +32,16 @@ _PAYLOAD_COLS = (
     "yang_model", "os", "facility", "severity", "state", "state_tag",
     "conv_id", "turn_idx",
 )
+
+
+def kafka_available(spark: SparkSession) -> bool:
+    """True when the Kafka data-source provider is loadable in this JVM
+    (probed through Spark's classloader — see :mod:`..jvm`)."""
+    from ..jvm import jvm_class_available
+
+    return jvm_class_available(
+        spark, "org.apache.spark.sql.kafka010.KafkaSourceProvider"
+    )
 
 
 def envelope_to_kafka_records(

@@ -356,11 +356,3 @@ def run_near_dup_stream_once(
     elif not q.awaitTermination(timeout_s):
         q.stop()
         raise TimeoutError(f"near-dup stream did not drain within {timeout_s}s")
-
-
-def read_kept(spark, out_dir: str) -> DataFrame:
-    """Kept rows with ``_batch_id`` lineage — compaction-aware (the
-    output dir is a maintainable lakehouse table like the index)."""
-    from .maintenance import read_table
-
-    return read_table(spark, out_dir)

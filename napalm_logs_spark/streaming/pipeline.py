@@ -62,7 +62,6 @@ def build_stream(
     max_files_per_trigger: int | None = None,
     watermark: str = "30 seconds",
     dedup: bool = True,
-    repartition: int | None = None,
     source_format: str = "parquet",
 ):
     """Transcript source (:func:`transcript_stream`) → normalized (and
@@ -73,11 +72,6 @@ def build_stream(
         max_files_per_trigger=max_files_per_trigger,
         source_format=source_format,
     )
-    if repartition:
-        # parallelism of a file-stream micro-batch = its input splits; a
-        # micro-batch from few/large files would otherwise starve the
-        # normalize stage (only needed when the source layout is coarse)
-        stream = stream.repartition(repartition)
     env = normalize(stream, registry)
     if dedup:
         env = dedup_streaming(env, watermark=watermark)

@@ -124,8 +124,10 @@ def exactly_once_parquet_sink(sinks, order_cols=("conv_id", "turn_idx")):
                     out.orderBy(*order_cols).show(sink.console_rows, truncate=False)
                     continue
                 if sink.kafka_bootstrap:
-                    from ..sources.kafka import kafka_available
-                    from .kafka_sink import envelope_to_kafka_records
+                    from .kafka_sink import (
+                        envelope_to_kafka_records,
+                        kafka_available,
+                    )
 
                     if not kafka_available(out.sparkSession):
                         raise RuntimeError(

@@ -1,5 +1,5 @@
-"""CEP operators: up/down pairing, gauges, transitions, flaps,
-sessions, agent↔tool interval join."""
+"""CEP operators: up/down pairing, gauges, transitions, agent↔tool
+interval join, sequences, funnels and threshold alerts."""
 
 import datetime
 
@@ -8,10 +8,7 @@ from pyspark.sql import functions as F
 
 from napalm_logs_spark.operators.cep import (
     agent_tool_pairs,
-    event_counts,
-    flaps,
     last_state_gauge,
-    session_stats,
     state_events,
     transitions,
 )
@@ -77,37 +74,6 @@ def test_transitions_open_close(env):
     assert xe0 == [(0, "open"), (1, "closed"), (2, "open"), (3, "closed")]
 
 
-def test_flap_detection(env):
-    fl = flaps(transitions(state_events(env)), "60 seconds", "10 seconds", 3)
-    hits = fl.filter(F.col("entity") == "xe-0/0/0").collect()
-    assert hits and all(r.n_transitions >= 3 for r in hits)
-    assert fl.filter(F.col("entity") == "xe-1").count() == 0
-
-
-def test_event_counts(env):
-    c = {
-        (r.error): r.n
-        for r in event_counts(env, "3600 seconds", keys=("error",)).collect()
-    }
-    assert c["INTERFACE_DOWN"] == 3
-    assert c["INTERFACE_UP"] == 2
-
-
-def test_session_stats(spark):
-    rows = [
-        ("c1", 0, BASE), ("c1", 1, BASE + datetime.timedelta(seconds=30)),
-        ("c1", 2, BASE + datetime.timedelta(seconds=1000)),  # new session
-        ("c2", 0, BASE),
-    ]
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts timestamp")
-    out = session_stats(df, gap="300 seconds")
-    per_conv = {}
-    for r in out.collect():
-        per_conv.setdefault(r.conv_id, []).append(r.n_turns)
-    assert sorted(per_conv["c1"]) == [1, 2]
-    assert per_conv["c2"] == [1]
-
-
 def test_agent_tool_pairs_batch(spark):
     rows = [
         ("c1", 0, "agent", "do it", None, BASE),
@@ -145,28 +111,6 @@ def test_agent_tool_pairs_streaming_drops_late(spark, tmp_path):
     q.awaitTermination()
     got = spark.sql("select * from at_pairs").collect()
     assert {(r.agent_turn, r.tool_turn) for r in got} == {(0, 1)}
-
-
-def test_event_counts_streaming_complete_mode(spark, tmp_path, env):
-    """C3 in streaming mode: tumbling counters over a stream equal the
-    batch counters (complete output to a memory sink)."""
-    src = str(tmp_path / "counts_src")
-    env.write.parquet(src)
-    stream = spark.readStream.schema(env.schema).parquet(src)
-    counts = event_counts(
-        stream.withWatermark("ts", "10 minutes"), "3600 seconds", keys=("error",)
-    )
-    q = (
-        counts.writeStream.format("memory").queryName("c3_stream")
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = {r.error: r.n for r in spark.sql("select * from c3_stream").collect()}
-    exp = {
-        r.error: r.n
-        for r in event_counts(env, "3600 seconds", keys=("error",)).collect()
-    }
-    assert got == exp
 
 
 def test_pattern_sequence_ordered_within_horizon(spark):
@@ -312,6 +256,35 @@ def test_alarm_gauges_from_golden_fixtures(spark):
     assert set(got.values()) <= {0, 1}
     # an entity seen only in a SET case gauges 1
     assert got[("vmx01", "system_alarm", "FPC 0")] == 1
+
+
+def test_transitions_alarm_polarity(spark):
+    """Alarm families invert the up/down polarity: SYSTEM_ALARM (1)
+    opens the alert and SYSTEM_ALARM_CLEARED (0) closes it — real junos
+    fixture lines through normalize."""
+    import pandas as pd
+
+    from napalm_logs_spark.operators.normalize import normalize
+    from napalm_logs_spark.sources.transcripts import golden_cases, transcripts_df
+
+    by_err = {}
+    for c in golden_cases():
+        if c["os"] == "junos" and c["case"] == "default":
+            by_err.setdefault(c["error"], c["text"])
+    pdf = pd.DataFrame([
+        {"conv_id": "c1", "turn_idx": turn, "role": "agent", "text": by_err[err],
+         "tool": None, "ts": BASE + datetime.timedelta(seconds=sec)}
+        for turn, err, sec in ((0, "SYSTEM_ALARM", 0), (1, "SYSTEM_ALARM_CLEARED", 30))
+    ])
+    pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
+    tr = transitions(state_events(normalize(transcripts_df(spark, pdf))))
+    got = sorted(
+        (r.family, r.entity, r.state01, r.prev_state, r.status) for r in tr.collect()
+    )
+    assert got == [
+        ("system_alarm", "supply", 0, 1, "closed"),
+        ("system_alarm", "supply", 1, None, "open"),
+    ]
 
 
 def test_orphan_agent_turns_batch(spark):

@@ -253,9 +253,9 @@ def test_cli_neardup(spark, tmp_path):
         "neardup", "--source", src, "--out", out, "--index", idx,
         "--checkpoint", ckpt,
     ]) == 0
-    from napalm_logs_spark.streaming.neardup_stream import read_kept
+    from napalm_logs_spark.streaming.maintenance import read_table
 
-    kept = {r.vec_id for r in read_kept(spark, out).collect()}
+    kept = {r.vec_id for r in read_table(spark, out).collect()}
     assert kept == {0, 1, 2, 3, 4, 5}, kept  # 50 dropped (near-copy of 3)
     # the index is a compactable lakehouse table
     assert main(["compact", "--table", idx, "--upto", "0"]) == 0
@@ -406,7 +406,7 @@ def test_config_scalar_whitelist_and_abbreviated_flags():
 
     import pytest as _pytest
 
-    from napalm_logs_spark.config import _flag_given, build_sinks
+    from napalm_logs_spark.config import _flag_given, build_sinks, merge_config
 
     # a natural single-value YAML scalar becomes a one-element tuple
     [spec] = build_sinks([{"path": "/x", "whitelist": "INTERFACE_DOWN"}])
@@ -415,6 +415,18 @@ def test_config_scalar_whitelist_and_abbreviated_flags():
         build_sinks([{"path": "/x", "blacklist": None}])
     # argparse prefix abbreviations count as explicitly given — the
     # file must NOT override `--check /my/ckpt`
-    assert _flag_given(["--check", "/my/ckpt"], "checkpoint")
-    assert _flag_given(["--checkpoint=/c"], "checkpoint")
-    assert not _flag_given(["--source", "/s"], "checkpoint")
+    dests = ("checkpoint", "source", "source_format", "sink")
+    assert _flag_given(["--check", "/my/ckpt"], "checkpoint", dests)
+    assert _flag_given(["--checkpoint=/c"], "checkpoint", dests)
+    assert not _flag_given(["--source", "/s"], "checkpoint", dests)
+    # `--source` is a whole flag, not an abbreviation of --source-format:
+    # a config file's source_format must still apply
+    assert _flag_given(["--source", "/s"], "source", dests)
+    assert not _flag_given(["--source", "/s"], "source_format", dests)
+    assert _flag_given(["--source-f", "json"], "source_format", dests)
+    args = argparse.Namespace(source="/x", source_format="parquet", sink=None)
+    merge_config(
+        args, {"source": "/file", "source_format": "json"},
+        ["run", "--source", "/x"],
+    )
+    assert (args.source, args.source_format) == ("/x", "json")

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from napalm_logs_spark.operators.convstats import (
     US,
-    conversation_dup_groups,
     conversation_fingerprints,
     conversation_stats,
     role_transitions,
@@ -71,10 +70,6 @@ def test_fingerprints_and_dup_groups(tdf):
     assert fp["c2"] == fp["c3"] != fp["c1"]
     expect = hashlib.md5(f"dup text{US}dup reply".encode()).hexdigest()
     assert fp["c2"] == expect
-
-    dups = conversation_dup_groups(tdf).collect()
-    assert len(dups) == 1
-    assert dups[0]["n_convs"] == 2 and dups[0]["canonical"] == "c2"
 
 
 def test_fingerprint_max_turns_truncation(tdf):

@@ -11,10 +11,10 @@ from contextlib import redirect_stdout
 import pytest
 from pyspark.sql import functions as F
 
-from napalm_logs_spark.sources.kafka import kafka_available
 from napalm_logs_spark.streaming.kafka_sink import (
     DEFAULT_TOPIC,
     envelope_to_kafka_records,
+    kafka_available,
 )
 from napalm_logs_spark.streaming.sink import SinkSpec, exactly_once_parquet_sink
 

@@ -5,8 +5,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from napalm_logs_spark.streaming.maintenance import read_table
 from napalm_logs_spark.streaming.neardup_stream import (
-    read_kept,
     run_near_dup_stream_once,
 )
 
@@ -43,7 +43,7 @@ def test_cross_batch_and_in_batch_dedup(spark, dirs):
         spark, dirs["src"], dirs["out"], dirs["idx"], dirs["ckpt"],
         SCHEMA, DIM, threshold=0.95,
     )
-    kept1 = {r.vec_id for r in read_kept(spark, dirs["out"]).collect()}
+    kept1 = {r.vec_id for r in read_table(spark, dirs["out"]).collect()}
     assert kept1 == {0, 1, 2, 3, 4, 5}, kept1  # 50 dropped in-batch
 
     # batch 2: 100 = near-copy of batch-1's id 4 (cross-batch dup),
@@ -56,7 +56,7 @@ def test_cross_batch_and_in_batch_dedup(spark, dirs):
         spark, dirs["src"], dirs["out"], dirs["idx"], dirs["ckpt"],
         SCHEMA, DIM, threshold=0.95,
     )
-    out = read_kept(spark, dirs["out"])
+    out = read_table(spark, dirs["out"])
     kept = {r.vec_id for r in out.collect()}
     assert 100 not in kept, "cross-batch near-dup must be dropped"
     assert 101 in kept
@@ -72,7 +72,7 @@ def test_replayed_batch_is_idempotent(spark, dirs):
         SCHEMA, DIM, threshold=0.95,
     )
     first = sorted(
-        tuple(r) for r in read_kept(spark, dirs["out"]).select("vec_id").collect()
+        tuple(r) for r in read_table(spark, dirs["out"]).select("vec_id").collect()
     )
     # replay batch 0 by hand: same batch function, same batch id
     from napalm_logs_spark.streaming.neardup_stream import near_dup_filter_batch
@@ -80,7 +80,7 @@ def test_replayed_batch_is_idempotent(spark, dirs):
     bdf = spark.createDataFrame(_rows(range(4), base), SCHEMA)
     near_dup_filter_batch(dirs["out"], dirs["idx"], DIM, threshold=0.95)(bdf, 0)
     second = sorted(
-        tuple(r) for r in read_kept(spark, dirs["out"]).select("vec_id").collect()
+        tuple(r) for r in read_table(spark, dirs["out"]).select("vec_id").collect()
     )
     assert first == second, "replay must overwrite, not duplicate"
 
@@ -115,7 +115,7 @@ def test_first_batch_with_precreated_empty_index_dir(spark, dirs, tmp_path):
         spark, dirs["src"], dirs["out"], dirs["idx"], dirs["ckpt"],
         SCHEMA, DIM, threshold=0.95,
     )
-    kept = {r.vec_id for r in read_kept(spark, dirs["out"]).collect()}
+    kept = {r.vec_id for r in read_table(spark, dirs["out"]).collect()}
     assert kept == {0, 1, 2}
 
 
@@ -152,14 +152,14 @@ def test_index_compaction_between_drains(spark, dirs):
         spark, dirs["src"], dirs["out"], dirs["idx"], dirs["ckpt"],
         SCHEMA, DIM, threshold=0.95,
     )
-    kept = {r.vec_id for r in read_kept(spark, dirs["out"]).collect()}
+    kept = {r.vec_id for r in read_table(spark, dirs["out"]).collect()}
     assert 100 not in kept, "dup vs a compacted index slice must be dropped"
     assert 101 in kept
 
 
 def test_output_dir_compaction(spark, dirs):
     """The kept-rows output is a maintainable table too: compact it and
-    read_kept keeps returning every kept row with its lineage."""
+    read_table keeps returning every kept row with its lineage."""
     from napalm_logs_spark.streaming.maintenance import compact_sink
 
     base = _vecs(31, 4)
@@ -170,12 +170,12 @@ def test_output_dir_compaction(spark, dirs):
             SCHEMA, DIM, threshold=0.95,
         )
     before = sorted(
-        (r.vec_id, r._batch_id) for r in read_kept(spark, dirs["out"]).collect()
+        (r.vec_id, r._batch_id) for r in read_table(spark, dirs["out"]).collect()
     )
     stats = compact_sink(spark, dirs["out"])
     assert not stats["skipped"]
     after = sorted(
-        (r.vec_id, r._batch_id) for r in read_kept(spark, dirs["out"]).collect()
+        (r.vec_id, r._batch_id) for r in read_table(spark, dirs["out"]).collect()
     )
     assert after == before
 

@@ -1,18 +1,16 @@
 """Composite end-to-end: raw transcripts → normalize → state events →
-streaming entity FSM → open/close transitions landed exactly-once, with
-the flap scenario from FIXTURES.md §3a."""
+open/close transitions, with the flap scenario from FIXTURES.md §3a;
+JSON-lines ingest and resumed drains through the ``run`` pipeline."""
 
 import datetime
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from napalm_logs_spark.operators.cep import flaps, state_events, transitions
+from napalm_logs_spark.operators.cep import state_events, transitions
 from napalm_logs_spark.operators.normalize import normalize
 from napalm_logs_spark.profiles import load_registry
 from napalm_logs_spark.sources.transcripts import TRANSCRIPT_SCHEMA
-from napalm_logs_spark.streaming.stateful import entity_state_stream
 
 BASE = datetime.datetime(2017, 7, 20, 21, 45, 59)
 
@@ -50,41 +48,6 @@ def test_batch_cep_composite(spark, flap_transcripts):
     assert ("vmx01", "xe-0/0/0", 0, "open") in got
     assert ("vmx01", "xe-0/0/0", 1, "closed") in got
     assert ("vmx02", "xe-0/0/0", 0, "open") in got
-    fl = flaps(tr, "60 seconds", "10 seconds", 3).collect()
-    assert any(r.host == "vmx01" for r in fl)
-    assert not any(r.host == "vmx02" for r in fl)
-
-
-def test_streaming_cep_composite(spark, flap_transcripts, tmp_path):
-    registry = load_registry()
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    flap_transcripts.coalesce(1).write.parquet(src)
-
-    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(src)
-    env = normalize(stream, registry, include_raw=False, include_unknown=False)
-    ev = state_events(env)
-    fsm = entity_state_stream(ev)
-    q = (
-        fsm.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(out)
-    vmx01 = sorted(
-        (r.ts, r.status) for r in got.collect() if r.host == "vmx01"
-    )
-    assert [s for _, s in vmx01] == ["open", "closed", "open", "closed"]
-    # streaming FSM output equals the batch transitions operator
-    batch = transitions(state_events(normalize(
-        flap_transcripts, registry, include_raw=False, include_unknown=False
-    )))
-    assert got.count() == batch.count()
 
 
 def test_jsonl_source_end_to_end(spark, tmp_path):

@@ -99,50 +99,6 @@ def test_orphan_anti_join_plan(spark):
     assert "LeftAnti" in plan
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Co-located join: two tables bucketed on the join key with equal
-    bucket counts join WITHOUT any Exchange — the 100 TB answer to
-    re-shuffling the corpus for every self/dimension join."""
-    from pyspark.sql import functions as F
-
-    from napalm_logs_spark.sources.bucketed import read_table, write_bucketed
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bkt LOCATION '{tmp_path}/warehouse'")
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    try:
-        write_bucketed(docs, "bkt.docs_a", "doc_id", n_buckets=8, sort_cols="doc_id")
-        write_bucketed(
-            docs.select("doc_id", F.col("n_chars").alias("nc")),
-            "bkt.docs_b", "doc_id", n_buckets=8, sort_cols="doc_id",
-        )
-        a, b = read_table(spark, "bkt.docs_a"), read_table(spark, "bkt.docs_b")
-        # sf0.001 is broadcast-sized; force the shuffle-join path the
-        # bucketing exists to optimize (at real scale neither side
-        # broadcasts)
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = a.join(b, "doc_id")
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan, plan
-            assert "SortMergeJoin" in plan
-            assert joined.count() == docs.count()
-
-            # control: the same join over non-bucketed reads DOES shuffle
-            plain = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-            plan2 = (
-                plain.join(plain.select("doc_id", "n_chars"), "doc_id")
-                ._jdf.queryExecution().executedPlan().toString()
-            )
-            assert "Exchange" in plan2
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt.docs_a")
-        spark.sql("DROP TABLE IF EXISTS bkt.docs_b")
-        spark.sql("DROP DATABASE IF EXISTS bkt")
-
-
 def test_decontaminate_broadcasts_benchmark_side(spark):
     plan = _plan(spark, "d_decontaminate")
     assert "BroadcastHashJoin" in plan
@@ -168,13 +124,13 @@ def test_repetition_no_exchange(spark):
 
 
 def test_zordered_files_have_disjoint_key_ranges(spark, tmp_path):
-    """write_zordered must produce files whose zkey ranges don't
-    overlap — the property parquet min/max pruning relies on."""
+    """A layout range-partitioned and sorted by the Z-order key must
+    produce files whose zkey ranges don't overlap — the property parquet
+    min/max pruning relies on."""
     import pyspark.sql.functions as F
 
     from napalm_logs_spark.sources.bucketed import (
         minmax_scaled_int,
-        write_zordered,
         zorder_key,
     )
 
@@ -192,7 +148,12 @@ def test_zordered_files_have_disjoint_key_ranges(spark, tmp_path):
         ).alias("_zkey"),
     )
     out = str(tmp_path / "z")
-    write_zordered(df, out, n_files=8)
+    (
+        df.repartitionByRange(8, F.col("_zkey"))
+        .sortWithinPartitions("_zkey")
+        .write.mode("overwrite")
+        .parquet(out)
+    )
     back = spark.read.parquet(out)
     ranges = sorted(
         (r["mn"], r["mx"])

@@ -3,6 +3,14 @@ product (``python -m napalm_logs_spark``) or the driver registry
 (``__spark_entry__``).  Code that only its own tests import is either
 wired in or deleted.
 
+Every public top-level function or class in the package must also be
+referenced, outside its own body, by a file that is not a test: the
+package, ``__spark_entry__.py``, ``bench.py``, ``tools/`` or
+``perfbench/``.  A reference is a name, an attribute, an import alias,
+or a string constant equal to the name (the registry and the compat
+shims look names up by string).  The check matches by name only, so a
+function that shares its name with a reached one passes unseen.
+
 Every script under ``tools/`` must be imported by a test, perfbench or
 the package, or be named in README.md, so one-off scripts do not pile
 up.
@@ -20,10 +28,17 @@ PKG = "napalm_logs_spark"
 ROOTS = (f"{PKG}.__main__", "__spark_entry__")
 
 # Modules allowed to be unreached, each with the reason it stays.
-ALLOWED_UNREACHED = {
-    f"{PKG}.streaming.stateful": (
-        "entity_state_stream is the streaming up/down correlation; it "
-        "waits to be wired into the run path"
+ALLOWED_UNREACHED = {}
+
+# Public package functions and classes allowed to be unreached,
+# "module:name" -> the reason each stays.
+ALLOWED_UNREACHED_FUNCTIONS = {
+    f"{PKG}.operators.cep:transitions": (
+        "the batch up/down transitions that streaming correlation on the "
+        "run path builds on (ROADMAP item 2)"
+    ),
+    f"{PKG}.streaming.prometheus:write_textfile": (
+        "the Prometheus textfile the run path is to write (ROADMAP item 4)"
     ),
 }
 
@@ -152,4 +167,64 @@ def test_allowed_tool_exceptions_are_still_needed():
     stale = sorted(
         t for t in ALLOWED_UNREACHED_TOOLS if t in reached or t not in tools
     )
+    assert not stale, stale
+
+
+def _product_files() -> list:
+    """Every non-test source file that can reach package code."""
+    paths = [os.path.join(REPO, f) for f in ("__spark_entry__.py", "bench.py")]
+    for top in (PKG, "tools", "perfbench"):
+        for dirpath, _dirs, files in os.walk(os.path.join(REPO, top)):
+            paths += [
+                os.path.join(dirpath, f) for f in files
+                if f.endswith(".py")
+                and not (top == "perfbench" and f.startswith("test_"))
+            ]
+    return paths
+
+
+def _referenced(node) -> set:
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rpartition(".")[2])
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            out.add(n.value)
+    return out
+
+
+def _unreached_functions() -> set:
+    """``module:name`` of every public top-level function or class in
+    the package that no non-test file references outside its own body."""
+    mod_of = {path: mod for mod, path in _package_modules().items()}
+    defined, refs = set(), {}
+    for path in _product_files():
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for top in tree.body:
+            own = None
+            if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                own = top.name
+                if path in mod_of and not own.startswith("_"):
+                    defined.add((path, own))
+            for name in _referenced(top):
+                refs.setdefault(name, set()).add((path, own))
+    return {
+        f"{mod_of[path]}:{name}"
+        for path, name in defined
+        if refs.get(name, set()) <= {(path, name)}
+    }
+
+
+def test_every_package_function_is_reached():
+    unreached = sorted(_unreached_functions() - set(ALLOWED_UNREACHED_FUNCTIONS))
+    assert not unreached, f"functions only tests reach: {unreached}"
+
+
+def test_allowed_function_exceptions_are_still_needed():
+    stale = sorted(set(ALLOWED_UNREACHED_FUNCTIONS) - _unreached_functions())
     assert not stale, stale

@@ -176,14 +176,10 @@ def test_ann_plan_stays_bounded_at_production_scale(spark):
 
 def test_near_dup_bucket_cap_and_observability(spark):
     """A dense bucket (many identical vectors) must be excluded by the
-    cap, with the exclusion visible via near_dup_dropped_buckets; the
-    multi-table form still finds pairs that fit under the cap."""
+    cap; the multi-table form still finds pairs that fit under the cap."""
     import numpy as np
 
-    from napalm_logs_spark.operators.similarity import (
-        embedding_near_dup,
-        near_dup_dropped_buckets,
-    )
+    from napalm_logs_spark.operators.similarity import embedding_near_dup
 
     rng = np.random.RandomState(11)
     dense = rng.normal(size=16).astype("float32")
@@ -195,10 +191,6 @@ def test_near_dup_bucket_cap_and_observability(spark):
 
     # cap smaller than the dense cluster: its bucket is dropped in every
     # table -> pairs inside it are not generated
-    dropped = near_dup_dropped_buckets(emb, dim=16, n_tables=2, max_bucket=10)
-    assert dropped.count() >= 1
-    assert dropped.agg({"bucket_size": "max"}).collect()[0][0] >= 40
-
     capped = embedding_near_dup(emb, dim=16, threshold=0.999, n_tables=2, max_bucket=10)
     uncapped = embedding_near_dup(emb, dim=16, threshold=0.999, n_tables=2, max_bucket=10**6)
     n_capped, n_uncapped = capped.count(), uncapped.count()

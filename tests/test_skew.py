@@ -1,10 +1,6 @@
-"""Skew handling: a hot conversation must spread across partitions in
-the stateless stages (salted repartition), and the normalize stage must
-produce identical results regardless of partitioning."""
+"""Skew handling: the normalize stage must produce identical results
+regardless of partitioning, a hot conversation included."""
 
-from pyspark.sql import functions as F
-
-from napalm_logs_spark.operators.cep import salted_repartition
 from napalm_logs_spark.operators.normalize import normalize
 from napalm_logs_spark.profiles import load_registry
 from napalm_logs_spark.sources.transcripts import (
@@ -13,35 +9,13 @@ from napalm_logs_spark.sources.transcripts import (
 )
 
 
-def test_hot_conversation_spreads(spark):
-    pdf = synth_transcripts_pandas(
-        n_convs=20, turns_per_conv=50, seed=7, hot_conv_fraction=0.5
-    )
-    df = transcripts_df(spark, pdf)
-    salted = salted_repartition(df, "conv_id", salts=16, num_partitions=16)
-    parts = (
-        salted.filter(F.col("conv_id") == "conv-hot")
-        .withColumn("pid", F.spark_partition_id())
-        .select("pid").distinct().count()
-    )
-    assert parts >= 4, f"hot conv landed in only {parts} partitions"
-
-    plain = df.repartition(16, "conv_id")
-    parts_plain = (
-        plain.filter(F.col("conv_id") == "conv-hot")
-        .withColumn("pid", F.spark_partition_id())
-        .select("pid").distinct().count()
-    )
-    assert parts_plain == 1  # this is the serialization salting defuses
-
-
 def test_normalize_partitioning_invariant(spark):
     registry = load_registry()
     pdf = synth_transcripts_pandas(n_convs=10, turns_per_conv=30, seed=3,
                                    hot_conv_fraction=0.5)
     df = transcripts_df(spark, pdf)
     a = (
-        normalize(salted_repartition(df, salts=8), registry)
+        normalize(df.repartition(8), registry)
         .orderBy("conv_id", "turn_idx", "os")
         .select("conv_id", "turn_idx", "os", "error", "yang_message")
         .collect()
