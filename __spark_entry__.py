@@ -497,7 +497,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # and value range predicates at once (files range-partitioned
         # and sorted by it let parquet min/max stats prune either
         # dimension).  Pure JVM bit interleave, oracled bit-for-bit.
-        from napalm_logs_spark.sources.bucketed import (
+        from napalm_logs_spark.sources.zorder import (
             minmax_scaled_int,
             zorder_key,
         )
@@ -927,7 +927,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # built per group, never collected to the driver) and forward-
         # filled with last-known revenue (last IGNORE NULLS over a rows
         # frame).  The spine join and the window share the nation
-        # partitioning, so densify+fill is one shuffle after the agg
+        # partitioning, so spine + fill is one shuffle after the agg
         daily = (
             _t(spark, sf, "orders")
             .join(

@@ -22,8 +22,8 @@ profiles/    profile corpus loading + template→regex compilation
 operators/   normalize (the vectorized hot path), dedup, CEP,
              text-analysis / dedup / similarity ops for training-data
              pipelines
-sources/     deterministic synthetic transcript generation + golden
-             fixture corpus loading, Z-order layout keys
+sources/     golden fixture corpus loading (transcripts.py), Z-order
+             layout keys (zorder.py)
 streaming/   readStream wiring, watermarks, exactly-once sink
 """
 

@@ -55,11 +55,11 @@ END = "</w>"  # end-of-word sentinel (Sennrich): merges never cross words
 WS = r"[ \t\n\r\f\x0B]+"
 
 
-def _word_histogram(df: DataFrame, text_col: str, lowercase: bool) -> DataFrame:
-    """(word, count) histogram — the one corpus-sized shuffle."""
-    txt = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
+def _word_histogram(df: DataFrame) -> DataFrame:
+    """(word, count) histogram of lowercased ``text`` — the one
+    corpus-sized shuffle."""
     return (
-        df.select(F.explode(F.split(txt, WS)).alias("word"))
+        df.select(F.explode(F.split(F.lower(F.col("text")), WS)).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("count"))
@@ -100,25 +100,15 @@ def _adjacent_pairs(col):
     ).otherwise(F.lit(None).cast(pair_t)).alias("pairs")
 
 
-def bpe_train(
-    df: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    lowercase: bool = True,
-    min_freq: int = 2,
-    iter_seconds: list | None = None,
-) -> DataFrame:
+def bpe_train(df: DataFrame, n_merges: int) -> DataFrame:
     """Learn ``n_merges`` BPE merge rules from the corpus.
 
     Returns a DataFrame ``(merge_rank int, left string, right string,
     pair_count long)`` ordered by rank — the tokenizer's merge table.
-    Stops early when the best remaining pair's count < ``min_freq``.
-    ``iter_seconds``, when given a list, receives each iteration's wall
-    time — the scale probe asserts iteration cost stays flat.
+    Stops early when the best remaining pair's count < 2.
     """
-    import time
     spark = df.sparkSession
-    hist = _symbolize(_word_histogram(df, text_col, lowercase))
+    hist = _symbolize(_word_histogram(df))
     hist = hist.localCheckpoint(eager=True)  # corpus scanned exactly once
 
     def _apply_merge(left: str, right: str):
@@ -146,7 +136,6 @@ def bpe_train(
 
     rules = []
     for rank in range(1, n_merges + 1):
-        it0 = time.time()
         pair_counts = (
             hist.select(F.explode(_adjacent_pairs(F.col("syms"))).alias("pair"),
                         "count")
@@ -156,7 +145,7 @@ def bpe_train(
         # deterministic argmax: count desc, then struct asc — struct
         # ordering is field-by-field, i.e. (left, right) ascending
         top = pair_counts.orderBy(F.desc("n"), F.asc("pair")).limit(1).collect()
-        if not top or top[0]["n"] < min_freq:
+        if not top or top[0]["n"] < 2:
             break
         left, right = top[0]["pair"]["l"], top[0]["pair"]["r"]
         n = int(top[0]["n"])
@@ -178,8 +167,6 @@ def bpe_train(
             hist = hist.cache()
             hist.count()
         old.unpersist()
-        if iter_seconds is not None:
-            iter_seconds.append(time.time() - it0)
     return spark.createDataFrame(
         rules, "merge_rank int, left string, right string, pair_count long"
     )
@@ -188,9 +175,6 @@ def bpe_train(
 def bpe_encode(
     df: DataFrame,
     merges: DataFrame | list,
-    text_col: str = "text",
-    lowercase: bool = True,
-    out_col: str = "bpe_tokens",
 ) -> DataFrame:
     """Apply a learned merge table: ``text`` → subword token array.
 
@@ -226,7 +210,7 @@ def bpe_encode(
 
         def enc(text):
             out = []
-            for w in re.split(WS, text.lower() if lowercase else text):
+            for w in re.split(WS, text.lower()):
                 if not w:
                     continue
                 if w not in cache:
@@ -236,4 +220,4 @@ def bpe_encode(
 
         return s.map(enc)
 
-    return df.withColumn(out_col, encode_udf(F.col(text_col)))
+    return df.withColumn("bpe_tokens", encode_udf(F.col("text")))

@@ -19,7 +19,7 @@ Streaming variants reuse the same column expressions with watermarks.
 
 from __future__ import annotations
 
-from typing import Mapping, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -63,7 +63,7 @@ def _status_col(state_col, family_col):
     return F.when(problem, F.lit("open")).otherwise(F.lit("closed"))
 
 
-def state_events(env: DataFrame, pairs: Mapping = None) -> DataFrame:
+def state_events(env: DataFrame) -> DataFrame:
     """Envelope rows → state-change events ``(host, family, entity,
     state01, ts …)`` for the paired up/down errors.
 
@@ -71,10 +71,9 @@ def state_events(env: DataFrame, pairs: Mapping = None) -> DataFrame:
     event stream).  Errors carrying an explicit profile-level ``state``
     column (M9) override the pair-derived value.
     """
-    pairs = pairs or UP_DOWN_PAIRS
     spark = env.sparkSession
     pair_rows = [
-        (error, family, state) for error, (family, state) in pairs.items()
+        (error, family, state) for error, (family, state) in UP_DOWN_PAIRS.items()
     ]
     pair_df = spark.createDataFrame(
         pair_rows, "error string, family string, pair_state int"
@@ -202,10 +201,7 @@ def pattern_sequence(
     steps: Sequence,
     within_seconds: int = 60,
     key: str = "conv_id",
-    ts_col: str = "ts",
     idx_col: str = "turn_idx",
-    streaming: bool = False,
-    watermark: str = "2 minutes",
 ) -> DataFrame:
     """MATCH_RECOGNIZE-style ordered-sequence detection: one match row
     per combination of events (e1 < e2 < ... < eK by event order within
@@ -216,72 +212,45 @@ def pattern_sequence(
     Relational plan: filter each step (pushed to the scan), then chain
     K-1 interval joins on ``key`` — each join co-partitions on the key,
     so at scale this is K-1 hash-shuffles of *pre-filtered* (small)
-    step streams, never of the raw stream.  ``streaming=True`` adds a
-    watermark to every step stream and the identical chain runs as
-    K-1 stream-stream interval joins — Spark bounds each join's state
-    to ``within_seconds`` + the watermark delay.
+    step streams, never of the raw stream.
 
     Output: key, step_i ts/turn for each step, total span seconds.
     """
     assert len(steps) >= 2
-    parts = []
-    for i, pred in enumerate(steps):
-        step = df.filter(pred).select(
+    parts = [
+        df.filter(pred).select(
             F.col(key).alias(f"k{i}"),
-            F.col(ts_col).alias(f"ts{i}"),
+            F.col("ts").alias(f"ts{i}"),
             F.col(idx_col).alias(f"turn{i}"),
         )
-        if streaming:
-            step = step.withWatermark(f"ts{i}", watermark)
-        parts.append(step)
+        for i, pred in enumerate(steps)
+    ]
     out = parts[0]
     horizon = F.expr(f"INTERVAL {within_seconds} SECONDS")
     for i in range(1, len(parts)):
-        # batch bounds every step against ts0 (tightest pruning);
-        # streaming bounds per hop — a stream-stream join may only
-        # reference ONE event-time column per side, and per-hop bounds
-        # are equivalent after the final global span filter because the
-        # chain forces ts0 <= ts1 <= ... <= tsK
-        anchor = f"ts{i-1}" if streaming else "ts0"
+        # every step is bounded against ts0 (tightest pruning)
         out = out.join(
             parts[i],
             (F.col(f"k{i-1}") == F.col(f"k{i}"))
             & (F.col(f"turn{i}") > F.col(f"turn{i-1}"))
             & (F.col(f"ts{i}") >= F.col(f"ts{i-1}"))
-            & (F.col(f"ts{i}") <= F.col(anchor) + horizon),
+            & (F.col(f"ts{i}") <= F.col("ts0") + horizon),
         )
-        if streaming and i < len(parts) - 1:
-            # demote all but the newest event-time column: re-aliasing
-            # through an expression drops the watermark tag, so the next
-            # hop sees exactly one event time per side
-            keep = []
-            for j in range(i + 1):
-                for c, demote in ((f"ts{j}", j != i), (f"turn{j}", False)):
-                    keep.append(
-                        (F.col(c) + F.expr("INTERVAL 0 SECONDS")).alias(c)
-                        if demote else F.col(c)
-                    )
-            out = out.select(F.col(f"k{i}"), *keep)
     last = len(parts) - 1
     span = F.unix_timestamp(F.col(f"ts{last}")) - F.unix_timestamp(F.col("ts0"))
     cols = [F.col(f"k{last}").alias(key)]
     for i in range(len(parts)):
         cols += [F.col(f"ts{i}"), F.col(f"turn{i}")]
-    out = out.select(*cols, span.alias("span_seconds"))
-    if streaming:
-        out = out.filter(F.col("span_seconds") <= within_seconds)
-    return out
+    return out.select(*cols, span.alias("span_seconds"))
 
 
 def hysteresis_alerts(
     events: DataFrame,
     key: str = "user_id",
-    ts_col: str = "ts",
     window_seconds: int = 3600,
     hi: int = 3,
     lo: int = 1,
     predicate=None,
-    densify: bool = True,
 ) -> DataFrame:
     """Threshold alerting with hysteresis over tumbling-window rates:
     the alert latches ON when a window's event count reaches ``hi`` and
@@ -295,24 +264,20 @@ def hysteresis_alerts(
     then a per-key running ``last(mark, ignorenulls)`` ordered by
     window — windows between the thresholds inherit the latched state.
 
-    ``densify=True`` (default) fills the gaps first: every key gets one
-    row per window between its first and last observed window, with
-    ``n = 0`` for silent windows — so a latched alert RELEASES across a
-    silent period (0 < lo) instead of carrying the stale latch into the
-    next active window.  Cost is one per-key min/max aggregate plus a
-    ``sequence``/``explode`` spine join; the spine is bounded by
-    (key's observed time span / window_seconds) rows per key — the
-    semantically required output size, not a blow-up.  ``densify=False``
-    restores the sparse form (release only on observed-but-quiet
-    windows) when the caller owns gap semantics.
+    The gaps are filled first: every key gets one row per window
+    between its first and last observed window, with ``n = 0`` for
+    silent windows — so a latched alert RELEASES across a silent period
+    (0 < lo) instead of carrying the stale latch into the next active
+    window.  Cost is one per-key min/max aggregate plus a
+    ``sequence``/``explode`` spine join; the spine is bounded by (key's
+    observed time span / window_seconds) rows per key — the
+    semantically required output size, not a blow-up.
 
     Emits one row per (key, window) with the count and the alert state.
     """
     from pyspark.sql import functions as F
 
-    counts = _tumbling_counts(
-        events, key, ts_col, window_seconds, predicate, densify
-    )
+    counts = _tumbling_counts(events, key, window_seconds, predicate)
     mark = (
         F.when(F.col("n") >= hi, F.lit(1))
         .when(F.col("n") < lo, F.lit(0))
@@ -332,50 +297,41 @@ def hysteresis_alerts(
 
 
 def _tumbling_counts(
-    events: DataFrame,
-    key: str,
-    ts_col: str,
-    window_seconds: int,
-    predicate,
-    densify: bool,
+    events: DataFrame, key: str, window_seconds: int, predicate
 ) -> DataFrame:
-    """(key, win_start, n) tumbling-window counts; ``densify`` fills
-    every window between a key's first and last observed window with
+    """(key, win_start, n) tumbling-window counts with every window
+    between a key's first and last observed window filled with
     ``n = 0`` (sequence/explode spine — bounded by the key's time span
     over the window size, the semantically required output).  Shared by
     :func:`hysteresis_alerts` and :func:`rate_anomaly`."""
     ev = events.filter(predicate) if predicate is not None else events
-    win = (F.floor(F.unix_timestamp(F.col(ts_col)) / window_seconds)
+    win = (F.floor(F.unix_timestamp(F.col("ts")) / window_seconds)
            * window_seconds).cast("long")
     counts = ev.groupBy(F.col(key), win.alias("win_start")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    if densify:
-        spine = (
-            counts.groupBy(key)
-            .agg(F.min("win_start").alias("_lo"), F.max("win_start").alias("_hi"))
-            .select(
-                key,
-                F.explode(
-                    F.sequence("_lo", "_hi", F.lit(window_seconds).cast("long"))
-                ).alias("win_start"),
-            )
+    spine = (
+        counts.groupBy(key)
+        .agg(F.min("win_start").alias("_lo"), F.max("win_start").alias("_hi"))
+        .select(
+            key,
+            F.explode(
+                F.sequence("_lo", "_hi", F.lit(window_seconds).cast("long"))
+            ).alias("win_start"),
         )
-        counts = spine.join(counts, [key, "win_start"], "left").withColumn(
-            "n", F.coalesce(F.col("n"), F.lit(0)).cast("long")
-        )
-    return counts
+    )
+    return spine.join(counts, [key, "win_start"], "left").withColumn(
+        "n", F.coalesce(F.col("n"), F.lit(0)).cast("long")
+    )
 
 
 def rate_anomaly(
     events: DataFrame,
     key: str = "user_id",
-    ts_col: str = "ts",
     window_seconds: int = 86400,
     baseline: int = 7,
     min_baseline: int = 3,
     z_hi: float = 2.0,
-    predicate=None,
 ) -> DataFrame:
     """Per-key event-rate anomaly detection: flag a tumbling window
     whose count is ``z_hi`` sample standard deviations above the mean
@@ -414,9 +370,7 @@ def rate_anomaly(
     AND 1 PRECEDING`` over the dense spine, so rows = windows and the
     state per key is O(baseline).
     """
-    counts = _tumbling_counts(
-        events, key, ts_col, window_seconds, predicate, densify=True
-    )
+    counts = _tumbling_counts(events, key, window_seconds, None)
     wb = (
         Window.partitionBy(key)
         .orderBy("win_start")
@@ -473,7 +427,6 @@ def windowed_funnel(
     steps: Sequence,
     window_seconds: int = 3600,
     key: str = "conv_id",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Per-key windowed funnel (C16): the deepest step each key reaches
     under earliest-anchor greedy matching — ClickHouse-``windowFunnel``
@@ -505,7 +458,7 @@ def windowed_funnel(
     if len(steps) < 2:
         raise ValueError("a funnel needs at least 2 steps")
     # TIMESTAMP_NTZ-safe: cast through TIMESTAMP (UTC session) first
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     arrs = [
         F.sort_array(
             F.collect_list(F.when(pred, us))

@@ -87,9 +87,6 @@ def softmax_train(
     k: int,
     iters: int = 20,
     lr: float = 5.0,
-    l2: float = 0.0,
-    emb_col: str = "embedding",
-    label_col: str = "label",
 ) -> np.ndarray:
     """Train softmax regression; returns the k x (dim+1) weight matrix
     (last column is the bias).  ``W`` starts at zeros, so the run is
@@ -99,21 +96,21 @@ def softmax_train(
     fixed-point partial-gradient row per Arrow batch, reduce with
     ``posexplode -> groupBy(pos).sum`` (map-side combined), collect the
     ``k*(dim+1)+1``-row total, update ``W`` on the driver in float64:
-    ``W -= lr * (G/(2^20 * n) + l2 * W)``.
+    ``W -= lr * G/(2^20 * n)``.
     """
     base = widen_if_narrow_scan(
-        df.select(emb_col, label_col)
-        .filter(F.col(emb_col).isNotNull() & F.col(label_col).isNotNull())
+        df.select("embedding", "label")
+        .filter(F.col("embedding").isNotNull() & F.col("label").isNotNull())
     ).persist()
     try:
-        first = base.select(emb_col).first()
+        first = base.select("embedding").first()
         if first is None:
             raise ValueError(
                 "softmax_train: no trainable rows "
                 "(empty input, or every embedding/label is null)"
             )
         dim = len(first[0])
-        mn, mx = base.agg(F.min(label_col), F.max(label_col)).first()
+        mn, mx = base.agg(F.min("label"), F.max("label")).first()
         if mn < 0 or mx >= k:
             raise ValueError(
                 f"softmax_train: labels must lie in [0, {k}); "
@@ -131,8 +128,8 @@ def softmax_train(
                     out = []
                     for lo in range(0, len(pdf), _CHUNK):
                         chunk = pdf.iloc[lo : lo + _CHUNK]
-                        M = _embs_matrix(chunk[emb_col].to_numpy())
-                        y = chunk[label_col].to_numpy().astype(np.int64)
+                        M = _embs_matrix(chunk["embedding"].to_numpy())
+                        y = chunk["label"].to_numpy().astype(np.int64)
                         out.append(_grad_partial(M, y, _bw.value))
                     if out:
                         yield pd.DataFrame(
@@ -156,7 +153,7 @@ def softmax_train(
             if n == 0:
                 break
             G = total[:-1].reshape(k, dim + 1).astype(np.float64)
-            W = W - lr * ((G / GRAD_QUANT) / n + l2 * W)
+            W = W - lr * ((G / GRAD_QUANT) / n)
     finally:
         base.unpersist()
     return W
@@ -165,8 +162,6 @@ def softmax_train(
 def softmax_predict(
     df: DataFrame,
     W: np.ndarray,
-    emb_col: str = "embedding",
-    out_col: str = "pred",
 ) -> DataFrame:
     """Score every row with the trained weights: ``argmax(Xb @ W.T)``,
     ties to the lowest class (numpy argmax takes the first max).  The
@@ -191,7 +186,7 @@ def softmax_predict(
             )
         return out
 
-    return df.withColumn(out_col, _pred(F.col(emb_col)))
+    return df.withColumn("pred", _pred(F.col("embedding")))
 
 
 def classifier_filter(
@@ -199,10 +194,6 @@ def classifier_filter(
     k: int = 10,
     iters: int = 20,
     lr: float = 5.0,
-    l2: float = 0.0,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Train-then-score composition -> ``(id, label, pred, correct)``.
 
@@ -210,13 +201,10 @@ def classifier_filter(
     predicted class is in its allow-set; emitting the prediction (not
     the verdict) keeps the operator policy-free.
     """
-    W = softmax_train(
-        df, k=k, iters=iters, lr=lr, l2=l2,
-        emb_col=emb_col, label_col=label_col,
-    )
-    return softmax_predict(df, W, emb_col=emb_col).select(
-        F.col(id_col),
-        F.col(label_col).cast("int").alias("label"),
+    W = softmax_train(df, k=k, iters=iters, lr=lr)
+    return softmax_predict(df, W).select(
+        F.col("vec_id"),
+        F.col("label").cast("int").alias("label"),
         F.col("pred"),
-        (F.col("pred") == F.col(label_col)).cast("int").alias("correct"),
+        (F.col("pred") == F.col("label")).cast("int").alias("correct"),
     )

@@ -287,8 +287,6 @@ REFUSAL_PATTERNS = (
 
 def refusal_gate(
     tdf: DataFrame,
-    patterns: tuple[str, ...] = REFUSAL_PATTERNS,
-    max_refusal_pct_fp: int = 5000,
 ) -> DataFrame:
     """Per-conversation refusal/deflection screen over agent turns.
 
@@ -300,12 +298,12 @@ def refusal_gate(
     gate as one distributed pass.
 
     A turn refuses when its lowercased text contains ANY of
-    ``patterns`` (literal substrings — portable to any engine's
+    ``REFUSAL_PATTERNS`` (literal substrings — portable to any engine's
     ``contains``/``LIKE``, no regex dialect risk).  Output per
     conversation: ``n_agent`` turns, ``n_refusals``, the fixed-point
     refusal percentage ``refusal_pct_fp`` (basis points, integer —
     engine-exact like the other convstats gauges), and the ``keep``
-    verdict: refusal share at most ``max_refusal_pct_fp`` bp.
+    verdict: refusal share at most 5000 bp (50%).
     Conversations with no agent turns have NULL pct and keep = true
     (nothing to screen).
 
@@ -315,7 +313,7 @@ def refusal_gate(
     """
     low = F.lower(F.col("text"))
     refused = F.lit(False)
-    for p in patterns:
+    for p in REFUSAL_PATTERNS:
         refused = refused | F.contains(low, F.lit(p))
     is_agent = (F.col("role") == "agent").cast("long")
     out = tdf.groupBy("conv_id").agg(
@@ -335,7 +333,7 @@ def refusal_gate(
         "n_agent",
         "n_refusals",
         pct.alias("refusal_pct_fp"),
-        F.coalesce(pct <= max_refusal_pct_fp, F.lit(True)).alias("keep"),
+        F.coalesce(pct <= 5000, F.lit(True)).alias("keep"),
     )
 
 
@@ -369,7 +367,10 @@ def turn_latency_stats(tdf: DataFrame) -> DataFrame:
     )
 
 
-def prefix_sharing(tdf: DataFrame, *, max_turns: int = 64) -> DataFrame:
+PREFIX_MAX_TURNS = 64
+
+
+def prefix_sharing(tdf: DataFrame) -> DataFrame:
     """Prefix-trie sharing statistics per rollout group.
 
     When a sampler draws N rollouts from one prompt (Best-of-N, GRPO
@@ -385,7 +386,7 @@ def prefix_sharing(tdf: DataFrame, *, max_turns: int = 64) -> DataFrame:
     every member enjoys).
 
     Mechanics: each conversation's ordered turn texts (capped at
-    ``max_turns``, the conversation_fingerprints reducer-memory
+    ``PREFIX_MAX_TURNS``, the conversation_fingerprints reducer-memory
     guard) expand to one node per depth ``d`` with
     ``pf = md5(concat_ws(US, texts[1..d]))`` — the running-prefix
     fingerprint, replayable in ANSI SQL as a windowed
@@ -404,10 +405,10 @@ def prefix_sharing(tdf: DataFrame, *, max_turns: int = 64) -> DataFrame:
       is its own turn count and its ``shared_chars`` is 0).
 
     Scale: the conv_id collect is the fingerprints aggregate (state
-    bounded by ``max_turns``); nodes explode to at most ``turns``
+    bounded by ``PREFIX_MAX_TURNS``); nodes explode to at most ``turns``
     rows and every later aggregate only shrinks them.  The per-depth
     prefix concat is O(T²) characters per conversation — bounded by
-    ``max_turns``² and chosen deliberately: it makes the fingerprint
+    ``PREFIX_MAX_TURNS``² and chosen deliberately: it makes the fingerprint
     an exact ANSI replay (the alternative, an O(T) chained hash,
     needs recursion no portable oracle has).  Group skew is the
     sampler's N (bounded); the hot key is the prompt count, which is
@@ -419,7 +420,7 @@ def prefix_sharing(tdf: DataFrame, *, max_turns: int = 64) -> DataFrame:
         .agg(turns.alias("ts"))
         .select(
             "conv_id",
-            F.transform(F.slice("ts", 1, max_turns), lambda s: s["text"]).alias(
+            F.transform(F.slice("ts", 1, PREFIX_MAX_TURNS), lambda s: s["text"]).alias(
                 "texts"
             ),
         )
@@ -476,9 +477,7 @@ def prefix_sharing(tdf: DataFrame, *, max_turns: int = 64) -> DataFrame:
     )
 
 
-def boilerplate_turns(
-    tdf: DataFrame, *, min_df: int = 3, normalize: bool = True
-) -> DataFrame:
+def boilerplate_turns(tdf: DataFrame, *, min_df: int = 3) -> DataFrame:
     """Corpus-level boilerplate-turn detection (turn-level segment dedup).
 
     Assistant corpora are full of turns that appear verbatim in
@@ -502,9 +501,7 @@ def boilerplate_turns(
     ``is_boilerplate``; filter downstream with
     ``~is_boilerplate | role != 'agent'`` or similar policy.
     """
-    key = F.col("text")
-    if normalize:
-        key = F.lower(F.trim(F.regexp_replace(key, r"\s+", " ")))
+    key = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
     # NULL text would make md5(key) NULL and the inner join back on
     # _key would silently drop the row (ADVICE r3) — coalesce to a
     # sentinel so row-preservation holds; NULL turns bucket together,

@@ -47,13 +47,12 @@ def dedup_gap_session(
     df: DataFrame,
     ttl_seconds: float = DEFAULT_TTL_SECONDS,
     key: Sequence[str] = DEFAULT_KEY,
-    ts_col: str = "ts",
     order_cols: Sequence[str] = ("turn_idx",),
 ) -> DataFrame:
     """Keep the first row of each same-key burst (gap < ttl collapses)."""
-    w = Window.partitionBy(*key).orderBy(ts_col, *order_cols)
+    w = Window.partitionBy(*key).orderBy("ts", *order_cols)
     # via TIMESTAMP so TIMESTAMP_NTZ columns take epoch seconds too
-    epoch = F.col(ts_col).cast("timestamp").cast("double")
+    epoch = F.col("ts").cast("timestamp").cast("double")
     prev = F.lag(epoch).over(w)
     gap_ok = prev.isNull() | (epoch - prev >= ttl_seconds)
     return (

@@ -29,11 +29,11 @@ def normalized(text_col: str = "text"):
     return F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
 
 
-def exact_duplicate_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_duplicate_groups(df: DataFrame) -> DataFrame:
     """Groups of byte-identical (normalized) documents: digest, count,
     representative (min doc_id)."""
     return (
-        df.withColumn("digest", F.md5(normalized(text_col)))
+        df.withColumn("digest", F.md5(normalized()))
         .groupBy("digest")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -89,8 +89,6 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     n: int = 3,
     threshold: float = 0.8,
-    text_col: str = "text",
-    freq_cap: int = 500,
 ) -> DataFrame:
     """EXACT n-gram Jaccard pairs with similarity ≥ ``threshold``.
 
@@ -102,22 +100,22 @@ def ngram_jaccard_pairs(
     naive self-join, without losing a single qualifying pair; candidates
     are then verified exactly via ``array_intersect``.  For low τ the
     prefix is most of the set, so candidate generation uses the
-    count-join with a STOP-SHINGLE cap instead (:func:`_jaccard_capped`,
-    tunable via ``freq_cap``; raise it — or lift it to ∞ on trusted
-    corpora — to trade bucket bounds for completeness): ultra-frequent
-    shingles are excluded from the join (bounding every join bucket) and
+    count-join with a STOP-SHINGLE cap of 500 instead
+    (:func:`_jaccard_capped`'s ``freq_cap``; raising it — or lifting it
+    to ∞ on trusted corpora — trades bucket bounds for completeness):
+    ultra-frequent shingles are excluded from the join (bounding every join bucket) and
     their contribution to each found pair's intersection is restored
     exactly from tiny per-doc heavy-shingle arrays.  Output columns are
     identical either way ((doc_a, doc_b, jaccard), a<b, jaccard exact
     for every emitted pair); the low-τ path's only deviation from brute
     force is that a pair sharing ONLY above-cap shingles is not
     generated — equality is exact whenever the corpus's max shingle
-    frequency ≤ ``freq_cap``.  (``_jaccard_naive`` remains as the
+    frequency ≤ 500.  (``_jaccard_naive`` remains as the
     brute-force reference used by tests.)
     """
     if threshold < 0.5:
-        return _jaccard_capped(df, n, threshold, text_col, freq_cap)
-    sets = shingle_sets(df, n, text_col).filter(F.size("sh_set") > 0)
+        return _jaccard_capped(df, n, threshold)
+    sets = shingle_sets(df, n).filter(F.size("sh_set") > 0)
     # carry |set| as a column from the narrow stage — saves the
     # count-over-window a per-row size lookup would otherwise cost
     exploded = sets.select(
@@ -400,7 +398,7 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash_signatures(df: DataFrame) -> DataFrame:
     """64-bit SimHash per doc via token-hash bit voting (numpy inside
     mapInPandas — vectorized, Arrow-batched)."""
     out_schema = "doc_id long, simhash long"
@@ -424,7 +422,7 @@ def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
             # hash each DISTINCT token once per batch (corpora repeat
             # tokens heavily — this is the dominant python cost),
             # precompute its 64-bit row, then per doc just sum rows
-            token_sets = [set(t.lower().split()) for t in pdf[text_col].fillna("")]
+            token_sets = [set(t.lower().split()) for t in pdf["text"].fillna("")]
             vocab = sorted(set().union(*token_sets)) if token_sets else []
             index = {t: i for i, t in enumerate(vocab)}
             if vocab:
@@ -444,11 +442,11 @@ def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
     return widen_if_narrow_scan(df).mapInPandas(_batch, schema=out_schema)
 
 
-def simhash_near_pairs(df: DataFrame, max_hamming: int = 3, text_col: str = "text") -> DataFrame:
+def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate pairs by SimHash hamming distance, banded on
     16-bit chunks (a pair within hamming ≤3 of 64 bits agrees exactly on
     ≥1 of 4 chunks → bucket join, no cross product)."""
-    sigs = simhash_signatures(df, text_col)
+    sigs = simhash_signatures(df)
     chunk_cols = [
         F.struct(
             F.lit(c).alias("chunk"),
@@ -496,9 +494,10 @@ def dedup_keep_list(df: DataFrame, pairs: DataFrame) -> DataFrame:
     return df.select("doc_id").join(drop, "doc_id", "left_anti")
 
 
-def duplicate_clusters(
-    pairs: DataFrame, max_iterations: int = 20
-) -> DataFrame:
+MAX_CLUSTER_ROUNDS = 20
+
+
+def duplicate_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over near-duplicate pairs: assign every doc
     the MINIMUM doc_id reachable through the pair graph (the cluster
     representative to keep).
@@ -515,7 +514,7 @@ def duplicate_clusters(
     the id of some node in its own component (neighbor labels and
     labels-of-labels both are), monotonically decreasing toward the
     component minimum.  Convergence is checked via a count of changed
-    labels; hitting ``max_iterations`` without converging raises
+    labels; hitting ``MAX_CLUSTER_ROUNDS`` without converging raises
     rather than returning a partially-merged clustering.  This is the
     engine's loop-until-fixpoint surface — not expressible in one SQL
     statement.
@@ -535,7 +534,7 @@ def duplicate_clusters(
         .cache()
     )
     labels.count()
-    for it in range(max_iterations):
+    for it in range(MAX_CLUSTER_ROUNDS):
         neighbor_min = (
             edges.join(labels, edges["dst"] == labels["node"])
             .groupBy("src")
@@ -590,8 +589,8 @@ def duplicate_clusters(
         edges.unpersist()
         labels.unpersist()  # don't strand the last generation on raise
         raise RuntimeError(
-            f"duplicate_clusters did not converge in {max_iterations} "
-            "rounds — raise max_iterations (a partially-merged "
+            f"duplicate_clusters did not converge in {MAX_CLUSTER_ROUNDS} "
+            "rounds — raise MAX_CLUSTER_ROUNDS (a partially-merged "
             "clustering must never be returned silently)"
         )
     edges.unpersist()
@@ -603,7 +602,6 @@ def benchmark_contamination(
     benchmark: DataFrame,
     n: int = 13,
     min_overlap: int = 1,
-    text_col: str = "text",
 ) -> DataFrame:
     """Benchmark decontamination: training docs sharing ≥ ``min_overlap``
     distinct word ``n``-grams with a held-out benchmark corpus.
@@ -621,8 +619,8 @@ def benchmark_contamination(
     Returns ``(doc_id, n_overlap)`` — flagged docs only; feed into
     :func:`dedup_keep` / an anti-join to drop them.
     """
-    doc_sh = shingles(docs, n, text_col)
-    bench_sh = shingles(benchmark, n, text_col).select("shingle").distinct()
+    doc_sh = shingles(docs, n)
+    bench_sh = shingles(benchmark, n).select("shingle").distinct()
     return (
         doc_sh.join(F.broadcast(bench_sh), "shingle")
         .groupBy("doc_id")
@@ -631,12 +629,10 @@ def benchmark_contamination(
     )
 
 
-def split_by_cluster(
-    df: DataFrame,
-    pairs: DataFrame,
-    fractions=(("train", 0.90), ("val", 0.05), ("test", 0.05)),
-    id_col: str = "doc_id",
-) -> DataFrame:
+SPLIT_FRACTIONS = (("train", 0.90), ("val", 0.05), ("test", 0.05))
+
+
+def split_by_cluster(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Leakage-safe train/val/test assignment: every document in the
     same near-duplicate cluster lands in the same split (a near-copy of
     a training doc must never leak into eval — the standard data-split
@@ -652,33 +648,29 @@ def split_by_cluster(
     corpus; the corpus itself never shuffles.
     """
     clusters = duplicate_clusters(pairs)
-    joined = df.select(id_col).join(
-        F.broadcast(clusters.withColumnRenamed("doc_id", id_col)), id_col, "left"
-    )
-    key = F.coalesce(F.col("cluster_id"), F.col(id_col)).cast("string")
+    joined = df.select("doc_id").join(F.broadcast(clusters), "doc_id", "left")
+    key = F.coalesce(F.col("cluster_id"), F.col("doc_id")).cast("string")
     u = F.concat(F.lit("0"), F.substring(F.md5(key), 1, 4))
     expr = None
     cum = 0.0
-    for name, frac in fractions[:-1]:
+    for name, frac in SPLIT_FRACTIONS[:-1]:
         cum += frac
         thr = format(int(round(cum * 0x10000)), "05x")
         cond = u < F.lit(thr)
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    expr = expr.otherwise(F.lit(fractions[-1][0]))
-    return joined.select(id_col, expr.alias("split"))
+    expr = expr.otherwise(F.lit(SPLIT_FRACTIONS[-1][0]))
+    return joined.select("doc_id", expr.alias("split"))
 
 
 def duplicate_spans(
     df: DataFrame,
     k: int = 5,
-    text_col: str = "text",
-    min_docs: int = 2,
 ) -> DataFrame:
     """Maximal duplicated token spans across documents — the
     substring-level exact dedup of Lee et al. 2022 ("Deduplicating
     Training Data Makes Language Models Better"), re-expressed for
     Spark: every ``k``-token window whose content hash appears in at
-    least ``min_docs`` distinct documents marks its token positions,
+    least 2 distinct documents marks its token positions,
     and runs of adjacent marked positions merge into maximal spans per
     document (the pieces a training-data pipeline would clip out).
 
@@ -698,7 +690,7 @@ def duplicate_spans(
     Output: ``(doc_id, span_start, span_end, n_grams, span_tokens)``
     with 1-based inclusive token offsets.
     """
-    toks = F.split(F.trim(normalized(text_col)), r"\s+")
+    toks = F.split(F.trim(normalized()), r"\s+")
     base = (
         widen_if_narrow_scan(df)
         .select("doc_id", toks.alias("t"))
@@ -720,7 +712,7 @@ def duplicate_spans(
         .distinct()
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("nd"))
-        .filter(F.col("nd") >= min_docs)
+        .filter(F.col("nd") >= 2)
         .select("h")
     )
     hits = kg.join(dup, "h").select("doc_id", "pos")
@@ -750,7 +742,6 @@ def segment_dedup(
     df: DataFrame,
     k: int = 5,
     max_df: int = 2,
-    text_col: str = "text",
 ) -> DataFrame:
     """Corpus-level repeated-segment removal — the "duplicated line
     filter" of CCNet / RefinedWeb (drop any line that recurs across the
@@ -777,7 +768,7 @@ def segment_dedup(
     Output: ``(doc_id, clean_text, n_segments, n_removed)`` with
     ``clean_text = ''`` when every segment was boilerplate.
     """
-    toks = F.split(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")), " ")
+    toks = F.split(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")), " ")
     base = widen_if_narrow_scan(df).select("doc_id", toks.alias("_t"))
     segs = base.select(
         "doc_id",
@@ -819,8 +810,6 @@ def memorization_spans(
     *,
     n: int = 8,
     min_run: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Verbatim-memorization probe: longest corpus-matched token span
     per sample.
@@ -859,7 +848,7 @@ def memorization_spans(
     digest (AQE skew-splittable), then every aggregate/window keys on
     the sample id.  No self-joins, no broadcasts, no Python.
     """
-    toks = F.split(F.trim(normalized(text_col)), r"\s+")
+    toks = F.split(F.trim(normalized()), r"\s+")
     grams = F.when(
         F.size(toks) >= n,
         F.transform(
@@ -867,39 +856,39 @@ def memorization_spans(
             lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i + 1, n))),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    ids = samples.select(F.col(id_col)).distinct()
+    ids = samples.select(F.col("doc_id")).distinct()
     sample_grams = samples.select(
-        F.col(id_col), F.posexplode(grams).alias("pos", "g")
+        F.col("doc_id"), F.posexplode(grams).alias("pos", "g")
     )
     corpus_g = (
-        shingles(corpus, n, text_col)
+        shingles(corpus, n)
         .select(F.md5("shingle").alias("g"))
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
     flagged = sample_grams.join(corpus_g, "g", "left").select(
-        id_col, "pos", F.col("_hit").isNotNull().alias("hit")
+        "doc_id", "pos", F.col("_hit").isNotNull().alias("hit")
     )
     from pyspark.sql import Window
 
-    wrun = Window.partitionBy(id_col, "hit").orderBy("pos")
+    wrun = Window.partitionBy("doc_id", "hit").orderBy("pos")
     runs = (
         flagged.withColumn("grp", F.col("pos") - F.row_number().over(wrun))
         .filter("hit")
-        .groupBy(id_col, "grp")
+        .groupBy("doc_id", "grp")
         .agg(F.count(F.lit(1)).alias("run_len"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.max("run_len").alias("max_run"))
     )
-    totals = flagged.groupBy(id_col).agg(
+    totals = flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_grams"),
         F.sum(F.col("hit").cast("long")).alias("n_matched"),
     )
     out = (
-        ids.join(totals, id_col, "left")
-        .join(runs, id_col, "left")
+        ids.join(totals, "doc_id", "left")
+        .join(runs, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
             F.coalesce("n_matched", F.lit(0)).alias("n_matched"),
             F.coalesce("max_run", F.lit(0)).alias("max_run"),
@@ -909,7 +898,7 @@ def memorization_spans(
         F.lit(0)
     )
     return out.select(
-        id_col,
+        "doc_id",
         "n_grams",
         "n_matched",
         "max_run",
@@ -922,7 +911,6 @@ def editdist_near_pairs(
     df: DataFrame,
     k: int = 2,
     q: int = 3,
-    text_col: str = "text",
 ) -> DataFrame:
     """EXACT edit-distance near-dup pairs: ``levenshtein(a, b) <= k``.
 
@@ -982,7 +970,7 @@ def editdist_near_pairs(
     """
     prefix_len = k * q + 1
     docs = df.select(
-        "doc_id", F.trim(normalized(text_col)).alias("norm")
+        "doc_id", F.trim(normalized()).alias("norm")
     ).withColumn("len", F.length("norm"))
     long_docs = docs.filter(F.col("len") >= (k + 1) * q)
     short_docs = docs.filter(F.col("len") < (k + 1) * q)

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 10**12
+DAMPING_NUM, DAMPING_DEN = 85, 100  # damping factor 0.85 as a ratio
 
 
 def pagerank(
@@ -48,26 +49,22 @@ def pagerank(
     nodes: DataFrame | None = None,
     *,
     iterations: int = 10,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    scale: int = SCALE,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Fixed-point PageRank over ``edges(src, dst)``.
 
     ``nodes`` (one ``node`` column) defaults to ``src ∪ dst``; pass it
     explicitly when isolated/dangling nodes exist outside the edge
     list.  Returns ``(node, rank)`` with ``rank`` the fixed-point
-    integer (sum over nodes ≈ ``scale`` minus cumulative floor loss).
+    integer (sum over nodes ≈ ``SCALE`` minus cumulative floor loss).
 
     Exact recurrence (all integer ops)::
 
-        R0(v)  = scale // N
+        R0(v)  = SCALE // N
         send(u)   = R(u) // outdeg(u)            (u with out-edges)
         contrib(v)= Σ send(u) over edges u→v
         dang      = Σ R(u) over u without out-edges
-        R'(v)  = (num * (scale // N)) // den  applied as (den-num)…
-                 = ((den-num) * (scale // N)) // den
+        R'(v)  = (num * (SCALE // N)) // den  applied as (den-num)…
+                 = ((den-num) * (SCALE // N)) // den
                    + (num * (contrib(v) + dang // N)) // den
     """
     if nodes is None:
@@ -85,8 +82,8 @@ def pagerank(
     )
     edges = edges.select("src", "dst").persist()
 
-    base = scale // n
-    teleport = ((damping_den - damping_num) * base) // damping_den
+    base = SCALE // n
+    teleport = ((DAMPING_DEN - DAMPING_NUM) * base) // DAMPING_DEN
     ranks = nodes.withColumn("rank", F.lit(base).cast("long"))
 
     for i in range(iterations):
@@ -112,13 +109,13 @@ def pagerank(
             .select(
                 "node",
                 F.expr(
-                    f"{teleport}L + ({damping_num}L * "
+                    f"{teleport}L + ({DAMPING_NUM}L * "
                     f"(coalesce(contrib, 0L) + (dang div {n}L))) "
-                    f"div {damping_den}L"
+                    f"div {DAMPING_DEN}L"
                 ).alias("rank"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
+        if (i + 1) % 3 == 0 and i + 1 < iterations:
             ranks = ranks.localCheckpoint()
     return ranks
 

@@ -30,9 +30,8 @@ profile matched become RAW envelopes.
 Determinism deviation (documented): where the reference stamps
 ``now()`` for unparseable timestamps, this engine falls back to the
 row's event time ``ts`` so two runs over the same table are
-byte-identical.  Year-less syslog dates get a configurable
-``default_year`` (2017, the golden-fixture era) instead of
-dateparser's "current year".
+byte-identical.  Year-less syslog dates get ``DEFAULT_YEAR`` (2017,
+the golden-fixture era) instead of dateparser's "current year".
 """
 
 from __future__ import annotations
@@ -93,6 +92,7 @@ _OUT_COLS = [
 ]
 
 DEFAULT_IP = "127.0.0.1"
+DEFAULT_YEAR = 2017
 
 
 #: one shared encoder — json.dumps builds a fresh JSONEncoder per call,
@@ -338,7 +338,7 @@ def _resolve_epoch(date: str, time: str, fmt: str | None, default_year: int):
 # stage A: prefix identification (P2/P4), vectorized per (os, prefix)
 
 
-def _prefix_stage(texts: pd.Series, osp: OsProfile, default_year: int) -> pd.DataFrame | None:
+def _prefix_stage(texts: pd.Series, osp: OsProfile) -> pd.DataFrame | None:
     """First matching prefix wins per OS; returns the partially-parsed
     frame (index ⊆ texts.index) or None when nothing matched.
 
@@ -357,7 +357,8 @@ def _prefix_stage(texts: pd.Series, osp: OsProfile, default_year: int) -> pd.Dat
         if pp.python_path is not None:
             path = pp.python_path
             for pos in remaining:
-                d = python_extract(path, txt[pos])
+                s = txt[pos]
+                d = python_extract(path, s) if isinstance(s, str) else None
                 if d is None:
                     still.append(pos)
                     continue
@@ -407,7 +408,7 @@ def _prefix_stage(texts: pd.Series, osp: OsProfile, default_year: int) -> pd.Dat
             epoch = None
             date, time_ = d.get("date"), d.get("time")
             if date or time_:  # declared fmt first, fallback table after
-                epoch = _resolve_epoch(date or "", time_ or "", fmt, default_year)
+                epoch = _resolve_epoch(date or "", time_ or "", fmt, DEFAULT_YEAR)
             rows[pos] = (d, d.get("host"), d.get("tag"), msg, fac, sev, epoch)
         remaining = still
 
@@ -645,20 +646,17 @@ def _message_stage(osp: OsProfile, parsed: pd.DataFrame) -> pd.DataFrame:
 # the full batch transform
 
 
-def normalize_pandas(
-    pdf: pd.DataFrame,
-    registry: ProfileRegistry,
-    *,
-    default_year: int = 2017,
-    include_unknown: bool = True,
-    include_raw: bool = True,
-    ip: str = DEFAULT_IP,
-) -> pd.DataFrame:
-    """Normalize one Arrow batch of transcript rows into envelope rows."""
+def normalize_pandas(pdf: pd.DataFrame, registry: ProfileRegistry) -> pd.DataFrame:
+    """Normalize one Arrow batch of transcript rows into envelope rows.
+
+    Every RAW and UNKNOWN envelope is emitted; the sink's
+    ``send_raw``/``send_unknown`` filter decides what is published.
+    """
     if pdf.empty:
         return pd.DataFrame({c: [] for c in _OUT_COLS})
     pdf = pdf.reset_index(drop=True)
-    texts = pdf["text"].astype(str)
+    # a null text (a corrupt JSON line) stays null, never the string "None"
+    texts = pdf["text"].astype(str).where(pdf["text"].notna(), None)
     # fallback event-time epochs (determinism: event time, never now())
     ts_col = pd.to_datetime(pdf["ts"]) if "ts" in pdf.columns else None
     if ts_col is not None:
@@ -671,7 +669,7 @@ def normalize_pandas(
     out_frames = []
     matched_any = pd.Series(False, index=pdf.index)
     for os_name, osp in registry.oses.items():
-        parsed = _prefix_stage(texts, osp, default_year)
+        parsed = _prefix_stage(texts, osp)
         if parsed is None or parsed.empty:
             continue
         matched_any.loc[parsed.index] = True
@@ -696,12 +694,9 @@ def normalize_pandas(
         env["message"] = parsed["message"]
         env["message_details"] = parsed["_details"]
         env["timestamp"] = parsed["_epoch"]
-        keep = ~oc_failed
-        if not include_raw:
-            keep &= is_matched
-        out_frames.append(env[keep])
+        out_frames.append(env[~oc_failed])
 
-    if include_unknown and (~matched_any).any():
+    if (~matched_any).any():
         unk_idx = pdf.index[~matched_any]
         unk = pd.DataFrame(index=unk_idx)
         unk["os"] = "unknown"
@@ -737,7 +732,7 @@ def normalize_pandas(
 
     base = pdf[[c for c in ("conv_id", "turn_idx", "role", "tool", "ts") if c in pdf.columns]]
     res = res.join(base)
-    res["ip"] = ip
+    res["ip"] = DEFAULT_IP
     fallback = fallback_epoch.reindex(res["_ord"].values)
     res["timestamp"] = pd.array(
         [
@@ -772,32 +767,16 @@ def normalize_pandas(
     return res[_OUT_COLS]
 
 
-def normalize(
-    df,
-    registry: ProfileRegistry | None = None,
-    *,
-    profile_dir: str | None = None,
-    default_year: int = 2017,
-    include_unknown: bool = True,
-    include_raw: bool = True,
-    ip: str = DEFAULT_IP,
-):
+def normalize(df, registry: ProfileRegistry | None = None):
     """Spark entry: transcript DataFrame → envelope DataFrame (exploded).
 
     Works identically on batch and streaming DataFrames (mapInPandas is
     streaming-safe and stateless).
     """
-    registry = registry or load_registry(profile_dir)
+    registry = registry or load_registry()
 
     def _batches(iterator: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in iterator:
-            yield normalize_pandas(
-                pdf,
-                registry,
-                default_year=default_year,
-                include_unknown=include_unknown,
-                include_raw=include_raw,
-                ip=ip,
-            )
+            yield normalize_pandas(pdf, registry)
 
     return df.mapInPandas(_batches, schema=ENVELOPE_SCHEMA)

@@ -22,12 +22,12 @@ graph is strongly connected.
 
 Determinism contract (the engine-wide rule — see graph.pagerank /
 similarity k-means): every per-iteration quantity is an *integer*.
-Ratings are fixed-point at ``scale``; each pair contributes
-``(n_ij * contrib_scale) div (p_i + p_j)`` to BOTH endpoints'
-denominators; the raw update is ``(W_i * contrib_scale) div denom_i``
+Ratings are fixed-point at ``SCALE``; each pair contributes
+``(n_ij * CONTRIB_SCALE) div (p_i + p_j)`` to BOTH endpoints'
+denominators; the raw update is ``(W_i * CONTRIB_SCALE) div denom_i``
 (clamped to >= 1 so an all-losing item stays in the arithmetic's
 domain); each iteration renormalizes to total mass
-``n_items * scale`` with one more floor division.  Integer sums are
+``n_items * SCALE`` with one more floor division.  Integer sums are
 associative/commutative, so the result is bit-identical under any
 partitioning AND a SQL engine replays the exact recurrence (the
 oracle unrolls iterations as chained CTEs) — a value-match gate on an
@@ -46,7 +46,7 @@ Scale notes (10^9 battles / 10^6 items):
   crossJoin; driver state is two scalars (item count, iteration) —
   no per-item collect.
 * Lineage is truncated with an EAGER ``localCheckpoint`` every
-  iteration (default) — stricter than PageRank's every-3: the BT step
+  iteration — stricter than PageRank's every-3: the BT step
   stacks two joins, a union aggregate, and two 1-row broadcasts, and
   letting three of those nest makes AQE's recursive stage creation
   (not the data) the bottleneck — measured 188 s -> seconds at
@@ -54,9 +54,9 @@ Scale notes (10^9 battles / 10^6 items):
   materialization cost is the output size, the cheapest thing in the
   job.
 
-Int64 headroom: ``W_i * contrib_scale`` caps at ~1e6 wins * 1e12 =
-1e18 < 2^63; callers with >10^6 wins per item should lower
-``contrib_scale`` (documented, asserted).
+Int64 headroom: ``W_i * CONTRIB_SCALE`` caps at ~1e6 wins * 1e12 =
+1e18 < 2^63; more than 10^6 wins per item needs a lower
+``CONTRIB_SCALE``.
 """
 
 from __future__ import annotations
@@ -70,8 +70,6 @@ CONTRIB_SCALE = 10**12
 
 def bt_pair_counts(
     outcomes: DataFrame,
-    winner_col: str = "winner",
-    loser_col: str = "loser",
 ) -> DataFrame:
     """Collapse an outcome log to the canonical BT pair-count table.
 
@@ -80,7 +78,7 @@ def bt_pair_counts(
     statistic for the whole MM fit (the 10^9-row battle log is never
     touched again).  Draws are not modeled; filter them upstream.
     """
-    w, l = F.col(winner_col), F.col(loser_col)
+    w, l = F.col("winner"), F.col("loser")
     return (
         outcomes.filter(w != l)
         .select(
@@ -98,30 +96,25 @@ def bt_pair_counts(
 
 def bt_ratings(
     outcomes: DataFrame,
-    winner_col: str = "winner",
-    loser_col: str = "loser",
     *,
     iterations: int = 8,
-    scale: int = SCALE,
-    contrib_scale: int = CONTRIB_SCALE,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Fixed-point Bradley–Terry ratings over a (winner, loser) log.
 
     Returns ``(item, rating, wins, n_comps)`` — ``rating`` the
-    fixed-point integer strength (mean ≈ ``scale``), ``wins`` /
+    fixed-point integer strength (mean ≈ ``SCALE``), ``wins`` /
     ``n_comps`` the item's exact win and comparison counts.
 
     Exact recurrence (all integer ops), replayed verbatim by the SQL
     oracle::
 
-        p0(v)    = scale
-        c(i,j)   = (n_ij * contrib_scale) div (p_i + p_j)
+        p0(v)    = SCALE
+        c(i,j)   = (n_ij * CONTRIB_SCALE) div (p_i + p_j)
         denom(v) = SUM c over pairs containing v
-        raw(v)   = max((W_v * contrib_scale) div denom(v), 1)
-        p'(v)    = (raw(v) * n_items * scale) div SUM raw
+        raw(v)   = max((W_v * CONTRIB_SCALE) div denom(v), 1)
+        p'(v)    = (raw(v) * n_items * SCALE) div SUM raw
     """
-    pairs = bt_pair_counts(outcomes, winner_col, loser_col).persist()
+    pairs = bt_pair_counts(outcomes).persist()
     items = (
         pairs.select(F.col("i").alias("item"), F.col("n"), F.col("wi").alias("w"))
         .unionAll(
@@ -134,9 +127,9 @@ def bt_ratings(
         .persist()
     )
     n_items = items.count()  # scalar driver state
-    target = n_items * scale
+    target = n_items * SCALE
 
-    p = items.select("item", F.lit(scale).cast("long").alias("p"))
+    p = items.select("item", F.lit(SCALE).cast("long").alias("p"))
     for it in range(iterations):
         pi = p.select(F.col("item").alias("i"), F.col("p").alias("p_i"))
         pj = p.select(F.col("item").alias("j"), F.col("p").alias("p_j"))
@@ -146,7 +139,7 @@ def bt_ratings(
             .select(
                 "i",
                 "j",
-                F.expr(f"(n * {contrib_scale}L) div (p_i + p_j)").alias("c"),
+                F.expr(f"(n * {CONTRIB_SCALE}L) div (p_i + p_j)").alias("c"),
             )
         )
         denom = (
@@ -158,14 +151,14 @@ def bt_ratings(
         raw = items.join(denom, "item").select(
             "item",
             F.greatest(
-                F.expr(f"(wins * {contrib_scale}L) div denom"), F.lit(1).cast("long")
+                F.expr(f"(wins * {CONTRIB_SCALE}L) div denom"), F.lit(1).cast("long")
             ).alias("raw"),
         )
         tot = raw.agg(F.sum("raw").alias("tot"))
         p = raw.crossJoin(F.broadcast(tot)).select(
             "item", F.expr(f"(raw * {target}L) div tot").alias("p")
         )
-        if (it + 1) % checkpoint_every == 0 and it + 1 < iterations:
+        if it + 1 < iterations:
             p = p.localCheckpoint()
     return items.join(p, "item").select(
         "item", F.col("p").alias("rating"), "wins", "n_comps"
@@ -174,9 +167,6 @@ def bt_ratings(
 
 def group_advantages(
     rollouts: DataFrame,
-    group_col: str = "prompt_id",
-    id_col: str = "rollout_id",
-    reward_col: str = "reward",
 ) -> DataFrame:
     """Per-prompt-group advantage estimates for policy-gradient RLHF.
 
@@ -189,7 +179,8 @@ def group_advantages(
     ``cv_best_of_n`` (keep the max) and ``cv_pref_pairs`` (keep a
     pair): GRPO keeps EVERY rollout, weighted.
 
-    Input: one row per rollout with an INTEGER ``reward_col`` (the
+    Input: one row per rollout ``(prompt_id, rollout_id, reward)`` with
+    an INTEGER ``reward`` (the
     engine-wide contract — callers quantize float rewards first, e.g.
     ``floor(r * 100)``, so every sum below is exact).  Output: the
     input keys plus the exact integer sufficient statistics and the
@@ -211,15 +202,15 @@ def group_advantages(
     * ``degenerate`` — ``var_num = 0`` flag for filter/monitoring.
 
     Scale (10^9 rollouts, groups of 4-64): all three statistics ride
-    ONE window over ``group_col`` — a single hash Exchange of the
+    ONE window over ``prompt_id`` — a single hash Exchange of the
     input (plan-tested), zero Python, no join back.  Group cardinality
     is the sampler's G (bounded, typically <= 64), so no partition
     skew: the heavy key is the PROMPT count, which is exactly what the
     shuffle hashes over.  Int64 headroom: ``n * sum(r^2) <= n^2 *
     max(r)^2`` must stay < 2^63, i.e. ``n * |r| < 3.0e9`` — a group of
     64 rollouts with |reward| <= 4.7e7 fits; callers with wider
-    rewards lower the quantization scale (documented, like bt_ratings'
-    contrib_scale bound).
+    rewards lower the quantization scale (like bt_ratings'
+    ``CONTRIB_SCALE`` bound).
 
     The reference has no RL layer (napalm-logs stops at per-event
     publishing); this extends the transcript-pipeline eval/RLHF family
@@ -227,12 +218,12 @@ def group_advantages(
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(group_col)
+    w = Window.partitionBy("prompt_id")
     r = F.col("_r")
     base = rollouts.select(
-        F.col(group_col),
-        F.col(id_col),
-        F.col(reward_col).cast("long").alias("_r"),
+        F.col("prompt_id"),
+        F.col("rollout_id"),
+        F.col("reward").cast("long").alias("_r"),
     )
     stats = (
         base.withColumn("n", F.count(F.lit(1)).over(w))
@@ -242,8 +233,8 @@ def group_advantages(
     adv_num = F.col("n") * r - F.col("_sum_r")
     var_num = F.col("n") * F.col("_sum_r2") - F.col("_sum_r") * F.col("_sum_r")
     return stats.select(
-        F.col(group_col),
-        F.col(id_col),
+        F.col("prompt_id"),
+        F.col("rollout_id"),
         r.alias("reward"),
         F.col("n"),
         adv_num.alias("adv_num"),
@@ -261,9 +252,6 @@ def group_advantages(
 
 def reward_length_bias(
     rollouts: DataFrame,
-    group_col: str = "prompt_id",
-    reward_col: str = "reward",
-    len_col: str = "n_chars",
 ) -> DataFrame:
     """Per-group reward↔length correlation — the length-hacking gauge.
 
@@ -277,7 +265,7 @@ def reward_length_bias(
     advantage signal (:func:`group_advantages`) is paying for tokens.
 
     Inputs are INTEGER columns (the engine contract — quantize float
-    rewards as in ``group_advantages``; ``len_col`` is already a
+    rewards as in ``group_advantages``; ``n_chars`` is already a
     count).  Per group this emits the exact integer Pearson pieces
 
         num  = n·Σxy − Σx·Σy
@@ -290,14 +278,14 @@ def reward_length_bias(
     group_advantages compare recipe).  NULL when either side is
     constant (zero variance ⇒ correlation undefined).
 
-    Scale: one hash aggregate on ``group_col`` — map-side combined,
+    Scale: one hash aggregate on ``prompt_id`` — map-side combined,
     output one row per prompt.  Int64 headroom: ``n·Σx² ≤ n²·max(x)²
     < 2^63`` requires ``n·max(|x|, |y|) < 3.0e9`` per group, same
     bound as group_advantages.
     """
-    x = F.col(len_col).cast("long")
-    y = F.col(reward_col).cast("long")
-    g = rollouts.groupBy(group_col).agg(
+    x = F.col("n_chars").cast("long")
+    y = F.col("reward").cast("long")
+    g = rollouts.groupBy("prompt_id").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(x).alias("_sx"),
         F.sum(y).alias("_sy"),
@@ -309,7 +297,7 @@ def reward_length_bias(
     denx = F.col("n") * F.col("_sxx") - F.col("_sx") * F.col("_sx")
     deny = F.col("n") * F.col("_syy") - F.col("_sy") * F.col("_sy")
     return g.select(
-        F.col(group_col),
+        F.col("prompt_id"),
         F.col("n"),
         num.alias("num"),
         denx.alias("denx"),
@@ -324,8 +312,6 @@ def reward_length_bias(
 
 def fleiss_kappa(
     ratings: DataFrame,
-    item_col: str = "item_id",
-    category_col: str = "category",
     *,
     raters: int,
 ) -> DataFrame:
@@ -367,15 +353,15 @@ def fleiss_kappa(
     """
     if raters < 2:
         raise ValueError("fleiss_kappa needs raters >= 2")
-    counts = ratings.groupBy(item_col, category_col).agg(
+    counts = ratings.groupBy("item_id", "category").agg(
         F.count(F.lit(1)).alias("n_ic")
     )
-    per_item = counts.groupBy(item_col).agg(
+    per_item = counts.groupBy("item_id").agg(
         F.sum("n_ic").alias("n_i"),
         F.sum(F.col("n_ic") * (F.col("n_ic") - 1)).alias("po_i"),
     )
     qualified = per_item.select(
-        item_col, (F.col("n_i") == raters).alias("ok"), "po_i"
+        "item_id", (F.col("n_i") == raters).alias("ok"), "po_i"
     )
     item_stats = qualified.agg(
         F.sum(F.col("ok").cast("long")).alias("n_items"),
@@ -386,9 +372,9 @@ def fleiss_kappa(
     )
     cat_stats = (
         counts.join(
-            qualified.filter("ok").select(item_col), item_col
+            qualified.filter("ok").select("item_id"), "item_id"
         )
-        .groupBy(category_col)
+        .groupBy("category")
         .agg(F.sum("n_ic").alias("t_c"))
         .agg(
             F.count(F.lit(1)).alias("n_categories"),

@@ -24,48 +24,42 @@ def scd2_intervals(
     changes: DataFrame,
     key: str,
     attr_cols: tuple,
-    ts_col: str = "ts",
     order_cols: tuple = (),
-    collapse_unchanged: bool = True,
 ) -> DataFrame:
     """Build a type-2 dimension from an append-only change log: one row
     per (key, version) with ``valid_from`` / ``valid_to`` (NULL = still
     current), ``version`` (1-based per key) and ``is_current``.
 
-    ``collapse_unchanged=True`` drops log rows that repeat the previous
-    attribute tuple (idempotent upserts produce no new version —
-    standard SCD2 merge semantics); set False to version every log row.
-    Ties on ``ts_col`` are broken by ``order_cols`` (give the log's
-    sequence column if it has one — otherwise same-timestamp changes
-    produce zero-length versions in log order).
+    Log rows that repeat the previous attribute tuple are dropped
+    (idempotent upserts produce no new version — standard SCD2 merge
+    semantics).  Ties on ``ts`` are broken by ``order_cols`` (give the
+    log's sequence column if it has one — otherwise same-timestamp
+    changes produce zero-length versions in log order).
 
     Scale shape: one window shuffle on ``key`` total — the
     change-detection lag, the ``valid_to`` lead, and the version
     row_number all share the same (key, ts) window partitioning, so
     Catalyst plans a single Exchange.  No joins.
     """
-    order = [F.col(ts_col), *[F.col(c) for c in order_cols]]
+    order = [F.col("ts"), *[F.col(c) for c in order_cols]]
     w = Window.partitionBy(key).orderBy(*order)
-    df = changes
-    if collapse_unchanged:
-        changed = F.lit(False)
-        for c in attr_cols:
-            prev = F.lag(c).over(w)
-            # NULL-safe inequality: NULL -> value and value -> NULL are
-            # real changes; NULL -> NULL is not
-            changed = changed | ~F.col(c).eqNullSafe(prev)
-        first = F.lag(ts_col).over(w).isNull()
-        df = df.withColumn("_new_version", first | changed).filter(
-            F.col("_new_version")
-        )
-    w2 = Window.partitionBy(key).orderBy(*order)
-    valid_to = F.lead(ts_col).over(w2)
+    changed = F.lit(False)
+    for c in attr_cols:
+        prev = F.lag(c).over(w)
+        # NULL-safe inequality: NULL -> value and value -> NULL are
+        # real changes; NULL -> NULL is not
+        changed = changed | ~F.col(c).eqNullSafe(prev)
+    first = F.lag("ts").over(w).isNull()
+    df = changes.withColumn("_new_version", first | changed).filter(
+        F.col("_new_version")
+    )
+    valid_to = F.lead("ts").over(w)
     return df.select(
         key,
         *attr_cols,
-        F.col(ts_col).alias("valid_from"),
+        F.col("ts").alias("valid_from"),
         valid_to.alias("valid_to"),
-        F.row_number().over(w2).cast("int").alias("version"),
+        F.row_number().over(w).cast("int").alias("version"),
         valid_to.isNull().alias("is_current"),
     )
 
@@ -74,8 +68,6 @@ def cdc_apply(
     changelog: DataFrame,
     key_cols: tuple,
     order_cols: tuple,
-    op_col: str = "op",
-    delete_op: str = "D",
 ) -> DataFrame:
     """Apply a CDC changelog to produce the current snapshot — the
     merge-on-read half of an Iceberg/Delta ``MERGE INTO`` (equality
@@ -84,7 +76,7 @@ def cdc_apply(
 
     Each key keeps its LAST row by ``order_cols`` (give (ts, seq) —
     ties must be broken deterministically); a key whose last operation
-    is ``delete_op`` disappears from the snapshot.  Inserts and updates
+    is ``op = 'D'`` disappears from the snapshot.  Inserts and updates
     are not distinguished (both mean "this is the row now"), matching
     upsert semantics.  ``n_versions`` reports the key's changelog depth
     — the compaction-pressure signal a table-maintenance job reads.
@@ -102,7 +94,7 @@ def cdc_apply(
     return (
         changelog.withColumn("_rn", F.row_number().over(w))
         .withColumn("n_versions", F.count(F.lit(1)).over(wc).cast("long"))
-        .filter((F.col("_rn") == 1) & (F.col(op_col) != delete_op))
+        .filter((F.col("_rn") == 1) & (F.col("op") != "D"))
         .drop("_rn")
     )
 
@@ -111,7 +103,6 @@ def asof_dimension_lookup(
     facts: DataFrame,
     dim: DataFrame,
     key: str,
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Point-in-time join: each fact row picks the dimension version
     valid at its timestamp (``valid_from <= ts < valid_to``, open
@@ -129,7 +120,7 @@ def asof_dimension_lookup(
     )
     cond = (
         (facts[key] == d["_dk"])
-        & (facts[ts_col] >= d["valid_from"])
-        & (d["valid_to"].isNull() | (facts[ts_col] < d["valid_to"]))
+        & (facts["ts"] >= d["valid_from"])
+        & (d["valid_to"].isNull() | (facts["ts"] < d["valid_to"]))
     )
     return facts.join(d, cond, "left").drop("_dk")

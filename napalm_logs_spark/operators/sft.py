@@ -92,9 +92,10 @@ def sft_spans(tdf: DataFrame) -> DataFrame:
     )
 
 
-def _prompt_fingerprints(
-    tdf: DataFrame, prompt_text_col: str, max_prompt_turns: int
-) -> DataFrame:
+MAX_PROMPT_TURNS = 1024
+
+
+def _prompt_fingerprints(tdf: DataFrame, prompt_text_col: str) -> DataFrame:
     """(conv_id, prompt_fp) — md5 of the ordered pre-first-agent-turn
     texts (the shared fingerprint stage of :func:`preference_pairs` and
     :func:`best_of_n`); conversations with no loss-role turn drop."""
@@ -116,7 +117,7 @@ def _prompt_fingerprints(
                             F.collect_list(F.struct("turn_idx", "_pt"))
                         ),
                         1,
-                        max_prompt_turns,
+                        MAX_PROMPT_TURNS,
                     ),
                     lambda s: s["_pt"],
                 ),
@@ -130,7 +131,6 @@ def best_of_n(
     scores: DataFrame,
     *,
     prompt_text_col: str = "text",
-    max_prompt_turns: int = 1024,
     min_candidates: int = 1,
 ) -> DataFrame:
     """Rejection sampling / Best-of-N selection (WebGPT, Llama-2
@@ -152,7 +152,7 @@ def best_of_n(
     that window partitioning, so a million-candidate hot prompt costs
     one reducer sort and emits one row.
     """
-    scored = _prompt_fingerprints(tdf, prompt_text_col, max_prompt_turns).join(
+    scored = _prompt_fingerprints(tdf, prompt_text_col).join(
         scores.select("conv_id", "score"), "conv_id"
     )
     w = Window.partitionBy("prompt_fp").orderBy(
@@ -180,7 +180,6 @@ def preference_pairs(
     scores: DataFrame,
     *,
     prompt_text_col: str = "text",
-    max_prompt_turns: int = 1024,
 ) -> DataFrame:
     """DPO/RLHF preference-pair construction: one (chosen, rejected)
     conversation pair per shared prompt.
@@ -202,7 +201,7 @@ def preference_pairs(
 
     Scale (10^12 turns): the prompt fingerprint is one ``conv_id``
     aggregate that reuses the transcript ordering exchange
-    (``sort_array(collect_list)``, ``max_prompt_turns``-bounded like
+    (``sort_array(collect_list)``, ``MAX_PROMPT_TURNS``-bounded like
     convstats fingerprints); pairing is two rank-1 windows over
     ``prompt_fp`` — a hot prompt (one shared greeting, millions of
     conversations) costs its reducer one sort, never a cross join,
@@ -212,7 +211,7 @@ def preference_pairs(
     (`/root/reference/napalm_logs/device.py:336-351`); the
     preference pair is the transcript-payload training envelope.
     """
-    scored = _prompt_fingerprints(tdf, prompt_text_col, max_prompt_turns).join(
+    scored = _prompt_fingerprints(tdf, prompt_text_col).join(
         scores.select("conv_id", "score"), "conv_id"
     )
     # both rank-1 selections ride ONE prompt_fp exchange: two window
@@ -250,19 +249,17 @@ def preference_pairs(
     ).filter(F.col("margin") > 0)
 
 
-def truncate_to_budget(
-    tdf: DataFrame, *, budget_tokens: int, pin_first: bool = True
-) -> DataFrame:
+def truncate_to_budget(tdf: DataFrame, *, budget_tokens: int) -> DataFrame:
     """Context-window truncation: per-turn keep verdicts for the
     longest conversation *suffix* that fits a token budget.
 
     The standard serving/training truncation rule — recent turns matter
     most — expressed as one reverse running-sum window: a turn is kept
     when the whitespace-token sum of itself plus every LATER turn is
-    ≤ ``budget_tokens``.  ``pin_first=True`` additionally keeps
-    ``turn_idx = 0`` (the system-prompt retention rule) even when it
-    is out of budget; pinned-only turns are flagged so a renderer can
-    splice them ahead of the kept suffix.
+    ≤ ``budget_tokens``.  ``turn_idx = 0`` is kept too (the
+    system-prompt retention rule) even when it is out of budget;
+    pinned-only turns are flagged so a renderer can splice them ahead
+    of the kept suffix.
 
     One window on ``conv_id`` (same exchange as the transcript
     ordering — the sort direction differs but the hash partitioning is
@@ -277,11 +274,7 @@ def truncate_to_budget(
     )
     suffix_tok = F.sum(tok).over(w)
     in_budget = suffix_tok <= F.lit(budget_tokens)
-    pinned = (
-        (F.col("turn_idx") == 0) & ~in_budget
-        if pin_first
-        else F.lit(False)
-    )
+    pinned = (F.col("turn_idx") == 0) & ~in_budget
     return tdf.select(
         "conv_id",
         "turn_idx",

@@ -57,8 +57,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query (broadcast the queries).
 
@@ -71,12 +69,12 @@ def cosine_topk(
     # (recomputing ||q||·||c|| per candidate through the interpreted HOF
     # chain costs ~3x the dot product; same expression, same doubles)
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(emb_col).alias("q_emb"),
-        _norm(F.col(emb_col)).alias("q_nrm"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
+        _norm(F.col("embedding")).alias("q_nrm"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("c_emb"),
-        _norm(F.col(emb_col)).alias("c_nrm"),
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"),
+        _norm(F.col("embedding")).alias("c_nrm"),
     )
     joined = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
     cos = _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_nrm") * F.col("c_nrm"))
@@ -115,14 +113,13 @@ def jl_signs(out_dim: int, in_dim: int) -> list[list[int]]:
 #: quantizing multiply is EXACT in IEEE doubles (exponent shift only)
 #: and floor() agrees bit-for-bit between engines
 JL_SCALE = 1 << 24
+SEED = 42  # every seeded trainer and LSH plane set
 
 
 def random_projection(
     df: DataFrame,
     in_dim: int,
     out_dim: int = 8,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """Johnson-Lindenstrauss sign projection: dim → out_dim.
 
@@ -140,7 +137,7 @@ def random_projection(
     """
     signs = jl_signs(out_dim, in_dim)
     w = F.transform(
-        F.col(emb_col),
+        F.col("embedding"),
         lambda x: F.floor(x.cast("double") * F.lit(float(JL_SCALE))).cast("long"),
     )
     out = [
@@ -155,14 +152,12 @@ def random_projection(
         ).alias(f"p{i}")
         for i in range(out_dim)
     ]
-    return df.withColumn("_w", w).select(F.col(id_col), *out)
+    return df.withColumn("_w", w).select(F.col("vec_id"), *out)
 
 
 def corpus_diversity(
     df: DataFrame,
     by: str = "label",
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """Per-group mean pairwise cosine — WITHOUT the n² pair join.
 
@@ -184,7 +179,7 @@ def corpus_diversity(
     single-vector groups emit NULL.
     """
     a = F.transform(
-        F.col(emb_col),
+        F.col("embedding"),
         lambda x: F.floor(x.cast("double") * F.lit(float(1 << 20))).cast("long"),
     )
     df2 = df.select(F.col(by).alias("grp"), a.alias("_a")).withColumn(
@@ -237,8 +232,8 @@ def _embs_matrix(embs) -> np.ndarray:
     return np.array([np.asarray(v, dtype="float64") for v in embs])
 
 
-def lsh_bucket(df: DataFrame, dim: int, n_planes: int = 12, seed: int = 42,
-               emb_col: str = "embedding", out_col: str = "bucket") -> DataFrame:
+def lsh_bucket(df: DataFrame, dim: int, n_planes: int = 12, seed: int = SEED,
+               emb_col: str = "embedding") -> DataFrame:
     """Random-hyperplane signature: bit i = sign(emb · plane_i).
 
     The planes ride as a **Spark broadcast variable** into an
@@ -259,7 +254,7 @@ def lsh_bucket(df: DataFrame, dim: int, n_planes: int = 12, seed: int = 42,
         bits = (_embs_matrix(embs.to_numpy()) @ bplanes.value.T) > 0
         return pd.Series(bits @ powers, dtype="int64")
 
-    return df.withColumn(out_col, _sig(F.col(emb_col)))
+    return df.withColumn("bucket", _sig(F.col(emb_col)))
 
 
 def lsh_cosine_topk(
@@ -269,21 +264,18 @@ def lsh_cosine_topk(
     k: int = 10,
     n_planes: int = 10,
     n_tables: int = 3,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: candidates = same bucket in ≥1 of ``n_tables``
     hash tables, then exact cosine on candidates only."""
     corpus = widen_if_narrow_scan(corpus)
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("c_emb"),
-                      _norm(F.col(emb_col)).alias("c_nrm"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(emb_col).alias("q_emb"),
-                       _norm(F.col(emb_col)).alias("q_nrm"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"),
+                      _norm(F.col("embedding")).alias("c_nrm"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
+                       _norm(F.col("embedding")).alias("q_nrm"))
     cand = None
     for t in range(n_tables):
-        cb = lsh_bucket(c, dim, n_planes, seed + t, "c_emb", "bucket")
-        qb = lsh_bucket(q, dim, n_planes, seed + t, "q_emb", "bucket")
+        cb = lsh_bucket(c, dim, n_planes, SEED + t, "c_emb")
+        qb = lsh_bucket(q, dim, n_planes, SEED + t, "q_emb")
         pairs = cb.join(F.broadcast(qb), "bucket").filter(
             F.col("neighbor_id") != F.col("query_id")
         ).select("query_id", "neighbor_id", "q_emb", "c_emb", "q_nrm", "c_nrm")
@@ -339,7 +331,6 @@ def ivf_assign(
     df: DataFrame,
     centroids: np.ndarray,
     emb_col: str = "embedding",
-    out_col: str = "cluster",
 ) -> DataFrame:
     """Nearest-centroid inverted-list id per row (argmax of cosine; ties
     break to the lowest cluster id — numpy argmax takes the first max).
@@ -359,7 +350,7 @@ def ivf_assign(
         sims = _cosine_to_centroids(_embs_matrix(embs.to_numpy()), bcent.value)
         return pd.Series(sims.argmax(axis=1).astype("int32"))
 
-    return df.withColumn(out_col, _assign(F.col(emb_col)))
+    return df.withColumn("cluster", _assign(F.col(emb_col)))
 
 
 def _probe_clusters(
@@ -392,10 +383,6 @@ def ivf_cosine_topk(
     k: int = 10,
     n_clusters: int = 16,
     nprobe: int = 4,
-    seed: int = 42,
-    sample_cap: int = 4096,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k via IVF: probe the ``nprobe`` nearest inverted
     lists per query, exact cosine only within probed lists.
@@ -407,21 +394,21 @@ def ivf_cosine_topk(
     # TakeOrderedAndProject (orderBy+limit fuses — no full sort): a
     # deterministic bounded sample regardless of partitioning
     sample_pdf = (
-        corpus.select(id_col, emb_col).orderBy(id_col).limit(sample_cap).toPandas()
+        corpus.select("vec_id", "embedding").orderBy("vec_id").limit(4096).toPandas()
     )
-    sample = np.array([np.asarray(v, dtype="float64") for v in sample_pdf[emb_col]])
-    cent = _train_centroids(sample, n_clusters, seed)
+    sample = np.array([np.asarray(v, dtype="float64") for v in sample_pdf["embedding"]])
+    cent = _train_centroids(sample, n_clusters, SEED)
 
     # assignment matmul + norm HOFs run at the corpus's split count
     corpus = widen_if_narrow_scan(corpus)
     c = ivf_assign(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("c_emb"),
-                      _norm(F.col(emb_col)).alias("c_nrm")),
+        corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"),
+                      _norm(F.col("embedding")).alias("c_nrm")),
         cent, "c_emb",
     )
     q = _probe_clusters(
-        queries.select(F.col(id_col).alias("query_id"), F.col(emb_col).alias("q_emb"),
-                       _norm(F.col(emb_col)).alias("q_nrm")),
+        queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
+                       _norm(F.col("embedding")).alias("q_nrm")),
         cent, nprobe, "q_emb",
     ).select("query_id", "q_emb", "q_nrm", "cluster")
     cand = c.join(F.broadcast(q), "cluster").filter(
@@ -461,32 +448,29 @@ def _bucket_table(
     return tables
 
 
+NEAR_DUP_MAX_BUCKET = 2000
+
+
 def embedding_near_dup(
     df: DataFrame,
     dim: int,
     threshold: float = 0.95,
-    n_planes: int = 10,
-    n_tables: int = 4,
-    seed: int = 42,
-    max_bucket: int = 2000,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """Near-duplicate vector pairs (cosine ≥ threshold): candidates from
-    ``n_tables`` LSH tables, exact cosine verify, ``id_a < id_b``.
+    4 LSH tables of 10 planes, exact cosine verify, ``id_a < id_b``.
 
-    Skew guard: a bucket larger than ``max_bucket`` is EXCLUDED from
+    Skew guard: a bucket larger than ``NEAR_DUP_MAX_BUCKET`` is EXCLUDED from
     candidate generation in that table (its pairs are still found by any
     other table where they don't land in an oversized bucket) — one
     boilerplate-dense bucket can no longer go quadratic.
     Multi-table also recovers recall the single-table form lost (a true
     pair only needs to share a bucket in ≥1 table).
     """
-    tables = _bucket_table(df, dim, n_planes, n_tables, seed, id_col, emb_col)
+    tables = _bucket_table(df, dim, 10, 4, SEED)
     w = Window.partitionBy("table", "bucket")
     bounded = (
         tables.withColumn("_bsz", F.count(F.lit(1)).over(w))
-        .filter(F.col("_bsz") <= max_bucket)
+        .filter(F.col("_bsz") <= NEAR_DUP_MAX_BUCKET)
         .drop("_bsz")
     )
     l, r = bounded.alias("l"), bounded.alias("r")
@@ -537,10 +521,7 @@ def kmeans_clusters(
     df: DataFrame,
     k: int = 10,
     iters: int = 4,
-    seed: int = 42,
-    sample_cap: int = 1024,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
+    seed: int = SEED,
 ) -> DataFrame:
     """Full-corpus distributed Lloyd k-means (spherical: cosine
     assignment, unit-normalized centroids) → ``(id, cluster)``.
@@ -559,27 +540,27 @@ def kmeans_clusters(
     driver (tiny) for the next broadcast.  Empty clusters keep their
     previous centroid.
 
-    Deterministic end-to-end: init from the ``sample_cap`` smallest ids
+    Deterministic end-to-end: init from the 1024 smallest ids
     (seeded choice), float64 centroid math on the driver, argmax ties
     to the lowest cluster — an independent numpy implementation over
     the same rows reproduces the assignment exactly (the stored-golden
     oracle does).
     """
     sample_rows = (
-        df.select(id_col, emb_col)
-        .orderBy(id_col)
-        .limit(sample_cap)
+        df.select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .limit(1024)
         .collect()
     )
     sample = np.array([r[1] for r in sample_rows], dtype="float64")
     cent = kmeans_init_centroids(sample, k, seed)
     # every Lloyd pass re-reads this: spread a small-split scan so the
     # assignment matmul uses the whole cluster (no-op when well-split)
-    base = widen_if_narrow_scan(df.select(id_col, emb_col))
+    base = widen_if_narrow_scan(df.select("vec_id", "embedding"))
     for _ in range(iters):
-        assigned = ivf_assign(base, cent, emb_col=emb_col, out_col="cluster")
+        assigned = ivf_assign(base, cent)
         q = assigned.select(
-            "cluster", F.posexplode(emb_col).alias("pos", "v")
+            "cluster", F.posexplode("embedding").alias("pos", "v")
         ).select(
             "cluster",
             "pos",
@@ -605,19 +586,15 @@ def kmeans_clusters(
                 if nn > 0:
                     new[c] = m / nn
         cent = new
-    return ivf_assign(base, cent, emb_col=emb_col, out_col="cluster").select(
-        F.col(id_col), F.col("cluster").cast("int").alias("cluster")
+    return ivf_assign(base, cent).select(
+        F.col("vec_id"), F.col("cluster").cast("int").alias("cluster")
     )
 
 
 def semdedup(
     df: DataFrame,
     k: int = 10,
-    iters: int = 4,
-    seed: int = 42,
     threshold: float = 0.35,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023): spherical
     k-means over the embedding space (:func:`kmeans_clusters`,
@@ -636,24 +613,24 @@ def semdedup(
     flag attach is a broadcast-able left join against that small set.
     """
     clusters = kmeans_clusters(
-        df, k=k, iters=iters, seed=seed, id_col=id_col, emb_col=emb_col
+        df, k=k
     )
     # (id, cluster) is output-sized and narrow; materialize it once so
     # the two pair sides + the final flag join don't each re-run the
     # full-corpus centroid-assignment matmul
     clusters = clusters.localCheckpoint(eager=True)
-    withc = df.select(id_col, emb_col).join(clusters, id_col)
+    withc = df.select("vec_id", "embedding").join(clusters, "vec_id")
     a = withc.select(
         F.col("cluster"),
-        F.col(id_col).alias("id_a"),
-        F.col(emb_col).alias("_ea"),
-        _norm(F.col(emb_col)).alias("_na"),
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("_ea"),
+        _norm(F.col("embedding")).alias("_na"),
     )
     b = withc.select(
         F.col("cluster").alias("_cb"),
-        F.col(id_col).alias("id_b"),
-        F.col(emb_col).alias("_eb"),
-        _norm(F.col(emb_col)).alias("_nb"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("_eb"),
+        _norm(F.col("embedding")).alias("_nb"),
     )
     # try_divide: a zero-norm vector gets NULL cosine (kept) instead of
     # an ANSI-mode DIVIDE_BY_ZERO job abort — matching the numpy golden,
@@ -667,12 +644,12 @@ def semdedup(
             (F.col("cluster") == F.col("_cb")) & (F.col("id_a") < F.col("id_b")),
         )
         .filter(cos >= threshold)
-        .select(F.col("id_b").alias(id_col))
+        .select(F.col("id_b").alias("vec_id"))
         .distinct()
         .withColumn("_dup", F.lit(True))
     )
-    return clusters.join(dups, id_col, "left_outer").select(
-        id_col,
+    return clusters.join(dups, "vec_id", "left_outer").select(
+        "vec_id",
         "cluster",
         F.coalesce(~F.col("_dup"), F.lit(True)).alias("keep"),
     )
@@ -684,10 +661,6 @@ def ivf_join_topk(
     k: int = 10,
     n_clusters: int = 16,
     nprobe: int = 2,
-    seed: int = 42,
-    sample_cap: int = 4096,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """Approximate all-pairs kNN *join*: top-``k`` cosine neighbors for
     EVERY corpus row, large-to-large (neither side broadcast — the
@@ -712,9 +685,7 @@ def ivf_join_topk(
     reproducible on any partitioning, which is what lets a stored
     independent golden gate it.
     """
-    cand = _ivf_join_candidates(
-        df, n_clusters, nprobe, seed, sample_cap, id_col, emb_col
-    )
+    cand = _ivf_join_candidates(df, n_clusters, nprobe)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
@@ -726,25 +697,19 @@ def ivf_join_topk(
 
 
 def _ivf_join_candidates(
-    df: DataFrame,
-    n_clusters: int,
-    nprobe: int,
-    seed: int,
-    sample_cap: int,
-    id_col: str,
-    emb_col: str,
-    carry: tuple = (),
+    df: DataFrame, n_clusters: int, nprobe: int, carry: tuple = ()
 ) -> DataFrame:
     """Shared candidate stage of the large-to-large IVF joins: train
-    centroids on a bounded ordered sample, assign + probe both sides,
+    centroids on a bounded ordered sample (the 4096 smallest ids),
+    assign + probe both sides,
     shuffle-hash-join on cluster, score exact cosine.  ``carry`` columns
     ride along both sides as ``q_<col>`` / ``c_<col>`` (how
     :func:`hard_negatives` gets labels onto the pair)."""
     sample_pdf = (
-        df.select(id_col, emb_col).orderBy(id_col).limit(sample_cap).toPandas()
+        df.select("vec_id", "embedding").orderBy("vec_id").limit(4096).toPandas()
     )
-    sample = np.array([np.asarray(v, dtype="float64") for v in sample_pdf[emb_col]])
-    cent = _train_centroids(sample, n_clusters, seed)
+    sample = np.array([np.asarray(v, dtype="float64") for v in sample_pdf["embedding"]])
+    cent = _train_centroids(sample, n_clusters, SEED)
 
     # both sides' matmuls + norm HOFs run at the input's split count
     df = widen_if_narrow_scan(df)
@@ -754,18 +719,18 @@ def _ivf_join_candidates(
     # candidates); same expression, same doubles, bit-identical cosine
     c = ivf_assign(
         df.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(emb_col).alias("c_emb"),
-            _norm(F.col(emb_col)).alias("c_nrm"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("c_emb"),
+            _norm(F.col("embedding")).alias("c_nrm"),
             *[F.col(x).alias(f"c_{x}") for x in carry],
         ),
         cent, "c_emb",
     )
     q = _probe_clusters(
         df.select(
-            F.col(id_col).alias("query_id"),
-            F.col(emb_col).alias("q_emb"),
-            _norm(F.col(emb_col)).alias("q_nrm"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_emb"),
+            _norm(F.col("embedding")).alias("q_nrm"),
             *[F.col(x).alias(f"q_{x}") for x in carry],
         ),
         cent, nprobe, "q_emb",
@@ -783,10 +748,6 @@ def hard_negatives(
     k: int = 5,
     n_clusters: int = 16,
     nprobe: int = 2,
-    seed: int = 42,
-    sample_cap: int = 4096,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
     label_col: str = "label",
 ) -> DataFrame:
     """Hard-negative mining for contrastive/embedding training: for
@@ -802,10 +763,7 @@ def hard_negatives(
     cluster-keyed shuffle join, C ≈ √(N·nprobe), rank ties to the
     lowest neighbor_id).
     """
-    cand = _ivf_join_candidates(
-        df, n_clusters, nprobe, seed, sample_cap, id_col, emb_col,
-        carry=(label_col,),
-    )
+    cand = _ivf_join_candidates(df, n_clusters, nprobe, carry=(label_col,))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
@@ -830,11 +788,6 @@ def bitext_margin_mine(
     threshold: float = 1.0,
     n_clusters: int = 16,
     nprobe: int = 2,
-    seed: int = 42,
-    sample_cap: int = 4096,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    lang_col: str = "lang",
 ) -> DataFrame:
     """Margin-based bitext mining (Artetxe & Schwenk 2019, the
     CCMatrix/LASER parallel-corpus miner): for every document, its best
@@ -865,9 +818,7 @@ def bitext_margin_mine(
     neighborhoods), drop out.
     """
     knn = hard_negatives(
-        df, k=k, n_clusters=n_clusters, nprobe=nprobe, seed=seed,
-        sample_cap=sample_cap, id_col=id_col, emb_col=emb_col,
-        label_col=lang_col,
+        df, k=k, n_clusters=n_clusters, nprobe=nprobe, label_col="lang",
     )
     scored = knn.select(
         "query_id", "query_label", "neighbor_id", "cosine",
@@ -943,20 +894,15 @@ def pq_train(
     df: DataFrame,
     m: int = 8,
     k_sub: int = 16,
-    iters: int = 10,
-    seed: int = 42,
-    sample_cap: int = 1024,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> np.ndarray:
     """Train an ``(m, k_sub, dim/m)`` product-quantization codebook on a
     bounded driver-side sample (the standard PQ recipe — training data
-    never exceeds ``sample_cap`` regardless of corpus size, exactly the
+    never exceeds 1024 rows regardless of corpus size, exactly the
     IVF ``_train_centroids`` justification).
 
     Deterministic spec (replicated by the stored-golden oracle):
-    sample = the ``sample_cap`` smallest ids in id order, float64;
-    per subspace ``j``: seeded init ``RandomState(seed + j)`` choice of
+    sample = the 1024 smallest ids in id order, float64;
+    per subspace ``j``: seeded init ``RandomState(SEED + j)`` choice of
     ``k_sub`` distinct sample rows in sorted index order, then plain-L2
     Lloyd with squared distances computed as ``x²+c²−2x·c`` (the exact
     formula matters: argmin near-ties must break identically in any
@@ -964,7 +910,7 @@ def pq_train(
     re-seeded from ``rng.randint``.
     """
     sample_rows = (
-        df.select(id_col, emb_col).orderBy(id_col).limit(sample_cap).collect()
+        df.select("vec_id", "embedding").orderBy("vec_id").limit(1024).collect()
     )
     sample = np.array([r[1] for r in sample_rows], dtype="float64")
     dim = sample.shape[1]
@@ -974,10 +920,10 @@ def pq_train(
     books = np.empty((m, k_sub, dsub), dtype="float64")
     for j in range(m):
         sub = sample[:, j * dsub : (j + 1) * dsub]
-        rng = np.random.RandomState(seed + j)
+        rng = np.random.RandomState(SEED + j)
         idx = rng.choice(len(sub), size=min(k_sub, len(sub)), replace=False)
         cent = sub[np.sort(idx)].copy()
-        for _ in range(iters):
+        for _ in range(10):
             d2 = (
                 (sub * sub).sum(axis=1, keepdims=True)
                 + (cent * cent).sum(axis=1)
@@ -997,8 +943,6 @@ def pq_train(
 def pq_encode(
     df: DataFrame,
     codebooks: np.ndarray,
-    emb_col: str = "embedding",
-    out_col: str = "codes",
 ) -> DataFrame:
     """Attach the ``m`` nearest-sub-centroid codes per row.
 
@@ -1028,7 +972,7 @@ def pq_encode(
             codes[:, j] = d2.argmin(axis=1).astype("int32")
         return pd.Series(list(codes))
 
-    return df.withColumn(out_col, _enc(F.col(emb_col)))
+    return df.withColumn("codes", _enc(F.col("embedding")))
 
 
 def pq_topk(
@@ -1036,8 +980,6 @@ def pq_topk(
     queries: DataFrame,
     codebooks: np.ndarray,
     k: int = 10,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k by asymmetric distance computation (ADC):
     corpus rows are scanned as PQ codes only; per query a distance
@@ -1058,7 +1000,7 @@ def pq_topk(
     """
     books = np.asarray(codebooks, dtype="float64")
     m, k_sub, dsub = books.shape
-    qrows = queries.select(id_col, emb_col).orderBy(id_col).collect()
+    qrows = queries.select("vec_id", "embedding").orderBy("vec_id").collect()
     q_ids = np.array([r[0] for r in qrows], dtype="int64")
     Q = np.array([np.asarray(r[1], dtype="float64") for r in qrows])
     lut = np.empty((len(q_ids), m, k_sub), dtype="float64")
@@ -1074,8 +1016,8 @@ def pq_topk(
     blut = sess.sparkContext.broadcast((q_ids, lut))
 
     encoded = pq_encode(
-        widen_if_narrow_scan(corpus), books, emb_col=emb_col, out_col="codes"
-    ).select(F.col(id_col).alias("neighbor_id"), "codes")
+        widen_if_narrow_scan(corpus), books
+    ).select(F.col("vec_id").alias("neighbor_id"), "codes")
 
     def _scan(batches):
         ids_b, lut_b = blut.value
@@ -1156,11 +1098,6 @@ def ivfpq_train(
     n_clusters: int = 8,
     m: int = 8,
     k_sub: int = 16,
-    iters: int = 10,
-    seed: int = 42,
-    sample_cap: int = 1024,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> tuple:
     """IVFADC training (Jégou et al. 2011 §IV): a coarse L2 quantizer
     over full vectors plus product-quantization codebooks over the
@@ -1169,18 +1106,18 @@ def ivfpq_train(
     raw-vector PQ.  Bounded driver-side sample, like every trainer
     here.  Returns ``(coarse (C, dim), books (m, k_sub, dim/m))``."""
     sample_rows = (
-        df.select(id_col, emb_col).orderBy(id_col).limit(sample_cap).collect()
+        df.select("vec_id", "embedding").orderBy("vec_id").limit(1024).collect()
     )
     sample = np.array([r[1] for r in sample_rows], dtype="float64")
     dim = sample.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     dsub = dim // m
-    coarse = _lloyd_l2(sample, n_clusters, seed, iters)
+    coarse = _lloyd_l2(sample, n_clusters, SEED, 10)
     resid = sample - coarse[_l2_argmin(sample, coarse)]
     books = np.empty((m, k_sub, dsub), dtype="float64")
     for j in range(m):
-        books[j] = _lloyd_l2(resid[:, j * dsub : (j + 1) * dsub], k_sub, seed + 1 + j, iters)
+        books[j] = _lloyd_l2(resid[:, j * dsub : (j + 1) * dsub], k_sub, SEED + 1 + j, 10)
     return coarse, books
 
 
@@ -1188,11 +1125,9 @@ def ivfpq_encode(
     df: DataFrame,
     coarse: np.ndarray,
     books: np.ndarray,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """One narrow Arrow pass: coarse-assign each row (L2, ties low),
-    PQ-encode its residual.  Output ``(<id>, cluster, codes)`` — the
+    PQ-encode its residual.  Output ``(vec_id, cluster, codes)`` — the
     inverted-file-with-codes table a 100 TB deployment persists: m
     bytes of code + 4 of cluster per vector, partitionable BY cluster
     so a probe reads only its lists."""
@@ -1206,7 +1141,7 @@ def ivfpq_encode(
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = _embs_matrix(pdf[emb_col].to_numpy())
+            X = _embs_matrix(pdf["embedding"].to_numpy())
             cl = _l2_argmin(X, co)
             R = X - co[cl]
             codes = np.empty((len(X), m), dtype="int32")
@@ -1214,13 +1149,13 @@ def ivfpq_encode(
                 codes[:, j] = _l2_argmin(R[:, j * dsub : (j + 1) * dsub], cb[j]).astype("int32")
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "vec_id": pdf["vec_id"],
                     "cluster": cl.astype("int32"),
                     "codes": list(codes),
                 }
             )
 
-    return df.mapInPandas(_scan, f"{id_col} long, cluster int, codes array<int>")
+    return df.mapInPandas(_scan, "vec_id long, cluster int, codes array<int>")
 
 
 def ivfpq_topk(
@@ -1231,11 +1166,6 @@ def ivfpq_topk(
     nprobe: int = 4,
     m: int = 8,
     k_sub: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    model: tuple | None = None,
-    encoded: DataFrame | None = None,
 ) -> DataFrame:
     """IVFADC search: probe the ``nprobe`` nearest coarse cells per
     query, ADC-scan ONLY rows in probed cells with a per-(query, cell)
@@ -1247,25 +1177,10 @@ def ivfpq_topk(
     Queries are the bounded side by contract (collected to build the
     Q·nprobe LUTs).  Output ``(query_id, neighbor_id, adc_dist, rank)``
     with HALF_UP 6-decimal rounding; self-matches excluded.
-
-    A deployment trains once and encodes once: pass ``model=(coarse,
-    books)`` from :func:`ivfpq_train` and ``encoded`` from
-    :func:`ivfpq_encode` to search a persisted inverted-file table
-    without re-touching raw vectors (the amortized 100 TB path; the
-    defaults re-derive both from ``corpus`` for one-shot use).
     """
-    if model is None:
-        coarse, books = ivfpq_train(
-            corpus, n_clusters=n_clusters, m=m, k_sub=k_sub, seed=seed,
-            id_col=id_col, emb_col=emb_col,
-        )
-    else:
-        coarse, books = model
-        coarse = np.asarray(coarse, dtype="float64")
-        books = np.asarray(books, dtype="float64")
-        n_clusters = len(coarse)
+    coarse, books = ivfpq_train(corpus, n_clusters=n_clusters, m=m, k_sub=k_sub)
     mm, ksub, dsub = books.shape
-    qrows = queries.select(id_col, emb_col).orderBy(id_col).collect()
+    qrows = queries.select("vec_id", "embedding").orderBy("vec_id").collect()
     q_ids = np.array([r[0] for r in qrows], dtype="int64")
     Q = np.array([np.asarray(r[1], dtype="float64") for r in qrows])
     # deterministic probe order: stable argsort on (d2, cluster id)
@@ -1289,10 +1204,7 @@ def ivfpq_topk(
     sess = corpus.sparkSession
     bl = sess.sparkContext.broadcast((q_ids, probes, luts))
 
-    if encoded is None:
-        encoded = ivfpq_encode(
-            widen_if_narrow_scan(corpus), coarse, books, id_col=id_col, emb_col=emb_col
-        )
+    encoded = ivfpq_encode(widen_if_narrow_scan(corpus), coarse, books)
     # JVM-side cell pruning BEFORE the Arrow scan: only rows in some
     # query's probed cells can contribute, so unprobed clusters are
     # dropped by a codegen filter (and, on an encoded table persisted
@@ -1301,7 +1213,7 @@ def ivfpq_topk(
     # python-side skipping)
     probed_cells = sorted({int(c) for row in probes for c in row})
     encoded = encoded.select(
-        F.col(id_col).alias("neighbor_id"), "cluster", "codes"
+        F.col("vec_id").alias("neighbor_id"), "cluster", "codes"
     ).filter(F.col("cluster").isin(probed_cells))
 
     def _scan(batches):
@@ -1353,8 +1265,6 @@ def ivfpq_topk(
 
 def quantize_int8(
     df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """Symmetric per-vector max-abs int8 quantization — the cheapest
     embedding-compression tier (4·dim bytes → dim bytes, no training,
@@ -1375,9 +1285,9 @@ def quantize_int8(
     inputs (the driver oracle compares them in floor fixed-point,
     which never straddles a decimal-rounding tie).
     """
-    xs = F.transform(F.col(emb_col), lambda v: v.cast("double"))
+    xs = F.transform(F.col("embedding"), lambda v: v.cast("double"))
     maxabs = F.aggregate(xs, F.lit(0.0), lambda acc, v: F.greatest(acc, F.abs(v)))
-    out = df.select(F.col(id_col), xs.alias("_xs"), maxabs.alias("_maxabs"))
+    out = df.select(F.col("vec_id"), xs.alias("_xs"), maxabs.alias("_maxabs"))
     scale = F.col("_maxabs") / F.lit(127.0)
     codes = F.when(
         F.col("_maxabs") == 0.0,
@@ -1398,7 +1308,7 @@ def quantize_int8(
             lambda acc, v: acc + v,
         )
     )
-    return out.select(id_col, "scale", "codes", err.alias("recon_err"))
+    return out.select("vec_id", "scale", "codes", err.alias("recon_err"))
 
 
 # ---------------------------------------------------------------------------
@@ -1458,7 +1368,6 @@ def numpy_pca_from_moments(
 def pca_fit(
     df: DataFrame,
     n_components: int = 4,
-    emb_col: str = "embedding",
 ):
     """Fit PCA over the corpus in ONE distributed pass → ``(mean,
     components, explained_variance_ratio)``.
@@ -1479,7 +1388,7 @@ def pca_fit(
     reproduces components and projections bit-for-bit.
     """
     base = widen_if_narrow_scan(
-        df.select(emb_col).filter(F.col(emb_col).isNotNull())
+        df.select("embedding").filter(F.col("embedding").isNotNull())
     )
     first = base.first()
     if first is None:
@@ -1491,7 +1400,7 @@ def pca_fit(
         for pdf in batches:
             out = []
             for lo in range(0, len(pdf), _PCA_CHUNK):
-                M = _embs_matrix(pdf[emb_col].iloc[lo : lo + _PCA_CHUNK].to_numpy())
+                M = _embs_matrix(pdf["embedding"].iloc[lo : lo + _PCA_CHUNK].to_numpy())
                 out.append(_pca_partial(M))
             if out:
                 yield pd.DataFrame({"g": [np.sum(out, axis=0).tolist()]})
@@ -1518,8 +1427,6 @@ def pca_project(
     df: DataFrame,
     mean: np.ndarray,
     components: np.ndarray,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """Project every row onto the fitted components → ``(id, pc
     array<double>)``.  mean/components ride as ONE broadcast variable
@@ -1544,26 +1451,22 @@ def pca_project(
                 out[i] = T[j]
         return pd.Series(out, dtype="object")
 
-    return df.select(id_col, _proj(F.col(emb_col)).alias("pc"))
+    return df.select("vec_id", _proj(F.col("embedding")).alias("pc"))
 
 
 def pca_reduce(
     df: DataFrame,
     n_components: int = 4,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """Fit-then-project composition (the one-call reducer)."""
-    mean, comps, _ = pca_fit(df, n_components, emb_col=emb_col)
-    return pca_project(df, mean, comps, id_col=id_col, emb_col=emb_col)
+    mean, comps, _ = pca_fit(df, n_components)
+    return pca_project(df, mean, comps)
 
 
 def semantic_decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
     threshold: float = 0.8,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """Semantic (embedding-space) benchmark decontamination — the
     cosine analog of ``docdedup.decontaminate``'s n-gram overlap: a
@@ -1587,15 +1490,15 @@ def semantic_decontaminate(
     """
     corpus = widen_if_narrow_scan(corpus)
     b = benchmark.select(
-        F.col(id_col).alias("bid"),
-        F.col(emb_col).alias("be"),
-        _norm(F.col(emb_col)).alias("bn"),
+        F.col("vec_id").alias("bid"),
+        F.col("embedding").alias("be"),
+        _norm(F.col("embedding")).alias("bn"),
     )
     barr = b.agg(F.collect_list(F.struct("bid", "be", "bn")).alias("_barr"))
     c = corpus.select(
-        F.col(id_col),
-        F.col(emb_col).alias("_ce"),
-        _norm(F.col(emb_col)).alias("_cn"),
+        F.col("vec_id"),
+        F.col("embedding").alias("_ce"),
+        _norm(F.col("embedding")).alias("_cn"),
     ).crossJoin(F.broadcast(barr))
 
     def score(bs):
@@ -1608,7 +1511,7 @@ def semantic_decontaminate(
 
     best = F.array_max(F.transform(F.col("_barr"), score))
     return c.select(
-        id_col,
+        "vec_id",
         best["cos"].alias("max_cosine"),
         (-best["nbid"]).alias("nearest_bench_id"),
         F.coalesce(best["cos"] >= F.lit(threshold), F.lit(False)).alias(

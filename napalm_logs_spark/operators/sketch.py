@@ -43,7 +43,7 @@ def _bucket(key: Column, d: int, width: int) -> Column:
 
 
 def count_min_sketch(
-    df: DataFrame, key_col: str = "key", *, depth: int = 4, width: int = 256
+    df: DataFrame, *, depth: int = 4, width: int = 256
 ) -> DataFrame:
     """Build the sketch: one row per non-empty (d, bucket) counter.
 
@@ -52,7 +52,7 @@ def count_min_sketch(
     partial-aggregates map-side — the only shuffle is counter-sized.
     Zero-count cells are implicit (estimation coalesces to 0).
     """
-    key = F.col(key_col)
+    key = F.col("key")
     coords = F.array(
         *[
             F.struct(
@@ -71,7 +71,6 @@ def count_min_sketch(
 def cms_estimate(
     sketch: DataFrame,
     keys: DataFrame,
-    key_col: str = "key",
     *,
     depth: int = 4,
     width: int = 256,
@@ -83,9 +82,9 @@ def cms_estimate(
     corpus estimate as the collision mass of their buckets (≥ 0), the
     classic CMS semantics.
     """
-    key = F.col(key_col)
+    key = F.col("key")
     probes = keys.select(
-        key.alias(key_col),
+        key,
         F.inline(
             F.array(
                 *[
@@ -100,7 +99,7 @@ def cms_estimate(
     )
     return (
         probes.join(F.broadcast(sketch), ["d", "bucket"], "left")
-        .groupBy(key_col)
+        .groupBy("key")
         .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("cms_est"))
     )
 
@@ -124,7 +123,7 @@ def bloom_positions(key: Column, *, k: int = 5, m: int = 1 << 18) -> Column:
 
 
 def bloom_build(
-    df: DataFrame, key_col: str = "key", *, k: int = 5, m: int = 1 << 18
+    df: DataFrame, *, k: int = 5, m: int = 1 << 18
 ) -> DataFrame:
     """Build the filter as its set-bit position table (≤ min(k·|keys|, m)
     rows).  A position table IS the sketch: union-mergeable (distinct of
@@ -132,7 +131,7 @@ def bloom_build(
     engine-portable representation of the classic bit array."""
     return (
         df.select(
-            F.explode(bloom_positions(F.col(key_col), k=k, m=m)).alias("pos")
+            F.explode(bloom_positions(F.col("key"), k=k, m=m)).alias("pos")
         )
         .distinct()
     )
@@ -141,7 +140,6 @@ def bloom_build(
 def bloom_candidates(
     bits: DataFrame,
     df: DataFrame,
-    key_col: str = "key",
     *,
     k: int = 5,
     m: int = 1 << 18,
@@ -151,13 +149,13 @@ def bloom_candidates(
     No false negatives by construction (a present key's positions are
     all set); false positives at the classic ``(1 - e^{-kn/m})^k`` rate.
     The bits table broadcasts; the probe side never shuffles."""
-    probes = df.select(key_col).distinct()
+    probes = df.select("key").distinct()
     pos = probes.select(
-        key_col, F.explode(bloom_positions(F.col(key_col), k=k, m=m)).alias("pos")
+        "key", F.explode(bloom_positions(F.col("key"), k=k, m=m)).alias("pos")
     )
     return (
         pos.join(F.broadcast(bits.withColumn("_hit", F.lit(1))), "pos", "left")
-        .groupBy(key_col)
+        .groupBy("key")
         .agg((F.count("_hit") == k).alias("bloom_candidate"))
     )
 
@@ -165,7 +163,6 @@ def bloom_candidates(
 def incremental_dedup_bloom(
     batch: DataFrame,
     history: DataFrame,
-    key_col: str = "key",
     *,
     k: int = 5,
     m: int = 1 << 18,
@@ -186,22 +183,22 @@ def incremental_dedup_bloom(
     ``kept = NOT is_dup``.  ``is_dup ⇒ bloom_candidate`` always (no
     false negatives), tested.
     """
-    bits = bloom_build(history, key_col, k=k, m=m)
-    cand = bloom_candidates(bits, batch, key_col, k=k, m=m)
-    hist_keys = history.select(key_col).distinct().withColumn(
+    bits = bloom_build(history, k=k, m=m)
+    cand = bloom_candidates(bits, batch, k=k, m=m)
+    hist_keys = history.select("key").distinct().withColumn(
         "_in_hist", F.lit(True)
     )
     verified = (
         cand.filter(F.col("bloom_candidate"))
-        .join(hist_keys, key_col, "left")
+        .join(hist_keys, "key", "left")
         .select(
-            key_col,
+            "key",
             F.coalesce(F.col("_in_hist"), F.lit(False)).alias("is_dup"),
         )
     )
     return (
-        batch.join(cand, key_col, "left")
-        .join(verified, key_col, "left")
+        batch.join(cand, "key", "left")
+        .join(verified, "key", "left")
         .select(
             *batch.columns,
             F.coalesce(F.col("bloom_candidate"), F.lit(False)).alias(
@@ -214,7 +211,7 @@ def incremental_dedup_bloom(
 
 
 def cms_vs_exact(
-    df: DataFrame, key_col: str = "key", *, depth: int = 4, width: int = 256
+    df: DataFrame, *, depth: int = 4, width: int = 256
 ) -> DataFrame:
     """Exact count vs sketch estimate per distinct key.
 
@@ -224,16 +221,15 @@ def cms_vs_exact(
     alone and skip the exact pass — this shape exists to *measure* the
     sketch against truth at test SFs.
     """
-    exact = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("exact"))
+    exact = df.groupBy("key").agg(F.count(F.lit(1)).alias("exact"))
     est = cms_estimate(
-        count_min_sketch(df, key_col, depth=depth, width=width),
-        exact.select(key_col),
-        key_col,
+        count_min_sketch(df, depth=depth, width=width),
+        exact.select("key"),
         depth=depth,
         width=width,
     )
-    return exact.join(est, key_col).select(
-        key_col,
+    return exact.join(est, "key").select(
+        "key",
         "exact",
         "cms_est",
         (F.col("cms_est") - F.col("exact")).alias("overcount"),

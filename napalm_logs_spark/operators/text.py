@@ -43,13 +43,13 @@ def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """Deterministic document-quality features: length, punctuation
     ratio, stopword ratio, mean word length.  Ratios rounded to 6dp so
     float representation is stable across engines."""
-    df = with_tokens(df, text_col)
-    n_chars = F.length(F.col(text_col))
-    n_punct = F.length(F.regexp_replace(F.col(text_col), r"[^.,;:!?]", ""))
+    df = with_tokens(df)
+    n_chars = F.length(F.col("text"))
+    n_punct = F.length(F.regexp_replace(F.col("text"), r"[^.,;:!?]", ""))
     sw = STOPWORDS["en"]
     stop_hits = F.size(
         F.filter(F.col("tokens"), lambda t: F.lower(t).isin(*sw))
@@ -76,7 +76,7 @@ def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def readability_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+def readability_scores(df: DataFrame) -> DataFrame:
     """Flesch Reading Ease + Flesch-Kincaid grade per document.
 
     The classic readability gate (used alongside Gopher/C4 rules to
@@ -93,8 +93,8 @@ def readability_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     0.39·(words/sent) + 11.8·(syll/words) − 15.59; both rounded 6dp.
     Empty documents emit NULL scores rather than fake readability.
     """
-    df = with_tokens(df, text_col)
-    low = F.lower(F.col(text_col))
+    df = with_tokens(df)
+    low = F.lower(F.col("text"))
     sentences = F.greatest(
         F.size(F.regexp_extract_all(low, F.lit(r"[.!?]+"), F.lit(0))), F.lit(1)
     )
@@ -127,7 +127,7 @@ def readability_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def char_entropy(df: DataFrame, text_col: str = "text") -> DataFrame:
+def char_entropy(df: DataFrame) -> DataFrame:
     """Character-level Shannon entropy per document (bits/char).
 
     The compressibility gate: near-zero entropy flags degenerate
@@ -145,7 +145,7 @@ def char_entropy(df: DataFrame, text_col: str = "text") -> DataFrame:
     NULL.  ``n_distinct_chars`` rides along (the cheap alphabet-size
     signal).
     """
-    cs = F.filter(F.split(F.col(text_col), ""), lambda x: F.length(x) > 0)
+    cs = F.filter(F.split(F.col("text"), ""), lambda x: F.length(x) > 0)
     df2 = df.withColumn("_cs", cs).withColumn(
         "_dch", F.sort_array(F.array_distinct(F.col("_cs")))
     )
@@ -193,7 +193,7 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.drop("tokens", *[f"_score_{c}" for c in score_cols])
 
 
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Document fingerprints:
 
     * ``fp_md5`` — md5 of the case/whitespace-normalized text (exact
@@ -201,7 +201,7 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     * ``fp_rolling`` — 63-bit polynomial rolling hash over normalized
       tokens (order-sensitive), computed JVM-side via ``F.aggregate``.
     """
-    norm = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
+    norm = F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))
     toks = F.split(norm, " ")
     # modulus 2^31-1 keeps acc*base + h < 2^63 under ANSI arithmetic
     mod = F.lit(2**31 - 1)
@@ -214,7 +214,7 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def winnow_fingerprints(
-    df: DataFrame, k: int = 8, w: int = 4, text_col: str = "text"
+    df: DataFrame, k: int = 8, w: int = 4
 ) -> DataFrame:
     """Winnowing document fingerprints (MOSS-style, Schleimer et al.
     SIGMOD'03): hash every character ``k``-gram of the normalized text,
@@ -232,7 +232,7 @@ def winnow_fingerprints(
     """
     from pyspark.sql import Window
 
-    norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
+    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
     base = df.select("doc_id", norm.alias("_n")).filter(
         F.length("_n") >= k + w - 1
     )
@@ -272,7 +272,6 @@ def winnow_pairs(
     min_shared: int = 2,
     k: int = 8,
     w: int = 4,
-    text_col: str = "text",
 ) -> DataFrame:
     """Near-duplicate / common-substring candidate pairs: documents
     sharing ≥ ``min_shared`` winnowing fingerprints (the plagiarism-
@@ -281,7 +280,7 @@ def winnow_pairs(
     the corpus — the winnowing guarantee bounds recall: any shared
     substring of length ≥ k+w-1 yields ≥1 shared fingerprint.
     """
-    fps = winnow_fingerprints(df, k=k, w=w, text_col=text_col).select(
+    fps = winnow_fingerprints(df, k=k, w=w).select(
         "doc_id", "gram_hash"
     ).distinct()
     a, b = fps.alias("a"), fps.alias("b")
@@ -305,7 +304,7 @@ URL_RE = r"https?://\S+"
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 
 
-def clean_text(df: DataFrame, text_col: str = "text") -> DataFrame:
+def clean_text(df: DataFrame) -> DataFrame:
     """Training-data scrubbing: count and strip URLs / e-mail addresses
     (the C4-style cleaning pass), entirely JVM-side.
 
@@ -313,12 +312,12 @@ def clean_text(df: DataFrame, text_col: str = "text") -> DataFrame:
     replaced by a single space, whitespace re-normalized) and
     ``clean_len``.  Deterministic, order-free, no shuffle.
     """
-    n_urls = F.size(F.regexp_extract_all(F.col(text_col), F.lit(URL_RE), F.lit(0)))
-    n_emails = F.size(F.regexp_extract_all(F.col(text_col), F.lit(EMAIL_RE), F.lit(0)))
+    n_urls = F.size(F.regexp_extract_all(F.col("text"), F.lit(URL_RE), F.lit(0)))
+    n_emails = F.size(F.regexp_extract_all(F.col("text"), F.lit(EMAIL_RE), F.lit(0)))
     cleaned = F.trim(
         F.regexp_replace(
             F.regexp_replace(
-                F.regexp_replace(F.col(text_col), URL_RE, " "),
+                F.regexp_replace(F.col("text"), URL_RE, " "),
                 EMAIL_RE, " ",
             ),
             r"\s+", " ",
@@ -335,8 +334,6 @@ def clean_text(df: DataFrame, text_col: str = "text") -> DataFrame:
 def stratified_sample(
     df: DataFrame,
     rates: dict,
-    strat_col: str = "lang",
-    id_col: str = "doc_id",
     default_rate: float = 0.0,
 ) -> DataFrame:
     """Deterministic stratified sampling for dataset mixing: keep a row
@@ -357,10 +354,10 @@ def stratified_sample(
 
     # fixed-width lexical compare: '0'+4 hash chars vs 5-char threshold
     # ('10000' = rate 1.0 exceeds every hash -> keep all)
-    u = F.concat(F.lit("0"), F.substring(F.md5(F.col(id_col).cast("string")), 1, 4))
+    u = F.concat(F.lit("0"), F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4))
     expr = F.lit(_threshold(default_rate))
     for stratum, rate in sorted(rates.items()):
-        expr = F.when(F.col(strat_col) == stratum, F.lit(_threshold(rate))).otherwise(expr)
+        expr = F.when(F.col("lang") == stratum, F.lit(_threshold(rate))).otherwise(expr)
     return df.filter(u < expr)
 
 
@@ -411,8 +408,6 @@ def chunk_windows(
     df: DataFrame,
     size: int = 64,
     stride: int = 48,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Sliding-window chunking — the retrieval/embedding-index cut a RAG
     or embedding pipeline applies per document: overlapping windows of
@@ -432,12 +427,12 @@ def chunk_windows(
     """
     if size <= 0 or stride <= 0 or stride > size:
         raise ValueError("need 0 < stride <= size")
-    toks = F.split(F.trim(F.col(text_col)), TOKEN_SPLIT)
+    toks = F.split(F.trim(F.col("text")), TOKEN_SPLIT)
     base = (
         df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.when(
-                F.length(F.trim(F.col(text_col))) == 0,
+                F.length(F.trim(F.col("text"))) == 0,
                 F.array().cast("array<string>"),
             )
             .otherwise(toks)
@@ -474,7 +469,7 @@ def chunk_windows(
     start = F.col("chunk_idx") * stride
     chunk = F.slice(F.col("_t"), (start + 1).cast("int"), size)
     return out.select(
-        id_col,
+        "doc_id",
         "chunk_idx",
         start.cast("long").alias("chunk_start"),
         F.size(chunk).cast("long").alias("chunk_len"),
@@ -485,7 +480,6 @@ def chunk_windows(
 def length_bucket_plan(
     df: DataFrame,
     max_cap: int = 131072,
-    text_col: str = "text",
 ) -> DataFrame:
     """Length-bucketed batch planning — the padding-waste accounting a
     dynamic-batching data loader does before training: each document
@@ -509,8 +503,8 @@ def length_bucket_plan(
     ladder = "CASE " + " ".join(
         f"WHEN _n_tok <= {p} THEN {p}" for p in caps
     ) + f" ELSE {max_cap} END"
-    toks = F.split(F.trim(F.col(text_col)), TOKEN_SPLIT)
-    n_tok = F.when(F.length(F.trim(F.col(text_col))) == 0, F.lit(0)).otherwise(
+    toks = F.split(F.trim(F.col("text")), TOKEN_SPLIT)
+    n_tok = F.when(F.length(F.trim(F.col("text"))) == 0, F.lit(0)).otherwise(
         F.size(toks)
     )
     base = (
@@ -534,7 +528,7 @@ def length_bucket_plan(
     )
 
 
-def tf_idf_top_terms(df: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame:
+def tf_idf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Top-k terms per document by smoothed TF-IDF.
 
     tf = term count in doc; idf = ln((1+N)/(1+df)) + 1 (sklearn-style
@@ -543,7 +537,7 @@ def tf_idf_top_terms(df: DataFrame, k: int = 3, text_col: str = "text") -> DataF
     """
     from pyspark.sql import Window
 
-    toks = F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT)
+    toks = F.split(F.trim(F.lower(F.col("text"))), TOKEN_SPLIT)
     terms = df.select("doc_id", F.explode(toks).alias("term")).filter(
         F.length("term") > 0
     )
@@ -573,7 +567,7 @@ def tf_idf_top_terms(df: DataFrame, k: int = 3, text_col: str = "text") -> DataF
     )
 
 
-def repetition_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_scores(df: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals (Rae et al. 2021,
     App. A1.1), adapted to word n-grams for single-line documents:
 
@@ -589,7 +583,7 @@ def repetition_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     bounded by the corpus max-doc-len, not by corpus size).
     """
     toks = F.split(
-        F.trim(F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))), r"\s+"
+        F.trim(F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))), r"\s+"
     )
     # generator barriers (see docdedup.shingle_sets): evaluate the token
     # and bigram arrays once each instead of once per referencing column
@@ -644,8 +638,6 @@ def temperature_mix(
     df: DataFrame,
     temperature: float = 0.7,
     target_frac: float = 0.5,
-    strat_col: str = "lang",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Temperature-based dataset mixing (the multilingual-pretraining
     recipe, mC4/XLM-R style): sample stratum *s* with probability
@@ -661,13 +653,13 @@ def temperature_mix(
 
     Output: the kept rows plus their stratum's ``mix_rate``.
     """
-    counts = df.groupBy(strat_col).agg(F.count(F.lit(1)).alias("n_s"))
+    counts = df.groupBy("lang").agg(F.count(F.lit(1)).alias("n_s"))
     tot = counts.agg(
         F.sum("n_s").alias("n_total"),
         F.sum(F.pow(F.col("n_s").cast("double"), F.lit(temperature))).alias("z"),
     )
     rates = counts.crossJoin(tot).select(
-        strat_col,
+        "lang",
         F.round(
             F.least(
                 F.lit(1.0),
@@ -691,8 +683,8 @@ def temperature_mix(
         5,
         "0",
     )
-    joined = df.join(F.broadcast(rates.withColumn("_thr", thr)), strat_col)
-    u = F.concat(F.lit("0"), F.substring(F.md5(F.col(id_col).cast("string")), 1, 4))
+    joined = df.join(F.broadcast(rates.withColumn("_thr", thr)), "lang")
+    u = F.concat(F.lit("0"), F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4))
     return joined.filter(u < F.col("_thr")).drop("_thr")
 
 
@@ -817,8 +809,7 @@ def pii_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("redacted", F.col(cur)).drop(*tmp_cols)
 
 
-def unigram_logprob(df: DataFrame, text_col: str = "text",
-                    buckets: bool = False) -> DataFrame:
+def unigram_logprob(df: DataFrame, buckets: bool = False) -> DataFrame:
     """CCNet-style corpus-perplexity quality score (Wenzek et al. 2020,
     re-expressed without KenLM): train a unigram model ON the corpus
     itself (token → global count) and score each document by its mean
@@ -849,7 +840,7 @@ def unigram_logprob(df: DataFrame, text_col: str = "text",
     semantics with a structurally bounded memory footprint.
     """
     toks = F.split(
-        F.trim(F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))), TOKEN_SPLIT
+        F.trim(F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))), TOKEN_SPLIT
     )
     t = (
         df.select("doc_id", toks.alias("t"))
@@ -927,8 +918,7 @@ def unigram_logprob(df: DataFrame, text_col: str = "text",
     )
 
 
-def bigram_logprob(df: DataFrame, text_col: str = "text",
-                   alpha: float = 0.1, lam: float = 0.75) -> DataFrame:
+def bigram_logprob(df: DataFrame) -> DataFrame:
     """Interpolated bigram language-model surprisal per document — the
     Markov upgrade of :func:`unigram_logprob` (CCNet's actual filter is
     a KenLM n-gram model, Wenzek et al. 2020 §3.3; a smoothed bigram is
@@ -936,7 +926,8 @@ def bigram_logprob(df: DataFrame, text_col: str = "text",
     unigram scorer).
 
     Model: ``p(w2|w1) = λ·(C₂(w1,w2)+α)/(C₁(w1)+α·V) + (1−λ)·C₁(w2)/N``
-    (add-α conditional interpolated with the unigram), scored as
+    (add-α conditional interpolated with the unigram; α = 0.1,
+    λ = 0.75), scored as
     ``bits_per_bigram = round(−mean(log₂ p), 6)`` over a document's
     adjacent token pairs.  Tokenization is identical to the unigram
     scorer (lowercase, whitespace-normalize, split).  Documents with
@@ -952,8 +943,9 @@ def bigram_logprob(df: DataFrame, text_col: str = "text",
     broadcast crossJoin — no eager count() at plan-build time.  Final
     doc_id groupBy is output-sized.
     """
+    alpha, lam = 0.1, 0.75
     toks_all = F.split(
-        F.trim(F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))),
+        F.trim(F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))),
         TOKEN_SPLIT,
     )
     toks = F.filter(toks_all, lambda x: F.length(x) > 0)
@@ -1008,17 +1000,18 @@ def bigram_logprob(df: DataFrame, text_col: str = "text",
 
 
 _DSIR_HEX = "0123456789abcdef"
+DSIR_N, DSIR_BUCKETS = 2, 4096  # word bigrams, first 3 md5 hex digits
 
 
-def _dsir_grams(df: DataFrame, text_col: str, n: int, carry=()) -> DataFrame:
-    """(doc_id, bucket, *carry) — one row per word n-gram occurrence
+def _dsir_grams(df: DataFrame) -> DataFrame:
+    """(doc_id, bucket, _tgt) — one row per word n-gram occurrence
     (duplicates kept: DSIR features are counts), bucket = first 3 hex
     chars of md5(gram) read base-16 (0..4095).  The hex-digit
     arithmetic uses only ``instr``/``substring``, so any md5-capable
-    engine (the DuckDB oracle included) computes bit-identical buckets.
-    ``carry`` names per-doc columns to keep alongside."""
+    engine (the DuckDB oracle included) computes bit-identical buckets."""
+    n = DSIR_N
     toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT),
+        F.split(F.trim(F.lower(F.col("text"))), TOKEN_SPLIT),
         lambda x: F.length(x) > 0,
     )
     grams = F.when(
@@ -1028,7 +1021,7 @@ def _dsir_grams(df: DataFrame, text_col: str, n: int, carry=()) -> DataFrame:
             lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    ex = df.select("doc_id", *carry, F.explode(grams).alias("gram"))
+    ex = df.select("doc_id", "_tgt", F.explode(grams).alias("gram"))
     dig = (
         "(instr('0123456789abcdef', substring(_h3, {i}, 1)) - 1)"
     )
@@ -1036,80 +1029,56 @@ def _dsir_grams(df: DataFrame, text_col: str, n: int, carry=()) -> DataFrame:
         f"{dig.format(i=1)} * 256 + {dig.format(i=2)} * 16 + {dig.format(i=3)}"
     )
     return ex.withColumn("_h3", F.substring(F.md5("gram"), 1, 3)).select(
-        "doc_id", bucket.cast("int").alias("bucket"), *carry
+        "doc_id", bucket.cast("int").alias("bucket"), "_tgt"
     )
 
 
-def dsir_importance(
-    df: DataFrame,
-    target: DataFrame | None = None,
-    text_col: str = "text",
-    n: int = 2,
-    n_buckets: int = 4096,
-    alpha: float = 1.0,
-    target_filter=None,
-) -> DataFrame:
+def dsir_importance(df: DataFrame, target_filter) -> DataFrame:
     """DSIR-style hashed n-gram importance weights (Xie et al. 2023):
     score every document in ``df`` by how much more likely its hashed
     word-n-gram features are under the target domain sample than
     under the raw corpus — ``dsir_logweight`` = Σ_grams ln(p_target /
-    p_raw) with add-α smoothed bucket distributions.  Documents with
-    fewer than ``n`` words have no features and are omitted.
+    p_raw) with add-one smoothed bucket distributions over
+    ``DSIR_BUCKETS`` hashed word ``DSIR_N``-grams.  Documents with fewer
+    than ``DSIR_N`` words have no features and are omitted.
 
-    The target domain is EITHER a separate ``target`` DataFrame OR —
-    when the target is a subset of ``df`` itself (the common "docs that
-    look like Wikipedia" setup) — a ``target_filter`` Column predicate
-    on ``df``'s rows.  The predicate form is the scale path: the target
-    histogram is derived from the same per-doc gram aggregate the
-    scoring reads, so the corpus is tokenized+hashed exactly ONCE and
-    no second scan, explode, or join exists anywhere in the plan.
+    The target domain is a subset of ``df`` itself (the common "docs
+    that look like Wikipedia" setup), given as the ``target_filter``
+    Column predicate on ``df``'s rows.  The target histogram is derived
+    from the same per-doc gram aggregate the scoring reads, so the
+    corpus is tokenized+hashed exactly ONCE and no second scan,
+    explode, or join exists anywhere in the plan.
 
-    Scale shape: both bucket-count tables are bounded by ``n_buckets``
+    Scale shape: both bucket-count tables are bounded by ``DSIR_BUCKETS``
     rows → broadcast joins; per-doc scoring is one explode + map-side-
     combined groupBy(doc_id), so the shuffle carries one row per (doc,
     bucket-partial) — output-sized, not token-sized.  The 1-row totals
     ride broadcast crossJoins (no eager count job).
     """
-    if (target is None) == (target_filter is None):
-        raise ValueError("pass exactly one of target / target_filter")
     # the md5 gram pass is CPU-heavy and narrow: spread a small-split
     # scan over the cluster (no-op on a well-split 100 TB input)
     df = widen_if_narrow_scan(df)
-    if target is not None:
-        target = widen_if_narrow_scan(target)
     # per-doc bucket counts FIRST: the md5+explode gram pass is the
     # expensive scan, and all of its consumers (the corpus bucket
-    # histogram, the target histogram in predicate form, and the
-    # per-doc scoring) read the SAME (doc_id, bucket) aggregate
-    if target_filter is not None:
-        raw = (
-            _dsir_grams(
-                df.withColumn("_tgt", target_filter), text_col, n, carry=("_tgt",)
-            )
-            .groupBy("doc_id", "bucket")
-            # _tgt is constant per doc_id: any() ≡ the doc's flag
-            .agg(F.count(F.lit(1)).alias("_c"), F.any_value("_tgt").alias("_t"))
-        )
-    else:
-        raw = (
-            _dsir_grams(df, text_col, n)
-            .groupBy("doc_id", "bucket")
-            .agg(F.count(F.lit(1)).alias("_c"))
-        )
-        tgt = _dsir_grams(target, text_col, n)
-        tgt_counts = tgt.groupBy("bucket").agg(F.count(F.lit(1)).alias("_ct"))
+    # histogram, the target histogram, and the per-doc scoring) read
+    # the SAME (doc_id, bucket) aggregate
+    raw = (
+        _dsir_grams(df.withColumn("_tgt", target_filter))
+        .groupBy("doc_id", "bucket")
+        # _tgt is constant per doc_id: any() ≡ the doc's flag
+        .agg(F.count(F.lit(1)).alias("_c"), F.any_value("_tgt").alias("_t"))
+    )
     # materialize the featurization ONCE: its consumers (the corpus
-    # histogram, the predicate-mode target histogram, the totals, and
+    # histogram, the target histogram, the totals, and
     # the scoring join) have different column prunings, so Catalyst's
     # ReuseExchange matches only some of them and the token-sized
     # explode+md5 pass would otherwise run up to 4× — the standard
     # write-the-DSIR-features-table step, as an executor-local
-    # checkpoint (output-sized: ≤ n_buckets rows per doc)
+    # checkpoint (output-sized: ≤ DSIR_BUCKETS rows per doc)
     raw = raw.localCheckpoint(eager=True)
-    if target_filter is not None:
-        tgt_counts = (
-            raw.filter(F.col("_t")).groupBy("bucket").agg(F.sum("_c").alias("_ct"))
-        )
+    tgt_counts = (
+        raw.filter(F.col("_t")).groupBy("bucket").agg(F.sum("_c").alias("_ct"))
+    )
     raw_counts = raw.groupBy("bucket").agg(F.sum("_c").alias("_cr"))
     nr = raw_counts.agg(F.sum("_cr").cast("double").alias("_nr"))
     nt = tgt_counts.agg(F.sum("_ct").cast("double").alias("_nt"))
@@ -1121,12 +1090,12 @@ def dsir_importance(
             "bucket",
             (
                 F.log(
-                    (F.coalesce(F.col("_ct"), F.lit(0)) + F.lit(alpha))
-                    / (F.col("_nt") + F.lit(alpha * n_buckets))
+                    (F.coalesce(F.col("_ct"), F.lit(0)) + F.lit(1.0))
+                    / (F.col("_nt") + F.lit(float(DSIR_BUCKETS)))
                 )
                 - F.log(
-                    (F.col("_cr") + F.lit(alpha))
-                    / (F.col("_nr") + F.lit(alpha * n_buckets))
+                    (F.col("_cr") + F.lit(1.0))
+                    / (F.col("_nr") + F.lit(float(DSIR_BUCKETS)))
                 )
             ).alias("_lr"),
         )
@@ -1150,12 +1119,6 @@ GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with", "a",
 def gopher_rules(
     df: DataFrame,
     text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_len: float = 3.0,
-    max_mean_len: float = 10.0,
-    min_alpha_frac: float = 0.8,
-    min_stopwords: int = 2,
     keep_cols: bool = False,
 ) -> DataFrame:
     """Gopher-style repetition-free quality gates: word-count bounds,
@@ -1204,10 +1167,10 @@ def gopher_rules(
         F.round(F.try_divide(n_alpha.cast("double"), n_words), 6).alias("alpha_frac"),
         n_stop.alias("n_stopwords"),
     )
-    r_words = F.col("n_words").between(min_words, max_words)
-    r_len = F.col("mean_word_len").between(min_mean_len, max_mean_len)
-    r_alpha = F.col("alpha_frac") >= min_alpha_frac
-    r_stop = F.col("n_stopwords") >= min_stopwords
+    r_words = F.col("n_words").between(50, 100_000)
+    r_len = F.col("mean_word_len").between(3.0, 10.0)
+    r_alpha = F.col("alpha_frac") >= 0.8
+    r_stop = F.col("n_stopwords") >= 2
     return out.select(
         "*",
         r_words.alias("r_word_count"),
@@ -1268,7 +1231,7 @@ def _fix_one_text(t: str) -> tuple:
     return "".join(kept), removed, was_mojibake
 
 
-def fix_text(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fix_text(df: DataFrame) -> DataFrame:
     """Arrow-batched encoding repair over the corpus — a pure per-row
     function (narrow, no shuffle, partition-order invariant); python
     is unavoidable here (Spark has no NFC/encoding surface), so the
@@ -1293,12 +1256,12 @@ def fix_text(df: DataFrame, text_col: str = "text") -> DataFrame:
             }
         )
 
-    out = widen_if_narrow_scan(df).withColumn("_fx", _fix(F.col(text_col)))
+    out = widen_if_narrow_scan(df).withColumn("_fx", _fix(F.col("text")))
     return (
         out.withColumn("fixed_text", F.col("_fx.fixed_text"))
         .withColumn("n_controls_removed", F.col("_fx.n_controls_removed"))
         .withColumn("was_mojibake", F.col("_fx.was_mojibake"))
-        .withColumn("changed", F.col("fixed_text") != F.col(text_col))
+        .withColumn("changed", F.col("fixed_text") != F.col("text"))
         .drop("_fx")
     )
 
@@ -1334,10 +1297,6 @@ def synth_dirty_text_pandas(n: int = 64):
 def cap_per_source(
     df: DataFrame,
     cap: int = 5,
-    source_col: str = "source",
-    length_col: str = "n_chars",
-    id_col: str = "doc_id",
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Per-source document cap (the RefinedWeb/FineWeb "domain cap"
     stage: a handful of boilerplate-heavy domains otherwise dominate a
@@ -1348,33 +1307,33 @@ def cap_per_source(
     Scale shape: a single ``row_number`` window over ``source`` sorts
     every document of a hot domain on ONE task — a 100M-doc domain is
     a straggler.  So this is a salted two-phase top-k: phase 1 ranks
-    within ``(source, id % salt_buckets)`` and keeps ``cap`` per salted
+    within ``(source, id % 16)`` and keeps ``cap`` per salted
     group (any global top-``cap`` row is necessarily in its salt's
     top-``cap``, so no survivor is lost); phase 2 re-ranks the
-    ≤ ``cap·salt_buckets`` survivors per source — a bounded-size
+    ≤ ``16·cap`` survivors per source — a bounded-size
     group regardless of domain skew.  Two shuffles, both on bounded
     data; same algebra as a partial-aggregation top-k.
 
     Output: the kept rows only — ``(<id>, <source>, source_rank)``
     with ``source_rank ∈ [1, cap]``.
     """
-    order = [F.col(length_col).desc(), F.col(id_col).asc()]
-    salt = F.pmod(F.col(id_col), F.lit(salt_buckets))
-    w1 = Window.partitionBy(source_col, salt).orderBy(*order)
+    order = [F.col("n_chars").desc(), F.col("doc_id").asc()]
+    salt = F.pmod(F.col("doc_id"), F.lit(16))
+    w1 = Window.partitionBy("source", salt).orderBy(*order)
     cand = (
-        df.select(id_col, source_col, length_col)
+        df.select("doc_id", "source", "n_chars")
         .withColumn("_r1", F.row_number().over(w1))
         .filter(F.col("_r1") <= cap)
     )
-    w2 = Window.partitionBy(source_col).orderBy(*order)
+    w2 = Window.partitionBy("source").orderBy(*order)
     return (
         cand.withColumn("source_rank", F.row_number().over(w2))
         .filter(F.col("source_rank") <= cap)
-        .select(id_col, source_col, "source_rank")
+        .select("doc_id", "source", "source_rank")
     )
 
 
-def canonicalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
+def canonicalize_urls(df: DataFrame) -> DataFrame:
     """URL canonicalization — the stage before URL-keyed dedup in a web
     pipeline (two crawls of one page differ only in host case, default
     ports, tracker params, param order, trailing slash, fragment).
@@ -1399,7 +1358,7 @@ def canonicalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
     Output: input columns + ``scheme``, ``host``, ``port`` (string,
     empty if none), ``path_canon``, ``query_canon``, ``url_canon``.
     """
-    u = F.col(url_col)
+    u = F.col("url")
     pat = r"^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]+)([^?#]*)(?:\?([^#]*))?(?:#.*)?$"
     parsed = F.regexp_extract(u, pat, 0) != ""
     scheme = F.lower(F.regexp_extract(u, pat, 1))
@@ -1491,9 +1450,6 @@ HTML_ENTITIES = [
 
 def html_extract(
     df: DataFrame,
-    html_col: str = "html",
-    out_col: str = "clean_text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """HTML → text extraction — the boilerplate-stripping stage every
     web-corpus pipeline runs before quality/dedup (C4 strips markup
@@ -1519,7 +1475,7 @@ def html_extract(
     cleaned text plus raw/clean lengths (the markup-fraction signal a
     quality gate reads).
     """
-    c = F.col(html_col)
+    c = F.col("html")
     c = F.regexp_replace(c, r"(?is)<script\b[^>]*>.*?</script\s*>", " ")
     c = F.regexp_replace(c, r"(?is)<style\b[^>]*>.*?</style\s*>", " ")
     c = F.regexp_replace(c, r"(?s)<!--.*?-->", " ")
@@ -1528,67 +1484,62 @@ def html_extract(
         c = F.replace(c, F.lit(ent), F.lit(ch))
     c = F.trim(F.regexp_replace(c, r"\s+", " "))
     return df.select(
-        id_col,
-        F.length(F.col(html_col)).cast("long").alias("n_raw"),
-        c.alias(out_col),
+        "doc_id",
+        F.length(F.col("html")).cast("long").alias("n_raw"),
+        c.alias("clean_text"),
         F.length(c).cast("long").alias("n_clean"),
     )
 
 
-def c4_line_rules(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "page_id",
-    min_words_per_line: int = 3,
-    min_kept_lines: int = 3,
-    blocklist: tuple = ("badword1",),
-) -> DataFrame:
+C4_BLOCKLIST = ("badword1",)
+
+
+def c4_line_rules(df: DataFrame) -> DataFrame:
     """C4's line- and page-level cleaning rules (Raffel et al. 2020
     §2.2) as one zero-shuffle JVM projection — the stage between HTML
     extraction and quality gating in every C4-style pipeline:
 
     line KEPT iff it ends in terminal punctuation (``. ! ? "``), has
-    ≥ ``min_words_per_line`` whitespace words, and does not mention
+    ≥ 3 whitespace words, and does not mention
     ``javascript`` (case-insensitive);
     page flags: ``has_lorem`` (contains "lorem ipsum"),
     ``has_brace`` (contains ``{`` — code, not prose), ``has_badword``
-    (any blocklist word, word-boundary match);
-    ``keep`` = no flag raised AND ≥ ``min_kept_lines`` kept lines.
+    (any ``C4_BLOCKLIST`` word, word-boundary match);
+    ``keep`` = no flag raised AND ≥ 3 kept lines.
 
     Word counting is ``size(split(trim(line), '\\s+'))`` — exactly the
     expression the SQL oracle replays, so engines agree on every edge
     (empty line counts 1).  Null text → null outputs, keep = 0.
     """
-    lines = F.split(F.col(text_col), "\n")
+    lines = F.split(F.col("text"), "\n")
     is_kept = lambda l: (
         l.rlike('[.!?"]$')
-        & (F.size(F.split(F.trim(l), r"\s+")) >= min_words_per_line)
+        & (F.size(F.split(F.trim(l), r"\s+")) >= 3)
         & ~F.contains(F.lower(l), F.lit("javascript"))
     )
     kept = F.filter(lines, is_kept)
-    low = F.lower(F.col(text_col))
+    low = F.lower(F.col("text"))
     # regex-escape blocklist words (a literal "c++" must not be a
-    # dangling quantifier); empty blocklist -> never flagged.  \b is
-    # attached only to a word-character edge — next to a symbol it can
-    # never match (both neighbors non-word), so "c++" gets \bc\+\+
-    bad = F.lit(False) if not blocklist else None
-    for w in blocklist:
+    # dangling quantifier).  \b is attached only to a word-character
+    # edge — next to a symbol it can never match (both neighbors
+    # non-word), so "c++" gets \bc\+\+
+    bad = F.lit(False)
+    for w in C4_BLOCKLIST:
         pre = r"\b" if re.match(r"\w", w) else ""
         post = r"\b" if re.search(r"\w$", w) else ""
-        t = F.regexp_like(low, F.lit(pre + re.escape(w) + post))
-        bad = t if bad is None else (bad | t)
+        bad = bad | F.regexp_like(low, F.lit(pre + re.escape(w) + post))
     has_lorem = F.contains(low, F.lit("lorem ipsum")).cast("int")
-    has_brace = F.contains(F.col(text_col), F.lit("{")).cast("int")
+    has_brace = F.contains(F.col("text"), F.lit("{")).cast("int")
     has_badword = bad.cast("int")
     n_kept = F.size(kept)
     keep = (
         (has_lorem == 0)
         & (has_brace == 0)
         & (has_badword == 0)
-        & (n_kept >= min_kept_lines)
+        & (n_kept >= 3)
     ).cast("int")
     return df.select(
-        id_col,
+        "page_id",
         F.size(lines).cast("long").alias("n_lines"),
         n_kept.cast("long").alias("n_kept"),
         F.array_join(kept, "\n").alias("kept_text"),
@@ -1651,8 +1602,6 @@ def spfhp_strategies(hist: dict, budget: int) -> list:
 def pack_histogram(
     df: DataFrame,
     budget: int = 128,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Sequence packing WITHOUT cross-document attention contamination
     (the alternative to :func:`pack_chunks`' concat-and-split): each
@@ -1669,7 +1618,7 @@ def pack_histogram(
     count·mult)`` → ``instance = (rank-offset) // mult``) — one
     window rank + one broadcast range join, no driver loop over docs.
 
-    Deterministic end-to-end: ranks order by ``id_col``, strategies
+    Deterministic end-to-end: ranks order by ``doc_id``, strategies
     consume ranks in strategy_id order.  Docs longer than ``budget``
     are capped to one-per-pack at length ``budget`` (truncation
     policy is the caller's); empty docs are excluded.
@@ -1680,16 +1629,16 @@ def pack_histogram(
     """
     from collections import Counter
 
-    toks = F.size(F.split(F.trim(F.col(text_col)), TOKEN_SPLIT))
+    toks = F.size(F.split(F.trim(F.col("text")), TOKEN_SPLIT))
     # null text must become 0, not null: F.least SKIPS nulls, so a
     # null n_tokens would silently pack at length = budget
     n_tokens = F.when(
-        F.col(text_col).isNull()
-        | (F.length(F.trim(F.col(text_col))) == 0),
+        F.col("text").isNull()
+        | (F.length(F.trim(F.col("text"))) == 0),
         F.lit(0),
     ).otherwise(toks)
     base = df.select(
-        id_col, F.least(n_tokens, F.lit(budget)).alias("length")
+        "doc_id", F.least(n_tokens, F.lit(budget)).alias("length")
     ).filter(F.col("length") > 0)
     hist = {r["length"]: r["n"] for r in
             base.groupBy("length").agg(F.count(F.lit(1)).alias("n")).collect()}
@@ -1709,7 +1658,7 @@ def pack_histogram(
         rows or [(0, 0, 1, 0, 0, 0)],
         "length int, strategy_id int, mult int, off long, count long, pack_base long",
     )
-    w = Window.partitionBy("length").orderBy(id_col)
+    w = Window.partitionBy("length").orderBy("doc_id")
     ranked = base.withColumn("rank", F.row_number().over(w).cast("long") - 1)
     j = ranked.join(
         F.broadcast(cons),
@@ -1719,7 +1668,7 @@ def pack_histogram(
     )
     inst = (F.col("rank") - F.col("off")) / F.col("mult")
     return j.select(
-        id_col,
+        "doc_id",
         ranked["length"],
         "strategy_id",
         (F.col("pack_base") + F.floor(inst)).cast("long").alias("pack_id"),
@@ -1775,16 +1724,14 @@ def gate_agreement(
     )
 
 
+BM25_K1, BM25_B = 1.2, 0.75
+
+
 def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
     *,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    query_col: str = "qtext",
-    fp_scale: int = 10**6,
 ) -> DataFrame:
     """BM25 lexical retrieval: top-k documents per query.
 
@@ -1796,7 +1743,7 @@ def bm25_topk(
     terms), the standard short-query setting.
 
     Determinism: every per-(query,doc,term) contribution is floored to
-    fixed point (``floor(idf·tfn·fp_scale)``) BEFORE the sum, so the
+    fixed point (``floor(idf·tfn·10^6)``) BEFORE the sum, so the
     per-pair score is an exact integer sum — bit-identical under any
     partitioning and value-matched by the SQL oracle (the one
     float chain per term is the same op sequence on both engines).
@@ -1819,7 +1766,7 @@ def bm25_topk(
     """
     from pyspark.sql import Window
 
-    toks = F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT)
+    toks = F.split(F.trim(F.lower(F.col("text"))), TOKEN_SPLIT)
     terms = docs.select("doc_id", F.explode(toks).alias("term")).filter(
         F.length("term") > 0
     )
@@ -1834,7 +1781,7 @@ def bm25_topk(
         ),
         F.count(F.lit(1)).cast("double").alias("_n"),
     )
-    qtoks = F.split(F.trim(F.lower(F.col(query_col))), TOKEN_SPLIT)
+    qtoks = F.split(F.trim(F.lower(F.col("qtext"))), TOKEN_SPLIT)
     qterms = (
         queries.select("query_id", F.explode(qtoks).alias("term"))
         .filter(F.length("term") > 0)
@@ -1844,10 +1791,10 @@ def bm25_topk(
         F.lit(1.0)
         + (F.col("_n") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
     )
-    tfn = (F.col("tf") * F.lit(k1 + 1.0)) / (
+    tfn = (F.col("tf") * F.lit(BM25_K1 + 1.0)) / (
         F.col("tf")
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("_avgdl"))
+        + F.lit(BM25_K1)
+        * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.col("_avgdl"))
     )
     # df is vocabulary-sized — prune it to the query vocabulary BEFORE
     # broadcasting (query vocab is small by the retrieval premise; the
@@ -1861,7 +1808,7 @@ def bm25_topk(
         .groupBy("query_id", "doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_hit"),
-            F.sum(F.floor(idf * tfn * F.lit(float(fp_scale)))).alias(
+            F.sum(F.floor(idf * tfn * F.lit(1e6))).alias(
                 "score_fp"
             ),
         )
@@ -1876,20 +1823,14 @@ def bm25_topk(
     )
 
 
-def ngram_overlap_stats(
-    df: DataFrame,
-    cand_col: str = "cand",
-    ref_col: str = "ref",
-    *,
-    n_max: int = 4,
-) -> DataFrame:
+def ngram_overlap_stats(df: DataFrame) -> DataFrame:
     """BLEU sufficient statistics per (candidate, reference) row pair.
 
     Distillation / eval pipelines score model outputs against
     references with corpus BLEU (Papineni et al. 2002); the
     distributed form aggregates *clipped n-gram match counts* — the
     sufficient statistics — and derives BLEU driver-side.  This
-    operator emits exactly those: for n=1..n_max, ``m{n}`` = Σ_g
+    operator emits exactly those: for n=1..4, ``m{n}`` = Σ_g
     min(count_cand(g), count_ref(g)) (modified precision numerator)
     and ``t{n}`` = max(|cand|−n+1, 0) (denominator), plus both lengths
     for the brevity penalty.  Everything is an exact integer — corpus
@@ -1900,8 +1841,8 @@ def ngram_overlap_stats(
     in *document* length via the distinct-gram × count-scan loop,
     linear in corpus size; at 100 TB the operator is a pure map).
     """
-    ctoks = F.split(F.trim(F.lower(F.col(cand_col))), TOKEN_SPLIT)
-    rtoks = F.split(F.trim(F.lower(F.col(ref_col))), TOKEN_SPLIT)
+    ctoks = F.split(F.trim(F.lower(F.col("cand"))), TOKEN_SPLIT)
+    rtoks = F.split(F.trim(F.lower(F.col("ref"))), TOKEN_SPLIT)
     base = df.select(
         "*",
         F.explode(
@@ -1926,7 +1867,7 @@ def ngram_overlap_stats(
         ).otherwise(F.array().cast("array<string>"))
 
     out = base
-    for n in range(1, n_max + 1):
+    for n in range(1, 5):
         cg, rg = grams(F.col("_p.c"), n), grams(F.col("_p.r"), n)
         # one generator barrier per order so the gram arrays evaluate
         # once, not once per referencing expression
@@ -1949,10 +1890,10 @@ def ngram_overlap_stats(
         out = out.withColumn(f"m{n}", matched).withColumn(
             f"t{n}", F.size(cgc).cast("long")
         )
-    keep = [c for c in df.columns if c not in (cand_col, ref_col)]
+    keep = [c for c in df.columns if c not in ("cand", "ref")]
     stats = [F.size("_p.c").cast("long").alias("cand_len"),
              F.size("_p.r").cast("long").alias("ref_len")]
-    for n in range(1, n_max + 1):
+    for n in range(1, 5):
         stats += [F.col(f"m{n}"), F.col(f"t{n}")]
     return out.select(*keep, *stats)
 
@@ -2002,17 +1943,7 @@ def chi2_drift(
     )
 
 
-def doremi_weights(
-    df: DataFrame,
-    domain_col: str = "domain",
-    loss_col: str = "loss_fp",
-    *,
-    steps: int = 8,
-    eta_num: int = 1,
-    eta_den: int = 4,
-    scale: int = 10**12,
-    mu_scale: int = 10**6,
-) -> DataFrame:
+def doremi_weights(df: DataFrame, *, steps: int = 8) -> DataFrame:
     """DoReMi-style domain reweighting (Xie et al. 2023), exact form.
 
     Data-mixture optimization: domains whose (excess) loss is high get
@@ -2021,7 +1952,7 @@ def doremi_weights(
     replaced by the linearized multiplicative-weights rule
     ``w ← w · (1 + η·μ_d)`` (the classic MW variant — same regret
     bound family), because it is exact in fixed point: with per-doc
-    losses as integers in [0, mu_scale] every update, normalization
+    losses as integers in [0, 10^6] every update, normalization
     (128-bit intermediate) and the running average are integer ops —
     bit-identical under any partitioning and replayable by the SQL
     oracle as unrolled CTEs (the pagerank/k-means determinism
@@ -2032,26 +1963,27 @@ def doremi_weights(
     the k-domain table driver-side (k is tens-to-thousands; the same
     bounded-driver-state rule as the k-means k×dim collect).
 
-    Input: per-document rows ``(domain_col, loss_col)`` with
-    ``loss_col`` an integer loss at ``mu_scale`` fixed point (loss in
-    [0, 1]).  Returns ``(domain, mu_fp, w, w_bar)`` — the domain mean
+    Input: per-document rows ``(domain, loss_fp)`` with ``loss_fp`` an
+    integer loss at 10^6 fixed point (loss in [0, 1]); the step size is
+    η = 1/4.  Returns ``(domain, mu_fp, w, w_bar)`` — the domain mean
     loss, final weight, and the averaged (output) weight, weights at
-    ``scale`` fixed point.
+    10^12 fixed point.
     """
     mu_rows = sorted(
-        df.groupBy(F.col(domain_col).alias("domain"))
+        df.groupBy("domain")
         .agg(
-            F.expr(f"sum({loss_col}) div count(1)").alias("mu_fp")
+            F.expr("sum(loss_fp) div count(1)").alias("mu_fp")
         )
         .collect()
     )
     k = len(mu_rows)
     mu = {r["domain"]: int(r["mu_fp"]) for r in mu_rows}
+    scale, mu_scale = 10**12, 10**6
     w = {d: scale // k for d in mu}
     acc = {d: 0 for d in mu}
     for _ in range(steps):
         wu = {
-            d: (w[d] * (mu_scale + (eta_num * mu[d]) // eta_den)) // mu_scale
+            d: (w[d] * (mu_scale + mu[d] // 4)) // mu_scale
             for d in mu
         }
         tot = sum(wu.values())
@@ -2066,14 +1998,7 @@ def doremi_weights(
     )
 
 
-def sample_to_quota(
-    df: DataFrame,
-    quotas: DataFrame,
-    domain_col: str = "domain",
-    id_col: str = "doc_id",
-    *,
-    salt_buckets: int = 16,
-) -> DataFrame:
+def sample_to_quota(df: DataFrame, quotas: DataFrame) -> DataFrame:
     """Execute a data mixture: deterministic per-domain quota sample.
 
     The write-side of :func:`doremi_weights` / any mixture table —
@@ -2084,28 +2009,28 @@ def sample_to_quota(
 
     Same salted two-phase top-k as :func:`cap_per_source` (a global
     per-domain window would sort a 100M-doc hot domain on one task):
-    phase 1 ranks within ``(domain, id % salt_buckets)`` and keeps
+    phase 1 ranks within ``(domain, id % 16)`` and keeps
     ``quota`` per salted group — any global top-``quota`` row is in
     its salt's top-``quota``, so no survivor is lost; phase 2 re-ranks
-    the ≤ ``quota·salt_buckets`` survivors.  The quota table is tiny
+    the ≤ ``16·quota`` survivors.  The quota table is tiny
     (one row per domain) and broadcast.
 
     Output: kept rows ``(<id>, <domain>, pick_rank)``,
     ``pick_rank ∈ [1, quota]``.
     """
-    ordk = F.md5(F.col(id_col).cast("string"))
-    order = [ordk.asc(), F.col(id_col).asc()]
-    salt = F.pmod(F.col(id_col), F.lit(salt_buckets))
-    base = df.select(id_col, domain_col).join(
-        F.broadcast(quotas), domain_col
+    ordk = F.md5(F.col("doc_id").cast("string"))
+    order = [ordk.asc(), F.col("doc_id").asc()]
+    salt = F.pmod(F.col("doc_id"), F.lit(16))
+    base = df.select("doc_id", "domain").join(
+        F.broadcast(quotas), "domain"
     )
-    w1 = Window.partitionBy(domain_col, salt).orderBy(*order)
+    w1 = Window.partitionBy("domain", salt).orderBy(*order)
     cand = base.withColumn("_r1", F.row_number().over(w1)).filter(
         F.col("_r1") <= F.col("quota")
     )
-    w2 = Window.partitionBy(domain_col).orderBy(*order)
+    w2 = Window.partitionBy("domain").orderBy(*order)
     return (
         cand.withColumn("pick_rank", F.row_number().over(w2).cast("long"))
         .filter(F.col("pick_rank") <= F.col("quota"))
-        .select(id_col, domain_col, "pick_rank")
+        .select("doc_id", "domain", "pick_rank")
     )

@@ -5,9 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def widen_if_narrow_scan(
-    df: DataFrame, min_ratio: float = 0.5, partitions: int | None = None
-) -> DataFrame:
+def widen_if_narrow_scan(df: DataFrame) -> DataFrame:
     """Repartition ONLY when the input has far fewer partitions than the
     cluster has cores (small-file single-split scans, common in tests and
     tiny dims, serialize CPU-heavy narrow stages onto one core).
@@ -19,14 +17,11 @@ def widen_if_narrow_scan(
     Streaming DataFrames pass through untouched (micro-batch split count
     is the source's concern — ``streaming/pipeline.py`` has its own
     repartition guard — and ``.rdd`` is illegal on a streaming plan).
-    An explicit ``partitions`` hint skips the ``.rdd`` partition probe
-    entirely (the probe converts the plan; cheap but not free).
     """
     if df.isStreaming:
         return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    current = partitions if partitions is not None else df.rdd.getNumPartitions()
-    if current < max(int(target * min_ratio), 1):
+    if df.rdd.getNumPartitions() < max(target // 2, 1):
         return df.repartition(target)
     return df

@@ -23,9 +23,7 @@ object: ~110 profiles, a few hundred KB).
 
 from __future__ import annotations
 
-import fnmatch
 import os
-import re
 from dataclasses import dataclass, field
 from functools import lru_cache
 
@@ -189,29 +187,6 @@ def _python_module_meta(path: str) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# whitelist / blacklist pruning (config-time partition pruning analog)
-
-
-def _expr_match(name: str, expr: str) -> bool:
-    try:
-        if re.match(expr, name, flags=re.I):
-            return True
-    except re.error:
-        pass
-    return fnmatch.fnmatch(name.lower(), expr.lower())
-
-
-def os_allowed(name: str, whitelist=None, blacklist=None) -> bool:
-    """Glob/regex/exact allow-deny of OS names (reference
-    ``utils/__init__.py:384-447`` semantics)."""
-    if blacklist and any(_expr_match(name, e) for e in blacklist):
-        return False
-    if whitelist:
-        return any(_expr_match(name, e) for e in whitelist)
-    return True
-
-
-# ---------------------------------------------------------------------------
 # loading
 
 
@@ -295,12 +270,11 @@ def _build_os_profile(name: str, raw: dict) -> OsProfile:
     )
 
 
-def load_registry(path: str | None = None, whitelist=None, blacklist=None) -> ProfileRegistry:
+def load_registry(path: str | None = None) -> ProfileRegistry:
     """Load a profile directory tree into a :class:`ProfileRegistry`.
 
     Driver-side only; the result is broadcast to executors via closure
-    capture.  OS subdirectories are pruned by white/blacklist *before*
-    any compilation — the config-time analog of partition pruning.
+    capture.
     """
     if path is None:
         path = os.environ.get("NLS_PROFILE_DIR")
@@ -316,8 +290,6 @@ def load_registry(path: str | None = None, whitelist=None, blacklist=None) -> Pr
     for entry in sorted(os.listdir(path)):
         os_dir = os.path.join(path, entry)
         if not os.path.isdir(os_dir) or entry.startswith("__"):
-            continue
-        if not os_allowed(entry, whitelist, blacklist):
             continue
         raw = _load_os_dir(os_dir)
         if raw:

@@ -2,7 +2,6 @@ from .transcripts import (
     TRANSCRIPT_SCHEMA,
     golden_cases,
     golden_transcripts_pandas,
-    synth_transcripts_pandas,
     transcripts_df,
 )
 
@@ -10,6 +9,5 @@ __all__ = [
     "TRANSCRIPT_SCHEMA",
     "golden_cases",
     "golden_transcripts_pandas",
-    "synth_transcripts_pandas",
     "transcripts_df",
 ]

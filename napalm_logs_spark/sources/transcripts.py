@@ -1,4 +1,4 @@
-"""Transcript sources: golden fixture corpus + deterministic synthesis.
+"""Transcript sources: the golden fixture corpus as transcript rows.
 
 The engine's input shape (BASELINE input_hint) is a table of multi-turn
 transcripts::
@@ -6,28 +6,18 @@ transcripts::
     conv_id:string, turn_idx:int32, role:string, text:string,
     tool:string, ts:timestamp
 
-Two generators produce that shape:
-
-* :func:`golden_transcripts_pandas` — re-expresses the reference's
-  golden corpus (``tests/config/<os>/<ERROR>/<case>/syslog.msg`` +
-  ``yang.json``, 133 cases) as transcript rows.  The syslog line rides
-  in ``text``; the expected envelope is returned alongside for the
-  correctness harness.
-* :func:`synth_transcripts_pandas` — seeded synthetic corpus for CEP
-  scenarios and benches: replicates golden lines across ``n_convs``
-  conversations with deterministic timestamps, optional hot-key skew,
-  duplicate bursts (dedup scenarios) and agent/tool turn interleaving.
-
-Everything is a pure function of its arguments — two runs are
-byte-identical (no wall-clock, no unseeded RNG).
+:func:`golden_transcripts_pandas` re-expresses the reference's golden
+corpus (``tests/config/<os>/<ERROR>/<case>/syslog.msg`` + ``yang.json``,
+133 cases) as transcript rows.  The syslog line rides in ``text``; the
+expected envelope is returned alongside for the correctness harness.
+Two runs are byte-identical (no wall-clock).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import random
-from datetime import datetime, timedelta, timezone
+from datetime import datetime, timedelta
 
 import pandas as pd
 
@@ -63,9 +53,9 @@ DEFAULT_GOLDEN_DIR = (
 BASE_TS = datetime(2017, 7, 20, 21, 45, 59)
 
 
-def golden_cases(root: str | None = None):
+def golden_cases():
     """Yield dicts {os, error, case, text, expected} for every fixture."""
-    root = root or os.environ.get("NLS_GOLDEN_DIR", DEFAULT_GOLDEN_DIR)
+    root = os.environ.get("NLS_GOLDEN_DIR", DEFAULT_GOLDEN_DIR)
     for os_name in sorted(os.listdir(root)):
         os_dir = os.path.join(root, os_name)
         if not os.path.isdir(os_dir):
@@ -95,10 +85,10 @@ def golden_cases(root: str | None = None):
                 }
 
 
-def golden_transcripts_pandas(root: str | None = None) -> pd.DataFrame:
+def golden_transcripts_pandas() -> pd.DataFrame:
     """The golden corpus as transcript rows (one conv per case)."""
     rows = []
-    for i, case in enumerate(golden_cases(root)):
+    for i, case in enumerate(golden_cases()):
         rows.append(
             {
                 "conv_id": f"{case['os']}#{case['error']}#{case['case']}",
@@ -107,68 +97,6 @@ def golden_transcripts_pandas(root: str | None = None) -> pd.DataFrame:
                 "text": case["text"],
                 "tool": None,
                 "ts": BASE_TS + timedelta(seconds=i),
-            }
-        )
-    df = pd.DataFrame(rows)
-    df["turn_idx"] = df["turn_idx"].astype("int32")
-    return df
-
-
-# ---------------------------------------------------------------------------
-# synthetic corpus
-
-
-def _golden_texts(root: str | None = None):
-    return [c["text"] for c in golden_cases(root)]
-
-
-def synth_transcripts_pandas(
-    n_convs: int = 100,
-    turns_per_conv: int = 20,
-    *,
-    seed: int = 42,
-    hot_conv_fraction: float = 0.0,
-    dup_fraction: float = 0.0,
-    tool_fraction: float = 0.2,
-    step_seconds: float = 1.0,
-    root: str | None = None,
-) -> pd.DataFrame:
-    """Deterministic synthetic transcripts built from golden text lines.
-
-    ``hot_conv_fraction`` routes that share of all rows into a single
-    hot conversation (skew scenario); ``dup_fraction`` repeats the
-    previous turn's text verbatim (dedup scenario); ``tool_fraction``
-    marks turns as ``role='tool'`` with a tool name (join scenario).
-    """
-    rng = random.Random(seed)
-    texts = _golden_texts(root)
-    tools = ["search", "calc", "deploy", "query", "probe"]
-    rows = []
-    total = n_convs * turns_per_conv
-    hot_rows = int(total * hot_conv_fraction)
-    assignments = ["conv-hot"] * hot_rows + [
-        f"conv-{i % n_convs:05d}" for i in range(total - hot_rows)
-    ]
-    rng.shuffle(assignments)
-    turn_counters: dict = {}
-    prev_text: dict = {}
-    for i, conv in enumerate(assignments):
-        turn = turn_counters.get(conv, 0)
-        turn_counters[conv] = turn + 1
-        if conv in prev_text and rng.random() < dup_fraction:
-            text = prev_text[conv]
-        else:
-            text = texts[rng.randrange(len(texts))]
-        prev_text[conv] = text
-        is_tool = rng.random() < tool_fraction
-        rows.append(
-            {
-                "conv_id": conv,
-                "turn_idx": turn,
-                "role": "tool" if is_tool else rng.choice(["agent", "user"]),
-                "text": text,
-                "tool": rng.choice(tools) if is_tool else None,
-                "ts": BASE_TS + timedelta(seconds=i * step_seconds),
             }
         )
     df = pd.DataFrame(rows)

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def http_poster(url: str, batch_size: int = 200, timeout: float = 10.0):
+def http_poster(url: str, batch_size: int = 200):
     """Partition function POSTing JSON-array chunks to ``url``.
 
     Raises on any non-2xx response so Spark retries the task — the
@@ -48,7 +48,7 @@ def http_poster(url: str, batch_size: int = 200, timeout: float = 10.0):
                 headers={"Content-Type": "application/json"},
                 method="POST",
             )
-            with urllib.request.urlopen(req, timeout=timeout) as resp:
+            with urllib.request.urlopen(req, timeout=10.0) as resp:
                 if not (200 <= resp.status < 300):
                     raise RuntimeError(
                         f"HTTP sink: {url} returned {resp.status}"
@@ -65,11 +65,11 @@ def http_poster(url: str, batch_size: int = 200, timeout: float = 10.0):
 
 
 def http_envelope_publish(
-    env: DataFrame, url: str, batch_size: int = 200, timeout: float = 10.0
+    env: DataFrame, url: str, batch_size: int = 200
 ) -> None:
     """POST every envelope in ``env`` (a materialized micro-batch or a
     batch DataFrame) to ``url`` from the executors."""
     from .kafka_sink import envelope_to_kafka_records
 
     recs = envelope_to_kafka_records(env).select("value")
-    recs.foreachPartition(http_poster(url, batch_size, timeout))
+    recs.foreachPartition(http_poster(url, batch_size))

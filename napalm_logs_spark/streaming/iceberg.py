@@ -37,13 +37,11 @@ def iceberg_transcript_stream(
     spark: SparkSession,
     table: str,
     max_files_per_micro_batch: int | None = None,
-    stream_from_timestamp_ms: int | None = None,
 ) -> DataFrame:
     """Streaming read of the transcripts Iceberg table (the north-rule
     source): incremental snapshot tailing with optional per-micro-batch
     admission bound (the backpressure knob on this source — Iceberg's
-    ``streaming-max-files-per-micro-batch``) and optional start point
-    (``stream-from-timestamp``).
+    ``streaming-max-files-per-micro-batch``).
 
     Degrades exactly like the Kafka source when the runtime jar is
     absent: raises with the spark-submit recipe instead of failing
@@ -62,9 +60,5 @@ def iceberg_transcript_stream(
     if max_files_per_micro_batch:
         reader = reader.option(
             "streaming-max-files-per-micro-batch", str(max_files_per_micro_batch)
-        )
-    if stream_from_timestamp_ms is not None:
-        reader = reader.option(
-            "stream-from-timestamp", str(stream_from_timestamp_ms)
         )
     return reader.load(table)

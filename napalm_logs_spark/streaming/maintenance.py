@@ -58,6 +58,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sink import ORDER_COLS
+
 MANIFEST = "_COMPACTION.json"
 _GEN_RE = re.compile(r"^_compacted_upto=(\d+)(\.tmp)?$")
 _BATCH_RE = re.compile(r"^_batch_id=(\d+)$")
@@ -206,7 +208,6 @@ def compact_sink(
     path: str,
     upto_batch_id: int | None = None,
     target_file_bytes: int = 128 << 20,
-    order_cols=("conv_id", "turn_idx"),
 ) -> dict:
     """Rewrite the committed prefix into size-targeted files.
 
@@ -280,7 +281,7 @@ def compact_sink(
         df = df.unionByName(p)
 
     n_out = max(1, math.ceil(in_bytes / target_file_bytes))
-    sort_cols = ["_batch_id"] + [c for c in order_cols if c in df.columns]
+    sort_cols = ["_batch_id"] + [c for c in ORDER_COLS if c in df.columns]
     tmp_dir = f"{path}/_compacted_upto={upto}.tmp"
     dst_dir = f"{path}/_compacted_upto={upto}"
     # RANGE partition: each output file covers a contiguous

@@ -19,7 +19,6 @@ is the per-partition lineage + metrics surface.
 from __future__ import annotations
 
 import json
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -29,7 +28,7 @@ from pyspark.sql.streaming import StreamingQueryListener
 OBSERVATION_NAME = "nls_metrics"
 
 
-def with_observed_metrics(df: DataFrame, name: str = OBSERVATION_NAME) -> DataFrame:
+def with_observed_metrics(df: DataFrame) -> DataFrame:
     """Attach engine counters: total rows, per-class error counts."""
     cols = [F.count(F.lit(1)).alias("n_rows")]
     if "error" in df.columns:
@@ -38,7 +37,7 @@ def with_observed_metrics(df: DataFrame, name: str = OBSERVATION_NAME) -> DataFr
             F.sum((F.col("error") == "UNKNOWN").cast("long")).alias("n_unknown"),
             F.count("error").alias("n_with_error"),
         ]
-    return df.observe(name, *cols)
+    return df.observe(OBSERVATION_NAME, *cols)
 
 
 class ProgressRecorder(StreamingQueryListener):

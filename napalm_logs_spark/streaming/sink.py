@@ -22,7 +22,7 @@ writes every configured sink per micro-batch, idempotently:
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -97,7 +97,10 @@ def _apply_sink_filters(df: DataFrame, sink: SinkSpec) -> DataFrame:
     return df
 
 
-def exactly_once_parquet_sink(sinks, order_cols=("conv_id", "turn_idx")):
+ORDER_COLS = ("conv_id", "turn_idx")
+
+
+def exactly_once_parquet_sink(sinks):
     """Build a foreachBatch function writing each micro-batch to every
     sink idempotently with lineage columns and stable ordering."""
     sinks = list(sinks)
@@ -108,7 +111,7 @@ def exactly_once_parquet_sink(sinks, order_cols=("conv_id", "turn_idx")):
         enriched = (
             batch_df.withColumn("_batch_id", F.lit(int(batch_id)))
             .withColumn("_task_partition", F.spark_partition_id())
-            .sortWithinPartitions(*order_cols)
+            .sortWithinPartitions(*ORDER_COLS)
         )
         # cache only when >1 sink will consume the batch: with a single
         # sink the DataFrame is scanned exactly once and persist() is
@@ -121,7 +124,7 @@ def exactly_once_parquet_sink(sinks, order_cols=("conv_id", "turn_idx")):
                 out = _apply_sink_filters(enriched, sink)
                 if sink.console:
                     print(f"-- batch {int(batch_id)} --")
-                    out.orderBy(*order_cols).show(sink.console_rows, truncate=False)
+                    out.orderBy(*ORDER_COLS).show(sink.console_rows, truncate=False)
                     continue
                 if sink.kafka_bootstrap:
                     from .kafka_sink import (

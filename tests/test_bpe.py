@@ -52,7 +52,7 @@ def test_bpe_train_partitioning_invariant(corpus_df):
 def test_bpe_train_min_freq_stop(spark):
     # every word unique, every pair count 1 < min_freq=2 → zero merges
     df = spark.createDataFrame([(0, "abc defg hij")], "doc_id long, text string")
-    assert bpe_train(df, n_merges=5, min_freq=2).count() == 0
+    assert bpe_train(df, n_merges=5).count() == 0
 
 
 def test_bpe_encode_greedy_lowest_rank(corpus_df, spark):

@@ -165,40 +165,6 @@ def test_pattern_sequence_multiple_combinations(spark):
     assert sorted((m.turn0, m.turn1) for m in got) == [(0, 2), (1, 2)]
 
 
-def test_pattern_sequence_streaming_three_step_chain(spark, tmp_path):
-    """Streaming form: the 3-step chain runs as two stream-stream
-    interval joins with per-step watermarks, append mode."""
-    from napalm_logs_spark.operators.cep import pattern_sequence
-
-    src, ckpt = str(tmp_path / "seq_src"), str(tmp_path / "seq_ckpt")
-    schema = "conv_id string, turn_idx int, ts timestamp, error string"
-    rows = [
-        ("a", 0, BASE, "DOWN"),
-        ("a", 1, BASE + datetime.timedelta(seconds=10), "UP"),
-        ("a", 2, BASE + datetime.timedelta(seconds=20), "DOWN"),
-        ("b", 0, BASE, "UP"),
-        ("b", 1, BASE + datetime.timedelta(seconds=5), "DOWN"),
-    ]
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = pattern_sequence(
-        stream,
-        steps=[F.col("error") == "DOWN", F.col("error") == "UP",
-               F.col("error") == "DOWN"],
-        within_seconds=60,
-        streaming=True,
-        watermark="1 second",
-    )
-    q = (
-        out.writeStream.format("memory").queryName("seq_stream")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = spark.sql("select * from seq_stream").collect()
-    assert [(m.conv_id, m.turn0, m.turn1, m.turn2) for m in got] == [("a", 0, 1, 2)]
-
-
 # ---------------------------------------------------------------------------
 # alarm gauge families (transport/prometheus.py:458-540 semantics)
 
@@ -381,8 +347,8 @@ def test_hysteresis_latches_and_releases(spark):
 
 def test_hysteresis_releases_across_silent_gap(spark):
     """A latched alert must RELEASE over a silent period (round-3
-    ADVICE): densify=True fills empty windows with n=0, so the next
-    active window does not inherit a stale latch."""
+    ADVICE): empty windows are filled with n=0, so the next active
+    window does not inherit a stale latch."""
     import datetime as dt
 
     from napalm_logs_spark.operators.cep import hysteresis_alerts
@@ -401,15 +367,6 @@ def test_hysteresis_releases_across_silent_gap(spark):
     )
     assert [n for _, n, _ in out] == [4, 0, 0, 2]
     assert [a for _, _, a in out] == [1, 0, 0, 0]
-
-    # densify=False restores the sparse legacy semantics: the gap is
-    # invisible and the latch carries into w3
-    sparse = sorted(
-        (r.win_start, r.n, r.alert)
-        for r in hysteresis_alerts(df, hi=3, lo=2, densify=False).collect()
-    )
-    assert [n for _, n, _ in sparse] == [4, 2]
-    assert [a for _, _, a in sparse] == [1, 1]
 
 
 def test_rate_anomaly_z_flat_and_shallow_branches(spark):

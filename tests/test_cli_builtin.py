@@ -23,7 +23,8 @@ def test_builtin_profiles_standalone():
             "ts": [pd.Timestamp("2017-07-20 21:45:59")],
         }
     )
-    out = normalize_pandas(pdf, reg, include_raw=False, include_unknown=False)
+    out = normalize_pandas(pdf, reg)
+    out = out[~out["error"].isin(["RAW", "UNKNOWN"])]
     assert len(out) == 1
     row = out.iloc[0]
     assert row["os"] == "demo" and row["error"] == "LINK_STATE"

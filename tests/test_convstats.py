@@ -315,13 +315,17 @@ def test_prefix_sharing_parity_with_replication(spark):
 
 
 def test_prefix_sharing_max_turns_and_invariance(spark):
-    from napalm_logs_spark.operators.convstats import prefix_sharing
+    from napalm_logs_spark.operators.convstats import PREFIX_MAX_TURNS, prefix_sharing
 
-    convs = {f"c{i}": [f"P"] + [f"t:{i}:{k}" for k in range(5)] for i in range(6)}
+    # every conversation runs past the cap: only the first 64 turns count
+    convs = {
+        f"c{i}": ["P"] + [f"t:{i}:{k}" for k in range(PREFIX_MAX_TURNS + 5)]
+        for i in range(6)
+    }
     df = _tdf(spark, _pfx_rows(convs))
-    capped = prefix_sharing(df, max_turns=3).collect()
-    assert capped[0]["total_turns"] == 18  # 6 convs x 3 kept turns
-    want = _py_prefix_sharing(convs, max_turns=3)
+    capped = prefix_sharing(df).collect()
+    assert capped[0]["total_turns"] == 6 * PREFIX_MAX_TURNS
+    want = _py_prefix_sharing(convs, max_turns=PREFIX_MAX_TURNS)
     assert capped[0]["trie_chars"] == want[hashlib.md5(b"P").hexdigest()]["trie_chars"]
     a = sorted(map(tuple, prefix_sharing(df.repartition(1)).collect()))
     b = sorted(map(tuple, prefix_sharing(df.repartition(11)).collect()))
@@ -354,10 +358,6 @@ def test_boilerplate_turns_semantics(spark):
                for t in ("ask 0", "answer 2") for r in by_text[t])
     assert all(r["turn_df"] == 1 for r in by_text["dup-in-conv"])
     assert len(out) == len(rows)  # row-preserving
-
-    # normalize=False: the three variants no longer collide
-    raw = boilerplate_turns(_tdf(spark, rows), min_df=3, normalize=False)
-    assert raw.filter("is_boilerplate").count() == 0
 
 
 def test_boilerplate_turns_null_text_preserved(spark):

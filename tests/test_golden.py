@@ -25,8 +25,8 @@ def registry():
 @pytest.fixture(scope="module")
 def golden_out(registry):
     pdf = golden_transcripts_pandas()
-    out = normalize_pandas(pdf, registry, include_raw=False, include_unknown=True)
-    return pdf, out
+    out = normalize_pandas(pdf, registry)
+    return pdf, out[out["error"] != "RAW"]
 
 
 def row_to_envelope(row) -> dict:

@@ -6,6 +6,7 @@ import datetime
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from napalm_logs_spark.operators.cep import state_events, transitions
 from napalm_logs_spark.operators.normalize import normalize
@@ -39,7 +40,9 @@ def flap_transcripts(spark):
 
 def test_batch_cep_composite(spark, flap_transcripts):
     registry = load_registry()
-    env = normalize(flap_transcripts, registry, include_raw=False, include_unknown=False)
+    env = normalize(flap_transcripts, registry).filter(
+        ~F.col("error").isin("RAW", "UNKNOWN")
+    )
     ev = state_events(env)
     tr = transitions(ev)
     got = sorted(
@@ -86,6 +89,31 @@ def test_jsonl_source_end_to_end(spark, tmp_path):
     errors = {r.error for r in back.select("error").collect()}
     assert "INTERFACE_DOWN" in errors       # real envelope from JSON ingest
     assert back.count() >= 2                # corrupt row didn't kill the run
+    # the corrupt line's null text stays null, never the string "None"
+    unknown = sorted(
+        r.message_details for r in back.filter("error = 'UNKNOWN'").collect()
+    )
+    assert unknown == ['{"message":"hello world"}', '{"message":null}']
+
+
+def test_null_text_unknown_envelope_pandas():
+    """A null text and the literal text "None" publish different
+    UNKNOWN envelopes."""
+    from napalm_logs_spark.operators.normalize import normalize_pandas
+
+    pdf = pd.DataFrame({
+        "conv_id": ["c1", "c1", "c1"],
+        "turn_idx": [0, 1, 2],
+        "role": ["agent"] * 3,
+        "text": [None, "None", "hi"],
+        "tool": [None] * 3,
+        "ts": [pd.Timestamp("2017-07-20 21:45:59")] * 3,
+    })
+    out = normalize_pandas(pdf, load_registry())
+    assert list(out["error"]) == ["UNKNOWN"] * 3
+    assert list(out["message_details"]) == [
+        '{"message":null}', '{"message":"None"}', '{"message":"hi"}'
+    ]
 
 
 def test_soak_state_bounded_across_resumed_runs(spark, tmp_path):

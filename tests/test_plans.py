@@ -129,7 +129,7 @@ def test_zordered_files_have_disjoint_key_ranges(spark, tmp_path):
     min/max pruning relies on."""
     import pyspark.sql.functions as F
 
-    from napalm_logs_spark.sources.bucketed import (
+    from napalm_logs_spark.sources.zorder import (
         minmax_scaled_int,
         zorder_key,
     )

@@ -79,10 +79,8 @@ def test_end_to_end_from_normalize(spark):
     """Real envelopes through the real pipeline produce a well-formed
     exposition with the reference's metric families."""
     from napalm_logs_spark.operators.normalize import normalize
-    from napalm_logs_spark.sources.transcripts import (
-        synth_transcripts_pandas,
-        transcripts_df,
-    )
+    from napalm_logs_spark.sources.transcripts import transcripts_df
+    from synth import synth_transcripts_pandas
     from napalm_logs_spark.streaming.prometheus import exposition
 
     env = normalize(

@@ -8,8 +8,16 @@ referenced, outside its own body, by a file that is not a test: the
 package, ``__spark_entry__.py``, ``bench.py``, ``tools/`` or
 ``perfbench/``.  A reference is a name, an attribute, an import alias,
 or a string constant equal to the name (the registry and the compat
-shims look names up by string).  The check matches by name only, so a
-function that shares its name with a reached one passes unseen.
+shims look names up by string).  A package ``__init__.py`` re-export
+(its imports and ``__all__``) is not a reference.  The check matches
+by name only, so a function that shares its name with a reached one
+passes unseen.
+
+Every optional parameter of a public top-level package function must
+be passed at some call site in those files (or in the vendored
+``*.pyprofile`` modules): by keyword, by position, or through
+``*args``/``**kwargs``.  An option no product caller sets is a
+constant, and the code only its other values reach is dead.
 
 Every script under ``tools/`` must be imported by a test, perfbench or
 the package, or be named in README.md, so one-off scripts do not pile
@@ -39,6 +47,31 @@ ALLOWED_UNREACHED_FUNCTIONS = {
     ),
     f"{PKG}.streaming.prometheus:write_textfile": (
         "the Prometheus textfile the run path is to write (ROADMAP item 4)"
+    ),
+}
+
+# Optional parameters no product call site sets, "module:function(param)"
+# -> the reason each stays.
+ALLOWED_UNSET_PARAMETERS = {
+    f"{PKG}.compat:setval(delim)": (
+        "the reference's napalm_logs.utils API, which user profile trees "
+        "under NLS_PROFILE_DIR call"
+    ),
+    f"{PKG}.compat:traverse(delim)": (
+        "the reference's napalm_logs.utils API, which user profile trees "
+        "under NLS_PROFILE_DIR call"
+    ),
+    f"{PKG}.operators.sft:sft_render(max_turns)": (
+        "size bound a unit test cannot reach cheaply; "
+        "test_sft::test_render_max_turns_truncation sets it"
+    ),
+    f"{PKG}.operators.text:length_bucket_plan(max_cap)": (
+        "size bound a unit test cannot reach cheaply; "
+        "test_text_ops::test_length_bucket_plan_overflow_floors_waste sets it"
+    ),
+    f"{PKG}.operators.convstats:conversation_fingerprints(max_turns)": (
+        "size bound a unit test cannot reach cheaply; "
+        "test_convstats::test_fingerprint_max_turns_truncation sets it"
     ),
 }
 
@@ -183,6 +216,15 @@ def _product_files() -> list:
     return paths
 
 
+def _is_reexport(top) -> bool:
+    """An import or the ``__all__`` list of a package ``__init__.py``."""
+    if isinstance(top, (ast.Import, ast.ImportFrom)):
+        return True
+    return isinstance(top, ast.Assign) and any(
+        isinstance(t, ast.Name) and t.id == "__all__" for t in top.targets
+    )
+
+
 def _referenced(node) -> set:
     out = set()
     for n in ast.walk(node):
@@ -211,6 +253,8 @@ def _unreached_functions() -> set:
                 own = top.name
                 if path in mod_of and not own.startswith("_"):
                     defined.add((path, own))
+            if os.path.basename(path) == "__init__.py" and _is_reexport(top):
+                continue
             for name in _referenced(top):
                 refs.setdefault(name, set()).add((path, own))
     return {
@@ -227,4 +271,88 @@ def test_every_package_function_is_reached():
 
 def test_allowed_function_exceptions_are_still_needed():
     stale = sorted(set(ALLOWED_UNREACHED_FUNCTIONS) - _unreached_functions())
+    assert not stale, stale
+
+
+def _vendored_profiles() -> list:
+    root = os.path.join(REPO, PKG, "profiles", "vendored")
+    return [
+        os.path.join(dirpath, f)
+        for dirpath, _dirs, files in os.walk(root)
+        for f in files if f.endswith(".pyprofile")
+    ]
+
+
+def _optional_params(fn) -> list:
+    """``(name, position)`` of every parameter with a default; the
+    position is None for keyword-only ones."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out = [(p.arg, i) for i, p in enumerate(pos) if i >= first]
+    out += [
+        (p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+        if d is not None
+    ]
+    return out
+
+
+def _call_name(call, aliases: dict):
+    f = call.func
+    name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+    return aliases.get(name, name)
+
+
+def _unset_parameters() -> set:
+    """``module:function(param)`` of every optional parameter of a
+    public top-level package function that no product call sets."""
+    defs = {}
+    for mod, path in _package_modules().items():
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for top in tree.body:
+            if isinstance(top, ast.FunctionDef) and not top.name.startswith("_"):
+                defs[top.name] = (mod, path, _optional_params(top))
+    passed = {}  # function name -> keywords, positions, "*" / "**"
+    for path in _product_files() + _vendored_profiles():
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        # `from m import f as g`: a call of g is a call of f
+        aliases = {
+            a.asname: a.name
+            for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)
+            for a in n.names if a.asname
+        }
+        for top in tree.body:
+            for call in ast.walk(top):
+                if not isinstance(call, ast.Call):
+                    continue
+                name = _call_name(call, aliases)
+                if name not in defs or (
+                    path == defs[name][1] and getattr(top, "name", None) == name
+                ):
+                    continue  # recursion does not set an option
+                got = passed.setdefault(name, set())
+                for i, arg in enumerate(call.args):
+                    got.add("*" if isinstance(arg, ast.Starred) else i)
+                got.update(k.arg or "**" for k in call.keywords)
+    unset = set()
+    for name, (mod, _path, params) in defs.items():
+        got = passed.get(name, set())
+        for param, pos in params:
+            if "**" in got or param in got:
+                continue
+            if pos is not None and ("*" in got or pos in got):
+                continue
+            unset.add(f"{mod}:{name}({param})")
+    return unset
+
+
+def test_every_optional_parameter_is_set():
+    unset = sorted(_unset_parameters() - set(ALLOWED_UNSET_PARAMETERS))
+    assert not unset, f"options no product caller sets: {unset}"
+
+
+def test_allowed_parameter_exceptions_are_still_needed():
+    stale = sorted(set(ALLOWED_UNSET_PARAMETERS) - _unset_parameters())
     assert not stale, stale

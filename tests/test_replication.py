@@ -22,7 +22,8 @@ def test_golden_corpus_replicates_exactly():
         c["conv_id"] = c["conv_id"] + f"#rep{k:03d}"
         clones.append(c)
     pdf = pd.concat(clones, ignore_index=True)
-    out = normalize_pandas(pdf, registry, include_raw=False, include_unknown=True)
+    out = normalize_pandas(pdf, registry)
+    out = out[out["error"] != "RAW"]
     assert len(out) == N_CLONES * len(base)
 
     # every clone of a case must produce a byte-identical envelope body

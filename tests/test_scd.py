@@ -49,15 +49,6 @@ def test_scd2_null_transitions_are_real_changes(spark):
     assert seq == [("x", _ts(0)), (None, _ts(5)), ("x", _ts(9))]
 
 
-def test_scd2_no_collapse_versions_every_row(spark):
-    log = _log(spark, [("a", "x", 0), ("a", "x", 5), ("a", "x", 9)])
-    out = scd2_intervals(
-        log, "dev", ("state",), order_cols=("seq",), collapse_unchanged=False
-    )
-    assert out.count() == 3
-    assert out.filter(F.col("is_current")).collect()[0].valid_from == _ts(9)
-
-
 def test_scd2_single_exchange_plan(spark):
     log = _log(spark, [("a", "x", 0), ("a", "y", 5)])
     plan = (

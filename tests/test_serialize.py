@@ -130,10 +130,8 @@ def test_registry_matches_reference_matrix():
 
 def test_serialize_envelopes_spark_paths(spark):
     from napalm_logs_spark.operators.normalize import normalize
-    from napalm_logs_spark.sources.transcripts import (
-        synth_transcripts_pandas,
-        transcripts_df,
-    )
+    from napalm_logs_spark.sources.transcripts import transcripts_df
+    from synth import synth_transcripts_pandas
 
     env = normalize(
         transcripts_df(spark, synth_transcripts_pandas(n_convs=5, turns_per_conv=6, seed=42))
@@ -162,10 +160,8 @@ def test_star_alias_is_binary_msgpack(spark):
     """'*' is the reference's default serializer alias (msgpack) — it
     must take the binary UDF path, not crash Arrow with bytes-in-string."""
     from napalm_logs_spark.operators.normalize import normalize
-    from napalm_logs_spark.sources.transcripts import (
-        synth_transcripts_pandas,
-        transcripts_df,
-    )
+    from napalm_logs_spark.sources.transcripts import transcripts_df
+    from synth import synth_transcripts_pandas
 
     env = normalize(
         transcripts_df(spark, synth_transcripts_pandas(n_convs=2, turns_per_conv=4, seed=42))

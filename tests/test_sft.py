@@ -204,12 +204,6 @@ def test_truncate_to_budget_suffix_and_pin(spark):
     # kept: t2..t4 fit the budget; t1 does not; t0 pinned despite overflow
     assert [got[i]["keep"] for i in range(5)] == [1, 0, 1, 1, 1]
     assert [got[i]["pinned"] for i in range(5)] == [1, 0, 0, 0, 0]
-    # pin_first=False drops the system turn too
-    got2 = {r["turn_idx"]: r.asDict()
-            for r in truncate_to_budget(
-                tdf, budget_tokens=3, pin_first=False).collect()}
-    assert [got2[i]["keep"] for i in range(5)] == [0, 0, 1, 1, 1]
-    assert all(got2[i]["pinned"] == 0 for i in range(5))
 
 
 def test_truncate_budget_covers_all(spark):

@@ -175,27 +175,34 @@ def test_ann_plan_stays_bounded_at_production_scale(spark):
 
 
 def test_near_dup_bucket_cap_and_observability(spark):
-    """A dense bucket (many identical vectors) must be excluded by the
-    cap; the multi-table form still finds pairs that fit under the cap."""
+    """A dense bucket (more identical vectors than the cap) must be
+    excluded in every table; a smaller near-duplicate cluster that fits
+    under the cap is still found."""
     import numpy as np
 
-    from napalm_logs_spark.operators.similarity import embedding_near_dup
+    from napalm_logs_spark.operators.similarity import (
+        NEAR_DUP_MAX_BUCKET,
+        embedding_near_dup,
+    )
 
     rng = np.random.RandomState(11)
+    hot = rng.normal(size=16).astype("float32").tolist()
+    n_hot = NEAR_DUP_MAX_BUCKET + 1
+    rows = [(i, hot) for i in range(n_hot)]  # one bucket past the cap
     dense = rng.normal(size=16).astype("float32")
-    rows = [(i, (dense + rng.normal(scale=1e-3, size=16).astype("float32")).tolist())
-            for i in range(40)]          # 40 near-identical vectors
-    rows += [(100 + i, rng.normal(size=16).astype("float32").tolist())
+    rows += [(10_000 + i, (dense + rng.normal(scale=1e-3, size=16).astype("float32")).tolist())
+             for i in range(40)]         # 40 near-identical vectors
+    rows += [(20_000 + i, rng.normal(size=16).astype("float32").tolist())
              for i in range(20)]         # background
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    # cap smaller than the dense cluster: its bucket is dropped in every
-    # table -> pairs inside it are not generated
-    capped = embedding_near_dup(emb, dim=16, threshold=0.999, n_tables=2, max_bucket=10)
-    uncapped = embedding_near_dup(emb, dim=16, threshold=0.999, n_tables=2, max_bucket=10**6)
-    n_capped, n_uncapped = capped.count(), uncapped.count()
-    assert n_uncapped >= 40 * 39 / 2          # the dense clique exists
-    assert n_capped < n_uncapped              # cap bounded the work
+    got = [(r.id_a, r.id_b)
+           for r in embedding_near_dup(emb, dim=16, threshold=0.999).collect()]
+    # the over-cap bucket is dropped in every table: no pair inside it
+    assert not [p for p in got if p[1] < n_hot]
+    # the 40-vector clique fits under the cap and is found whole
+    clique = {p for p in got if 10_000 <= p[0] and p[1] < 20_000}
+    assert len(clique) == 40 * 39 // 2
 
 
 def test_kmeans_deterministic_across_partitionings(spark):
@@ -517,29 +524,6 @@ def test_quantize_int8_matches_numpy_and_no_shuffle(spark, emb):
     assert "Exchange" not in plan
 
 
-def test_ivfpq_amortized_model_path_identical(emb, queries):
-    # model= + encoded= (train once / encode once / search many) must
-    # return exactly the one-shot result
-    from napalm_logs_spark.operators.similarity import (
-        ivfpq_encode,
-        ivfpq_topk,
-        ivfpq_train,
-    )
-
-    one_shot = sorted(map(tuple, ivfpq_topk(emb, queries, k=5).collect()))
-    coarse, books = ivfpq_train(emb, n_clusters=8, m=8, k_sub=16)
-    enc = ivfpq_encode(emb, coarse, books)
-    amortized = sorted(
-        map(
-            tuple,
-            ivfpq_topk(
-                emb, queries, k=5, nprobe=4, model=(coarse, books), encoded=enc
-            ).collect(),
-        )
-    )
-    assert one_shot == amortized
-
-
 def test_pca_partitioning_invariance_and_sign(emb):
     """The fixed-point moment contract: any repartitioning yields
     bit-identical mean/components; each component's largest-|entry|
@@ -785,9 +769,7 @@ def test_bitext_mine_finds_planted_pairs(spark):
     from napalm_logs_spark.operators.similarity import bitext_margin_mine
 
     df = _bitext_corpus(spark)
-    out = bitext_margin_mine(
-        df, k=3, threshold=1.0, n_clusters=2, nprobe=2, sample_cap=64
-    )
+    out = bitext_margin_mine(df, k=3, threshold=1.0, n_clusters=2, nprobe=2)
     got = {r.src_id: r for r in out.collect()}
     # every planted pair is each other's best match and mutual
     for i in range(6):
@@ -811,8 +793,7 @@ def test_bitext_mine_partitioning_invariance(spark):
     outs = []
     for n_part in (1, 5):
         out = bitext_margin_mine(
-            df.repartition(n_part), k=3, threshold=1.0, n_clusters=2,
-            nprobe=2, sample_cap=64,
+            df.repartition(n_part), k=3, threshold=1.0, n_clusters=2, nprobe=2
         )
         outs.append(
             sorted(

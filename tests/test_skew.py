@@ -3,10 +3,8 @@ regardless of partitioning, a hot conversation included."""
 
 from napalm_logs_spark.operators.normalize import normalize
 from napalm_logs_spark.profiles import load_registry
-from napalm_logs_spark.sources.transcripts import (
-    synth_transcripts_pandas,
-    transcripts_df,
-)
+from napalm_logs_spark.sources.transcripts import transcripts_df
+from synth import synth_transcripts_pandas
 
 
 def test_normalize_partitioning_invariant(spark):
