@@ -70,7 +70,6 @@ def _grad_partial(
     concatenation of chunk partials sums to the same total.
     """
     n = len(M)
-    k, d1 = W.shape
     Xb = np.concatenate([M, np.ones((n, 1))], axis=1)
     R = _softmax_rows(Xb, W)
     R[np.arange(n), y] -= 1.0

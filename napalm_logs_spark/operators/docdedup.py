@@ -78,9 +78,9 @@ def shingle_sets(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame
     ).select("doc_id", F.col("_s.v").alias("sh_set"))
 
 
-def shingles(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
+def shingles(df: DataFrame, n: int = 3) -> DataFrame:
     """Word n-gram shingle set per document: (doc_id, shingle)."""
-    return shingle_sets(df, n, text_col).select(
+    return shingle_sets(df, n).select(
         "doc_id", F.explode("sh_set").alias("shingle")
     )
 
@@ -110,8 +110,8 @@ def ngram_jaccard_pairs(
     for every emitted pair); the low-τ path's only deviation from brute
     force is that a pair sharing ONLY above-cap shingles is not
     generated — equality is exact whenever the corpus's max shingle
-    frequency ≤ 500.  (``_jaccard_naive`` remains as the
-    brute-force reference used by tests.)
+    frequency ≤ 500.  (``tests/test_docdedup.py`` keeps the brute-force
+    reference, ``_jaccard_naive``.)
     """
     if threshold < 0.5:
         return _jaccard_capped(df, n, threshold)
@@ -157,7 +157,6 @@ def _jaccard_capped(
     df: DataFrame,
     n: int = 3,
     threshold: float = 0.8,
-    text_col: str = "text",
     freq_cap: int = 500,
 ) -> DataFrame:
     """Exact low-τ Jaccard with bounded join buckets (the 100 TB form
@@ -175,7 +174,7 @@ def _jaccard_capped(
     max shingle frequency ≤ cap the output is identical to brute force
     by construction.
     """
-    sets = shingle_sets(df, n, text_col).filter(F.size("sh_set") > 0)
+    sets = shingle_sets(df, n).filter(F.size("sh_set") > 0)
     # one materialized shingle table (the standard dedup-pipeline
     # intermediate): freq, sizes, light and heavy branches all read it —
     # without this each branch re-runs the scan + shingle HOF chain
@@ -223,38 +222,6 @@ def _jaccard_capped(
         counts.join(side("a"), "doc_a")
         .join(side("b"), "doc_b")
         .withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-def _jaccard_naive(
-    df: DataFrame, n: int = 3, threshold: float = 0.8, text_col: str = "text"
-) -> DataFrame:
-    """Count-based exact Jaccard: shingle self-join → |A∩B| counts."""
-    sh = shingles(df, n, text_col)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("size_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("size_b"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("size_a") + F.col("size_b") - F.col("n_common")),
-                6,
-            ),
-        )
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )

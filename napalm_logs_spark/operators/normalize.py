@@ -14,13 +14,13 @@ pipeline of the reference (which spreads it over three OS processes):
   state flag attach         (device.py:348-351            — M9)
 
 Scale design: the profile registry is closure-captured (broadcast-sized,
-a few hundred KB) and its regexes compile lazily *once per executor*
-(``lru_cache``).  Matching is vectorized: per (os, prefix) a single
-``Series.str.extract`` over the not-yet-matched rows, then message
-profiles are gated by a hash groupby on ``tag`` before any message regex
-runs — the same cheap-predicate-first trick the reference applies
-row-at-a-time, here applied per Arrow batch.  Python-dict work (YANG
-emit, canonical JSON) only touches rows that matched a profile.
+a few hundred KB) with each OS's dispatch index and YANG plans compiled
+at load; the only per-executor caches are regex compiles and
+python-profile modules.  Matching runs per (os, prefix) over the
+not-yet-matched rows, then message profiles are gated by a hash groupby
+on the gate field before any message regex runs — the reference's
+cheap-predicate-first trick, applied per Arrow batch.  Python-dict work
+(YANG emit, canonical JSON) only touches rows that matched a profile.
 
 A message may match multiple OS profiles → the stage *explodes* (the
 reference flatMaps to every matching OS, server.py:194-216); rows no OS
@@ -43,7 +43,6 @@ from datetime import datetime
 from functools import lru_cache
 from typing import Iterable, Iterator
 
-import numpy as np
 import pandas as pd
 
 from ..profiles.registry import (
@@ -338,6 +337,22 @@ def _resolve_epoch(date: str, time: str, fmt: str | None, default_year: int):
 # stage A: prefix identification (P2/P4), vectorized per (os, prefix)
 
 
+def _prefix_row(d: dict, epoch) -> tuple:
+    """One parsed row; the stripped message and the PRI's facility and
+    severity go into ``d`` too (reference server.py:185-191)."""
+    msg = d.get("message")
+    if isinstance(msg, str):
+        msg = msg.strip()
+        d["message"] = msg
+    pri = d.get("pri")
+    fac = sev = None
+    if pri is not None:
+        fac, sev = divmod(int(pri), 8)
+        d["facility"] = fac
+        d["severity"] = sev
+    return (d, d.get("host"), d.get("tag"), msg, fac, sev, epoch)
+
+
 def _prefix_stage(texts: pd.Series, osp: OsProfile) -> pd.DataFrame | None:
     """First matching prefix wins per OS; returns the partially-parsed
     frame (index ⊆ texts.index) or None when nothing matched.
@@ -362,16 +377,8 @@ def _prefix_stage(texts: pd.Series, osp: OsProfile) -> pd.DataFrame | None:
                 if d is None:
                     still.append(pos)
                     continue
-                msg = d.get("message")
-                if isinstance(msg, str):
-                    msg = msg.strip()
-                    d["message"] = msg
-                pri = d.get("pri")
-                fac = sev = None
-                if pri is not None:
-                    fac, sev = int(pri) // 8, int(pri) % 8
                 epoch = d.pop("timestamp", None)
-                rows[pos] = (d, d.get("host"), d.get("tag"), msg, fac, sev, epoch)
+                rows[pos] = _prefix_row(d, None if epoch is None else int(epoch))
             remaining = still
             continue
         cp = pp.pattern
@@ -396,20 +403,11 @@ def _prefix_stage(texts: pd.Series, osp: OsProfile) -> pd.DataFrame | None:
                 still.append(pos)
                 continue
             d = {name: m.group(g) for name, g in groups}
-            msg = d.get("message")
-            if isinstance(msg, str):
-                msg = msg.strip()
-                d["message"] = msg
-            pri = d.get("pri")
-            fac = sev = None
-            if pri is not None:
-                pri_i = int(pri)
-                fac, sev = pri_i // 8, pri_i % 8
             epoch = None
             date, time_ = d.get("date"), d.get("time")
             if date or time_:  # declared fmt first, fallback table after
                 epoch = _resolve_epoch(date or "", time_ or "", fmt, DEFAULT_YEAR)
-            rows[pos] = (d, d.get("host"), d.get("tag"), msg, fac, sev, epoch)
+            rows[pos] = _prefix_row(d, epoch)
         remaining = still
 
     if not rows:
@@ -430,19 +428,6 @@ def _prefix_stage(texts: pd.Series, osp: OsProfile) -> pd.DataFrame | None:
     )
 
 
-def _attach_details_extras(frame: pd.DataFrame) -> None:
-    """Fold stripped message + facility/severity into the details dicts
-    (the reference mutates msg_dict in place, server.py:185-191)."""
-    for det, msg, fac, sev in zip(
-        frame["_details"], frame["message"], frame["facility"], frame["severity"]
-    ):
-        if msg is not None:
-            det["message"] = msg
-        if fac is not None:
-            det["facility"] = int(fac)
-            det["severity"] = int(sev)
-
-
 # ---------------------------------------------------------------------------
 # stage B: tag-gated message match + casts + emit (M2/M3/M5/M6/M9)
 
@@ -458,34 +443,6 @@ def _apply_casts(captures: dict, casts: dict) -> dict:
         if val is not None:
             out[key] = cast_fn(val, fn_name)
     return out
-
-
-#: per-profile compiled YANG path plans, keyed by id(mapping) (the
-#: mapping dicts live in the process-lifetime registry).  Each entry
-#: pre-splits the '//' template once and marks which segments actually
-#: interpolate captures — setval's per-row split and str.format over
-#: fully-static paths were ~20% of the whole normalize stage.
-_YANG_PLANS: dict = {}
-
-
-def _yang_plan(mapping: dict):
-    plan = _YANG_PLANS.get(id(mapping))
-    if plan is None:
-        def compile_paths(d):
-            out = []
-            for path_tpl, payload in d.items():
-                segs = path_tpl.split("//")
-                dyn = [i for i, s in enumerate(segs) if "{" in s]
-                out.append((segs, dyn, payload))
-            return out
-
-        plan = (
-            compile_paths(mapping.get("variables", {})),
-            compile_paths(mapping.get("static", {})),
-            mapping,  # keep the dict alive so id() can't be recycled
-        )
-        _YANG_PLANS[id(mapping)] = plan
-    return plan
 
 
 def _set_parts(oc: dict, segs, dyn, captures, value):
@@ -512,8 +469,10 @@ def _set_parts(oc: dict, segs, dyn, captures, value):
     return oc
 
 
-def _build_yang(mapping: dict, captures: dict) -> dict:
-    variables, static, _ = _yang_plan(mapping)
+def _build_yang(plan: tuple, captures: dict) -> dict:
+    """The YANG object of one match, from its profile's precompiled
+    plan (setval(path.format(...)) parity, device.py:192-208)."""
+    variables, static = plan
     oc: dict = {}
     for segs, dyn, source_key in variables:
         _set_parts(oc, segs, dyn, captures, captures[source_key])
@@ -545,22 +504,17 @@ def _entity_of(captures: dict):
 def _message_stage(osp: OsProfile, parsed: pd.DataFrame) -> pd.DataFrame:
     """Match message profiles against the parsed frame; emit envelopes.
 
-    Profiles are indexed by the gate field (``tag``) so a message regex
-    only ever runs on rows whose tag references it — reference
-    device.py:143-147's cheap-predicate-first ordering, applied to a
-    whole Arrow batch via a hash groupby.
+    The OS's dispatch index (built at registry load) keys profiles by
+    gate value, so a message regex only ever runs on rows whose gate
+    references it — reference device.py:143-147's cheap-predicate-first
+    ordering, applied to a whole Arrow batch via a hash groupby.
     """
     msg_arr = parsed["message"].to_numpy(dtype=object)
     det_arr = parsed["_details"].to_numpy(dtype=object)
     tag_arr = parsed["tag"].to_numpy(dtype=object)
     hits: dict = {}  # position -> (error, model, yang_obj, state, state_tag, entity)
 
-    match_fields = {mp.match_on for mp in osp.messages}
-    for match_field in match_fields:
-        profile_index: dict = {}
-        for mp in osp.messages:
-            if mp.match_on == match_field:
-                profile_index.setdefault(mp.tag, []).append(mp)
+    for match_field, profile_index in osp.dispatch.items():
         # group row positions by gate value (hash gate before any regex)
         groups: dict = {}
         if match_field == "tag":
@@ -590,7 +544,7 @@ def _message_stage(osp: OsProfile, parsed: pd.DataFrame) -> pd.DataFrame:
                             mp.model,
                             yang if yang is not None else _OC_FAILED,
                             mp.state,
-                            mp.state_tag if mp.state is not None else None,
+                            mp.state_tag,
                             _entity_of(det),
                         )
                     pending = []
@@ -610,7 +564,7 @@ def _message_stage(osp: OsProfile, parsed: pd.DataFrame) -> pd.DataFrame:
                         {nm: m.group(g) for nm, g in groups_items}, casts
                     )
                     try:
-                        yang = _build_yang(mp.mapping, captures)
+                        yang = _build_yang(mp.yang_plan, captures)
                     except Exception:
                         yang = _OC_FAILED
                     hits[pos] = (
@@ -618,7 +572,7 @@ def _message_stage(osp: OsProfile, parsed: pd.DataFrame) -> pd.DataFrame:
                         mp.model,
                         yang,
                         mp.state,
-                        mp.state_tag if mp.state is not None else None,
+                        mp.state_tag,
                         _entity_of(captures),
                     )
                 pending = still
@@ -673,7 +627,6 @@ def normalize_pandas(pdf: pd.DataFrame, registry: ProfileRegistry) -> pd.DataFra
         if parsed is None or parsed.empty:
             continue
         matched_any.loc[parsed.index] = True
-        _attach_details_extras(parsed)
         msg_res = _message_stage(osp, parsed)
         env = pd.DataFrame(index=parsed.index)
         env["os"] = os_name
@@ -733,15 +686,9 @@ def normalize_pandas(pdf: pd.DataFrame, registry: ProfileRegistry) -> pd.DataFra
     base = pdf[[c for c in ("conv_id", "turn_idx", "role", "tool", "ts") if c in pdf.columns]]
     res = res.join(base)
     res["ip"] = DEFAULT_IP
-    fallback = fallback_epoch.reindex(res["_ord"].values)
-    res["timestamp"] = pd.array(
-        [
-            int(t)
-            if t is not None and not (isinstance(t, float) and np.isnan(t))
-            else (int(fb) if fb is not pd.NA else None)
-            for t, fb in zip(res["timestamp"], fallback)
-        ],
-        dtype="Int64",
+    timestamp = res["timestamp"].astype("Int64")
+    res["timestamp"] = timestamp.where(
+        timestamp.notna(), fallback_epoch.reindex(res["_ord"]).array
     )
     res["yang_message"] = res["yang_message"].map(
         lambda y: canonical_json(y) if y is not None else None
@@ -749,18 +696,9 @@ def normalize_pandas(pdf: pd.DataFrame, registry: ProfileRegistry) -> pd.DataFra
     res["message_details"] = res["message_details"].map(
         lambda d: canonical_json(d) if d is not None else None
     )
-    for col, dtype in (
-        ("turn_idx", "Int64"),
-        ("facility", "Int64"),
-        ("severity", "Int64"),
-        ("state", "Int64"),
-        ("timestamp", "Int64"),
-    ):
+    for col in ("turn_idx", "facility", "severity", "state"):
         if col in res.columns:
-            res[col] = pd.array(
-                [None if pd.isna(v) else int(v) for v in res[col]],
-                dtype="Int64",
-            )
+            res[col] = res[col].astype("Int64")
     for col in _OUT_COLS:
         if col not in res.columns:
             res[col] = None

@@ -11,7 +11,7 @@ analog of its final serialize-and-publish stage
 output envelope per message — here the envelope is a training sample
 per conversation).
 
-Template (fixed, versioned by TEMPLATE_VERSION):
+Template (fixed):
 
     <|role|>\\n{text}\\n        per turn, concatenated in turn order
 
@@ -41,8 +41,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from napalm_logs_spark.operators.convstats import US
-
-TEMPLATE_VERSION = 1
 
 #: roles whose text spans receive loss (mask = 1)
 LOSS_ROLES = ("agent",)

@@ -291,10 +291,9 @@ def lsh_cosine_topk(
     )
 
 
-def _train_centroids(
-    sample: np.ndarray, n_clusters: int, seed: int, iters: int = 10
-) -> np.ndarray:
-    """Deterministic Lloyd k-means on unit-normalized sample vectors.
+def _train_centroids(sample: np.ndarray, n_clusters: int, seed: int) -> np.ndarray:
+    """Deterministic Lloyd k-means (10 iterations) on unit-normalized
+    sample vectors.
 
     Driver-side numpy on a bounded sample (the standard IVF recipe —
     training data never exceeds the sample cap regardless of corpus
@@ -305,7 +304,7 @@ def _train_centroids(
     unit = sample / np.where(norms > 0, norms, 1.0)
     idx = rng.choice(len(unit), size=min(n_clusters, len(unit)), replace=False)
     cent = unit[np.sort(idx)].copy()
-    for _ in range(iters):
+    for _ in range(10):
         sims = unit @ cent.T                      # cosine on unit vectors
         assign = sims.argmax(axis=1)
         for c in range(len(cent)):
@@ -358,10 +357,10 @@ def _probe_clusters(
     centroids: np.ndarray,
     nprobe: int,
     emb_col: str = "embedding",
-    out_col: str = "cluster",
 ) -> DataFrame:
-    """Explode each query row into its ``nprobe`` nearest inverted lists
-    (ties to the lowest cluster id, matching :func:`ivf_assign`)."""
+    """Explode each query row into its ``nprobe`` nearest inverted lists,
+    as column ``cluster`` (ties to the lowest cluster id, matching
+    :func:`ivf_assign`)."""
     bcent = df.sparkSession.sparkContext.broadcast(np.asarray(centroids, dtype="float64"))
 
     @pandas_udf("array<int>")
@@ -373,7 +372,7 @@ def _probe_clusters(
         order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
         return pd.Series(list(order.astype("int32")))
 
-    return df.withColumn(out_col, F.explode(_probe(F.col(emb_col))))
+    return df.withColumn("cluster", F.explode(_probe(F.col(emb_col))))
 
 
 def ivf_cosine_topk(
@@ -1330,7 +1329,7 @@ def _pca_partial(M: np.ndarray) -> np.ndarray:
     contributions are quantized before the integer sum, so any chunking
     or partitioning sums to the same total (the k-means/classifier
     determinism contract)."""
-    n, d = M.shape
+    n = len(M)
     outer = (
         np.rint(np.einsum("ni,nj->nij", M, M) * PCA_QUANT)
         .astype(np.int64)

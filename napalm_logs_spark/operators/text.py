@@ -999,7 +999,6 @@ def bigram_logprob(df: DataFrame) -> DataFrame:
     )
 
 
-_DSIR_HEX = "0123456789abcdef"
 DSIR_N, DSIR_BUCKETS = 2, 4096  # word bigrams, first 3 md5 hex digits
 
 

@@ -52,13 +52,6 @@ class CompiledPattern:
     def regex(self):
         return _compile_cached(self.pattern)
 
-    def match_groups(self, text: str):
-        """Search ``text``; return {hole: captured or None} or None."""
-        m = self.regex().search(text)
-        if m is None:
-            return None
-        return {name: m.group(idx) for name, idx in self.group_index.items()}
-
 
 @lru_cache(maxsize=4096)
 def _compile_cached(pattern: str):

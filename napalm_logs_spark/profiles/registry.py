@@ -13,9 +13,11 @@ A profile directory tree (the engine's "query language") looks like::
 ``base.py:273-459`` — independent implementation.)
 
 The loaded registry is **plain picklable data** (pattern strings, group
-maps, cast names, mapping templates, python-module file paths).  Regexes
-compile lazily per executor via an ``lru_cache``; python-module profiles
-are exec'd lazily per executor from their source path with the
+maps, cast names, python-module file paths) holding each OS's
+match-and-emit plan, compiled once at load: a YANG plan per
+:class:`MessageProfile` and a dispatch index per :class:`OsProfile`.
+Regexes compile lazily per executor via an ``lru_cache``; python-module
+profiles are exec'd lazily per executor from their source path with the
 ``napalm_logs.utils`` shim installed.  On a real cluster the registry
 rides to executors inside the mapInPandas closure (a broadcast-sized
 object: ~110 profiles, a few hundred KB).
@@ -24,7 +26,7 @@ object: ~110 profiles, a few hundred KB).
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import lru_cache
 
 import yaml
@@ -103,8 +105,6 @@ def _materialize_pkg_dir(pkg_path: str) -> str | None:
 class PrefixProfile:
     pattern: CompiledPattern | None   # None for python-module prefixes
     time_format: str | None = None
-    state: int | None = None
-    state_tag: str | None = None
     python_path: str | None = None    # path of module defining extract()
 
 
@@ -115,9 +115,11 @@ class MessageProfile:
     match_on: str
     model: str
     pattern: CompiledPattern | None   # None for python-module messages
-    mapping: dict = field(default_factory=lambda: {"variables": {}, "static": {}})
+    #: (variables, static): one (segments, dynamic segment indexes,
+    #: capture name or literal) per mapping path
+    yang_plan: tuple | None = ((), ())
     state: int | None = None
-    state_tag: str | None = None
+    state_tag: str | None = None      # None unless ``state`` is set
     python_path: str | None = None    # path of module defining emit()
 
 
@@ -126,15 +128,12 @@ class OsProfile:
     name: str
     prefixes: tuple
     messages: tuple          # in load order (first match wins)
-    messages_by_tag: dict    # tag -> tuple[MessageProfile] for match_on == 'tag'
+    dispatch: dict           # match_on -> gate value -> tuple[MessageProfile]
 
 
 @dataclass(frozen=True)
 class ProfileRegistry:
     oses: dict  # os_name -> OsProfile
-
-    def os_names(self):
-        return tuple(self.oses)
 
 
 # ---------------------------------------------------------------------------
@@ -222,6 +221,28 @@ def _load_os_dir(os_dir: str) -> dict:
     return raw
 
 
+def _yang_plan(mapping) -> tuple | None:
+    """Split each ``//`` path template once and mark the segments that
+    interpolate captures (per-row splitting was ~20% of normalize).  A
+    malformed mapping has no plan: its matches publish nothing."""
+
+    def compile_paths(d):
+        out = []
+        for path_tpl, payload in d.items():
+            segs = tuple(path_tpl.split("//"))
+            dyn = tuple(i for i, seg in enumerate(segs) if "{" in seg)
+            out.append((segs, dyn, payload))
+        return tuple(out)
+
+    try:
+        return (
+            compile_paths(mapping.get("variables", {})),
+            compile_paths(mapping.get("static", {})),
+        )
+    except AttributeError:
+        return None
+
+
 def _build_os_profile(name: str, raw: dict) -> OsProfile:
     prefixes = []
     for p in raw.get("prefixes", []):
@@ -232,8 +253,6 @@ def _build_os_profile(name: str, raw: dict) -> OsProfile:
             PrefixProfile(
                 pattern=compile_line(p.get("line", ""), p.get("values", {}), wrap_prefix=True),
                 time_format=p.get("time_format"),
-                state=p.get("state"),
-                state_tag=p.get("state_tag"),
             )
         )
     messages = []
@@ -254,19 +273,21 @@ def _build_os_profile(name: str, raw: dict) -> OsProfile:
                 match_on=m.get("match_on", "tag"),
                 model=m.get("model", NO_MODEL),
                 pattern=compile_line(m.get("line", ""), m.get("values", {})),
-                mapping=m.get("mapping", {"variables": {}, "static": {}}),
+                yang_plan=_yang_plan(m.get("mapping", {})),
                 state=m.get("state"),
-                state_tag=m.get("state_tag"),
+                state_tag=m.get("state_tag") if m.get("state") is not None else None,
             )
         )
-    by_tag: dict = {}
+    dispatch: dict = {}
     for mp in messages:
-        if mp.match_on == "tag":
-            by_tag.setdefault(mp.tag, []).append(mp)
-    by_tag = {k: tuple(v) for k, v in by_tag.items()}
+        dispatch.setdefault(mp.match_on, {}).setdefault(mp.tag, []).append(mp)
+    dispatch = {
+        match_on: {tag: tuple(mps) for tag, mps in index.items()}
+        for match_on, index in dispatch.items()
+    }
     return OsProfile(
         name=name, prefixes=tuple(prefixes), messages=tuple(messages),
-        messages_by_tag=by_tag,
+        dispatch=dispatch,
     )
 
 

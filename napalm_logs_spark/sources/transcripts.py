@@ -39,14 +39,11 @@ except ImportError:  # pragma: no cover
 
 #: golden corpus: the vendored snapshot of the reference's Apache-2.0
 #: test fixtures (133 syslog.msg + yang.json cases) — repo-local so the
-#: engine and its tests run standalone.  NLS_GOLDEN_DIR overrides;
-#: the reference checkout is a final fallback for odd layouts.
-_REPO_GOLDEN_DIR = os.path.join(
+#: engine and its tests run standalone.  NLS_GOLDEN_DIR overrides (and
+#: is needed where the package runs from a zip, away from the repo).
+DEFAULT_GOLDEN_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
     "tests", "fixtures", "golden",
-)
-DEFAULT_GOLDEN_DIR = (
-    _REPO_GOLDEN_DIR if os.path.isdir(_REPO_GOLDEN_DIR) else "/root/reference/tests/config"
 )
 
 #: fixture-era base timestamp (naive UTC; Spark session runs in UTC)
@@ -56,6 +53,11 @@ BASE_TS = datetime(2017, 7, 20, 21, 45, 59)
 def golden_cases():
     """Yield dicts {os, error, case, text, expected} for every fixture."""
     root = os.environ.get("NLS_GOLDEN_DIR", DEFAULT_GOLDEN_DIR)
+    if not os.path.isdir(root):
+        raise FileNotFoundError(
+            f"golden fixture directory not found: {root}; "
+            "set NLS_GOLDEN_DIR to the fixture tree"
+        )
     for os_name in sorted(os.listdir(root)):
         os_dir = os.path.join(root, os_name)
         if not os.path.isdir(os_dir):

@@ -12,7 +12,7 @@ from napalm_logs_spark.operators.normalize import normalize_pandas
 
 def test_builtin_profiles_standalone():
     reg = load_registry(BUILTIN_PROFILE_DIR)
-    assert "demo" in reg.os_names()
+    assert "demo" in reg.oses
     pdf = pd.DataFrame(
         {
             "conv_id": ["c1"],

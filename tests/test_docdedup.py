@@ -13,6 +13,37 @@ from napalm_logs_spark.operators.docdedup import (
 )
 
 
+def _jaccard_naive(df, n=3, threshold=0.8):
+    """Brute-force exact Jaccard, the reference for the fast plans:
+    shingle self-join → |A∩B| counts."""
+    sh = shingles(df, n)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
+    a = sh.alias("a")
+    b = sh.alias("b")
+    inter = (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("size_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("size_b"))
+    return (
+        inter.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .withColumn(
+            "jaccard",
+            F.round(
+                F.col("n_common")
+                / (F.col("size_a") + F.col("size_b") - F.col("n_common")),
+                6,
+            ),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
+    )
+
+
 @pytest.fixture(scope="module")
 def planted(spark):
     """Corpus with planted exact + near duplicates."""
@@ -100,8 +131,6 @@ def test_duplicate_clusters_connected_components(spark):
 def test_prefix_filter_equals_naive(spark, planted):
     """The PPJoin-style prefix-filtered plan (τ≥0.5) returns exactly the
     naive plan's pairs."""
-    from napalm_logs_spark.operators.docdedup import _jaccard_naive
-
     for tau in (0.5, 0.8):
         fast = {
             (r.doc_a, r.doc_b, r.jaccard)
@@ -119,7 +148,7 @@ def test_capped_jaccard_exact_with_engaged_cap(spark):
     still get EXACT jaccard (heavy contribution restored from per-doc
     heavy arrays); a pair sharing only heavy shingles is the documented
     miss."""
-    from napalm_logs_spark.operators.docdedup import _jaccard_capped, _jaccard_naive
+    from napalm_logs_spark.operators.docdedup import _jaccard_capped
 
     boiler = "the quick brown fox jumps over dog"     # shared by all docs
     rows = [(i, f"{boiler} unique{i//2} tail{i//2} words{i//2} extra{i}")
@@ -149,7 +178,7 @@ def test_capped_jaccard_exact_with_engaged_cap(spark):
 
 
 def test_capped_equals_naive_when_cap_disengaged(spark):
-    from napalm_logs_spark.operators.docdedup import _jaccard_capped, _jaccard_naive
+    from napalm_logs_spark.operators.docdedup import _jaccard_capped
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta doc{i} extra{i % 3} more{i % 2}")

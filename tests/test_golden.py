@@ -155,3 +155,41 @@ def test_every_profile_has_a_fixture_and_vice_versa(registry):
         for extra in sorted(dirs - errors):
             problems.append(f"{os_name}/{extra}: fixture without profile")
     assert not problems, problems
+
+
+def test_unpickled_registry_copies_are_freed(registry):
+    """Every micro-batch hands each Python worker a freshly unpickled
+    registry; normalizing with it must keep nothing of the copy alive
+    (a plan cache keyed by ``id(mapping)`` kept ~0.3 MB per copy)."""
+    import gc
+    import pickle
+    import tracemalloc
+
+    pdf = golden_transcripts_pandas()
+    blob = pickle.dumps(registry)
+    normalize_pandas(pdf, pickle.loads(blob))  # warm the regex and date caches
+    gc.collect()
+    tracemalloc.start()
+    try:
+        before = tracemalloc.get_traced_memory()[0]
+        for _ in range(20):
+            normalize_pandas(pdf, pickle.loads(blob))
+        gc.collect()
+        grown = tracemalloc.get_traced_memory()[0] - before
+    finally:
+        tracemalloc.stop()
+    assert grown < 1_000_000, f"{grown} bytes retained by 20 registry copies"
+
+
+def test_missing_golden_dir_names_the_override(monkeypatch, tmp_path):
+    """With no repo-local fixtures and no ``NLS_GOLDEN_DIR``, the golden
+    source says what to set instead of reading another checkout."""
+    from napalm_logs_spark.sources import transcripts
+
+    fixtures = transcripts.DEFAULT_GOLDEN_DIR
+    monkeypatch.delenv("NLS_GOLDEN_DIR", raising=False)
+    monkeypatch.setattr(transcripts, "DEFAULT_GOLDEN_DIR", str(tmp_path / "missing"))
+    with pytest.raises(FileNotFoundError, match="NLS_GOLDEN_DIR"):
+        list(golden_cases())
+    monkeypatch.setenv("NLS_GOLDEN_DIR", fixtures)
+    assert len(list(golden_cases())) >= 133

@@ -36,7 +36,9 @@ def test_compiled_template_matches_its_own_rendering(parts):
         values[key] = r"(\d+)"
         expected[key] = val
     cp = compile_line(line, values)
-    got = cp.match_groups(rendered)
+    m = cp.regex().search(rendered)
+    assert m is not None
+    got = {name: m.group(idx) for name, idx in cp.group_index.items()}
     assert got == expected
 
 

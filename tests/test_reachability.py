@@ -3,19 +3,20 @@ product (``python -m napalm_logs_spark``) or the driver registry
 (``__spark_entry__``).  Code that only its own tests import is either
 wired in or deleted.
 
-Every public top-level function or class in the package must also be
-referenced, outside its own body, by a file that is not a test: the
-package, ``__spark_entry__.py``, ``bench.py``, ``tools/`` or
-``perfbench/``.  A reference is a name, an attribute, an import alias,
-or a string constant equal to the name (the registry and the compat
-shims look names up by string).  A package ``__init__.py`` re-export
-(its imports and ``__all__``) is not a reference.  The check matches
-by name only, so a function that shares its name with a reached one
-passes unseen.
+Every public top-level function or class in the package, and every
+module-level constant (public or private; dunder names aside), must
+also be referenced, outside its own body, by a file that is not a
+test: the package, ``__spark_entry__.py``, ``bench.py``, ``tools/`` or
+``perfbench/``.  A reference is a name read, an attribute, an import
+alias, or a string constant equal to the name (the registry and the
+compat shims look names up by string); binding a name is not a
+reference.  A package ``__init__.py`` re-export (its imports and
+``__all__``) is not a reference.  The check matches by name only, so a
+function that shares its name with a reached one passes unseen.
 
-Every optional parameter of a public top-level package function must
-be passed at some call site in those files (or in the vendored
-``*.pyprofile`` modules): by keyword, by position, or through
+Every optional parameter of a top-level package function, public or
+private, must be passed at some call site in those files (or in the
+vendored ``*.pyprofile`` modules): by keyword, by position, or through
 ``*args``/``**kwargs``.  An option no product caller sets is a
 constant, and the code only its other values reach is dead.
 
@@ -38,8 +39,8 @@ ROOTS = (f"{PKG}.__main__", "__spark_entry__")
 # Modules allowed to be unreached, each with the reason it stays.
 ALLOWED_UNREACHED = {}
 
-# Public package functions and classes allowed to be unreached,
-# "module:name" -> the reason each stays.
+# Public package functions and classes, and module-level constants,
+# allowed to be unreached, "module:name" -> the reason each stays.
 ALLOWED_UNREACHED_FUNCTIONS = {
     f"{PKG}.operators.cep:transitions": (
         "the batch up/down transitions that streaming correlation on the "
@@ -72,6 +73,11 @@ ALLOWED_UNSET_PARAMETERS = {
     f"{PKG}.operators.convstats:conversation_fingerprints(max_turns)": (
         "size bound a unit test cannot reach cheaply; "
         "test_convstats::test_fingerprint_max_turns_truncation sets it"
+    ),
+    f"{PKG}.operators.docdedup:_jaccard_capped(freq_cap)": (
+        "stop-shingle cap a unit test cannot reach cheaply; "
+        "test_docdedup::test_capped_jaccard_exact_with_engaged_cap sets it "
+        "to 3 to reach the heavy-shingle path"
     ),
 }
 
@@ -229,7 +235,8 @@ def _referenced(node) -> set:
     out = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
-            out.add(n.id)
+            if isinstance(n.ctx, ast.Load):  # binding a name is no use of it
+                out.add(n.id)
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
         elif isinstance(n, ast.alias):
@@ -239,9 +246,26 @@ def _referenced(node) -> set:
     return out
 
 
+def _constants(top) -> list:
+    """Names a top-level assignment binds, dunder names aside."""
+    if isinstance(top, ast.Assign):
+        targets = top.targets
+    elif isinstance(top, ast.AnnAssign) and top.value is not None:
+        targets = [top.target]
+    else:
+        return []
+    return [
+        n.id for t in targets for n in ast.walk(t)
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+        and not (n.id.startswith("__") and n.id.endswith("__"))
+    ]
+
+
 def _unreached_functions() -> set:
-    """``module:name`` of every public top-level function or class in
-    the package that no non-test file references outside its own body."""
+    """``module:name`` of every public top-level function or class, and
+    of every module-level constant (public or private, dunders aside),
+    in the package that no non-test file references outside its own
+    body."""
     mod_of = {path: mod for mod, path in _package_modules().items()}
     defined, refs = set(), {}
     for path in _product_files():
@@ -253,6 +277,8 @@ def _unreached_functions() -> set:
                 own = top.name
                 if path in mod_of and not own.startswith("_"):
                     defined.add((path, own))
+            elif path in mod_of:
+                defined.update((path, name) for name in _constants(top))
             if os.path.basename(path) == "__init__.py" and _is_reexport(top):
                 continue
             for name in _referenced(top):
@@ -305,13 +331,13 @@ def _call_name(call, aliases: dict):
 
 def _unset_parameters() -> set:
     """``module:function(param)`` of every optional parameter of a
-    public top-level package function that no product call sets."""
+    top-level package function that no product call sets."""
     defs = {}
     for mod, path in _package_modules().items():
         with open(path) as fh:
             tree = ast.parse(fh.read(), path)
         for top in tree.body:
-            if isinstance(top, ast.FunctionDef) and not top.name.startswith("_"):
+            if isinstance(top, ast.FunctionDef):
                 defs[top.name] = (mod, path, _optional_params(top))
     passed = {}  # function name -> keywords, positions, "*" / "**"
     for path in _product_files() + _vendored_profiles():
