@@ -19,8 +19,10 @@ at load; the only per-executor caches are regex compiles and
 python-profile modules.  Matching runs per (os, prefix) over the
 not-yet-matched rows, then message profiles are gated by a hash groupby
 on the gate field before any message regex runs — the reference's
-cheap-predicate-first trick, applied per Arrow batch.  Python-dict work
-(YANG emit, canonical JSON) only touches rows that matched a profile.
+cheap-predicate-first trick, applied per Arrow batch.  The two stages
+exchange position-keyed rows (input position → parsed row, then →
+message hit); one builder walks the input positions once and emits
+every envelope tuple, JSON included, in input order.
 
 A message may match multiple OS profiles → the stage *explodes* (the
 reference flatMaps to every matching OS, server.py:194-216); rows no OS
@@ -44,6 +46,7 @@ from functools import lru_cache
 from typing import Iterable, Iterator
 
 import pandas as pd
+from pyspark.sql import types as T
 
 from ..profiles.registry import (
     OsProfile,
@@ -53,42 +56,32 @@ from ..profiles.registry import (
     python_extract,
 )
 
-try:  # allow pure-pandas use (unit tests) without a JVM
-    from pyspark.sql import types as T
+ENVELOPE_SCHEMA = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType()),
+        T.StructField("role", T.StringType()),
+        T.StructField("tool", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("os", T.StringType()),
+        T.StructField("error", T.StringType()),
+        T.StructField("host", T.StringType()),
+        T.StructField("ip", T.StringType()),
+        T.StructField("timestamp", T.LongType()),
+        T.StructField("facility", T.IntegerType()),
+        T.StructField("severity", T.IntegerType()),
+        T.StructField("yang_model", T.StringType()),
+        T.StructField("yang_message", T.StringType()),
+        T.StructField("message_details", T.StringType()),
+        T.StructField("state", T.LongType()),
+        T.StructField("state_tag", T.StringType()),
+        T.StructField("tag", T.StringType()),
+        T.StructField("message", T.StringType()),
+        T.StructField("entity", T.StringType()),
+    ]
+)
 
-    ENVELOPE_SCHEMA = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType()),
-            T.StructField("turn_idx", T.IntegerType()),
-            T.StructField("role", T.StringType()),
-            T.StructField("tool", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("os", T.StringType()),
-            T.StructField("error", T.StringType()),
-            T.StructField("host", T.StringType()),
-            T.StructField("ip", T.StringType()),
-            T.StructField("timestamp", T.LongType()),
-            T.StructField("facility", T.IntegerType()),
-            T.StructField("severity", T.IntegerType()),
-            T.StructField("yang_model", T.StringType()),
-            T.StructField("yang_message", T.StringType()),
-            T.StructField("message_details", T.StringType()),
-            T.StructField("state", T.LongType()),
-            T.StructField("state_tag", T.StringType()),
-            T.StructField("tag", T.StringType()),
-            T.StructField("message", T.StringType()),
-            T.StructField("entity", T.StringType()),
-        ]
-    )
-except ImportError:  # pragma: no cover
-    ENVELOPE_SCHEMA = None
-
-_OUT_COLS = [
-    "conv_id", "turn_idx", "role", "tool", "ts",
-    "os", "error", "host", "ip", "timestamp", "facility", "severity",
-    "yang_model", "yang_message", "message_details", "state", "state_tag",
-    "tag", "message", "entity",
-]
+_OUT_COLS = ENVELOPE_SCHEMA.fieldNames()
 
 DEFAULT_IP = "127.0.0.1"
 DEFAULT_YEAR = 2017
@@ -353,15 +346,13 @@ def _prefix_row(d: dict, epoch) -> tuple:
     return (d, d.get("host"), d.get("tag"), msg, fac, sev, epoch)
 
 
-def _prefix_stage(texts: pd.Series, osp: OsProfile) -> pd.DataFrame | None:
-    """First matching prefix wins per OS; returns the partially-parsed
-    frame (index ⊆ texts.index) or None when nothing matched.
+def _prefix_stage(txt, osp: OsProfile) -> dict:
+    """First matching prefix wins per OS; returns the parsed rows by
+    input position (empty when nothing matched).
 
-    Hot loop works on raw numpy object arrays and python dicts — pandas
+    Hot loop works on a raw numpy object array and python dicts — pandas
     indexing is kept out of the per-row path (it dominated the profile).
     """
-    txt = texts.to_numpy(dtype=object)
-    index = texts.index.to_numpy()
     remaining = range(len(txt))
     rows: dict = {}  # position -> (details, host, tag, message, fac, sev, epoch)
 
@@ -409,23 +400,7 @@ def _prefix_stage(texts: pd.Series, osp: OsProfile) -> pd.DataFrame | None:
                 epoch = _resolve_epoch(date or "", time_ or "", fmt, DEFAULT_YEAR)
             rows[pos] = _prefix_row(d, epoch)
         remaining = still
-
-    if not rows:
-        return None
-    positions = sorted(rows)
-    vals = [rows[p] for p in positions]
-    return pd.DataFrame(
-        {
-            "_details": [v[0] for v in vals],
-            "host": [v[1] for v in vals],
-            "tag": [v[2] for v in vals],
-            "message": [v[3] for v in vals],
-            "facility": [v[4] for v in vals],
-            "severity": [v[5] for v in vals],
-            "_epoch": [v[6] for v in vals],
-        },
-        index=index[positions],
-    )
+    return rows
 
 
 # ---------------------------------------------------------------------------
@@ -501,31 +476,24 @@ def _entity_of(captures: dict):
     return None
 
 
-def _message_stage(osp: OsProfile, parsed: pd.DataFrame) -> pd.DataFrame:
-    """Match message profiles against the parsed frame; emit envelopes.
+def _message_stage(osp: OsProfile, parsed: dict) -> dict:
+    """Match message profiles against the parsed rows of one OS; return
+    the hits by input position (a row no profile matched has none).
 
     The OS's dispatch index (built at registry load) keys profiles by
     gate value, so a message regex only ever runs on rows whose gate
     references it — reference device.py:143-147's cheap-predicate-first
     ordering, applied to a whole Arrow batch via a hash groupby.
     """
-    msg_arr = parsed["message"].to_numpy(dtype=object)
-    det_arr = parsed["_details"].to_numpy(dtype=object)
-    tag_arr = parsed["tag"].to_numpy(dtype=object)
     hits: dict = {}  # position -> (error, model, yang_obj, state, state_tag, entity)
 
     for match_field, profile_index in osp.dispatch.items():
         # group row positions by gate value (hash gate before any regex)
         groups: dict = {}
-        if match_field == "tag":
-            for pos, tv in enumerate(tag_arr):
-                if tv is not None and tv in profile_index:
-                    groups.setdefault(tv, []).append(pos)
-        else:
-            for pos, det in enumerate(det_arr):
-                tv = det.get(match_field)
-                if tv is not None and tv in profile_index:
-                    groups.setdefault(tv, []).append(pos)
+        for pos, row in parsed.items():
+            tv = row[2] if match_field == "tag" else row[0].get(match_field)
+            if tv is not None and tv in profile_index:
+                groups.setdefault(tv, []).append(pos)
 
         for tag_value, positions in groups.items():
             pending = [p for p in positions if p not in hits]
@@ -537,7 +505,7 @@ def _message_stage(osp: OsProfile, parsed: pd.DataFrame) -> pd.DataFrame:
                     # (device.py:149-155); its emit() builds the object;
                     # an emit exception publishes nothing (device.py:327-333)
                     for pos in pending:
-                        det = det_arr[pos]
+                        det = parsed[pos][0]
                         yang = python_emit(mp.python_path, det)
                         hits[pos] = (
                             mp.error,
@@ -555,7 +523,7 @@ def _message_stage(osp: OsProfile, parsed: pd.DataFrame) -> pd.DataFrame:
                 casts = cp.casts
                 still = []
                 for pos in pending:
-                    s = msg_arr[pos]
+                    s = parsed[pos][3]
                     m = rx.search(s) if isinstance(s, str) else None
                     if m is None:
                         still.append(pos)
@@ -576,28 +544,20 @@ def _message_stage(osp: OsProfile, parsed: pd.DataFrame) -> pd.DataFrame:
                         _entity_of(captures),
                     )
                 pending = still
-
-    n = len(parsed)
-
-    def _col(slot):
-        return [hits[p][slot] if p in hits else None for p in range(n)]
-
-    return pd.DataFrame(
-        {
-            "error": _col(0),
-            "yang_model": _col(1),
-            "yang_message": pd.Series(_col(2), index=parsed.index, dtype=object),
-            "state": _col(3),
-            "state_tag": _col(4),
-            "entity": _col(5),
-            "_matched": [p in hits for p in range(n)],
-        },
-        index=parsed.index,
-    )
+    return hits
 
 
 # ---------------------------------------------------------------------------
 # the full batch transform
+
+#: the envelope fields the builder emits, in tuple order
+_ENV_COLS = [
+    "os", "error", "yang_model", "yang_message", "state", "state_tag",
+    "entity", "message_details", "host", "tag", "message", "facility",
+    "severity", "timestamp",
+]
+#: the message hit of a row its OS identified but no profile matched
+_RAW_HIT = ("RAW", "raw", None, None, None, None)
 
 
 def normalize_pandas(pdf: pd.DataFrame, registry: ProfileRegistry) -> pd.DataFrame:
@@ -608,100 +568,62 @@ def normalize_pandas(pdf: pd.DataFrame, registry: ProfileRegistry) -> pd.DataFra
     """
     if pdf.empty:
         return pd.DataFrame({c: [] for c in _OUT_COLS})
-    pdf = pdf.reset_index(drop=True)
     # a null text (a corrupt JSON line) stays null, never the string "None"
-    texts = pdf["text"].astype(str).where(pdf["text"].notna(), None)
-    # fallback event-time epochs (determinism: event time, never now())
-    ts_col = pd.to_datetime(pdf["ts"]) if "ts" in pdf.columns else None
-    if ts_col is not None:
-        fallback_epoch = pd.Series(
-            (ts_col.astype("int64") // 1_000_000_000), dtype="Int64"
-        ).mask(ts_col.isna().values, pd.NA)
-    else:
-        fallback_epoch = pd.Series([pd.NA] * len(pdf), dtype="Int64")
+    txt = pdf["text"].astype(str).where(pdf["text"].notna(), None)
+    txt = txt.to_numpy(dtype=object)
+    stages = []
+    for os_name, osp in sorted(registry.oses.items()):
+        parsed = _prefix_stage(txt, osp)
+        if parsed:
+            stages.append((os_name, parsed, _message_stage(osp, parsed)))
 
-    out_frames = []
-    matched_any = pd.Series(False, index=pdf.index)
-    for os_name, osp in registry.oses.items():
-        parsed = _prefix_stage(texts, osp)
-        if parsed is None or parsed.empty:
-            continue
-        matched_any.loc[parsed.index] = True
-        msg_res = _message_stage(osp, parsed)
-        env = pd.DataFrame(index=parsed.index)
-        env["os"] = os_name
-        is_matched = msg_res["_matched"]
-        # a matched profile whose object generation failed publishes
-        # nothing at all (reference device.py:327-333)
-        oc_failed = msg_res["yang_message"].map(lambda y: y is _OC_FAILED)
-        env["error"] = msg_res["error"].where(is_matched, "RAW")
-        env["yang_model"] = msg_res["yang_model"].where(is_matched, "raw")
-        env["yang_message"] = msg_res["yang_message"].where(~oc_failed, None)
-        env["state"] = msg_res["state"]
-        env["state_tag"] = msg_res["state_tag"]
-        env["entity"] = msg_res["entity"]
-        env["host"] = parsed["host"]
-        env["facility"] = parsed["facility"]
-        env["severity"] = parsed["severity"]
-        env["tag"] = parsed["tag"]
-        env["message"] = parsed["message"]
-        env["message_details"] = parsed["_details"]
-        env["timestamp"] = parsed["_epoch"]
-        out_frames.append(env[~oc_failed])
+    rows, src = [], []
+    for pos, text in enumerate(txt):
+        identified = False
+        for os_name, parsed, hits in stages:
+            row = parsed.get(pos)
+            if row is None:
+                continue
+            identified = True
+            error, model, yang, state, state_tag, entity = hits.get(pos, _RAW_HIT)
+            if yang is _OC_FAILED:
+                # a matched profile whose object generation failed
+                # publishes nothing at all (reference device.py:327-333)
+                continue
+            details, host, tag, message, fac, sev, epoch = row
+            rows.append((
+                os_name, error, model,
+                None if yang is None else canonical_json(yang),
+                state, state_tag, entity, canonical_json(details),
+                host, tag, message, fac, sev, epoch,
+            ))
+            src.append(pos)
+        if not identified:
+            rows.append((
+                "unknown", "UNKNOWN", "unknown", None, None, None, None,
+                canonical_json({"message": text}), "unknown",
+                None, None, None, None, None,
+            ))
+            src.append(pos)
 
-    if (~matched_any).any():
-        unk_idx = pdf.index[~matched_any]
-        unk = pd.DataFrame(index=unk_idx)
-        unk["os"] = "unknown"
-        unk["error"] = "UNKNOWN"
-        unk["yang_model"] = "unknown"
-        unk["yang_message"] = None
-        unk["state"] = None
-        unk["state_tag"] = None
-        unk["host"] = "unknown"
-        unk["facility"] = None
-        unk["severity"] = None
-        unk["tag"] = None
-        unk["message"] = None
-        unk["entity"] = None
-        unk["message_details"] = [{"message": t} for t in texts[unk_idx]]
-        unk["timestamp"] = None
-        out_frames.append(unk)
-
-    if not out_frames:
-        return pd.DataFrame({c: [] for c in _OUT_COLS})
-
-    import warnings
-
-    with warnings.catch_warnings():
-        # frames legitimately carry all-None object columns (state,
-        # state_tag); dtypes are normalized explicitly below, so the
-        # pandas-3.0 concat dtype change is immaterial here
-        warnings.filterwarnings("ignore", category=FutureWarning,
-                                message=".*empty or all-NA.*")
-        res = pd.concat(out_frames)
-    res["_ord"] = res.index
-    res = res.sort_values(["_ord", "os"], kind="mergesort")
-
-    base = pdf[[c for c in ("conv_id", "turn_idx", "role", "tool", "ts") if c in pdf.columns]]
-    res = res.join(base)
+    res = pd.DataFrame(
+        rows, columns=_ENV_COLS, index=pd.Index(src, dtype="int64"), dtype=object
+    )
+    base = pdf.iloc[src]
+    for col in ("conv_id", "turn_idx", "role", "tool", "ts"):
+        res[col] = base[col].array if col in base.columns else None
     res["ip"] = DEFAULT_IP
-    timestamp = res["timestamp"].astype("Int64")
-    res["timestamp"] = timestamp.where(
-        timestamp.notna(), fallback_epoch.reindex(res["_ord"]).array
-    )
-    res["yang_message"] = res["yang_message"].map(
-        lambda y: canonical_json(y) if y is not None else None
-    )
-    res["message_details"] = res["message_details"].map(
-        lambda d: canonical_json(d) if d is not None else None
-    )
-    for col in ("turn_idx", "facility", "severity", "state"):
-        if col in res.columns:
-            res[col] = res[col].astype("Int64")
-    for col in _OUT_COLS:
-        if col not in res.columns:
-            res[col] = None
+    for col in ("timestamp", "facility", "severity", "state"):
+        res[col] = res[col].astype("Int64")
+    if "turn_idx" in base.columns:
+        res["turn_idx"] = res["turn_idx"].astype("Int64")
+    if "ts" in base.columns:
+        # fallback event-time epochs (determinism: event time, never now())
+        ts = pd.to_datetime(base["ts"])
+        fallback = pd.Series(ts.astype("int64") // 1_000_000_000, dtype="Int64")
+        res["timestamp"] = res["timestamp"].where(
+            res["timestamp"].notna(), fallback.mask(ts.isna().values, pd.NA).array
+        )
     return res[_OUT_COLS]
 
 

@@ -42,9 +42,8 @@ NO_MODEL = "NO_MODEL"
 #: shipped as ``.pyprofile`` data files, exec'd by the loader exactly
 #: like the reference loads its own python profiles) — the engine runs
 #: fully standalone.  Override with NLS_PROFILE_DIR to point at any
-#: user profile tree; the tiny demo corpus remains as a last resort.
+#: user profile tree.
 VENDORED_PROFILE_DIR = os.path.join(os.path.dirname(__file__), "vendored")
-BUILTIN_PROFILE_DIR = os.path.join(os.path.dirname(__file__), "builtin")
 DEFAULT_PROFILE_DIR = VENDORED_PROFILE_DIR
 
 
@@ -127,8 +126,7 @@ class MessageProfile:
 class OsProfile:
     name: str
     prefixes: tuple
-    messages: tuple          # in load order (first match wins)
-    dispatch: dict           # match_on -> gate value -> tuple[MessageProfile]
+    dispatch: dict           # match_on -> gate value -> profiles, in load order
 
 
 @dataclass(frozen=True)
@@ -285,10 +283,7 @@ def _build_os_profile(name: str, raw: dict) -> OsProfile:
         match_on: {tag: tuple(mps) for tag, mps in index.items()}
         for match_on, index in dispatch.items()
     }
-    return OsProfile(
-        name=name, prefixes=tuple(prefixes), messages=tuple(messages),
-        dispatch=dispatch,
-    )
+    return OsProfile(name=name, prefixes=tuple(prefixes), dispatch=dispatch)
 
 
 def load_registry(path: str | None = None) -> ProfileRegistry:
@@ -300,11 +295,7 @@ def load_registry(path: str | None = None) -> ProfileRegistry:
     if path is None:
         path = os.environ.get("NLS_PROFILE_DIR")
     if path is None:
-        path = (
-            _materialize_pkg_dir(DEFAULT_PROFILE_DIR)
-            or _materialize_pkg_dir(BUILTIN_PROFILE_DIR)
-            or DEFAULT_PROFILE_DIR
-        )
+        path = _materialize_pkg_dir(DEFAULT_PROFILE_DIR) or DEFAULT_PROFILE_DIR
     if not os.path.isdir(path):
         raise IOError(f"profile directory does not exist: {path}")
     oses = {}

@@ -1,17 +1,21 @@
-"""CLI entry point + built-in demo profiles (standalone operation)."""
+"""CLI entry point + the demo profile corpus (standalone operation)."""
 
 import datetime
 import json
+import os
 
 import pandas as pd
 import pytest
 
-from napalm_logs_spark.profiles.registry import BUILTIN_PROFILE_DIR, load_registry
+from napalm_logs_spark.profiles.registry import load_registry
 from napalm_logs_spark.operators.normalize import normalize_pandas
 
 
+DEMO_PROFILE_DIR = os.path.join(os.path.dirname(__file__), "fixtures", "profiles")
+
+
 def test_builtin_profiles_standalone():
-    reg = load_registry(BUILTIN_PROFILE_DIR)
+    reg = load_registry(DEMO_PROFILE_DIR)
     assert "demo" in reg.oses
     pdf = pd.DataFrame(
         {
@@ -72,8 +76,6 @@ def test_cli_normalize_and_run(spark, tmp_path):
     ]) == 0
     n2 = read_sink(spark, sink).count()
     assert n2 > n1
-    import os
-
     assert main(["compact", "--table", sink]) == 0
     assert read_sink(spark, sink).count() == n2
     assert not os.path.isdir(sink + "/_batch_id=0")

@@ -96,4 +96,10 @@ def test_zip_profile_extraction(tmp_path, monkeypatch):
     assert sorted(r_zip.oses) == sorted(r_disk.oses)
     junos_zip = r_zip.oses["junos"]
     junos_disk = r_disk.oses["junos"]
-    assert len(junos_zip.messages) == len(junos_disk.messages)
+
+    def n_profiles(osp):
+        return sum(
+            len(mps) for index in osp.dispatch.values() for mps in index.values()
+        )
+
+    assert n_profiles(junos_zip) == n_profiles(junos_disk)

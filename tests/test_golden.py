@@ -137,6 +137,69 @@ def test_raw_fallback(registry):
     assert details["facility"] == 3 and details["severity"] == 4
 
 
+def test_output_contract(registry):
+    """What the Arrow path and perfbench's oracle read off the frame:
+    column order, dtypes, explode order, and the UNKNOWN/RAW shapes."""
+    from napalm_logs_spark.operators.normalize import DEFAULT_IP, _OUT_COLS
+
+    golden = golden_transcripts_pandas()
+    edge = pd.DataFrame(
+        {
+            "conv_id": ["null", "hello", "junk", "raw"],
+            "turn_idx": [0, 1, 2, 3],
+            "role": ["agent"] * 4,
+            "text": [
+                None, "hello", "<13>junk",
+                "<28>Jul 20 21:45:59 vmx01 mib2d[2424]: NO_SUCH_TAG_EVER: some body",
+            ],
+            "tool": [None] * 4,
+            "ts": [pd.NaT, pd.Timestamp("2017-07-20 21:45:59"), pd.NaT, pd.NaT],
+        }
+    )
+    pdf = pd.concat([golden, edge], ignore_index=True)
+    out = normalize_pandas(pdf, registry)
+
+    assert list(out.columns) == _OUT_COLS
+    ints = {"turn_idx", "timestamp", "facility", "severity", "state"}
+    for col in _OUT_COLS:
+        want = "datetime64[ns]" if col == "ts" else "Int64" if col in ints else "object"
+        assert str(out[col].dtype) == want, col
+
+    # the output index is the input position, repeated on explode; each
+    # row's envelopes are contiguous, in input order, by OS name
+    assert out.index.is_monotonic_increasing
+    assert set(out.index) == set(range(len(pdf)))
+    for _pos, oses in out.groupby(level=0, sort=False)["os"]:
+        assert list(oses) == sorted(oses)
+    multi = out[out["conv_id"] == "eos#AGENT_INITIALIZED#default"]
+    assert list(multi["os"]) == ["eos", "netiron"]
+    assert multi.index.nunique() == 1
+
+    by_conv = out.set_index("conv_id")
+    for conv, text in (("null", None), ("hello", "hello"), ("junk", "<13>junk")):
+        row = by_conv.loc[conv]
+        assert (row["os"], row["error"], row["yang_model"], row["host"]) == (
+            "unknown", "UNKNOWN", "unknown", "unknown")
+        assert row["ip"] == DEFAULT_IP
+        assert json.loads(row["message_details"]) == {"message": text}
+        for col in ("yang_message", "state_tag", "tag", "message", "entity"):
+            assert row[col] is None, (conv, col)
+        for col in ("facility", "severity", "state"):
+            assert row[col] is pd.NA, (conv, col)
+    assert by_conv.loc["null", "message_details"] == '{"message":null}'
+    assert by_conv.loc["null", "timestamp"] is pd.NA  # null ts: no fallback
+    assert by_conv.loc["hello", "timestamp"] == 1500587159  # event time
+
+    raw = by_conv.loc["raw"]
+    assert (raw["os"], raw["error"], raw["yang_model"]) == ("junos", "RAW", "raw")
+    assert raw["yang_message"] is None and raw["state_tag"] is None
+    assert raw["entity"] is None and raw["state"] is pd.NA
+    assert (raw["host"], raw["tag"], raw["message"]) == (
+        "vmx01", "NO_SUCH_TAG_EVER", "some body")
+    assert (raw["facility"], raw["severity"], raw["timestamp"]) == (3, 4, 1500587159)
+    assert json.loads(raw["message_details"])["tag"] == "NO_SUCH_TAG_EVER"
+
+
 def test_every_profile_has_a_fixture_and_vice_versa(registry):
     """Bidirectional completeness, reference test_config.py:85-131: every
     message profile has >= 1 golden case, and every golden case dir maps
@@ -149,7 +212,10 @@ def test_every_profile_has_a_fixture_and_vice_versa(registry):
     for os_name, osp in registry.oses.items():
         os_dir = _os.path.join(DEFAULT_GOLDEN_DIR, os_name)
         dirs = set(_os.listdir(os_dir)) if _os.path.isdir(os_dir) else set()
-        errors = {mp.error for mp in osp.messages}
+        errors = {
+            mp.error for index in osp.dispatch.values()
+            for mps in index.values() for mp in mps
+        }
         for missing in sorted(errors - dirs):
             problems.append(f"{os_name}/{missing}: profile without fixture")
         for extra in sorted(dirs - errors):

@@ -20,6 +20,10 @@ vendored ``*.pyprofile`` modules): by keyword, by position, or through
 ``*args``/``**kwargs``.  An option no product caller sets is a
 constant, and the code only its other values reach is dead.
 
+Every field of a package ``@dataclass`` must be read in one of those
+files: an attribute load of its name, or ``getattr(..., "<name>")``.
+A field nothing reads is data the program builds and never uses.
+
 Every script under ``tools/`` must be imported by a test, perfbench or
 the package, or be named in README.md, so one-off scripts do not pile
 up.
@@ -382,3 +386,46 @@ def test_every_optional_parameter_is_set():
 def test_allowed_parameter_exceptions_are_still_needed():
     stale = sorted(set(ALLOWED_UNSET_PARAMETERS) - _unset_parameters())
     assert not stale, stale
+
+
+def _is_dataclass(cls) -> bool:
+    for d in cls.decorator_list:
+        f = d.func if isinstance(d, ast.Call) else d
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        if name == "dataclass":
+            return True
+    return False
+
+
+def _unread_fields() -> set:
+    """``module:Class.field`` of every package dataclass field that no
+    product file reads."""
+    fields = set()
+    for mod, path in _package_modules().items():
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for cls in ast.walk(tree):
+            if isinstance(cls, ast.ClassDef) and _is_dataclass(cls):
+                fields.update(
+                    (mod, cls.name, st.target.id) for st in cls.body
+                    if isinstance(st, ast.AnnAssign) and isinstance(st.target, ast.Name)
+                )
+    read = set()
+    for path in _product_files():
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load):
+                read.add(n.attr)
+            elif (
+                isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+                and n.func.id == "getattr" and len(n.args) >= 2
+                and isinstance(n.args[1], ast.Constant)
+            ):
+                read.add(n.args[1].value)
+    return {f"{mod}:{cls}.{name}" for mod, cls, name in fields if name not in read}
+
+
+def test_every_dataclass_field_is_read():
+    unread = sorted(_unread_fields())
+    assert not unread, f"dataclass fields nothing reads: {unread}"
