@@ -200,7 +200,10 @@ def main(argv=None) -> int:
         from .config import build_sinks, load_config, merge_config
 
         cfg = load_config(args.config_file)
-        merge_config(args, cfg, list(argv if argv is not None else sys.argv[1:]))
+        merge_config(
+            args, cfg, list(argv if argv is not None else sys.argv[1:]),
+            (parser, sub.choices[args.command]),
+        )
         if "sinks" in cfg:
             config_sinks = build_sinks(cfg["sinks"])
     if args.command == "run":

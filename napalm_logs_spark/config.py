@@ -29,6 +29,7 @@ list — each entry builds one :class:`..streaming.sink.SinkSpec` for the
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 
@@ -120,20 +121,46 @@ def _flag_given(argv: list, dest: str, dests) -> bool:
     return False
 
 
-def merge_config(args, cfg: dict, argv: list) -> None:
+def _parse_value(parser, key: str, action, value):
+    """A config value as its flag parses it from the command line:
+    through the flag's ``type`` and ``choices``, a ``store_true`` flag
+    from a YAML bool only; anything else is a ``parser.error``."""
+    if action.nargs == 0:  # store_true takes no value on the command line
+        if isinstance(value, bool):
+            return value
+        parser.error(f"config file: {key}: expected true or false, got {value!r}")
+    many = isinstance(action, argparse._AppendAction)
+    out = []
+    for v in value if many and isinstance(value, list) else [value]:
+        if isinstance(v, bool) or not isinstance(v, (str, int, float)):
+            parser.error(f"config file: {key}: invalid value {v!r}")
+        try:
+            v = action.type(str(v)) if action.type else str(v)
+        except ValueError:
+            parser.error(f"config file: {key}: invalid value {v!r}")
+        if action.choices is not None and v not in action.choices:
+            parser.error(
+                f"config file: {key}: invalid choice {v!r} (choose from "
+                f"{', '.join(map(repr, action.choices))})"
+            )
+        out.append(v)
+    return out if many else out[0]
+
+
+def merge_config(args, cfg: dict, argv: list, parsers) -> None:
     """Fill parsed-args attributes from the config for every key the
     user did NOT pass explicitly (reference precedence: CLI flag >
-    config file > default).  Keys that don't correspond to a flag of
-    the active subcommand are ignored except the structured ``sinks:``
-    list, which the caller consumes separately."""
+    config file > default).  ``parsers`` are the top-level parser and
+    the active subcommand's; each value is parsed as its flag would
+    parse it.  Keys that don't correspond to a flag of the active
+    subcommand are ignored, among them the structured ``sinks:`` list,
+    which the caller consumes separately."""
+    flags = {a.dest: a for p in parsers for a in p._actions if a.option_strings}
     for key, value in cfg.items():
         dest = key.replace("-", "_")
-        if dest == "sinks":
-            continue
-        if dest == "sink" and isinstance(value, str):
-            # argparse collects --sink with action=append; a scalar from
-            # the file must become a one-element list, not be iterated
-            # character-by-character downstream
-            value = [value]
-        if hasattr(args, dest) and not _flag_given(argv, dest, vars(args)):
-            setattr(args, dest, value)
+        action = flags.get(dest)
+        if (
+            action is not None and hasattr(args, dest)
+            and not _flag_given(argv, dest, vars(args))
+        ):
+            setattr(args, dest, _parse_value(parsers[-1], key, action, value))

@@ -43,6 +43,18 @@ def _dot(a, b):
     )
 
 
+def _cosine(a, b, na, nb):
+    """Cosine of two embedding columns from their norms, which callers
+    compute once per row on the narrow side: re-deriving them per
+    candidate pair through the interpreted HOF chain costs ~3× the dot
+    product (measured 19 s → ~2 s at 1M candidates).  A pair that
+    involves a zero vector has a NULL cosine instead of an ANSI
+    ``DIVIDE_BY_ZERO`` abort: it is never a near-dup, semdedup or
+    decontamination hit, and a top-k (``DESC NULLS LAST``) ranks it
+    after every scored candidate."""
+    return F.try_divide(_dot(a, b), na * nb)
+
+
 def _norm(a):
     return F.sqrt(
         F.aggregate(
@@ -65,9 +77,6 @@ def cosine_topk(
     # the per-candidate cosine runs at the corpus's split count: spread
     # a small-split scan over the cluster (no-op on a well-split input)
     corpus = widen_if_narrow_scan(corpus)
-    # norms are per-ROW quantities: computed once on each narrow side
-    # (recomputing ||q||·||c|| per candidate through the interpreted HOF
-    # chain costs ~3x the dot product; same expression, same doubles)
     q = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
         _norm(F.col("embedding")).alias("q_nrm"),
@@ -77,7 +86,7 @@ def cosine_topk(
         _norm(F.col("embedding")).alias("c_nrm"),
     )
     joined = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-    cos = _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_nrm") * F.col("c_nrm"))
+    cos = _cosine(F.col("q_emb"), F.col("c_emb"), F.col("q_nrm"), F.col("c_nrm"))
     scored = joined.withColumn("cosine", F.round(cos, 6))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
@@ -281,7 +290,7 @@ def lsh_cosine_topk(
         ).select("query_id", "neighbor_id", "q_emb", "c_emb", "q_nrm", "c_nrm")
         cand = pairs if cand is None else cand.unionByName(pairs)
     cand = cand.dropDuplicates(["query_id", "neighbor_id"])
-    cos = _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_nrm") * F.col("c_nrm"))
+    cos = _cosine(F.col("q_emb"), F.col("c_emb"), F.col("q_nrm"), F.col("c_nrm"))
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return (
         cand.withColumn("cosine", F.round(cos, 6))
@@ -413,7 +422,7 @@ def ivf_cosine_topk(
     cand = c.join(F.broadcast(q), "cluster").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    cos = _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_nrm") * F.col("c_nrm"))
+    cos = _cosine(F.col("q_emb"), F.col("c_emb"), F.col("q_nrm"), F.col("c_nrm"))
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return (
         cand.withColumn("cosine", F.round(cos, 6))
@@ -423,31 +432,63 @@ def ivf_cosine_topk(
     )
 
 
-def _bucket_table(
+NEAR_DUP_MAX_BUCKET = 2000
+#: the near-dup LSH scheme; the streaming filter pins it to its index
+NEAR_DUP_LSH = {"n_planes": 10, "n_tables": 4, "seed": SEED}
+
+
+def _near_dup_table(
     df: DataFrame,
     dim: int,
-    n_planes: int,
-    n_tables: int,
-    seed: int,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
 ) -> DataFrame:
-    """(id, emb, table, bucket) rows over ``n_tables`` LSH tables —
-    shared by :func:`embedding_near_dup` and its observability
-    companion so the two can never disagree on the bucketing scheme."""
+    """(id, emb, nrm, table, bucket) rows over the ``NEAR_DUP_LSH``
+    tables.  Skew guard: a bucket larger than ``NEAR_DUP_MAX_BUCKET``
+    is dropped from its table (its pairs are still found by any table
+    where they land in a smaller bucket), so one boilerplate-dense
+    bucket cannot go quadratic."""
     base = widen_if_narrow_scan(df).select(
         F.col(id_col).alias("id"), F.col(emb_col).alias("emb"),
         _norm(F.col(emb_col)).alias("nrm"))
+    lsh = NEAR_DUP_LSH
     tables = None
-    for t in range(n_tables):
-        bt = lsh_bucket(base, dim, n_planes, seed + t, "emb").select(
+    for t in range(lsh["n_tables"]):
+        bt = lsh_bucket(base, dim, lsh["n_planes"], lsh["seed"] + t, "emb").select(
             "id", "emb", "nrm", F.lit(t).alias("table"), "bucket"
         )
         tables = bt if tables is None else tables.unionByName(bt)
-    return tables
+    w = Window.partitionBy("table", "bucket")
+    return (
+        tables.withColumn("_bsz", F.count(F.lit(1)).over(w))
+        .filter(F.col("_bsz") <= NEAR_DUP_MAX_BUCKET)
+        .drop("_bsz")
+    )
 
 
-NEAR_DUP_MAX_BUCKET = 2000
+def _near_dup_pairs(
+    left: DataFrame, right: DataFrame, threshold: float, ordered: bool
+) -> DataFrame:
+    """The near-dup verdict over two bucket tables: rows sharing a
+    (table, bucket), ``id_a < id_b`` when ``ordered``, one cosine per
+    distinct id pair, kept when its 6-dp cosine reaches ``threshold``.
+    Output: (id_a, id_b, cosine)."""
+    def side(bt, s):
+        return bt.select(
+            "table", "bucket", F.col("id").alias(f"id_{s}"),
+            F.col("emb").alias(f"emb_{s}"), F.col("nrm").alias(f"nrm_{s}"),
+        )
+
+    pairs = side(left, "a").join(side(right, "b"), ["table", "bucket"])
+    if ordered:
+        pairs = pairs.filter(F.col("id_a") < F.col("id_b"))
+    cos = _cosine(F.col("emb_a"), F.col("emb_b"), F.col("nrm_a"), F.col("nrm_b"))
+    return (
+        pairs.dropDuplicates(["id_a", "id_b"])
+        .withColumn("cosine", F.round(cos, 6))
+        .filter(F.col("cosine") >= threshold)
+        .select("id_a", "id_b", "cosine")
+    )
 
 
 def embedding_near_dup(
@@ -456,46 +497,13 @@ def embedding_near_dup(
     threshold: float = 0.95,
 ) -> DataFrame:
     """Near-duplicate vector pairs (cosine ≥ threshold): candidates from
-    4 LSH tables of 10 planes, exact cosine verify, ``id_a < id_b``.
-
-    Skew guard: a bucket larger than ``NEAR_DUP_MAX_BUCKET`` is EXCLUDED from
-    candidate generation in that table (its pairs are still found by any
-    other table where they don't land in an oversized bucket) — one
-    boilerplate-dense bucket can no longer go quadratic.
-    Multi-table also recovers recall the single-table form lost (a true
-    pair only needs to share a bucket in ≥1 table).
+    4 LSH tables of 10 planes, each capped at ``NEAR_DUP_MAX_BUCKET``
+    rows per bucket (:func:`_near_dup_table`), exact cosine verify,
+    ``id_a < id_b``.  A true pair only needs to share a bucket in ≥1
+    table.
     """
-    tables = _bucket_table(df, dim, 10, 4, SEED)
-    w = Window.partitionBy("table", "bucket")
-    bounded = (
-        tables.withColumn("_bsz", F.count(F.lit(1)).over(w))
-        .filter(F.col("_bsz") <= NEAR_DUP_MAX_BUCKET)
-        .drop("_bsz")
-    )
-    l, r = bounded.alias("l"), bounded.alias("r")
-    pairs = (
-        l.join(
-            r,
-            (F.col("l.table") == F.col("r.table"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.col("l.emb").alias("emb_a"),
-            F.col("r.emb").alias("emb_b"),
-            F.col("l.nrm").alias("nrm_a"),
-            F.col("r.nrm").alias("nrm_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    cos = _dot(F.col("emb_a"), F.col("emb_b")) / (F.col("nrm_a") * F.col("nrm_b"))
-    return (
-        pairs.withColumn("cosine", F.round(cos, 6))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
+    tables = _near_dup_table(df, dim)
+    return _near_dup_pairs(tables, tables, threshold, ordered=True)
 
 
 # ---------------------------------------------------------------------------
@@ -631,12 +639,7 @@ def semdedup(
         F.col("embedding").alias("_eb"),
         _norm(F.col("embedding")).alias("_nb"),
     )
-    # try_divide: a zero-norm vector gets NULL cosine (kept) instead of
-    # an ANSI-mode DIVIDE_BY_ZERO job abort — matching the numpy golden,
-    # which scores zero vectors as non-duplicates
-    cos = F.try_divide(
-        _dot(F.col("_ea"), F.col("_eb")), F.col("_na") * F.col("_nb")
-    )
+    cos = _cosine(F.col("_ea"), F.col("_eb"), F.col("_na"), F.col("_nb"))
     dups = (
         a.join(
             b,
@@ -712,10 +715,6 @@ def _ivf_join_candidates(
 
     # both sides' matmuls + norm HOFs run at the input's split count
     df = widen_if_narrow_scan(df)
-    # per-row norms are computed ONCE on the narrow side (a candidate
-    # pair re-deriving ‖q‖ and ‖c‖ through the interpreted HOF chain
-    # costs ~3× the dot product itself — measured 19 s → ~2 s at 1M
-    # candidates); same expression, same doubles, bit-identical cosine
     c = ivf_assign(
         df.select(
             F.col("vec_id").alias("neighbor_id"),
@@ -738,7 +737,7 @@ def _ivf_join_candidates(
         *[f"q_{x}" for x in carry], "cluster",
     )
     cand = c.join(q, "cluster").filter(F.col("neighbor_id") != F.col("query_id"))
-    cos = _dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_nrm") * F.col("c_nrm"))
+    cos = _cosine(F.col("q_emb"), F.col("c_emb"), F.col("q_nrm"), F.col("c_nrm"))
     return cand.withColumn("cosine", F.round(cos, 6))
 
 
@@ -1501,10 +1500,10 @@ def semantic_decontaminate(
     ).crossJoin(F.broadcast(barr))
 
     def score(bs):
-        cos = F.when(
-            (F.col("_cn") > 0) & (bs["bn"] > 0),
-            F.round(_dot(F.col("_ce"), bs["be"]) / (F.col("_cn") * bs["bn"]), 6),
-        ).otherwise(F.lit(0.0))
+        cos = F.coalesce(
+            F.round(_cosine(F.col("_ce"), bs["be"], F.col("_cn"), bs["bn"]), 6),
+            F.lit(0.0),
+        )
         # (cos, -bid): array_max picks highest cosine, then LOWEST id
         return F.struct(cos.alias("cos"), (-bs["bid"]).alias("nbid"))
 

@@ -20,22 +20,18 @@ import os
 from datetime import datetime, timedelta
 
 import pandas as pd
+from pyspark.sql import types as T
 
-try:
-    from pyspark.sql import types as T
-
-    TRANSCRIPT_SCHEMA = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType()),
-            T.StructField("turn_idx", T.IntegerType()),
-            T.StructField("role", T.StringType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("tool", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-except ImportError:  # pragma: no cover
-    TRANSCRIPT_SCHEMA = None
+TRANSCRIPT_SCHEMA = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType()),
+        T.StructField("role", T.StringType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("tool", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+    ]
+)
 
 #: golden corpus: the vendored snapshot of the reference's Apache-2.0
 #: test fixtures (133 syslog.msg + yang.json cases) — repo-local so the

@@ -1,9 +1,8 @@
-from .sink import exactly_once_parquet_sink, read_sink
+from .sink import exactly_once_parquet_sink
 from .pipeline import build_stream, run_stream_once
 
 __all__ = [
     "exactly_once_parquet_sink",
-    "read_sink",
     "build_stream",
     "run_stream_once",
 ]

@@ -24,13 +24,16 @@ one-batch case drops C (B anchored it) while the split case keeps C
 :func:`..operators.similarity.semdedup` has a third rule again
 (cluster-scoped, dropped rows suppress).
 
-Per batch the work is candidate-bounded, never quadratic: new rows are
-bucketed into ``n_tables`` seeded hyperplane tables with the SAME
-scheme, defaults, per-table ``max_bucket`` skew cap, pair
-deduplication, and 6-dp HALF_UP cosine threshold as the batch
-:func:`..operators.similarity.embedding_near_dup` — the two paths
-cannot disagree on a pair verdict.  The index join hits only matching
-(table, bucket) keys with per-row norms precomputed.  At production
+Per batch the work is candidate-bounded, never quadratic, and the
+verdict is the batch operator's own code: the new rows go through
+:func:`..operators.similarity._near_dup_table` (the same LSH tables and
+per-table bucket cap as
+:func:`..operators.similarity.embedding_near_dup`) and every candidate
+pair through its :func:`..operators.similarity._near_dup_pairs` (one
+cosine per distinct pair, 6-dp round, ``>= threshold``; a zero vector
+is never a near-dup).  In-batch drops are the ``id_b`` of that step
+over the batch with itself; drops against the index are the ``id_a``
+of that step over the batch and the md5-capped index.  At production
 scale the index side should be laid out for bucket pruning (bucketed /
 Z-ordered by (table, bucket), or an Iceberg table with bucket bloom
 filters); the comparison semantics here are identical.
@@ -44,7 +47,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from ..operators.similarity import _bucket_table, _dot
+from ..operators.similarity import (
+    NEAR_DUP_LSH,
+    NEAR_DUP_MAX_BUCKET,
+    _near_dup_pairs,
+    _near_dup_table,
+)
 from .maintenance import _fs, read_asof
 
 PARAMS_FILE = "_PARAMS.json"
@@ -124,11 +132,7 @@ def near_dup_filter_batch(
     index_dir: str,
     dim: int,
     threshold: float = 0.95,
-    n_planes: int = 10,
-    n_tables: int = 4,
-    seed: int = 42,
-    max_bucket: int = 2000,
-    max_index_bucket: int | None = None,
+    max_index_bucket: int = NEAR_DUP_MAX_BUCKET,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     metrics_jsonl: str | None = None,
@@ -137,8 +141,8 @@ def near_dup_filter_batch(
     write survivors to ``out_dir/_batch_id=<n>`` and their bucket rows
     to ``index_dir/_batch_id=<n>`` (both overwrite — idempotent).
 
-    ``max_index_bucket`` (default: ``max_bucket``) bounds the
-    *accumulated-index* side of the anchor join too: a hot
+    ``max_index_bucket`` bounds the *accumulated-index* side of the
+    anchor join as ``NEAR_DUP_MAX_BUCKET`` bounds the batch side: a hot
     (table, bucket) key otherwise grows without bound across the
     stream, and each new row in it would compare against every prior
     survivor.  Oversized index buckets are deterministically
@@ -161,41 +165,18 @@ def near_dup_filter_batch(
     hot-bucket pressure visible long before it degrades recall.
     Replay-idempotent like the sibling writes: a replayed batch
     REPLACES its own line instead of appending a duplicate."""
-    if max_index_bucket is None:
-        max_index_bucket = max_bucket
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        _check_index_params(
-            spark, index_dir,
-            {"dim": dim, "n_planes": n_planes, "n_tables": n_tables,
-             "seed": seed},
-        )
-        wb = Window.partitionBy("table", "bucket")
-        # same skew cap as embedding_near_dup: an oversized bucket is
-        # excluded per table (other tables still recover its true pairs)
-        bt = (
-            _bucket_table(batch_df, dim, n_planes, n_tables, seed, id_col, emb_col)
-            .withColumn("_bsz", F.count(F.lit(1)).over(wb))
-            .filter(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
-        # the bucketing (pandas-UDF matmuls) feeds the index join, the
-        # in-batch join, AND the index-slice write — persist once
-        bt = bt.persist()
+        _check_index_params(spark, index_dir, {"dim": dim, **NEAR_DUP_LSH})
+        # the bucketing (pandas-UDF matmuls) feeds the index pairs, the
+        # in-batch pairs, AND the index-slice write — persist once
+        bt = _near_dup_table(batch_df, dim, id_col, emb_col).persist()
         try:
-            # try_divide: a zero-norm vector yields NULL cosine (row
-            # kept) instead of an ANSI DIVIDE_BY_ZERO poison-pilling
-            # the streaming query on every replay
-            cos = F.round(
-                F.try_divide(
-                    _dot(F.col("emb"), F.col("_p_emb")),
-                    F.col("nrm") * F.col("_p_nrm"),
-                ),
-                6,
+            # in-batch: any lower-id near row suppresses
+            dups = _near_dup_pairs(bt, bt, threshold, ordered=True).select(
+                F.col("id_b").alias("id")
             )
-
-            dup_vs_prev = None
             idx_over = idx_out = 0
             idx = _read_index(spark, index_dir, batch_id)
             if idx is not None:
@@ -212,19 +193,9 @@ def near_dup_filter_batch(
                         idx.groupBy("table", "bucket")
                         .agg(F.count(F.lit(1)).alias("_c"))
                         .agg(
+                            F.count_if(F.col("_c") > max_index_bucket).alias("ob"),
                             F.coalesce(
-                                F.sum(
-                                    (F.col("_c") > max_index_bucket).cast("long")
-                                ),
-                                F.lit(0),
-                            ).alias("ob"),
-                            F.coalesce(
-                                F.sum(
-                                    F.when(
-                                        F.col("_c") > max_index_bucket,
-                                        F.col("_c") - max_index_bucket,
-                                    )
-                                ),
+                                F.sum(F.greatest(F.col("_c") - max_index_bucket, F.lit(0))),
                                 F.lit(0),
                             ).alias("so"),
                         )
@@ -241,39 +212,14 @@ def near_dup_filter_batch(
                 prev = (
                     idx.withColumn("_rn", F.row_number().over(wib))
                     .filter(F.col("_rn") <= max_index_bucket)
-                    .select(
-                        "table",
-                        "bucket",
-                        F.col("id").alias("_p_id"),
-                        F.col("emb").alias("_p_emb"),
-                        F.col("nrm").alias("_p_nrm"),
+                )
+                # across batches: any kept earlier row suppresses
+                dups = dups.unionByName(
+                    _near_dup_pairs(bt, prev, threshold, ordered=False).select(
+                        F.col("id_a").alias("id")
                     )
                 )
-                dup_vs_prev = (
-                    bt.join(prev, ["table", "bucket"])
-                    .dropDuplicates(["id", "_p_id"])
-                    .filter(cos >= threshold)
-                    .select("id")
-                )
-
-            other = bt.select(
-                "table",
-                "bucket",
-                F.col("id").alias("_p_id"),
-                F.col("emb").alias("_p_emb"),
-                F.col("nrm").alias("_p_nrm"),
-            )
-            dup_in_batch = (
-                bt.join(other, ["table", "bucket"])
-                .filter(F.col("_p_id") < F.col("id"))
-                .dropDuplicates(["id", "_p_id"])
-                .filter(cos >= threshold)
-                .select("id")
-            )
-            dups = (
-                dup_in_batch if dup_vs_prev is None
-                else dup_in_batch.unionByName(dup_vs_prev)
-            ).distinct().persist()
+            dups = dups.distinct().persist()
             try:
                 src = batch_df
                 obs_in = obs_kept = None

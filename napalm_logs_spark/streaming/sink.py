@@ -164,11 +164,3 @@ def exactly_once_parquet_sink(sinks):
 
     return _write
 
-
-def read_sink(spark, path: str) -> DataFrame:
-    """Read a sink directory back (all batches), restoring _batch_id.
-    Compaction-aware: after :func:`.maintenance.compact_sink` the read
-    unions the compacted generation with the uncompacted tail."""
-    from .maintenance import read_table
-
-    return read_table(spark, path)

@@ -60,9 +60,9 @@ def test_cli_normalize_and_run(spark, tmp_path):
         "run", "--source", src, "--sink", sink, "--checkpoint", ckpt,
         "--metrics", metrics, "--no-dedup",
     ]) == 0
-    from napalm_logs_spark.streaming.sink import read_sink
+    from napalm_logs_spark.streaming.maintenance import read_table
 
-    n1 = read_sink(spark, sink).count()
+    n1 = read_table(spark, sink).count()
     assert n1 >= 30
     assert json.loads(open(metrics).readline())["num_input_rows"] == 30
 
@@ -74,10 +74,10 @@ def test_cli_normalize_and_run(spark, tmp_path):
         "run", "--source", src, "--sink", sink, "--checkpoint", ckpt,
         "--metrics", metrics, "--no-dedup",
     ]) == 0
-    n2 = read_sink(spark, sink).count()
+    n2 = read_table(spark, sink).count()
     assert n2 > n1
     assert main(["compact", "--table", sink]) == 0
-    assert read_sink(spark, sink).count() == n2
+    assert read_table(spark, sink).count() == n2
     assert not os.path.isdir(sink + "/_batch_id=0")
     assert os.path.isdir(sink + "/_compacted_upto=0")
 
@@ -132,7 +132,7 @@ def test_cli_resume_keeps_checkpoint_partitions(spark, tmp_path):
         golden_transcripts_pandas,
         transcripts_df,
     )
-    from napalm_logs_spark.streaming.sink import read_sink
+    from napalm_logs_spark.streaming.maintenance import read_table
 
     src, sink = str(tmp_path / "src"), str(tmp_path / "sink")
     ckpt, metrics = str(tmp_path / "ckpt"), str(tmp_path / "m.jsonl")
@@ -143,7 +143,7 @@ def test_cli_resume_keeps_checkpoint_partitions(spark, tmp_path):
     cli = ["run", "--source", src, "--sink", sink, "--checkpoint", ckpt,
            "--metrics", metrics]
     assert main(["--shuffle-partitions", "3"] + cli) == 0
-    n1 = read_sink(spark, sink).count()
+    n1 = read_table(spark, sink).count()
     transcripts_df(spark, pdf).coalesce(1).write.mode("append").parquet(src)
     assert main(cli) == 0
 
@@ -152,7 +152,7 @@ def test_cli_resume_keeps_checkpoint_partitions(spark, tmp_path):
            if r["num_input_rows"]]
     assert [[op["num_shuffle_partitions"] for op in o] for o in ops] == [[3], [3]]
     assert ops[1][0]["num_rows_updated"] == 0
-    kept = read_sink(spark, sink)
+    kept = read_table(spark, sink)
     assert kept.count() == n1 > 0
     assert kept.groupBy(*DEFAULT_KEY).count().filter("count > 1").count() == 0
 
@@ -162,7 +162,7 @@ def test_cli_run_keeps_every_unknown_envelope(spark, tmp_path):
     dedups after identifying the OS), so distinct free-text turns all
     publish; a same-key syslog duplicate 2 s apart still collapses."""
     from napalm_logs_spark.__main__ import main
-    from napalm_logs_spark.streaming.sink import read_sink
+    from napalm_logs_spark.streaming.maintenance import read_table
 
     base = datetime.datetime(2017, 7, 20, 21, 45, 0)
     line = "<28>Jul 20 21:45:59 vmx01 mib2d[2424]: SNMP_TRAP_LINK_DOWN: ifIndex 502"
@@ -182,7 +182,7 @@ def test_cli_run_keeps_every_unknown_envelope(spark, tmp_path):
         "run", "--source", src, "--sink", sink, "--checkpoint", str(tmp_path / "ckpt"),
     ]) == 0
 
-    got = read_sink(spark, sink).collect()
+    got = read_table(spark, sink).collect()
     unknown = sorted((r.conv_id, r.turn_idx) for r in got if r.os == "unknown")
     assert unknown == [("c1", 0), ("c1", 1), ("c1", 2)]
     syslog = [r for r in got if r.os != "unknown"]
@@ -326,7 +326,7 @@ def test_cli_config_file_multi_sink_fanout(spark, tmp_path, monkeypatch):
         golden_transcripts_pandas,
         transcripts_df,
     )
-    from napalm_logs_spark.streaming.sink import read_sink
+    from napalm_logs_spark.streaming.maintenance import read_table
 
     src = str(tmp_path / "src")
     all_sink = str(tmp_path / "all")
@@ -351,8 +351,8 @@ sinks:
     whitelist: [INTERFACE_DOWN]
 """)
     assert main(["--config-file", str(cfg), "run"]) == 0
-    n_all = read_sink(spark, all_sink).count()
-    filtered = read_sink(spark, filt_sink)
+    n_all = read_table(spark, all_sink).count()
+    filtered = read_table(spark, filt_sink)
     n_filt = filtered.count()
     assert n_all > n_filt > 0
     errs = {r.error for r in filtered.select("error").distinct().collect()}
@@ -366,7 +366,7 @@ sinks:
         "--config-file", str(cfg), "run",
         "--sink", extra, "--checkpoint", ckpt2,
     ]) == 0
-    assert read_sink(spark, extra).count() == n_all
+    assert read_table(spark, extra).count() == n_all
 
 
 def test_cli_config_file_errors(tmp_path):
@@ -390,23 +390,72 @@ def test_cli_run_requires_source_from_somewhere(capsys):
         main(["run", "--sink", "/tmp/x"])
 
 
-def test_config_scalar_sink_becomes_list():
+def _run_flags():
+    """A parser with the kinds of flag ``run`` has."""
     import argparse
 
+    p = argparse.ArgumentParser(prog="run")
+    p.add_argument("--source")
+    p.add_argument("--sink", action="append")
+    p.add_argument("--checkpoint")
+    p.add_argument("--source-format", default="parquet", choices=("parquet", "json"))
+    p.add_argument("--no-dedup", action="store_true")
+    p.add_argument("--max-files-per-trigger", type=int)
+    return p
+
+
+def test_config_scalar_sink_becomes_list():
     from napalm_logs_spark.config import merge_config
 
-    args = argparse.Namespace(sink=None, source=None)
-    merge_config(args, {"sink": "/data/out", "source": "/data/in"}, [])
+    p = _run_flags()
+    args = p.parse_args([])
+    merge_config(args, {"sink": "/data/out", "source": "/data/in"}, [], (p,))
     assert args.sink == ["/data/out"]  # not iterated char-by-char later
     # explicit flag wins over the file
-    args2 = argparse.Namespace(sink=["/flag"], source=None)
-    merge_config(args2, {"sink": "/file"}, ["--sink", "/flag"])
+    args2 = p.parse_args(["--sink", "/flag"])
+    merge_config(args2, {"sink": "/file"}, ["--sink", "/flag"], (p,))
     assert args2.sink == ["/flag"]
 
 
-def test_config_scalar_whitelist_and_abbreviated_flags():
-    import argparse
+def test_config_values_parse_like_their_flags():
+    from napalm_logs_spark.config import merge_config
 
+    p = _run_flags()
+    args = p.parse_args([])
+    # "5" is what a ${ENV} interpolation yields
+    merge_config(args, {
+        "max_files_per_trigger": "5", "no_dedup": False,
+        "source_format": "json", "sink": ["/a", "/b"],
+    }, [], (p,))
+    assert args.max_files_per_trigger == 5
+    assert args.no_dedup is False
+    assert (args.source_format, args.sink) == ("json", ["/a", "/b"])
+
+
+@pytest.mark.parametrize("line", [
+    "source_format: JSON",
+    'no_dedup: "false"',
+    "max_files_per_trigger: five",
+    "shuffle_partitions: many",
+    "max_files_per_trigger: true",
+])
+def test_cli_config_value_outside_its_flag_is_refused(tmp_path, capsys, line):
+    """A config value the flag itself would refuse exits through the
+    parser, naming the key, before any Spark work."""
+    from napalm_logs_spark.__main__ import main
+
+    cfg = tmp_path / "c.yaml"
+    cfg.write_text(line + "\n")
+    with pytest.raises(SystemExit) as exc:
+        main([
+            "--config-file", str(cfg), "run", "--source", str(tmp_path / "none"),
+            "--sink", str(tmp_path / "out"), "--checkpoint", str(tmp_path / "ck"),
+        ])
+    assert exc.value.code == 2
+    assert f"config file: {line.split(':')[0]}:" in capsys.readouterr().err
+
+
+def test_config_scalar_whitelist_and_abbreviated_flags():
     import pytest as _pytest
 
     from napalm_logs_spark.config import _flag_given, build_sinks, merge_config
@@ -427,9 +476,10 @@ def test_config_scalar_whitelist_and_abbreviated_flags():
     assert _flag_given(["--source", "/s"], "source", dests)
     assert not _flag_given(["--source", "/s"], "source_format", dests)
     assert _flag_given(["--source-f", "json"], "source_format", dests)
-    args = argparse.Namespace(source="/x", source_format="parquet", sink=None)
+    p = _run_flags()
+    args = p.parse_args(["--source", "/x"])
     merge_config(
         args, {"source": "/file", "source_format": "json"},
-        ["run", "--source", "/x"],
+        ["run", "--source", "/x"], (p,),
     )
     assert (args.source, args.source_format) == ("/x", "json")

@@ -17,7 +17,6 @@ from napalm_logs_spark.streaming.maintenance import (
 from napalm_logs_spark.streaming.sink import (
     SinkSpec,
     exactly_once_parquet_sink,
-    read_sink,
 )
 
 
@@ -57,14 +56,14 @@ def _data_files(root):
 def test_compact_preserves_rows_and_cuts_files(spark, tmp_path):
     out = str(tmp_path / "t")
     total = _land(spark, out)
-    before = _rows(read_sink(spark, out))
+    before = _rows(read_table(spark, out))
     files_before = len(_data_files(out))
     assert len(before) == total
 
     stats = compact_sink(spark, out, target_file_bytes=1 << 30)
     assert not stats["skipped"]
     assert stats["upto"] == 3  # newest batch (4) stays replayable
-    after = _rows(read_sink(spark, out))
+    after = _rows(read_table(spark, out))
     assert after == before, "compaction must be row-for-row invisible"
     files_after = len(_data_files(out))
     assert files_after < files_before
@@ -72,7 +71,7 @@ def test_compact_preserves_rows_and_cuts_files(spark, tmp_path):
     assert os.path.isdir(out + "/_batch_id=4")
     assert not os.path.isdir(out + "/_batch_id=0")
     # lineage columns survive
-    cols = set(read_sink(spark, out).columns)
+    cols = set(read_table(spark, out).columns)
     assert {"_batch_id", "_task_partition"}.issubset(cols)
 
 
@@ -80,7 +79,7 @@ def test_second_compaction_and_new_tail(spark, tmp_path):
     out = str(tmp_path / "t")
     _land(spark, out, n_batches=4)
     compact_sink(spark, out)  # upto=2
-    before = _rows(read_sink(spark, out))
+    before = _rows(read_table(spark, out))
     # two more batches land after the first compaction
     sink = exactly_once_parquet_sink([SinkSpec(path=out, send_raw=True,
                                                send_unknown=True)])
@@ -93,7 +92,7 @@ def test_second_compaction_and_new_tail(spark, tmp_path):
         sink(df, b)
     stats = compact_sink(spark, out)
     assert stats["upto"] == 4
-    rows = _rows(read_sink(spark, out))
+    rows = _rows(read_table(spark, out))
     assert len(rows) == len(before) + 20
     assert {r[3] for r in rows} == {0, 1, 2, 3, 4, 5}
     # exactly one generation remains
@@ -105,10 +104,10 @@ def test_rerun_same_watermark_is_idempotent(spark, tmp_path):
     out = str(tmp_path / "t")
     _land(spark, out, n_batches=3)
     compact_sink(spark, out, upto_batch_id=1)
-    first = _rows(read_sink(spark, out))
+    first = _rows(read_table(spark, out))
     stats = compact_sink(spark, out, upto_batch_id=1)
     assert stats["skipped"]
-    assert _rows(read_sink(spark, out)) == first
+    assert _rows(read_table(spark, out)) == first
 
 
 def test_crash_between_manifest_and_gc_no_duplicates(spark, tmp_path):
@@ -116,7 +115,7 @@ def test_crash_between_manifest_and_gc_no_duplicates(spark, tmp_path):
     not double-count (GC is pure cleanup)."""
     out = str(tmp_path / "t")
     _land(spark, out, n_batches=3)
-    before = _rows(read_sink(spark, out))
+    before = _rows(read_table(spark, out))
     compact_sink(spark, out)  # upto=1
     # resurrect a consumed dir, simulating a crash before GC (or a
     # stale replay landing into an already-compacted id)
@@ -128,7 +127,7 @@ def test_crash_between_manifest_and_gc_no_duplicates(spark, tmp_path):
         F.lit("RAW").alias("error"),
     )
     sink(df, 0)
-    assert _rows(read_sink(spark, out)) == before, (
+    assert _rows(read_table(spark, out)) == before, (
         "tail read must ignore _batch_id <= compaction watermark"
     )
 
@@ -137,14 +136,14 @@ def test_crash_before_manifest_leaves_old_state(spark, tmp_path):
     """A generation dir without a manifest flip is invisible garbage."""
     out = str(tmp_path / "t")
     _land(spark, out, n_batches=3)
-    before = _rows(read_sink(spark, out))
+    before = _rows(read_table(spark, out))
     # fake a crashed run: orphan tmp generation, no manifest
     os.makedirs(out + "/_compacted_upto=1.tmp")
-    assert _rows(read_sink(spark, out)) == before
+    assert _rows(read_table(spark, out)) == before
     # the next real compaction sweeps the orphan
     compact_sink(spark, out)
     assert not os.path.exists(out + "/_compacted_upto=1.tmp")
-    assert _rows(read_sink(spark, out)) == before
+    assert _rows(read_table(spark, out)) == before
 
 
 def test_read_asof_time_travel(spark, tmp_path):
@@ -167,9 +166,9 @@ def test_lost_manifest_after_generation_commit(spark, tmp_path):
     out = str(tmp_path / "t")
     _land(spark, out, n_batches=4)
     compact_sink(spark, out)  # upto=2
-    before = _rows(read_sink(spark, out))
+    before = _rows(read_table(spark, out))
     os.remove(os.path.join(out, MANIFEST))
-    assert _rows(read_sink(spark, out)) == before, (
+    assert _rows(read_table(spark, out)) == before, (
         "a committed generation must be readable without the manifest"
     )
     # the next (no-op) compaction heals: manifest rewritten, rows intact
@@ -177,7 +176,7 @@ def test_lost_manifest_after_generation_commit(spark, tmp_path):
     assert stats["skipped"] and stats["upto"] == 2
     with open(os.path.join(out, MANIFEST)) as fh:
         assert json.load(fh) == {"upto": 2}
-    assert _rows(read_sink(spark, out)) == before
+    assert _rows(read_table(spark, out)) == before
 
 
 def test_skipped_compaction_heals_leftover_tail(spark, tmp_path):
@@ -187,7 +186,7 @@ def test_skipped_compaction_heals_leftover_tail(spark, tmp_path):
     out = str(tmp_path / "t")
     _land(spark, out, n_batches=4)
     compact_sink(spark, out)  # upto=2
-    before = _rows(read_sink(spark, out))
+    before = _rows(read_table(spark, out))
     # resurrect a consumed dir + an orphan tmp generation
     sink = exactly_once_parquet_sink([SinkSpec(path=out, send_raw=True,
                                                send_unknown=True)])
@@ -202,7 +201,7 @@ def test_skipped_compaction_heals_leftover_tail(spark, tmp_path):
     assert stats["skipped"]
     assert not os.path.isdir(out + "/_batch_id=1")
     assert not os.path.exists(out + "/_compacted_upto=0.tmp")
-    assert _rows(read_sink(spark, out)) == before
+    assert _rows(read_table(spark, out)) == before
 
 
 def test_range_layout_makes_asof_a_stats_skip(spark, tmp_path):
@@ -304,7 +303,7 @@ def test_explicit_upto_never_passes_landed_batches(spark, tmp_path):
 
     out = str(tmp_path / "t")
     _land(spark, out, n_batches=3)
-    before = _rows(read_sink(spark, out))
+    before = _rows(read_table(spark, out))
     # with a tail: huge upto clamps to newest-1
     stats = compact_sink(spark, out, upto_batch_id=100)
     assert stats["upto"] == 1
@@ -324,7 +323,7 @@ def test_explicit_upto_never_passes_landed_batches(spark, tmp_path):
             F.lit("RAW").alias("error"),
         )
         sink(df, b)
-    rows = _rows(read_sink(spark, out))
+    rows = _rows(read_table(spark, out))
     # generation holds batches 0-1 (80 rows); removed batch 2 was
     # re-landed with 7 rows; batch 3 adds 7
     assert len(rows) == len(before) - 40 + 14

@@ -98,7 +98,7 @@ def test_index_params_pinned(spark, dirs):
     with pytest.raises(Exception, match="refusing to extend"):
         run_near_dup_stream_once(
             spark, dirs["src"], dirs["out"], dirs["idx"],
-            dirs["ckpt"], SCHEMA, DIM, threshold=0.95, n_planes=8,
+            dirs["ckpt"], SCHEMA, DIM + 1, threshold=0.95,
         )
 
 
@@ -270,3 +270,28 @@ def test_index_side_bucket_cap_and_gauges(spark, dirs, tmp_path):
     lines = {ln["batch_id"]: ln for ln in map(json.loads, open(metrics))}
     assert lines[2]["n_kept"] == 1  # anchors unreachable -> kept
     assert lines[2]["index_anchors_sampled_out"] >= 6
+
+
+def test_stream_drops_exactly_the_batch_operators_id_b(spark, dirs):
+    """One batch through the stream filter drops exactly the ``id_b``
+    set that ``embedding_near_dup`` reports on the same rows — zero
+    vectors (never near-dups) and a planted near-dup pair included."""
+    from napalm_logs_spark.operators.similarity import embedding_near_dup
+    from napalm_logs_spark.streaming.neardup_stream import near_dup_filter_batch
+
+    base = _vecs(71, 8)
+    zero = np.zeros((2, DIM), dtype="float32")
+    rows = (
+        _rows(range(8), base)
+        + _rows([20, 21], zero)
+        + _rows([30], [base[3] + 0.001 * _vecs(72, 1)[0]])  # near-dup of 3
+        + _rows([31], [base[3] + 0.002 * _vecs(73, 1)[0]])  # and of 3, 30
+    )
+    bdf = spark.createDataFrame(rows, SCHEMA)
+    pairs = embedding_near_dup(bdf, dim=DIM, threshold=0.95).collect()
+    expected_drops = {r.id_b for r in pairs}
+    assert expected_drops == {30, 31}, pairs
+
+    near_dup_filter_batch(dirs["out"], dirs["idx"], DIM, threshold=0.95)(bdf, 0)
+    kept = {r.vec_id for r in read_table(spark, dirs["out"]).collect()}
+    assert {r[0] for r in rows} - kept == expected_drops

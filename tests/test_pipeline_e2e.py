@@ -60,7 +60,8 @@ def test_jsonl_source_end_to_end(spark, tmp_path):
     import json as _json
 
     from napalm_logs_spark.streaming.pipeline import run_stream_once
-    from napalm_logs_spark.streaming.sink import SinkSpec, read_sink
+    from napalm_logs_spark.streaming.maintenance import read_table
+    from napalm_logs_spark.streaming.sink import SinkSpec
 
     src = tmp_path / "src"
     src.mkdir()
@@ -85,7 +86,7 @@ def test_jsonl_source_end_to_end(spark, tmp_path):
         sinks=[SinkSpec(path=out, send_raw=True, send_unknown=True)],
         dedup=False, source_format="json",
     )
-    back = read_sink(spark, out)
+    back = read_table(spark, out)
     errors = {r.error for r in back.select("error").collect()}
     assert "INTERFACE_DOWN" in errors       # real envelope from JSON ingest
     assert back.count() >= 2                # corrupt row didn't kill the run
@@ -126,7 +127,8 @@ def test_soak_state_bounded_across_resumed_runs(spark, tmp_path):
     import json as _json
 
     from napalm_logs_spark.streaming.pipeline import run_stream_once
-    from napalm_logs_spark.streaming.sink import SinkSpec, read_sink
+    from napalm_logs_spark.streaming.maintenance import read_table
+    from napalm_logs_spark.streaming.sink import SinkSpec
 
     base = dt.datetime(2017, 7, 20, 0, 0, 0)
     schema = (
@@ -161,7 +163,7 @@ def test_soak_state_bounded_across_resumed_runs(spark, tmp_path):
             metrics_jsonl=metrics,
         )
 
-    got = read_sink(spark, out)
+    got = read_table(spark, out)
     # exactly-once across 5 resumed drains: every row exactly once
     assert got.count() == n_per_run * n_runs
     assert got.select("conv_id").distinct().count() == n_per_run * n_runs

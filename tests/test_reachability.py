@@ -17,7 +17,9 @@ function that shares its name with a reached one passes unseen.
 Every optional parameter of a top-level package function, public or
 private, must be passed at some call site in those files (or in the
 vendored ``*.pyprofile`` modules): by keyword, by position, or through
-``*args``/``**kwargs``.  An option no product caller sets is a
+``*args``/``**kwargs``.  A function that passes its own ``**kwargs``
+on forwards only the keywords its callers pass, minus its own named
+parameters.  An option no product caller sets is a
 constant, and the code only its other values reach is dead.
 
 Every field of a package ``@dataclass`` must be read in one of those
@@ -77,6 +79,11 @@ ALLOWED_UNSET_PARAMETERS = {
     f"{PKG}.operators.convstats:conversation_fingerprints(max_turns)": (
         "size bound a unit test cannot reach cheaply; "
         "test_convstats::test_fingerprint_max_turns_truncation sets it"
+    ),
+    f"{PKG}.streaming.neardup_stream:near_dup_filter_batch(max_index_bucket)": (
+        "size bound a unit test cannot reach cheaply; "
+        "test_neardup_stream::test_index_side_bucket_cap_and_gauges sets it "
+        "to 3 and 0 to reach the index cap"
     ),
     f"{PKG}.operators.docdedup:_jaccard_capped(freq_cap)": (
         "stop-shingle cap a unit test cannot reach cheaply; "
@@ -333,17 +340,29 @@ def _call_name(call, aliases: dict):
     return aliases.get(name, name)
 
 
+def _forwards_own_kwargs(top, value) -> bool:
+    """Whether ``**value`` in a call inside ``top`` passes on ``top``'s
+    own ``**kwargs``."""
+    kw = getattr(getattr(top, "args", None), "kwarg", None)
+    return kw is not None and isinstance(value, ast.Name) and value.id == kw.arg
+
+
 def _unset_parameters() -> set:
     """``module:function(param)`` of every optional parameter of a
     top-level package function that no product call sets."""
-    defs = {}
+    defs, named = {}, {}
     for mod, path in _package_modules().items():
         with open(path) as fh:
             tree = ast.parse(fh.read(), path)
         for top in tree.body:
             if isinstance(top, ast.FunctionDef):
                 defs[top.name] = (mod, path, _optional_params(top))
+                a = top.args
+                named[top.name] = {
+                    p.arg for p in a.posonlyargs + a.args + a.kwonlyargs
+                }
     passed = {}  # function name -> keywords, positions, "*" / "**"
+    forwards = set()  # (forwarder, callee): `callee(**kwargs)` of its own
     for path in _product_files() + _vendored_profiles():
         with open(path) as fh:
             tree = ast.parse(fh.read(), path)
@@ -365,7 +384,29 @@ def _unset_parameters() -> set:
                 got = passed.setdefault(name, set())
                 for i, arg in enumerate(call.args):
                     got.add("*" if isinstance(arg, ast.Starred) else i)
-                got.update(k.arg or "**" for k in call.keywords)
+                for k in call.keywords:
+                    if k.arg is not None:
+                        got.add(k.arg)
+                    elif (
+                        _forwards_own_kwargs(top, k.value)
+                        and path == defs.get(top.name, (None, None))[1]
+                    ):
+                        forwards.add((top.name, name))
+                    else:
+                        got.add("**")
+    # a forwarded `**kwargs` carries the keywords the forwarder's callers
+    # pass, minus the forwarder's named parameters
+    changed = True
+    while changed:
+        changed = False
+        for fwd, callee in forwards:
+            new = {
+                k for k in passed.get(fwd, set())
+                if isinstance(k, str) and k != "*" and k not in named[fwd]
+            } - passed.setdefault(callee, set())
+            if new:
+                passed[callee] |= new
+                changed = True
     unset = set()
     for name, (mod, _path, params) in defs.items():
         got = passed.get(name, set())

@@ -802,3 +802,59 @@ def test_bitext_mine_partitioning_invariance(spark):
             )
         )
     assert outs[0] == outs[1] and len(outs[0]) > 0
+
+
+# --- zero vectors: one cosine rule for every operator ----------------------
+
+
+def test_zero_vectors_never_abort_and_rank_last(spark):
+    """A pair that involves a zero vector has a NULL cosine in every
+    operator: no ANSI DIVIDE_BY_ZERO abort, never a near-dup, semdedup
+    or decontamination hit, and ranked after every scored candidate."""
+    from napalm_logs_spark.operators.similarity import (
+        hard_negatives,
+        ivf_join_topk,
+        semantic_decontaminate,
+        semdedup,
+    )
+
+    zero = {3, 4}
+    rows = [
+        (0, [1.0, 0.0, 0.0, 0.0], 0),
+        (1, [0.99, 0.1, 0.0, 0.0], 1),   # near-dup of 0
+        (2, [0.0, 0.0, 1.0, 0.0], 0),
+        (3, [0.0, 0.0, 0.0, 0.0], 1),
+        (4, [0.0, 0.0, 0.0, 0.0], 0),
+        (5, [0.0, 1.0, 0.0, 0.2], 1),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+    queries = df.filter(F.col("vec_id").isin(0, 3))
+
+    def check_topk(out):
+        assert out
+        by_q = {}
+        for r in out:
+            assert (r.cosine is None) == bool({r.query_id, r.neighbor_id} & zero), r
+            by_q.setdefault(r.query_id, []).append(r)
+        for rs in by_q.values():
+            scored = [r.cosine is not None for r in sorted(rs, key=lambda r: r.rank)]
+            assert scored == sorted(scored, reverse=True), rs
+
+    check_topk(cosine_topk(df, queries, k=5).collect())
+    check_topk(lsh_cosine_topk(df, queries, dim=4, k=5, n_planes=2, n_tables=2).collect())
+    check_topk(ivf_cosine_topk(df, queries, dim=4, k=5, n_clusters=2, nprobe=2).collect())
+    check_topk(ivf_join_topk(df, dim=4, k=5, n_clusters=2, nprobe=2).collect())
+    check_topk(hard_negatives(df, k=5, n_clusters=2, nprobe=2).collect())
+
+    pairs = {(r.id_a, r.id_b) for r in embedding_near_dup(df, dim=4, threshold=0.9).collect()}
+    assert pairs == {(0, 1)}
+
+    keep = {r.vec_id: r.keep for r in semdedup(df, k=1, threshold=0.9).collect()}
+    assert keep[3] and keep[4] and not keep[1]
+
+    dec = semantic_decontaminate(df, df.filter(F.col("vec_id") >= 3), threshold=0.5)
+    for r in dec.collect():
+        if r.vec_id in zero:
+            assert r.max_cosine == 0.0 and not r.contaminated, r
+        else:
+            assert r.contaminated == (r.vec_id == 5), r

@@ -13,7 +13,8 @@ from napalm_logs_spark.sources.transcripts import (
     transcripts_df,
 )
 from napalm_logs_spark.streaming.pipeline import run_stream_once
-from napalm_logs_spark.streaming.sink import SinkSpec, read_sink
+from napalm_logs_spark.streaming.maintenance import read_table
+from napalm_logs_spark.streaming.sink import SinkSpec
 
 
 @pytest.fixture()
@@ -36,13 +37,13 @@ def test_stream_end_to_end_and_resume(spark, dirs):
 
     _write_batch(spark, dirs["src"], first)
     run_stream_once(spark, dirs["src"], [dirs["out"]], dirs["ckpt"], dedup=False)
-    n1 = read_sink(spark, dirs["out"]).count()
+    n1 = read_table(spark, dirs["out"]).count()
     assert n1 > 0
 
     # resume from checkpoint with new files — old files must not re-read
     _write_batch(spark, dirs["src"], second)
     run_stream_once(spark, dirs["src"], [dirs["out"]], dirs["ckpt"], dedup=False)
-    out = read_sink(spark, dirs["out"])
+    out = read_table(spark, dirs["out"])
     total = out.count()
 
     # every golden conv exactly the batch-path number of envelopes: no
@@ -61,7 +62,7 @@ def test_replayed_batch_is_idempotent(spark, dirs):
     pdf = golden_transcripts_pandas().iloc[:40]
     _write_batch(spark, dirs["src"], pdf)
     run_stream_once(spark, dirs["src"], [dirs["out"]], dirs["ckpt"], dedup=False)
-    before = read_sink(spark, dirs["out"]).count()
+    before = read_table(spark, dirs["out"]).count()
 
     # simulate a retried micro-batch: wipe the checkpoint so the same
     # input replays with the same batch id — the sink must overwrite,
@@ -70,7 +71,7 @@ def test_replayed_batch_is_idempotent(spark, dirs):
 
     shutil.rmtree(dirs["ckpt"])
     run_stream_once(spark, dirs["src"], [dirs["out"]], dirs["ckpt"], dedup=False)
-    after = read_sink(spark, dirs["out"]).count()
+    after = read_table(spark, dirs["out"]).count()
     assert after == before
 
 
@@ -85,8 +86,8 @@ def test_per_sink_filters(spark, dirs):
     run_stream_once(
         spark, dirs["src"], None, dirs["ckpt"], sinks=sinks, dedup=False
     )
-    full = read_sink(spark, dirs["out"])
-    filtered = read_sink(spark, dirs["out2"])
+    full = read_table(spark, dirs["out"])
+    filtered = read_table(spark, dirs["out2"])
     assert filtered.count() < full.count()
     errs = {r.error for r in filtered.select("error").distinct().collect()}
     assert errs == {"INTERFACE_DOWN"}
