@@ -338,18 +338,18 @@ def main(argv=None) -> int:
 
             def _spec(p: str) -> SinkSpec:
                 if p == "console":
-                    return SinkSpec(console=True, send_raw=True, send_unknown=True)
-                if p.startswith("kafka://"):
-                    rest = p[len("kafka://"):]
-                    bootstrap, _, topic = rest.partition("/")
-                    return SinkSpec(
-                        kafka_bootstrap=bootstrap,
-                        kafka_topic=topic or "napalm-logs",
-                        send_raw=True, send_unknown=True,
-                    )
-                if p.startswith("http://") or p.startswith("https://"):
-                    return SinkSpec(http_url=p, send_raw=True, send_unknown=True)
-                return SinkSpec(path=p, send_raw=True, send_unknown=True)
+                    target = {"console": True}
+                elif p.startswith("kafka://"):
+                    bootstrap, _, topic = p[len("kafka://"):].partition("/")
+                    target = {
+                        "kafka_bootstrap": bootstrap,
+                        "kafka_topic": topic or SinkSpec.kafka_topic,
+                    }
+                elif p.startswith(("http://", "https://")):
+                    target = {"http_url": p}
+                else:
+                    target = {"path": p}
+                return SinkSpec(send_raw=True, send_unknown=True, **target)
 
             # fan-out = config-file sinks + flag sinks (flags add to,
             # not replace, the deployment config's publisher list)
@@ -370,11 +370,7 @@ def main(argv=None) -> int:
                 max_files_per_trigger=args.max_files_per_trigger,
                 source_format=args.source_format,
             )
-            drained = [
-                s.path or ("console" if s.console
-                           else s.kafka_bootstrap or s.http_url)
-                for s in sinks
-            ]
+            drained = [s.target for s in sinks]
             print(f"stream drained -> {drained} (resume via {args.checkpoint})")
             if args.orphan_sink:
                 from .streaming.pipeline import run_orphan_alerts_once

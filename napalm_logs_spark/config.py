@@ -69,19 +69,33 @@ def load_config(path: str) -> dict:
     return _interp_env(cfg)
 
 
+#: ``SinkSpec`` field type -> (accepts a config value, what it expects)
+_SINK_VALUES = {
+    "bool": (lambda v: isinstance(v, bool), "true or false"),
+    "int": (
+        lambda v: isinstance(v, int) and not isinstance(v, bool) and v > 0,
+        "a positive integer",
+    ),
+    "str": (lambda v: isinstance(v, str), "a string"),
+}
+
+
 def build_sinks(entries: list):
     """``sinks:`` config entries → SinkSpec list (fail fast on unknown
-    keys so a typo'd filter never silently widens a sink)."""
+    keys so a typo'd filter never silently widens a sink, and on a value
+    of the wrong type: the string ``"false"`` is truthy)."""
+    from dataclasses import fields
+
     from .streaming.sink import SinkSpec
 
+    types = {f.name: f.type for f in fields(SinkSpec)}
     specs = []
     for ent in entries:
         if not isinstance(ent, dict):
             raise ValueError(f"sink entry must be a mapping, got {ent!r}")
         ent = dict(ent)
-        for key in ("whitelist", "blacklist"):
-            if key in ent:
-                v = ent[key]
+        for key, v in ent.items():
+            if key in ("whitelist", "blacklist"):
                 # a natural single-value YAML scalar must become a
                 # one-element tuple, not be iterated char-by-char into
                 # a filter that can never match
@@ -93,6 +107,12 @@ def build_sinks(entries: list):
                         f"list of strings, got {v!r}"
                     )
                 ent[key] = tuple(v)
+            elif types.get(key) in _SINK_VALUES:
+                accepts, want = _SINK_VALUES[types[key]]
+                if not accepts(v):
+                    raise ValueError(
+                        f"bad sink entry: {key} must be {want}, got {v!r}"
+                    )
         try:
             specs.append(SinkSpec(**ent))
         except TypeError as e:

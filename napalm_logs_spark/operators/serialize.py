@@ -19,10 +19,12 @@ arbitrary dicts :func:`packb` offers ``sort_keys=True`` (canonical
 form) — the Spark operators use it so output is engine-order-independent.
 
 Spark integration: :func:`serialize_envelopes` adds a ``payload``
-column.  ``json`` stays on the JVM fast path (``to_json``); the python
-serializers run as an Arrow-batched pandas UDF — the same per-message
-python cost the reference pays in its publisher process, paid on the
-executors instead of one daemon.
+column holding the ``PAYLOAD_COLS`` envelope — the one payload every
+Kafka and HTTP sink publishes (:mod:`..streaming.sink`).  ``json``
+stays on the JVM fast path (``to_json``); the python serializers run
+as an Arrow-batched pandas UDF — the same per-message python cost the
+reference pays in its publisher process, paid on the executors instead
+of one daemon.
 """
 
 from __future__ import annotations
@@ -225,6 +227,16 @@ SERIALIZER_LOOKUP = {
     "*": lambda o: packb(o, sort_keys=True),  # reference default
 }
 
+#: the published envelope's fields: the reference's envelope order
+#: (device.py:336-351) plus the conversation key.  The struct order is
+#: fixed, so the bytes are deterministic; every field is always present
+#: (explicit nulls) because consumers schema-validate the fixed shape.
+PAYLOAD_COLS = (
+    "error", "host", "ip", "timestamp", "yang_message", "message_details",
+    "yang_model", "os", "facility", "severity", "state", "state_tag",
+    "conv_id", "turn_idx",
+)
+
 
 def get_serializer(name: str):
     """Return the serialize function for ``name`` (reference
@@ -238,14 +250,11 @@ def get_serializer(name: str):
         ) from None
 
 
-def serialize_envelopes(
-    env: DataFrame,
-    serializer: str = "msgpack",
-    payload_cols: tuple | None = None,
-    out_col: str = "payload",
-) -> DataFrame:
-    """Add a serialized-envelope column to ``env``.
+def serialize_envelopes(env: DataFrame, serializer: str) -> DataFrame:
+    """Add the serialized envelope to ``env`` as a ``payload`` column.
 
+    The payload is the ``PAYLOAD_COLS`` fields ``env`` carries (a sink
+    with ``strip_message_details`` has dropped one), nulls included.
     ``json`` is pure JVM (``to_json`` on a fixed-order struct — the K6
     canonical path).  The python serializers (msgpack/str/yaml/pprint)
     round through one Arrow-batched pandas UDF over that same JSON
@@ -254,17 +263,11 @@ def serialize_envelopes(
     single publisher daemon, but parallel across executors.  Output
     type is ``binary`` for msgpack, ``string`` for the text formats.
     """
-    from .normalize import ENVELOPE_SCHEMA  # fixed envelope field order
-
-    if payload_cols is None:
-        payload_cols = tuple(
-            f.name for f in ENVELOPE_SCHEMA.fields if f.name in env.columns
-        )
     fn = get_serializer(serializer)  # fail fast on bad names
-    payload = F.struct(*[F.col(c) for c in payload_cols])
+    payload = F.struct(*[c for c in PAYLOAD_COLS if c in env.columns])
     as_json = F.to_json(payload, {"ignoreNullFields": "false"})
     if serializer == "json":
-        return env.withColumn(out_col, as_json)
+        return env.withColumn("payload", as_json)
 
     from pyspark.sql.functions import pandas_udf
 
@@ -276,4 +279,4 @@ def serialize_envelopes(
     def _ser(s):
         return s.map(lambda j: fn(json.loads(j)))
 
-    return env.withColumn(out_col, _ser(as_json))
+    return env.withColumn("payload", _ser(as_json))

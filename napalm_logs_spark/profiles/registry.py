@@ -124,7 +124,6 @@ class MessageProfile:
 
 @dataclass(frozen=True)
 class OsProfile:
-    name: str
     prefixes: tuple
     dispatch: dict           # match_on -> gate value -> profiles, in load order
 
@@ -241,7 +240,7 @@ def _yang_plan(mapping) -> tuple | None:
         return None
 
 
-def _build_os_profile(name: str, raw: dict) -> OsProfile:
+def _build_os_profile(raw: dict) -> OsProfile:
     prefixes = []
     for p in raw.get("prefixes", []):
         if "__python_path__" in p:
@@ -283,7 +282,7 @@ def _build_os_profile(name: str, raw: dict) -> OsProfile:
         match_on: {tag: tuple(mps) for tag, mps in index.items()}
         for match_on, index in dispatch.items()
     }
-    return OsProfile(name=name, prefixes=tuple(prefixes), dispatch=dispatch)
+    return OsProfile(prefixes=tuple(prefixes), dispatch=dispatch)
 
 
 def load_registry(path: str | None = None) -> ProfileRegistry:
@@ -305,7 +304,7 @@ def load_registry(path: str | None = None) -> ProfileRegistry:
             continue
         raw = _load_os_dir(os_dir)
         if raw:
-            oses[entry] = _build_os_profile(entry, raw)
+            oses[entry] = _build_os_profile(raw)
     if not oses:
         raise IOError(f"no OS profiles found under {path}")
     return ProfileRegistry(oses=oses)

@@ -79,19 +79,35 @@ def _ls(spark: SparkSession, path: str) -> list[str]:
     return [st.getPath().getName() for st in fs.listStatus(jpath)]
 
 
-def _read_manifest(spark: SparkSession, path: str) -> int | None:
-    """The manifest file's upto value, or None when absent."""
-    fs, _ = _fs(spark, path)
-    jvm = spark.sparkContext._jvm
-    mpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{MANIFEST}")
-    if not fs.exists(mpath):
+def _read_json(spark: SparkSession, path: str):
+    """A small JSON file on the Hadoop FS, or None when absent."""
+    fs, jpath = _fs(spark, path)
+    if not fs.exists(jpath):
         return None
-    stream = fs.open(mpath)
+    stream = fs.open(jpath)
     try:
-        raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+        raw = bytes(
+            spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+        )
     finally:
         stream.close()
-    return int(json.loads(raw.decode("utf-8"))["upto"])
+    return json.loads(raw.decode("utf-8"))
+
+
+def _write_json(spark: SparkSession, path: str, obj) -> None:
+    """Atomic small-JSON write: ``.tmp``, then rename over the old file —
+    a crash mid-write never leaves a truncated file behind."""
+    fs, dst = _fs(spark, path)
+    tmp = dst.suffix(".tmp")
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(json.dumps(obj).encode("utf-8")))
+    finally:
+        out.close()
+    if fs.exists(dst):
+        fs.delete(dst, False)
+    if not fs.rename(tmp, dst):
+        raise IOError(f"rename failed for {path}")
 
 
 def _committed_upto(spark: SparkSession, path: str) -> int | None:
@@ -105,26 +121,9 @@ def _committed_upto(spark: SparkSession, path: str) -> int | None:
         for m in (_GEN_RE.match(name) for name in _ls(spark, path))
         if m and not m.group(2)
     ]
-    manifest = _read_manifest(spark, path)
-    candidates = gens + ([manifest] if manifest is not None else [])
+    manifest = _read_json(spark, f"{path}/{MANIFEST}")
+    candidates = gens + ([int(manifest["upto"])] if manifest is not None else [])
     return max(candidates) if candidates else None
-
-
-def _write_manifest(spark: SparkSession, path: str, upto: int) -> None:
-    """Atomic manifest flip: write ``.tmp``, rename over the old one."""
-    fs, _ = _fs(spark, path)
-    jvm = spark.sparkContext._jvm
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}/{MANIFEST}.tmp")
-    dst = jvm.org.apache.hadoop.fs.Path(f"{path}/{MANIFEST}")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps({"upto": int(upto)}).encode("utf-8")))
-    finally:
-        out.close()
-    if fs.exists(dst):
-        fs.delete(dst, False)
-    if not fs.rename(tmp, dst):
-        raise IOError(f"manifest rename failed for {dst}")
 
 
 def _batch_ids(spark: SparkSession, path: str) -> list[int]:
@@ -251,8 +250,8 @@ def compact_sink(
             m = _GEN_RE.match(name)
             if m and (int(m.group(1)) != committed or m.group(2)):
                 fs.delete(jp(f"{path}/{name}"), True)
-        if _read_manifest(spark, path) != committed:
-            _write_manifest(spark, path, committed)
+        if _read_json(spark, f"{path}/{MANIFEST}") != {"upto": committed}:
+            _write_json(spark, f"{path}/{MANIFEST}", {"upto": committed})
 
     eligible = [b for b in ids if b <= upto_batch_id and (prev is None or b > prev)]
     if not eligible and (prev is None or upto_batch_id <= prev):
@@ -298,7 +297,7 @@ def compact_sink(
         fs.delete(jp(dst_dir), True)
     if not fs.rename(jp(tmp_dir), jp(dst_dir)):
         raise IOError(f"generation rename failed for {dst_dir}")
-    _write_manifest(spark, path, upto)
+    _write_json(spark, f"{path}/{MANIFEST}", {"upto": int(upto)})
     _gc(upto)
 
     out_files = fs.getContentSummary(jp(dst_dir)).getFileCount()

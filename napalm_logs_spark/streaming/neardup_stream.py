@@ -53,7 +53,7 @@ from ..operators.similarity import (
     _near_dup_pairs,
     _near_dup_table,
 )
-from .maintenance import _fs, read_asof
+from .maintenance import _read_json, _write_json, read_asof
 
 PARAMS_FILE = "_PARAMS.json"
 
@@ -81,28 +81,16 @@ def _check_index_params(spark, index_dir: str, params: dict) -> None:
     of silently joining incompatible bucket spaces (old slices hashed
     with different planes would just never match — duplicates admitted
     with zero diagnostics)."""
-    fs, _ = _fs(spark, index_dir)
-    jvm = spark.sparkContext._jvm
-    ppath = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{PARAMS_FILE}")
-    if fs.exists(ppath):
-        stream = fs.open(ppath)
-        try:
-            raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        finally:
-            stream.close()
-        existing = json.loads(raw.decode("utf-8"))
-        if existing != params:
-            raise ValueError(
-                f"near-dup index at {index_dir} was built with "
-                f"{existing}; refusing to extend it with {params} — "
-                "rebuild the index or match the parameters"
-            )
-        return
-    out = fs.create(ppath, True)
-    try:
-        out.write(bytearray(json.dumps(params).encode("utf-8")))
-    finally:
-        out.close()
+    ppath = f"{index_dir}/{PARAMS_FILE}"
+    existing = _read_json(spark, ppath)
+    if existing is None:
+        _write_json(spark, ppath, params)
+    elif existing != params:
+        raise ValueError(
+            f"near-dup index at {index_dir} was built with "
+            f"{existing}; refusing to extend it with {params} — "
+            "rebuild the index or match the parameters"
+        )
 
 
 def _write_metrics_line(path: str, record: dict) -> None:

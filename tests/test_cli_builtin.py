@@ -382,6 +382,30 @@ def test_cli_config_file_errors(tmp_path):
         build_sinks([{"path": "/x", "whitelst": ["typo"]}])
 
 
+@pytest.mark.parametrize("entry, key", [
+    ({"path": "/x", "send_raw": "false"}, "send_raw"),  # truthy string
+    ({"console": True, "console_rows": "five"}, "console_rows"),
+    ({"console": True, "console_rows": True}, "console_rows"),
+    ({"http_url": "http://h/e", "http_batch": 0}, "http_batch"),
+    ({"path": 5}, "path"),
+    ({"kafka_bootstrap": "b:9092", "kafka_topic": ["t"]}, "kafka_topic"),
+])
+def test_config_sink_value_of_wrong_type_is_refused(entry, key):
+    """A ``sinks:`` value must have its SinkSpec field's type: a YAML
+    bool for a bool, a positive int for an int, a string for a str."""
+    from napalm_logs_spark.config import build_sinks
+
+    with pytest.raises(ValueError, match=f"bad sink entry: {key} must be"):
+        build_sinks([entry])
+
+
+def test_config_sink_with_two_targets_is_refused():
+    from napalm_logs_spark.config import build_sinks
+
+    with pytest.raises(ValueError, match="exactly one"):
+        build_sinks([{"path": "/tmp/y", "kafka_bootstrap": "b:9092"}])
+
+
 def test_cli_run_requires_source_from_somewhere(capsys):
     from napalm_logs_spark.__main__ import main
     import pytest as _pytest

@@ -7,6 +7,9 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 import pytest
 from pyspark.sql import functions as F
 
+from napalm_logs_spark.operators.serialize import PAYLOAD_COLS
+from napalm_logs_spark.streaming.sink import SinkSpec, exactly_once_parquet_sink
+
 
 @pytest.fixture()
 def http_collector():
@@ -41,21 +44,19 @@ def _envelopes(spark, n=10):
 
 def test_http_sink_posts_from_executors(spark, http_collector):
     url, received = http_collector
-    from napalm_logs_spark.streaming.http_sink import http_envelope_publish
-
     env = _envelopes(spark, 10).repartition(3)
-    http_envelope_publish(env, url, batch_size=4)
+    exactly_once_parquet_sink([SinkSpec(http_url=url, http_batch=4)])(env, 0)
+    assert all(1 <= len(chunk) <= 4 for chunk in received)
     got = [e for chunk in received for e in chunk]
     assert len(got) == 10
     assert {e["host"] for e in got} == {f"host{i}" for i in range(10)}
-    # canonical K6 payload: every declared field present (explicit nulls)
-    assert "error" in got[0] and "os" in got[0]
+    # canonical K6 payload: every field the envelope carries, in the
+    # payload order; lineage columns stay out
+    assert list(got[0]) == [c for c in PAYLOAD_COLS if c in env.columns]
 
 
 def test_http_sink_inside_fanout_respects_filters(spark, http_collector):
     url, received = http_collector
-    from napalm_logs_spark.streaming.sink import SinkSpec, exactly_once_parquet_sink
-
     env = _envelopes(spark, 6).withColumn(
         "error", F.when(F.col("turn_idx") % 2 == 0, "RAW").otherwise("INTERFACE_UP")
     )
@@ -69,11 +70,9 @@ def test_http_sink_inside_fanout_respects_filters(spark, http_collector):
 
 
 def test_http_sink_error_propagates(spark):
-    from napalm_logs_spark.streaming.http_sink import http_envelope_publish
-
-    env = _envelopes(spark, 3)
+    sink = exactly_once_parquet_sink([SinkSpec(http_url="http://127.0.0.1:9/events")])
     with pytest.raises(Exception):
         # nothing listens on this port -> the task must FAIL (at-least-
         # once semantics), not silently drop the batch
-        http_envelope_publish(env, "http://127.0.0.1:9/events")
+        sink(_envelopes(spark, 3), 0)
 

@@ -11,12 +11,14 @@ from contextlib import redirect_stdout
 import pytest
 from pyspark.sql import functions as F
 
-from napalm_logs_spark.streaming.kafka_sink import (
-    DEFAULT_TOPIC,
-    envelope_to_kafka_records,
-    kafka_available,
+from napalm_logs_spark.jvm import jvm_class_available
+from napalm_logs_spark.streaming.sink import (
+    SinkSpec,
+    _kafka_records,
+    exactly_once_parquet_sink,
 )
-from napalm_logs_spark.streaming.sink import SinkSpec, exactly_once_parquet_sink
+
+KAFKA = SinkSpec(kafka_bootstrap="localhost:9092")
 
 
 def _env_df(spark):
@@ -34,7 +36,7 @@ def _env_df(spark):
 
 def test_record_shape_and_roundtrip(spark):
     env = _env_df(spark)
-    rec = envelope_to_kafka_records(env)
+    rec = _kafka_records(env, KAFKA)
     assert rec.columns == ["key", "value", "topic"]
     back = rec.select(
         "key",
@@ -49,7 +51,7 @@ def test_record_shape_and_roundtrip(spark):
     assert len(got) == 3
     r = got[("c-1", 0)]
     assert (r.error, r.host, r.facility, r.topic) == (
-        "INTERFACE_DOWN", "edge01", 7, DEFAULT_TOPIC
+        "INTERFACE_DOWN", "edge01", 7, "napalm-logs"
     )
     # key carries conv_id (per-conversation ordering within a Kafka
     # partition — the reference's per-device in-order contract)
@@ -59,7 +61,9 @@ def test_record_shape_and_roundtrip(spark):
 def test_null_fields_explicit_in_json(spark):
     # the reference envelope always carries every key (device.py:336-351)
     # -> nulls serialize explicitly, keeping the record shape fixed
-    rec = envelope_to_kafka_records(_env_df(spark), topic="t2")
+    rec = _kafka_records(
+        _env_df(spark), SinkSpec(kafka_bootstrap="h:9092", kafka_topic="t2")
+    )
     raw_row = rec.filter(F.col("key") == "c-2").collect()[0]
     assert raw_row.topic == "t2"
     assert '"facility":null' in raw_row.value
@@ -92,11 +96,11 @@ def test_console_sink_respects_error_filters(spark):
 def test_fanout_kafka_sinkspec_degrades(spark):
     """A kafka SinkSpec inside the fan-out raises an actionable error
     when the connector is absent — never a silent drop."""
-    if kafka_available(spark):  # pragma: no cover
+    if jvm_class_available(  # pragma: no cover
+        spark, "org.apache.spark.sql.kafka010.KafkaSourceProvider"
+    ):
         pytest.skip("connector present")
-    sink = exactly_once_parquet_sink(
-        [SinkSpec(kafka_bootstrap="localhost:9092", send_raw=True)]
-    )
+    sink = exactly_once_parquet_sink([KAFKA])
     with pytest.raises(RuntimeError, match="--packages"):
         sink(_env_df(spark), 0)
 
@@ -106,6 +110,19 @@ def test_sinkspec_requires_path_unless_console_or_kafka():
         SinkSpec(send_raw=True)
     SinkSpec(console=True)
     SinkSpec(kafka_bootstrap="h:9092")
+    SinkSpec(http_url="http://h/e")
+    # a second target would be silently ignored by the fan-out
+    with pytest.raises(ValueError, match="exactly one"):
+        SinkSpec(path="/tmp/y", kafka_bootstrap="b:9092")
+    with pytest.raises(ValueError, match="exactly one"):
+        SinkSpec(console=True, http_url="http://h/e")
+
+
+def test_sinkspec_target_names_its_one_target():
+    assert SinkSpec(path="/tmp/y").target == "/tmp/y"
+    assert SinkSpec(console=True).target == "console"
+    assert SinkSpec(kafka_bootstrap="b:9092").target == "b:9092"
+    assert SinkSpec(http_url="http://h/e").target == "http://h/e"
 
 
 def test_msgpack_wire_format_roundtrip(spark):
@@ -117,9 +134,11 @@ def test_msgpack_wire_format_roundtrip(spark):
     from napalm_logs_spark.operators.serialize import unpackb
 
     env = _env_df(spark)
-    mp = envelope_to_kafka_records(env, serializer="msgpack")
+    mp = _kafka_records(
+        env, SinkSpec(kafka_bootstrap="h:9092", serializer="msgpack")
+    )
     assert dict(mp.dtypes)["value"] == "binary"
-    jrows = envelope_to_kafka_records(env).collect()
+    jrows = _kafka_records(env, KAFKA).collect()
     want = sorted(
         json.dumps(json.loads(r.value), sort_keys=True) for r in jrows
     )

@@ -7,6 +7,7 @@ import math
 import pytest
 
 from napalm_logs_spark.operators.serialize import (
+    PAYLOAD_COLS,
     InvalidSerializerException,
     get_serializer,
     packb,
@@ -141,11 +142,15 @@ def test_serialize_envelopes_spark_paths(spark):
     assert rows
     for r in rows:
         obj = unpackb(r.payload)
+        # the one published payload shape, whatever else the frame
+        # holds (msgpack packs with sorted keys)
+        assert sorted(obj) == sorted(PAYLOAD_COLS)
         assert obj["error"] == r.error
         assert obj["conv_id"] == r.conv_id
     # json path (JVM) and msgpack path agree on content (a turn can
     # emit several envelopes, so compare the full multisets)
     j = serialize_envelopes(env, "json").select("payload")
+    assert tuple(json.loads(j.first().payload)) == PAYLOAD_COLS  # struct order
     want = sorted(
         json.dumps(json.loads(r.payload), sort_keys=True) for r in j.collect()
     )
